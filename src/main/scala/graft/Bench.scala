@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query against
   * SPARK_GRAFT_SF_DIR. Emits TWO artifacts:
   *  - `BENCH_full.json` (SPARK_GRAFT_BENCH_OUT): the complete record —
@@ -40,30 +38,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the testdata parquet stores timestamps WITHOUT isAdjustedToUTC
-      // (pyarrow naive timestamp[us]); Spark 4's default NTZ inference
-      // would type them TIMESTAMP_NTZ and break unix_micros/window
-      // arithmetic — read them as session-UTC instants instead
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // The sf0.1 inputs are SINGLE parquet files (lineitem ≈ 11 MB); at
-      // the default 128 MB maxPartitionBytes every scan is one task and
-      // the star joins run effectively single-threaded. 4 MB splits give
-      // the local[32] bench real scan parallelism; production data is
-      // many-file and unaffected.
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      // all suite queries' generated classes fit: passes 2-3 run
-      // warm-codegen without per-pass recompilation (static conf)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // resetStorage()'s blocking unpersist of locally-checkpointed RDDs
     // emits one "lineage has been truncated" WARN per checkpointed RDD —
@@ -76,10 +51,7 @@ object Bench {
       "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
 
     // Optional subset filter for local profiling: comma-separated names.
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val selected = SparkEntry.selectQueries(sys.env.get("SPARK_GRAFT_QUERIES"))
 
     // Drop everything a finished query run left in the storage layer.
     // clearCache() empties the CacheManager but NOT localCheckpoint

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan-capture diagnostic: writes `.explain("formatted")` for selected
@@ -18,53 +17,39 @@ object PlanDump {
     val sfDir = args(0)
     val outDir = args(1)
     val tag = args(2)
-    val only = args.lift(3)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val selected = SparkEntry.selectQueries(args.lift(3))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-        try {
-          // queries that collect() during construction (seeds, pivots)
-          // run those jobs here; the captured plan is the FINAL frame's
-          val plan = fn(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-          Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), plan)
-        } catch { case e: Throwable =>
-          System.err.println(s"[plandump] $name failed: ${e.getMessage}")
-        }
-        // Second capture with lineage-truncation disabled (graftCp ==
-        // identity): checkpointed subtrees collapse to `Scan
-        // ExistingRDD` in the as-executed plan above, hiding the very
-        // expressions an optimization claim is about; the _lineage
-        // artifact shows the full tree end-to-end. Queries whose
-        // CONSTRUCTION depends on materialized state (iterative loops
-        // recomputing lineage) may be slow or fail here — best-effort,
-        // the as-executed plan is the artifact of record.
-        try {
-          System.setProperty(KeepLineageProp, "true")
-          val plan = fn(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-          Files.writeString(Paths.get(s"$outDir/${name}_${tag}_lineage.txt"),
-            plan)
-        } catch { case e: Throwable =>
-          System.err.println(s"[plandump] $name lineage failed: ${e.getMessage}")
-        } finally System.clearProperty(KeepLineageProp)
+    selected.foreach { case (name, fn) =>
+      try {
+        // queries that collect() during construction (seeds, pivots)
+        // run those jobs here; the captured plan is the FINAL frame's
+        val plan = fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), plan)
+      } catch { case e: Throwable =>
+        System.err.println(s"[plandump] $name failed: ${e.getMessage}")
       }
+      // Second capture with lineage-truncation disabled (graftCp ==
+      // identity): checkpointed subtrees collapse to `Scan
+      // ExistingRDD` in the as-executed plan above, hiding the very
+      // expressions an optimization claim is about; the _lineage
+      // artifact shows the full tree end-to-end. Queries whose
+      // CONSTRUCTION depends on materialized state (iterative loops
+      // recomputing lineage) may be slow or fail here — best-effort,
+      // the as-executed plan is the artifact of record.
+      try {
+        System.setProperty(KeepLineageProp, "true")
+        val plan = fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        Files.writeString(Paths.get(s"$outDir/${name}_${tag}_lineage.txt"),
+          plan)
+      } catch { case e: Throwable =>
+        System.err.println(s"[plandump] $name lineage failed: ${e.getMessage}")
+      } finally System.clearProperty(KeepLineageProp)
+    }
     spark.stop()
   }
 }

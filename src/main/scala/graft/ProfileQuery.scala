@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query profiling diagnostic for the optimization rounds: runs
   * selected queries (warm once, then timed) under a listener that
@@ -17,26 +16,15 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ProfileQuery <sfDir> <names> [reps]")
     val sfDir = args(0)
-    val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
+    val selected = SparkEntry.selectQueries(Some(args(1)))
     val reps = args.lift(2).map(_.toInt).getOrElse(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // quick A/B knob: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" overrides session conf
     val extra = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
       .split(";").map(_.trim).filter(_.contains("="))
       .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val spark0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(spark0) { case (b, (k, v)) => b.config(k, v) }
+    val spark = extra
+      .foldLeft(GraftSession.builder(cpus)) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -69,13 +57,10 @@ object ProfileQuery {
         }
     }
 
-    val qmap = SparkEntry.queries
     // first-seen baseline value per A/B key (None = was unset)
     val abPrior =
       scala.collection.mutable.HashMap.empty[String, Option[String]]
-    for (name <- names) {
-      val fn = qmap.getOrElse(name,
-        sys.error(s"unknown query $name"))
+    for ((name, fn) <- selected) {
       // warm: JIT + codegen + parquet footers, like the bench pass 1
       fn(spark, sfDir).count()
       spark.sqlContext.clearCache()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling-audit diagnostic: candidate-pair counts for the two
   * pair-search operators whose cost is candidate-grain, measured
   * THROUGH the production code paths (Dedup.prefixFilterParts /
@@ -14,37 +12,21 @@ import org.apache.spark.sql.SparkSession
   * per-decade CANDIDATE ratio is the structural number; this prints
   * it per corpus so the committed scaling artifact can log it.
   *
-  * Usage: ScaleDiag <sfDir> [--skip-retired]  →  one JSON line:
-  * {"sf":…,"n_docs":N,"q182_candidates":N,"q204_candidates":N,
-  *  "q204_candidates_16bit_bands":N,"q204_candidates_32bit":N,
-  *  "q204_candidates_32bit_bound":N,"q196_blocked_sims":N,
+  * Usage: ScaleDiag <sfDir>  →  one JSON line:
+  * {"sf":…,"n_docs":N,"q182_candidates":N,"q182_suffix_survivors":N,
+  *  "q204_candidates":N,"q196_blocked_sims":N,
   *  "q65_block_pair_bound":N,"q65_neardup_pairs":N}
-  * (q204_candidates is the production 2×32-bit radius-1 scheme; the
-  * 16-bit-band and 32-bit numbers are the two RETIRED configurations,
-  * printed so the artifact can show each fix's headroom side by side). The
-  * `_bound` is the analytic Σ c·(c−1)/2 over the 8-bit band buckets —
-  * O(corpus) at any scale; `--skip-retired` suppresses the EXACT
-  * retired count (at ×100 the retired config's candidate join is
-  * ~10^10 rows and materializing it just to count it would take
-  * hours — the bound is the honest number there, and it is what the
-  * exact count converges to as buckets saturate).
+  * (q204_candidates is the production 2×32-bit radius-1 scheme).
+  *
+  * `ScaleDiag <sfDir> --pca-dims` instead times the q175 covariance
+  * stage at production embedding dims (see below).
   */
 object ScaleDiag {
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: ScaleDiag <sfDir> [--skip-retired]")
+    require(args.nonEmpty, "usage: ScaleDiag <sfDir> [--pca-dims]")
     val sfDir = args(0)
-    val skipRetired = args.contains("--skip-retired")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // --pca-dims: constant-factor probe for the q175 covariance stage
     // at PRODUCTION embedding dims. The ×10/×100 audits scale rows,
@@ -98,22 +80,6 @@ object ScaleDiag {
     val sim64 = graft.operators.Dedup
       .simhashPairParts(docs, "text", "doc_id", maxHamming = 3,
         nBits = 64, bands = 2).cand.count()
-    // the r11 default (4×16-bit exact bands), kept for the side-by-side
-    val sim64b4 = graft.operators.Dedup
-      .simhashPairParts(docs, "text", "doc_id", maxHamming = 3,
-        nBits = 64, bands = 4).cand.count()
-    val parts32 = graft.operators.Dedup
-      .simhashPairParts(docs, "text", "doc_id", maxHamming = 3,
-        nBits = 32, bands = 4)
-    // analytic bucket-pair bound: O(corpus) at any scale, exact join
-    // only when affordable (see scaladoc)
-    val bound32 = parts32.banded
-      .groupBy(org.apache.spark.sql.functions.col("bi"),
-        org.apache.spark.sql.functions.col("bv"))
-      .count()
-      .selectExpr("CAST(sum(count * (count - 1) DIV 2) AS BIGINT) AS b")
-      .head().getLong(0)
-    val sim32 = if (skipRetired) -1L else parts32.cand.count()
     // q196's blocked margin miner: within-block (src, tgt) sim pairs
     // through the production stage (bounded ~n·cap/4 by construction;
     // this logs the observed number per decade)
@@ -141,9 +107,6 @@ object ScaleDiag {
       s""""q182_candidates":$prefix,""" +
       s""""q182_suffix_survivors":$prefixSurv,""" +
       s""""q204_candidates":$sim64,""" +
-      s""""q204_candidates_16bit_bands":$sim64b4,""" +
-      s""""q204_candidates_32bit":$sim32,""" +
-      s""""q204_candidates_32bit_bound":$bound32,""" +
       s""""q196_blocked_sims":$q196,""" +
       s""""q65_block_pair_bound":$q65Bound,""" +
       s""""q65_neardup_pairs":$q65Pairs}""")

@@ -1,17 +1,17 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.functions.GF
-import graft.model.Frequency
-import graft.operators._
-import graft.sources.{CatalogReader, CellGrid}
+import org.apache.spark.sql.functions.expr
+import graft.queries._
+import graft.queries.RelationalQueries.qStarRevenue
 
 /** Driver contract (see SURVEY.md §2 / §7 + builder prompt).
   *
   * Every operator from the SURVEY §2 inventory (plus the north-star
   * LLM-pipeline operators) is exposed as a named query over the driver's
-  * parquet tables, with a DuckDB-equivalent oracle in [[oracleSql]].
+  * parquet tables. Each query is declared once, as a [[queries.Q]] next
+  * to its DuckDB-equivalent oracle, in the per-domain objects under
+  * `graft.queries`; this object is the registry over them.
   * Column names are aliased identically on both sides; all floating
   * outputs are rounded; every query is deterministically ordered.
   */
@@ -21,3528 +21,6 @@ object SparkEntry {
     * (broadcast dims, one fact shuffle). Driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     qStarRevenue(spark, "/root/testdata/sf0.001")
-
-  // -------------------------------------------------------------------
-  // Reference-parity queries (SURVEY §2). Names sort in inventory order.
-  // -------------------------------------------------------------------
-
-  /** A1-A4/F10 — grouped conditional aggregation (pricing summary). */
-  private def qPricingSummary(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    t.lineitem
-      .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        round(sum(col("l_quantity")), 2).as("sum_qty"),
-        round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-          .as("sum_disc_price"),
-        round(avg(col("l_quantity")), 4).as("avg_qty"),
-        count(lit(1)).as("count_order"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
-  }
-
-  /** A1/A2/A3 — the indicator summary row over synthesized status
-    * reports (Reports.indicators; reference base.py:1007-1018). */
-  private def qIndicators(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val datasetReport = t.orders.withColumn("dataset_status",
-      when(col("o_orderstatus") === "F", "OK")
-        .when(col("o_orderstatus") === "O", "WARNING").otherwise("ERROR"))
-    val distributionReport = t.lineitem.withColumn("distribution_status",
-      when(col("l_returnflag") === "N", "OK")
-        .when(col("l_returnflag") === "R", "WARNING").otherwise("ERROR"))
-    Reports.indicators(datasetReport, distributionReport)
-  }
-
-  /** P5/F2 — method classification of a distribution manifest
-    * (CatalogReader.withMethod; reference base.py:123-153). */
-  private def qMethodClassify(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val manifest = t.documents.select(
-      col("doc_id"),
-      when(col("doc_id") % 5 === 0,
-        concat(lit("http://x/"), col("source"), lit(".csv")))
-        .as("downloadURL"),
-      concat(lit("http://y/"), col("source"), lit("."),
-        element_at(array(lit("txt"), lit("TXT"), lit("xlsx"), lit("XLS"),
-          lit("zip")), (col("doc_id") % 5 + 1).cast("int")))
-        .as("scrapingFileURL"))
-    CatalogReader.withMethod(manifest)
-      .groupBy(col("method")).agg(count(lit(1)).as("n"))
-      .orderBy(col("method"))
-  }
-
-  /** J2 — left-semi join: customers having orders, by market segment. */
-  private def qSemiJoin(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    t.customer.join(t.orders.select(col("o_custkey").as("c_custkey")),
-        Seq("c_custkey"), "left_semi")
-      .groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n_customers"))
-      .orderBy(col("c_mktsegment"))
-  }
-
-  /** P9 — anti-join (skip-if-exists semantics): customers with no
-    * *urgent* orders, by nation (broadcast dim join). */
-  private def qAntiJoin(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    t.customer.join(
-        t.orders.filter(col("o_orderpriority") === "1-URGENT")
-          .select(col("o_custkey").as("c_custkey")),
-        Seq("c_custkey"), "left_anti")
-      .join(broadcast(t.nation),
-        col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("n_name")).agg(count(lit(1)).as("n_customers"))
-      .orderBy(col("n_name"))
-  }
-
-  /** J3/J4 — star-schema revenue: fact joined to broadcast dims. */
-  private def qStarRevenue(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    t.lineitem
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(t.customer), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(t.region), col("n_regionkey") === col("r_regionkey"))
-      .groupBy(col("r_name"), col("n_name"))
-      .agg(
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-          .as("revenue"),
-        count(lit(1)).as("n_items"))
-      .orderBy(col("r_name"), col("n_name"))
-  }
-
-  /** J1 — pivot/align: daily event values pivoted by event type (the
-    * reference's concat-on-time-index, SURVEY §2.4 J1). Pivot values are
-    * pinned so no extra distinct job runs. */
-  private def qPivotDaily(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    t.events
-      .withColumn("day", to_date(col("ts")))
-      .groupBy(col("day"))
-      .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-      .agg(round(sum(col("value")), 2))
-      .orderBy(col("day"))
-  }
-
-  /** D1/D2 — dedup via distinct: distinct event types seen per user. */
-  private def qDistinct(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    t.events.select(col("user_id"), col("event_type")).distinct()
-      .groupBy(col("user_id")).agg(count(lit(1)).as("n_types"))
-      .orderBy(col("user_id"))
-  }
-
-  /** U1 — report accumulation: union of two status projections. */
-  private def qUnionReport(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val a = t.orders.select(col("o_orderstatus").as("label"))
-    val b = t.lineitem.select(col("l_returnflag").as("label"))
-    a.union(b).groupBy(col("label")).agg(count(lit(1)).as("n"))
-      .orderBy(col("label"))
-  }
-
-  /** O1 — ordered-categorical status sort (Reports.statusRank). */
-  private def qStatusSort(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val report = t.orders.withColumn("distribution_status",
-      when(col("o_orderkey") % 10 < 6, "OK")
-        .when(col("o_orderkey") % 10 < 9, "WARNING").otherwise("ERROR"))
-    Reports.sortByStatus(
-      report.groupBy(col("distribution_status")).agg(count(lit(1)).as("n")))
-      .withColumn("rank", Reports.statusRank(col("distribution_status")))
-  }
-
-  /** P4/O3 — harvest filter + first-element limit: first valid customer
-    * (positive balance) that has orders. */
-  private def qFirstValid(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    t.customer.filter(col("c_acctbal") > 0)
-      .join(t.orders.select(col("o_custkey").as("c_custkey")),
-        Seq("c_custkey"), "left_semi")
-      .orderBy(col("c_custkey"))
-      .limit(1)
-      .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-  }
-
-  /** F1/F2/F3 — string functions: strip, extension, basename. */
-  private def qStringFuncs(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    t.part.select(
-        col("p_partkey"),
-        GF.stripSpaces(col("p_name")).as("name_nospace"),
-        GF.fileExtension(concat(lit("a/b/"), col("p_brand"), lit("."),
-          col("p_size").cast("string"))).as("ext"),
-        GF.basename(concat(lit("http://h/x/"), col("p_brand"), lit("/"),
-          col("p_name"))).as("base"))
-      .orderBy(col("p_partkey"))
-  }
-
-  /** F4 — cell-coordinate parsing: "BA37" -> row 37, col 53. */
-  private def qCellCoords(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    t.part.select(col("p_partkey"),
-        concat(
-          when(col("p_partkey") % 3 === 0, expr("chr(65 + p_partkey % 26)"))
-            .otherwise(lit("")),
-          expr("chr(65 + p_partkey % 5)"),
-          (col("p_partkey") % 90 + 1).cast("string")).as("coord"))
-      .withColumn("row_num", GF.cellRow(col("coord")))
-      .withColumn("col_num", GF.cellColIndex(col("coord")))
-      .orderBy(col("p_partkey"))
-  }
-
-  /** F5 — ISO repeat-duration -> frequency code (Frequency ADT). */
-  private def qFreqMap(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val isos = Frequency.all.map(f => lit(f.iso)) :+ lit(null).cast("string")
-    t.orders.select(
-        element_at(array(isos: _*), (col("o_orderkey") % 6 + 1).cast("int")
-          ).as("freq_iso")) // index 6 -> null iso exercises the unknown path
-      .withColumn("freq_code", GF.freqCode(col("freq_iso")))
-      .groupBy(col("freq_iso"), col("freq_code"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("freq_iso"))
-  }
-
-  /** F6 — missing-token normalization over a dirty value column. */
-  private def qMissingNorm(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val tokens = GF.MissingTokens.map(lit(_))
-    val raw = when(col("event_id") % 7 === 0,
-      element_at(array(tokens: _*), (col("event_id") % 19 + 1).cast("int")))
-      .otherwise(col("value").cast("decimal(12,2)").cast("string"))
-    t.events.select(col("event_type"), raw.as("raw"))
-      .withColumn("v", GF.normalizeValue(col("raw")))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_rows"),
-        count(col("v")).as("n_values"),
-        round(sum(col("v")), 2).as("sum_value"))
-      .orderBy(col("event_type"))
-  }
-
-  /** F7 — output downloadURL rewrite (GF.rewriteDownloadUrl). */
-  private def qUrlRewrite(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val path = when(col("doc_id") % 2 === 0,
-      concat(lit("/data/output/catalog/"), col("source"), lit("/file.csv")))
-      .otherwise(concat(lit("/tmp/"), col("source")))
-    t.documents.select(col("doc_id"), path.as("path"))
-      .withColumn("url",
-        GF.rewriteDownloadUrl(col("path"), "/data/output", "https://h"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** F8 — nested output path assembly with fileName fallback. */
-  private def qPathAssembly(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    t.documents.select(col("doc_id"), col("source"))
-      .withColumn("distribution_id",
-        concat(col("source"), lit("."), (col("doc_id") % 7).cast("string")))
-      .withColumn("file_name",
-        when(col("doc_id") % 3 === 0, concat(lit("f"), col("doc_id"), lit(".csv"))))
-      .withColumn("path", GF.distributionPath(lit("cat1"), col("source"),
-        col("distribution_id"), col("file_name")))
-      .select(col("doc_id"), col("path"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** T4 — monotonic/distinct-index violations per series key
-    * (TimeSeriesOps.monotonicViolations; day-granular event times force
-    * duplicates). */
-  private def qMonotonic(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val series = t.events.select(
-      col("user_id").cast("string").as("serie_id"),
-      to_date(col("ts")).as("indice_tiempo"),
-      col("value").as("valor"))
-    TimeSeriesOps.monotonicViolations(series)
-      .groupBy(col("serie_id")).agg(count(lit(1)).as("n_violations"))
-      .orderBy(col("serie_id").cast("long"))
-  }
-
-  /** T3 — frequency-gap detection on a monthly series with holes
-    * (TimeSeriesOps.frequencyGaps). */
-  private def qFreqGaps(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val series = t.lineitem
-      .select(col("l_returnflag").as("serie_id"),
-        trunc(to_date(col("l_shipdate")), "month").as("indice_tiempo"))
-      .distinct()
-      .filter(month(col("indice_tiempo")) % 5 =!= 0) // punch holes
-      .withColumn("valor", lit(1.0))
-    TimeSeriesOps.frequencyGaps(series, Frequency.Monthly)
-      .select(col("serie_id"), col("prev_tiempo"), col("indice_tiempo"),
-        col("step_periods").cast("int").as("gap_periods"))
-      .orderBy(col("serie_id"), col("indice_tiempo"))
-  }
-
-  /** §2.9 — the validation battery as one summary query
-    * (TimeSeriesOps.validationSummary). */
-  private def qValidationSummary(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val series = t.events.select(
-      col("event_type").as("serie_id"),
-      to_date(col("ts")).as("indice_tiempo"),
-      when(col("value") >= 10, col("value")).as("valor"))
-    TimeSeriesOps.validationSummary(series)
-      .select(col("serie_id"), col("n_rows"), col("n_values"),
-        col("n_not_increasing"), col("n_periods"), col("first_period"),
-        col("last_period"), col("missing_ratio"), col("is_monotonic"),
-        col("is_distinct"), col("is_valid"))
-      .orderBy(col("serie_id"))
-  }
-
-  /** T3/§2.8 — complete-calendar resampling: observed monthly series
-    * left-joined onto the generated full calendar
-    * (TimeSeriesOps.completeCalendar). */
-  private def qCompleteCalendar(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val series = t.lineitem
-      .select(col("l_returnflag").as("serie_id"),
-        trunc(to_date(col("l_shipdate")), "month").as("indice_tiempo"))
-      .distinct()
-      .filter(month(col("indice_tiempo")) % 5 =!= 0)
-      .withColumn("valor", lit(1.0))
-    TimeSeriesOps.completeCalendar(series, Frequency.Monthly)
-      .select(col("serie_id"), col("indice_tiempo"),
-        col("valor").isNotNull.as("has_value"))
-      .orderBy(col("serie_id"), col("indice_tiempo"))
-  }
-
-  /** S7/T1/J1 — coordinate scrape of a synthesized cell grid
-    * (CellGrid.scrapeDistribution): time labels in column A, five value
-    * series in columns B..F, missing tokens sprinkled in. */
-  private def qScrapeGrid(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val grid = scrapeFixtureGrid(t)
-    val series = (2 to 6).map(c =>
-      CellGrid.SeriesSpec(s"s$c", cell(c, 1), cell(c, 2)))
-    CellGrid.scrapeDistribution(grid, "hoja", "A1", "A2",
-        Frequency.Monthly, series)
-      .orderBy(col("serie_id"), col("indice_tiempo"))
-  }
-
-  /** J1 — wide alignment of the scraped long form (pivot on serie_id). */
-  private def qScrapeWide(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val grid = scrapeFixtureGrid(t)
-    val series = (2 to 6).map(c =>
-      CellGrid.SeriesSpec(s"s$c", cell(c, 1), cell(c, 2)))
-    val long = CellGrid.scrapeDistribution(grid, "hoja", "A1", "A2",
-      Frequency.Monthly, series)
-    TimeSeriesOps.alignWide(long, (2 to 6).map(c => s"s$c"))
-  }
-
-  private def cell(colIdx: Int, row: Int): String =
-    s"${('A' + colIdx - 1).toChar}$row"
-
-  /** A deterministic "workbook" grid built from the events table:
-    * 200 data rows; col 1 = "YYYY-MM" month labels (T1 composed parse),
-    * cols 2..6 = decimal strings with the reference's missing tokens
-    * (F6) every 13th cell. Header row 1 carries serie ids. */
-  /** T1 multi-cell composed time: year markers written once per block in
-    * the time column, roman quarter labels on the data rows — the
-    * xlseries `time_composed=True` layout (reference
-    * processors.py:211-221). The scrape forward-fills the year and
-    * composes it with the period label. */
-  private def qComposedTime(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val grid = composedFixtureGrid(t)
-    CellGrid.scrapeDistribution(grid, "comp", "A1", "A2",
-        Frequency.Quarterly, Seq(CellGrid.SeriesSpec("v2", "B1", "B2")))
-      .orderBy(col("indice_tiempo"))
-  }
-
-  /** Composed-time fixture: 20 year blocks of 5 rows each — a year
-    * marker row ("2000"...) followed by 4 quarter rows ("I".."IV") with
-    * values only on quarter rows. */
-  private def composedFixtureGrid(t: Tables): DataFrame = {
-    val e = t.events.filter(col("event_id") < 100)
-    val hdr = t.events.filter(col("event_id") < 2).select(
-      lit("comp").as("sheet"), lit(1).as("row"),
-      (col("event_id") + 1).cast("int").as("col"),
-      when(col("event_id") === 0, lit("indice_tiempo"))
-        .otherwise(lit("v2")).as("value"))
-    val w = col("event_id") % 5
-    val timeCells = e.select(lit("comp").as("sheet"),
-      (col("event_id") + 2).cast("int").as("row"), lit(1).as("col"),
-      when(w === 0,
-        (floor(col("event_id") / 5) + 2000).cast("int").cast("string"))
-        .otherwise(element_at(
-          array(lit("I"), lit("II"), lit("III"), lit("IV")),
-          w.cast("int"))).as("value"))
-    val valueCells = e.filter(w =!= 0).select(lit("comp").as("sheet"),
-      (col("event_id") + 2).cast("int").as("row"), lit(2).as("col"),
-      col("value").cast("decimal(12,2)").cast("string").as("value"))
-    hdr.union(timeCells).union(valueCells)
-  }
-
-  /** Two-column composed time (year column | period column, the
-    * xlseries composed_headers_coord layout): year markers in col A,
-    * roman quarters in col B (the time column), values in col C. */
-  private def qComposedTwoCol(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val e = t.events.filter(col("event_id") < 100)
-    val w = col("event_id") % 5
-    val hdr = t.events.filter(col("event_id") < 3).select(
-      lit("comp2").as("sheet"), lit(1).as("row"),
-      (col("event_id") + 1).cast("int").as("col"),
-      when(col("event_id") === 0, lit("anio"))
-        .when(col("event_id") === 1, lit("indice_tiempo"))
-        .otherwise(lit("v3")).as("value"))
-    val yearCells = e.filter(w === 0).select(lit("comp2").as("sheet"),
-      (col("event_id") + 2).cast("int").as("row"), lit(1).as("col"),
-      (floor(col("event_id") / 5) + 2000).cast("int").cast("string")
-        .as("value"))
-    val periodCells = e.filter(w =!= 0).select(lit("comp2").as("sheet"),
-      (col("event_id") + 2).cast("int").as("row"), lit(2).as("col"),
-      element_at(array(lit("I"), lit("II"), lit("III"), lit("IV")),
-        w.cast("int")).as("value"))
-    val valueCells = e.filter(w =!= 0).select(lit("comp2").as("sheet"),
-      (col("event_id") + 2).cast("int").as("row"), lit(3).as("col"),
-      col("value").cast("decimal(12,2)").cast("string").as("value"))
-    val grid = hdr.union(yearCells).union(periodCells).union(valueCells)
-    CellGrid.scrapeDistribution(grid, "comp2", "B1", "B2",
-        Frequency.Quarterly, Seq(CellGrid.SeriesSpec("v3", "C1", "C2")))
-      .orderBy(col("indice_tiempo"))
-  }
-
-  private def scrapeFixtureGrid(t: Tables): DataFrame = {
-    val e = t.events.filter(col("event_id") < 1000)
-    val headers = t.events.filter(col("event_id") < 6)
-      .select(lit("hoja").as("sheet"), lit(1).as("row"),
-        (col("event_id") + 1).cast("int").as("col"),
-        when(col("event_id") === 0, lit("indice_tiempo"))
-          .otherwise(concat(lit("s"), (col("event_id") + 1).cast("string")))
-          .as("value"))
-    val data = e.select(
-      lit("hoja").as("sheet"),
-      (col("event_id") % 200 + 2).cast("int").as("row"),
-      (floor(col("event_id") / 200) + 1).cast("int").as("col"),
-      col("event_id"), col("value"))
-    val tokens = GF.MissingTokens.map(lit(_))
-    val body = data.withColumn("value",
-      when(col("col") === 1,
-        concat(lit("20"),
-          lpad(floor((col("row") - 2) / 12).cast("int").cast("string"), 2, "0"),
-          lit("-"), lpad(((col("row") - 2) % 12 + 1).cast("string"), 2, "0")))
-        .when(col("event_id") % 13 === 0,
-          element_at(array(tokens: _*), (col("event_id") % 19 + 1).cast("int")))
-        .otherwise(col("value").cast("decimal(12,2)").cast("string")))
-      .select(col("sheet"), col("row"), col("col"), col("value"))
-    headers.union(body)
-  }
-
-  /** Window sessionization: lag + flag + running sum + per-session agg
-    * (TimeSeriesOps.sessionize; 30-minute gap). */
-  private def qSessionize(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    TimeSeriesOps.sessionize(t.events, "user_id", "ts", "value",
-        gapMicros = 1800L * 1000000L)
-      .orderBy(col("user_id"), col("session_idx"))
-  }
-
-  /** Rollup aggregation (engine extension beyond the reference's flat
-    * groupBys): subtotals + grand total in one pass. */
-  private def qRollup(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    t.orders
-      .rollup(col("o_orderpriority"), col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("o_totalprice")), 2).as("total_price"))
-      .orderBy(col("o_orderpriority").asc_nulls_first,
-        col("o_orderstatus").asc_nulls_first)
-  }
-
-  /** Sketch aggregation: HLL approx distinct next to the exact count. */
-  private def qApproxDistinct(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    // the HLL estimate itself differs across engines, so the PORTABLE
-    // contract is its accuracy bound: the oracle asserts TRUE, and a
-    // Spark-side HLL drifting past ±5% of exact flips the column to
-    // false → hash mismatch → gate failure. exact_parts and n_rows
-    // compare value-for-value.
-    t.lineitem.groupBy(col("l_returnflag"))
-      .agg(
-        approx_count_distinct(col("l_partkey")).as("approx_parts"),
-        countDistinct(col("l_partkey")).as("exact_parts"),
-        count(lit(1)).as("n_rows"))
-      .select(col("l_returnflag"), col("exact_parts"), col("n_rows"),
-        (abs(col("approx_parts") - col("exact_parts")) <=
-          col("exact_parts") * 0.05).as("approx_within_5pct"))
-      .orderBy(col("l_returnflag"))
-  }
-
-  // -------------------------------------------------------------------
-  // LLM-data-pipeline queries (north-star ops; BASELINE.json).
-  // -------------------------------------------------------------------
-
-  /** Exact dedup groups over a corpus with planted duplicates. */
-  private def qExactDedup(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val base = t.documents.select(col("doc_id"), col("text"))
-    val planted = base.filter(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-    Dedup.exactDuplicateGroups(base.union(planted), "text", "doc_id")
-      .orderBy(col("keeper_id"))
-  }
-
-  /** MinHash + LSH banding: candidate near-dup pairs (k=8, 4 bands). */
-  private def qMinhashLsh(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val sig = Dedup.minhashSignature(t.documents, "text", "doc_id", k = 8)
-    val pairs = Dedup.candidatePairs(Dedup.lshBuckets(sig, "doc_id", 8, 4),
-      "doc_id")
-    pairs.agg(count(lit(1)).as("n_pairs"),
-      coalesce(sum(col("id1") + col("id2")), lit(0L)).as("pair_checksum"))
-  }
-
-  /** Lang-blocked bounded candidate pairs (id2 ∈ (id1, id1+window]),
-    * built with a BLOCK-key EQUI-join: each left row posts to its own
-    * and the next id-block of size `window`, so the join intermediate
-    * is ~2 rows per doc instead of the per-language cartesian the
-    * naive lang-join + range-filter materializes before filtering.
-    * Identical pair set; the oracles keep the declarative range form. */
-  private def langBlockedPairs(t: Tables, window: Int): DataFrame = {
-    val blk = (c: Column) => floor(c / lit(window)).cast("long")
-    val d1 = t.documents.select(col("lang"), col("doc_id").as("id1"))
-      .withColumn("blk",
-        explode(array(blk(col("id1")), blk(col("id1")) + 1)))
-    val d2 = t.documents.select(col("lang"), col("doc_id").as("id2"),
-      blk(col("doc_id")).as("blk"))
-    d1.join(d2, Seq("lang", "blk"))
-      .filter(col("id2") > col("id1") && col("id2") <= col("id1") + window)
-      .select(col("id1"), col("id2"))
-  }
-
-  /** n-gram Jaccard verification over blocked candidate pairs. */
-  private def qNgramJaccard(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Dedup.ngramJaccard(t.documents, langBlockedPairs(t, 3), "text", "doc_id")
-      .select(col("id1"), col("id2"), col("jaccard"))
-      .orderBy(col("id1"), col("id2"))
-  }
-
-  /** 32-bit SimHash per document. */
-  private def qSimhash(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Dedup.simhash(t.documents, "text", "doc_id").orderBy(col("doc_id"))
-  }
-
-  /** Brute-force cosine top-5 for 8 query vectors. */
-  private def qKnnCosine(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Similarity.bruteForceKnn(
-        t.embeddings.filter(col("vec_id") < 8), t.embeddings,
-        "vec_id", "embedding", k = 5)
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** SQ8 scalar-quantized cosine top-5 (Similarity.sq8Knn) — the
-    * byte-code compression rung measured against q34's exact ranking. */
-  private def qSq8Knn(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Similarity.sq8Knn(t.embeddings, t.embeddings.filter(col("vec_id") < 8),
-        "vec_id", "embedding", k = 5)
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** LSH banding recall/precision against exact-Jaccard ground truth
-    * (Dedup.lshPairRecall) on the shared bounded-window domain — the
-    * (k, bands) tuning measurement. */
-  private def qLshRecall(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    // ONE shared shingle pass (lazy, distinct) feeds both the minhash
-    // signature and the exact-Jaccard truth arm — the r16 form
-    // tokenized + shingled the corpus twice (r17 plan audit); the
-    // signature is identical from distinct shingles (min is
-    // multiset-insensitive)
-    val shD = Dedup.shingleRows(t.documents, "text", "doc_id", 3)
-      .distinct().graftCp(false)
-    val sig = Dedup.minhashSignatureFromShingles(shD, "doc_id", k = 8)
-    val cand = Dedup.candidatePairs(
-      Dedup.lshBuckets(sig, "doc_id", k = 8, bands = 4), "doc_id")
-    val window = langBlockedPairs(t, 10).graftCp(false)
-    val candW = cand.join(window, Seq("id1", "id2"), "left_semi")
-    val truth = Dedup.ngramJaccardFromShingles(shD, window, "doc_id")
-      .filter(col("jaccard") >= 0.01)
-      .select(col("id1"), col("id2"))
-    Dedup.lshPairRecall(candW, truth)
-  }
-
-  /** Mega-bucket cap on LSH candidate generation
-    * (Dedup.candidatePairs maxBucketSize): over-cap (band, bucket)
-    * groups demote from all-pairs to star expansion. One row asserting
-    * (a) a cap larger than every bucket reproduces the uncapped pair
-    * set exactly, and (b) the tight-cap pair set + over-bucket counts
-    * match a closed-form replay. */
-  private def qLshBucketCap(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val sig = Dedup.minhashSignature(t.documents, "text", "doc_id", k = 8)
-    val buckets = Dedup.lshBuckets(sig, "doc_id", k = 8, bands = 4)
-      .graftCp(false)
-    val unc = Dedup.candidatePairs(buckets, "doc_id",
-      maxBucketSize = Int.MaxValue)
-    val capped = Dedup.candidatePairs(buckets, "doc_id", maxBucketSize = 2)
-    val cappedLarge =
-      Dedup.candidatePairs(buckets, "doc_id", maxBucketSize = 1000000)
-    val over = Dedup.overCapBuckets(buckets, "doc_id", 2)
-    unc.agg(count(lit(1)).as("n_uncapped"))
-      .crossJoin(broadcast(
-        cappedLarge.agg(count(lit(1)).as("n_capped_large"))))
-      .crossJoin(broadcast(capped.agg(count(lit(1)).as("n_capped"),
-        coalesce(sum(col("id1") + col("id2")), lit(0L)).cast("long")
-          .as("pair_checksum"))))
-      .crossJoin(broadcast(over.agg(count(lit(1)).as("n_over_buckets"),
-        coalesce(sum(col("n_docs")), lit(0L)).cast("long")
-          .as("n_over_docs"))))
-  }
-
-  /** Hybrid retrieval via Reciprocal Rank Fusion
-    * (TextAnalysis.rrfFuse): BM25 lexical top-10 fused with the
-    * embedding cosine top-10 of query vector 0 — score scales never
-    * compared, only ranks. */
-  private def qRrfFusion(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("bm25").desc, col("doc_id"))
-    val lexical = TextAnalysis.bm25TopK(t.documents, "text", "doc_id",
-        Seq("spark", "window", "join"), k = 10)
-      .withColumn("rank", row_number().over(w))
-    val semantic = Similarity.bruteForceKnn(
-        t.embeddings.filter(col("vec_id") === 0), t.embeddings,
-        "vec_id", "embedding", k = 10)
-      .select(col("cand_id").as("doc_id"), col("rank"))
-    TextAnalysis.rrfFuse(
-        Seq("bm25" -> lexical, "cosine" -> semantic),
-        "doc_id", "rank", k = 10)
-      .orderBy(col("rrf").desc, col("doc_id"))
-  }
-
-  /** Two-stage retrieval (Similarity.sq8Rerank): SQ8 byte-code coarse
-    * top-12 reranked by exact cosine to top-5. */
-  private def qSq8Rerank(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Similarity.sq8Rerank(t.embeddings,
-        t.embeddings.filter(col("vec_id") < 8),
-        "vec_id", "embedding", kCoarse = 12, k = 5)
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** PageRank over the shared-shingle similarity graph
-    * (GraphOps.pageRank, 5 rounds) — hub scoring of near-dup
-    * neighborhoods. Edges: lang-blocked bounded pairs (q32's
-    * discipline, window +-10) sharing >= 1 shingle, symmetrized; the
-    * integer shared-shingle predicate keeps the edge set FP-free. */
-  private def qPageRank(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    GraphOps.pageRank(shingleGraph(t), "id1", "id2", iters = 5)
-      .orderBy(col("id"))
-  }
-
-  /** Shared edge build for the graph queries (q110, q112): lang-blocked
-    * bounded pairs sharing >= 1 shingle, symmetrized. */
-  private def shingleGraph(t: Tables): DataFrame = {
-    val e0 = Dedup.sharedShingleEdges(t.documents,
-      langBlockedPairs(t, 10), "text", "doc_id")
-    e0.unionByName(e0.select(col("id2").as("id1"), col("id1").as("id2")))
-  }
-
-  /** Personalized PageRank from the 3 smallest vertex ids
-    * (GraphOps.personalizedPageRank) — retrieval expansion around
-    * known-good seeds. The seed collect is metadata-plane (3 ids). */
-  private def qPprExpand(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val sym = shingleGraph(t).graftCp(false)
-    val seeds = sym.select(col("id1").as("id"))
-      .union(sym.select(col("id2").as("id")))
-      .distinct().orderBy(col("id")).limit(3)
-      .collect().map(_.getLong(0)).toSeq
-    GraphOps.personalizedPageRank(sym, "id1", "id2", seeds, iters = 5)
-      .orderBy(col("id"))
-  }
-
-  /** Perceptual near-duplicate image pairs: REAL PNG decode →
-    * integer-exact aHash (MultiModal.imageAHash) → bounded-window
-    * hamming pairs. Pairing is an EQUI-join on an id-block key (each
-    * left row posts to its own and the next block) — the q32 bounded-
-    * pair discipline, never a non-equi range join. */
-  private def qAhashDup(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val fx = MultiModal.syntheticImage(
-      t.documents.select("doc_id"), "doc_id", "png")
-    val hs = MultiModal.imageAHash(fx).graftCp(false)
-    val a = hs.select(col("doc_id").as("id1"), col("ahash").as("h1"))
-      .withColumn("blk", explode(array(
-        floor(col("id1") / lit(8)).cast("long"),
-        floor(col("id1") / lit(8)).cast("long") + 1)))
-    val b = hs.select(col("doc_id").as("id2"), col("ahash").as("h2"),
-      floor(col("id2") / lit(8)).cast("long").as("blk"))
-    a.join(b, Seq("blk"))
-      .filter(col("id2") > col("id1") && col("id2") <= col("id1") + 8)
-      .select(col("id1"), col("id2"),
-        expr("CAST(bit_count(h1 ^ h2) AS BIGINT)").as("hamming"))
-      .withColumn("is_dup", col("hamming") <= 1)
-      .orderBy(col("id1"), col("id2"))
-  }
-
-  /** Difference-hash near-duplicate image pairs (q113's gradient
-    * cousin): REAL PNG decode → integer-exact dHash
-    * (MultiModal.imageDHash — horizontal brightness gradients, robust
-    * to global exposure shifts that flip aHash bits) → the same
-    * bounded-window hamming pairing as q113. Running both hashes and
-    * OR-ing the pair sets is the production near-dup-image recipe. */
-  private def qDhashDup(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val fx = MultiModal.syntheticImage(
-      t.documents.select("doc_id"), "doc_id", "png")
-    val hs = MultiModal.imageDHash(fx).graftCp(false)
-    val a = hs.select(col("doc_id").as("id1"), col("dhash").as("h1"))
-      .withColumn("blk", explode(array(
-        floor(col("id1") / lit(8)).cast("long"),
-        floor(col("id1") / lit(8)).cast("long") + 1)))
-    val b = hs.select(col("doc_id").as("id2"), col("dhash").as("h2"),
-      floor(col("id2") / lit(8)).cast("long").as("blk"))
-    a.join(b, Seq("blk"))
-      .filter(col("id2") > col("id1") && col("id2") <= col("id1") + 8)
-      .select(col("id1"), col("id2"),
-        expr("CAST(bit_count(h1 ^ h2) AS BIGINT)").as("hamming"))
-      .withColumn("is_dup", col("hamming") <= 1)
-      .orderBy(col("id1"), col("id2"))
-  }
-
-  /** Embedding-store hygiene audit (Profiling.embeddingHygiene): per
-    * label — dimension consistency, non-finite values, all-zero
-    * vectors, L2-norm envelope. The per-ingest-batch admission check
-    * that keeps a broken encoder checkpoint out of the ANN index. */
-  private def qEmbeddingHygiene(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Profiling.embeddingHygiene(t.embeddings, "embedding", "label")
-      .orderBy(col("label"))
-  }
-
-  /** Graded retrieval metrics (Similarity.retrievalMetrics): MRR and
-    * nDCG@10 of the exact cosine top-10 against label-match relevance —
-    * the position-aware evaluation behind every reranker/cutoff
-    * decision; q97's recall only says WHETHER the right ids appear. */
-  private def qRetrievalMetrics(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val ranked = Similarity.bruteForceKnn(
-      t.embeddings.filter(col("vec_id") < 8), t.embeddings,
-      "vec_id", "embedding", k = 10)
-    val truth = t.embeddings.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("query_id"), col("label"))
-      .join(t.embeddings.select(col("vec_id").as("cand_id"), col("label")),
-        Seq("label"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .select("query_id", "cand_id")
-    Similarity.retrievalMetrics(ranked, truth, k = 10)
-      .orderBy(col("query_id"))
-  }
-
-  /** End-to-end image near-dup clustering: decode once, fingerprint
-    * with BOTH perceptual hashes (aHash catches global-structure dups,
-    * dHash catches exposure-shifted ones), OR the bounded-window
-    * hamming pair sets, then connected components
-    * (Dedup.duplicateClusters) — the full image-dedup pipeline as one
-    * composition, cluster sizes as the report. */
-  private def qImageClusters(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val fx = MultiModal.syntheticImage(
-      t.documents.select("doc_id"), "doc_id", "png")
-      .graftCp(false) // encode once, hash twice
-    def pairsOf(hs: DataFrame, hcol: String): DataFrame = {
-      val a = hs.select(col("doc_id").as("id1"), col(hcol).as("h1"))
-        .withColumn("blk", explode(array(
-          floor(col("id1") / lit(8)).cast("long"),
-          floor(col("id1") / lit(8)).cast("long") + 1)))
-      val b = hs.select(col("doc_id").as("id2"), col(hcol).as("h2"),
-        floor(col("id2") / lit(8)).cast("long").as("blk"))
-      a.join(b, Seq("blk"))
-        .filter(col("id2") > col("id1") && col("id2") <= col("id1") + 8)
-        .filter(expr("bit_count(h1 ^ h2)") <= 1)
-        .select(col("id1"), col("id2"))
-    }
-    val pairs = pairsOf(MultiModal.imageAHash(fx), "ahash")
-      .unionByName(pairsOf(MultiModal.imageDHash(fx), "dhash"))
-      .distinct()
-    Dedup.duplicateClusters(pairs)
-      .groupBy(col("cluster")).agg(count(lit(1)).as("n_members"))
-      .orderBy(col("cluster"))
-  }
-
-  /** Multi-probe LSH ANN (Similarity.lshMultiProbeKnn): q35's bucket
-    * probe widened to the 2 smallest-margin bit flips (probes=3) — the
-    * recall lever that fans out only the broadcast query side, never
-    * the index. */
-  private def qMultiProbeLsh(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Similarity.lshMultiProbeKnn(t.embeddings,
-        t.embeddings.filter(col("vec_id") < 8),
-        "vec_id", "embedding", nBits = 8, k = 5, probes = 3)
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** Leakage-safe train/val/test split (Sampling.clusterSplit): q44's
-    * LSH duplicate clusters feed the split key, so two near-duplicate
-    * documents can never straddle train and validation. Per-split doc
-    * and cluster counts (clusters are whole by construction — the
-    * oracle recomputes the closure independently and must land on the
-    * same partition of the same clusters). */
-  private def qLeakageSplit(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val sig = Dedup.minhashSignature(t.documents, "text", "doc_id", k = 8)
-    val pairs = Dedup.candidatePairs(
-      Dedup.lshBuckets(sig, "doc_id", k = 8, bands = 4), "doc_id")
-    val labels = Dedup.duplicateClusters(pairs)
-    Sampling.clusterSplit(t.documents, "doc_id", labels)
-      .groupBy(col("split"))
-      .agg(count(lit(1)).as("n_docs"),
-        countDistinct(col("split_key")).as("n_clusters"))
-      .orderBy(col("split"))
-  }
-
-  /** k-anonymity audit (Profiling.kAnonymity) over the customer
-    * quasi-identifier pair (nation, market segment) at k = 10 — the
-    * "is any row re-identifiable by its released attributes" gate. */
-  private def qKAnonymity(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Profiling.kAnonymity(t.customer,
-      Seq("c_nationkey", "c_mktsegment"), k = 10)
-  }
-
-  /** Truncated dyadic EWMA (TimeSeriesOps.dyadicEwma, k = 8) over
-    * per-event-type value series in exact integer cents — exponential
-    * smoothing whose numerator/denominator are integer sums, so the
-    * smoothed value is reproducible bit-for-bit on any engine. */
-  private def qEwma(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val e = t.events.select(col("event_type"), col("event_id"),
-      col("ts"), round(col("value") * 100).cast("long").as("cents"))
-    TimeSeriesOps.dyadicEwma(e, Seq("event_type"),
-        Seq(col("ts"), col("event_id")), "cents", k = 8)
-      .select(col("event_type"), col("event_id"), col("cents"),
-        col("ewma_num"), col("ewma_den"), col("ewma"))
-      .orderBy(col("event_type"), col("event_id"))
-  }
-
-  /** Water-filling token-budget allocation (Sampling.budgetAllocation):
-    * per-source char masses, hash-derived milliweights (portable, no
-    * literal table), budget = 2× the corpus, repeat ceiling 3 epochs —
-    * high-weight sources hit their cap and the surplus redistributes.
-    * The budget scalar is a 1-row aggregate collect (metadata scale). */
-  private def qTokenBudget(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val masses = t.documents.groupBy(col("source"))
-      .agg(sum(col("n_chars")).as("available"))
-      .withColumn("weight_mw",
-        lit(10L) + pmod(GF.hash32(col("source")), lit(191L)))
-    val total = masses.agg(sum(col("available")).as("t"))
-      .first().getLong(0)
-    Sampling.budgetAllocation(masses, "source", "available", "weight_mw",
-        budget = 2L * total, maxEpochs = 3)
-      .orderBy(col("source"))
-  }
-
-  /** DEFLATE compression ratio (TextAnalysis.compressionRatio) — the
-    * whole-redundancy quality signal. Raw DEFLATE byte counts are not
-    * SQL-expressible, so the gate frame carries oracle-VERIFIABLE
-    * derived columns instead of the raw counts: n_bytes (exact UTF-8
-    * length), `deflate_ok` (the emitted count/ratio satisfy a
-    * conservative zlib size bound, positivity, and ratio-formula
-    * consistency) and `roundtrip_ok` (the compressed stream inflates
-    * back to the input bytes, computed in the same partition pass) —
-    * both booleans are the constant TRUE iff the codec plumbing is
-    * correct, which IS what a DuckDB oracle can express. The full
-    * query path still executes the Deflater+Inflater per row (nothing
-    * is pruned: every boolean reads the deflate outputs), and the
-    * exact byte values stay pinned by OperatorsSpec's independent
-    * java.util.zip recompute and closed-form fixtures. */
-  private def qDeflateRatio(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    // Size bound: java.util.zip.Deflater at DEFAULT_COMPRESSION emits
-    // stored-fallback blocks at its ~16 KB symbol-buffer granularity
-    // (memLevel 8), NOT at the 65535-byte stored-block maximum — pure
-    // random input measures ~5 bytes of header per 16 KB (100000
-    // random bytes → 100035). Bound at 5 bytes per 16383-byte block
-    // plus a 16-byte finish margin; UTF-8 String input compresses far
-    // below it, but the bound must hold for ANY input, not just ours.
-    val bound = col("n_bytes") +
-      lit(5) * (floor(col("n_bytes") / 16383L) + 1) + lit(16)
-    TextAnalysis.compressionRatio(t.documents, "text", "doc_id",
-        verifyRoundtrip = true)
-      .withColumn("deflate_ok",
-        col("n_deflate") >= 1L && col("n_deflate") <= bound &&
-        (when(col("n_bytes") === 0L, col("deflate_ratio").isNull)
-          // the ratio is the 6-dp rounding of n_deflate/n_bytes; allow
-          // the half-ulp rounding window rather than re-deriving the
-          // exact rounding mode (rint = HALF_EVEN vs round = HALF_UP)
-          .otherwise(abs(col("deflate_ratio") -
-            col("n_deflate").cast("double") / col("n_bytes")) <= 5.01e-7)))
-      .select(col("doc_id"), col("n_bytes"), col("deflate_ok"),
-        col("roundtrip_ok"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Per-label centroid-distance outliers
-    * (Profiling.centroidOutliers, q = 0.05): cosine of every embedding
-    * against its label centroid, flagged at or below the label's exact
-    * 5th-percentile — the mislabeled/garbage-vector screen. */
-  private def qEmbeddingOutliers(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Profiling.centroidOutliers(t.embeddings, "vec_id", "embedding",
-        "label", q = 0.05)
-      .orderBy(col("label"), col("vec_id"))
-  }
-
-  /** MMR diversity reranking (Similarity.mmrRerank): top-10 relevance
-    * pool per query, 3 greedy picks at λ = 0.7 — near-duplicate hits
-    * can't crowd the result list. The greedy loop is selectK chained
-    * stages over the (query × pool²) serving grain. */
-  private def qMmrRerank(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Similarity.mmrRerank(t.embeddings.filter(col("vec_id") < 8),
-        t.embeddings, "vec_id", "embedding",
-        poolK = 10, selectK = 3, lambda = 0.7)
-      .orderBy(col("query_id"), col("mmr_rank"))
-  }
-
-  /** Pearson correlation matrix (Profiling.correlationMatrix) over the
-    * four lineitem measures — exact decimal power sums in ONE pass, FP
-    * only in the final one-row formula. */
-  private def qCorrMatrix(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Profiling.correlationMatrix(t.lineitem,
-        Seq("l_discount", "l_extendedprice", "l_quantity", "l_tax"),
-        scale = 2)
-      .orderBy(col("col_x"), col("col_y"))
-  }
-
-  /** Mutual information lang × source (Profiling.mutualInformation) —
-    * "are sources language-siloed"; exact cell counts, sorted-fold
-    * entropies, min-normalized NMI. */
-  private def qMutualInfo(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Profiling.mutualInformation(t.documents, "lang", "source")
-  }
-
-  /** Langid confidence calibration (Profiling.confidenceCalibration):
-    * confidence = best stopword-hit score over token count, correctness
-    * = prediction vs the corpus's true `lang` column — the reliability
-    * diagram that says whether the router's confidence can gate
-    * routing decisions. Scores computed once (withLangScores); the
-    * prediction is re-derived from the score columns with the same
-    * max-score, alphabetical-tie, zero→"und" rule as langId. */
-  private def qLangidCalibration(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val scored = TextAnalysis.withLangScores(t.documents, "text")
-    val langsSorted = TextAnalysis.StopwordsByLang.map(_._1).sorted
-    val best = greatest(langsSorted.map(l => col(s"score_$l")): _*)
-    var pred: Column = lit("und")
-    for (l <- langsSorted.reverse)
-      pred = when(col(s"score_$l") === col("best"), lit(l)).otherwise(pred)
-    val nTok = size(GF.wsTokens(lower(col("text"))))
-    val perDoc = scored
-      .withColumn("best", best)
-      .withColumn("n_toks", nTok)
-      .select(
-        round(when(col("n_toks") > 0,
-          col("best").cast("double") / col("n_toks"))
-          .otherwise(lit(0.0)), 6).as("conf"),
-        (when(col("best") === 0, lit("und")).otherwise(pred)
-          === col("lang")).cast("int").as("ok"))
-    Profiling.confidenceCalibration(perDoc, "conf", "ok")
-      .orderBy(col("bin"))
-  }
-
-  /** Cheapest-supplier-per-part (the TPC-H Q2 shape over the
-    * lineitem-derived supply relation): per-(part, supplier) min unit
-    * price, per-part winner picked by a window min + filter — the
-    * correlated-subquery DECORRELATION pattern (one window over the
-    * grouped frame instead of one subquery per part) — decorated with
-    * supplier/nation through broadcast joins. */
-  private def qMinCostSupplier(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    // The 4-dp round goes through decimal(30,12): rounding the raw
-    // double directly diverged from DuckDB by one final digit on 5 of
-    // 3.5M groups at sf0.1 (ulp-boundary values round differently
-    // across engines); at 12 dp the boundary window is 10^8 narrower
-    // and the subsequent decimal round(…,4) is exact in both.
-    // (r17: a guarded scan spread before this agg was tried and
-    // measured SLOWER — the extra full-row exchange outweighs the
-    // parallel partial agg, the q208 lesson repeated)
-    val supply = t.lineitem
-      .groupBy(col("l_partkey").as("partkey"), col("l_suppkey").as("suppkey"))
-      .agg(round(min(col("l_extendedprice") / col("l_quantity"))
-          .cast("decimal(30,12)"), 4).cast("double")
-        .as("unit_cost"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("partkey"))
-    supply.withColumn("min_cost", min(col("unit_cost")).over(w))
-      .filter(col("unit_cost") === col("min_cost"))
-      .join(broadcast(t.supplier), col("suppkey") === col("s_suppkey"))
-      .join(broadcast(t.nation), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(t.part.filter(col("p_size") < 10)),
-        col("partkey") === col("p_partkey"))
-      .select(col("p_partkey"), col("p_name"),
-        col("s_name").as("supplier"), col("n_name").as("nation"),
-        col("unit_cost"))
-      .orderBy(col("p_partkey"), col("supplier"))
-  }
-
-  /** Above-global-threshold parts (the TPC-H Q11 shape): per-part
-    * revenue kept when it exceeds 1.5× the MEAN part revenue — a
-    * scale-invariant threshold (TPC-H divides its fraction by SF for
-    * the same reason: a fixed share of total selects nothing once the
-    * part domain grows). The global aggregate is a 1-row frame
-    * CROSS-joined back (broadcast) — the scalar-subquery shape without
-    * a driver-side collect. */
-  private def qImportantParts(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    // part-grain revenue is materialized once (localCheckpoint): both
-    // the total and the filter branch read it — ONE lineitem scan, not
-    // two, without relying on ReuseExchange firing
-    val rev = t.lineitem.groupBy(col("l_partkey"))
-      .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount")))
-        .as("v"))
-      .graftCp(false)
-    val tot = rev.agg(sum(col("v")).as("total"),
-      count(lit(1)).as("n_parts"))
-    rev.crossJoin(broadcast(tot))
-      .filter(col("v") > col("total") / col("n_parts") * lit(1.5))
-      .select(col("l_partkey").as("partkey"), round(col("v"), 2).as("value"))
-      .orderBy(col("value").desc, col("partkey"))
-  }
-
-  /** Shipping-priority revenue top-10 (the TPC-H Q3 shape): segment
-    * filter → orders join → lineitem join, date-bracketed, revenue
-    * aggregated and top-k'd with a deterministic tiebreak. */
-  private def qShipPriority(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val cutoff = lit("1998-06-01 00:00:00").cast("timestamp")
-    t.customer.filter(col("c_mktsegment") === "BUILDING")
-      .join(t.orders, col("c_custkey") === col("o_custkey"))
-      .filter(col("o_orderdate") < cutoff)
-      .join(t.lineitem, col("l_orderkey") === col("o_orderkey"))
-      .filter(col("l_shipdate") > cutoff)
-      .groupBy(col("l_orderkey"), col("o_orderdate").cast("date").as("order_date"),
-        col("o_orderpriority"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-        .as("revenue"))
-      .orderBy(col("revenue").desc, col("l_orderkey"))
-      .limit(10)
-  }
-
-  /** Part/supplier catalog breadth (the TPC-H Q16 shape): distinct
-    * suppliers per (brand, type) — a two-phase distinct aggregate over
-    * the part-lineitem join. */
-  private def qPartSupplier(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    t.part.join(t.lineitem, col("p_partkey") === col("l_partkey"))
-      .groupBy(col("p_brand"), col("p_type"))
-      .agg(countDistinct(col("l_suppkey")).as("n_suppliers"),
-        count(lit(1)).as("n_items"))
-      .orderBy(col("p_brand"), col("p_type"))
-  }
-
-  /** Ranking-function breadth over the corpus: per-language quartile
-    * (ntile), cumulative distribution and dense rank of document
-    * length, with a unique ordering so every engine agrees. */
-  private def qWindowRank(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("lang"))
-      .orderBy(col("n_chars"), col("doc_id"))
-    t.documents.select(col("lang"), col("doc_id"), col("n_chars"),
-      ntile(4).over(w).as("quartile"),
-      round(cume_dist().over(w), 6).as("cume"),
-      dense_rank().over(w).as("drank"))
-      .orderBy(col("lang"), col("doc_id"))
-  }
-
-  /** Set-operation breadth: INTERSECT and EXCEPT between behavioral
-    * cohorts at (user, day) grain — days a user both clicked and
-    * purchased without reporting an error. */
-  private def qSetOps(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    def cohort(ev: String) =
-      t.events.filter(col("event_type") === ev)
-        .select(col("user_id"), col("ts").cast("date").as("day"))
-    cohort("click").intersect(cohort("purchase"))
-      .except(cohort("error"))
-      .orderBy(col("user_id"), col("day"))
-  }
-
-  /** Calendar-function breadth over event timestamps: month/quarter
-    * truncation, month end, quarter-of-year, and day arithmetic —
-    * the portable subset both engines define identically. */
-  private def qDatetime(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    t.events.select(col("event_id"),
-        col("ts").cast("date").as("day"),
-        date_trunc("month", col("ts")).cast("date").as("month_start"),
-        last_day(col("ts")).as("month_end"),
-        quarter(col("ts")).as("qtr"),
-        datediff(col("ts").cast("date"), lit("2020-01-01").cast("date"))
-          .as("days_since"),
-        add_months(col("ts").cast("date"), 3).as("plus_quarter"))
-      .orderBy(col("event_id"))
-  }
-
-  /** Hard-negative mining (Similarity.hardNegatives): top-3 nearest
-    * different-label candidates per query — contrastive training
-    * pairs. */
-  private def qHardNegatives(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Similarity.hardNegatives(t.embeddings,
-        t.embeddings.filter(col("vec_id") < 8),
-        "vec_id", "embedding", "label", k = 3)
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** Per-language bigram-LM quality gate: q107's transition-aware
-    * score composed with the exact-percentile keep gate
-    * (TextAnalysis.qualityQuantileGate, q = 0.25) — drop the
-    * lowest-fluency quartile per language. */
-  private def qBigramGate(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val scored = TextAnalysis.bigramLogProb(t.documents, "text", "doc_id")
-      .filter(col("n_bigrams") > 0)
-      .join(t.documents.select(col("doc_id"), col("lang")), Seq("doc_id"))
-    TextAnalysis.qualityQuantileGate(scored, "lang", "logprob", 0.25)
-      .select(col("lang"), col("doc_id"), col("logprob"),
-        col("threshold"), col("kept"))
-      .orderBy(col("lang"), col("doc_id"))
-  }
-
-  /** Canonical-representative selection — the step that actually ENDS
-    * a dedup pipeline: within every LSH duplicate cluster (q44's
-    * machinery) keep the highest-quality member (q37's score, id
-    * tiebreak). WindowGroupLimit prunes the per-cluster argmax. */
-  private def qCanonical(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val sig = Dedup.minhashSignature(t.documents, "text", "doc_id", k = 8)
-    val pairs = Dedup.candidatePairs(
-      Dedup.lshBuckets(sig, "doc_id", k = 8, bands = 4), "doc_id")
-    val labels = Dedup.duplicateClusters(pairs)
-    val q = TextAnalysis
-      .qualityScore(t.documents.select(col("doc_id"), col("text")), "text")
-      .select(col("doc_id"), col("quality_score"))
-    val j = labels.join(q, labels("id") === q("doc_id"))
-      .select(col("cluster"), col("id"), col("quality_score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cluster"))
-      .orderBy(col("quality_score").desc, col("id"))
-    val winners = j.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("cluster"), col("id").as("winner_id"),
-        col("quality_score").as("best_quality"))
-    j.groupBy(col("cluster")).agg(count(lit(1)).as("n_members"))
-      .join(winners, Seq("cluster"))
-      .select(col("cluster"), col("n_members"), col("winner_id"),
-        col("best_quality"))
-      .orderBy(col("cluster"))
-  }
-
-  /** Semi-structured JSON extraction from the event props payload
-    * (get_json_object → typed aggregation) — the schema-on-read path
-    * for property bags that never got promoted to columns. */
-  private def qJsonProps(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    t.events
-      .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("k")).as("sum_k"),
-        min(col("k")).as("min_k"),
-        max(col("k")).as("max_k"),
-        round(avg(col("k")), 6).as("avg_k"))
-      .orderBy(col("event_type"))
-  }
-
-  /** DSIR-style importance weights against the English-docs target LM
-    * (TextAnalysis.importanceWeights) — domain-matched data selection
-    * without a classifier. */
-  private def qDsir(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    TextAnalysis.importanceWeights(t.documents, "text", "doc_id",
-        col("lang") === "en")
-      .orderBy(col("doc_id"))
-  }
-
-  /** Sliding-window token chunking, 16-token chunks with 4-token
-    * overlap (Packing.chunkTokens) — RAG/embedding prep. */
-  private def qChunking(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Packing.chunkTokens(t.documents, "text", "doc_id",
-        chunkSize = 16, overlap = 4)
-      .orderBy(col("doc_id"), col("chunk_idx"))
-  }
-
-  /** LSH-bucketed ANN top-5 (8 hyperplane bits) for 8 query vectors. */
-  private def qLshAnn(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Similarity.lshKnn(t.embeddings, t.embeddings.filter(col("vec_id") < 8),
-        "vec_id", "embedding", nBits = 8, k = 5)
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** Language-ID: stopword scores + guess vs labeled lang. */
-  private def qLangId(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val scored = TextAnalysis.withLangScores(
-      t.documents.select(col("doc_id"), col("lang").as("lang_true"),
-        col("text")), "text")
-    scored.withColumn("lang_guess", TextAnalysis.langId(col("text")))
-      .drop("text")
-      .orderBy(col("doc_id"))
-  }
-
-  /** Quality scoring: signals + composite score per document. */
-  private def qQuality(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    TextAnalysis.qualityScore(t.documents.select(col("doc_id"), col("text")),
-        "text")
-      .drop("text")
-      .orderBy(col("doc_id"))
-  }
-
-  /** Token counting: whitespace + BPE-ish subword counts. */
-  private def qTokenCounts(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    TextAnalysis.tokenCounts(t.documents.select(col("doc_id"), col("text")),
-        "text")
-      .drop("text")
-      .orderBy(col("doc_id"))
-  }
-
-  /** Document fingerprinting: whole-doc hash + winnowing count. */
-  private def qFingerprint(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val fp = TextAnalysis.winnowingFingerprints(t.documents, "text", "doc_id")
-      .groupBy(col("doc_id"))
-      .agg(countDistinct(col("fingerprint")).as("n_winnow"))
-    t.documents
-      .select(col("doc_id"),
-        TextAnalysis.docFingerprint(col("text")).as("doc_fp"))
-      .join(fp, Seq("doc_id"), "left")
-      .withColumn("n_winnow", coalesce(col("n_winnow"), lit(0L)))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Embedding-cosine near-duplicate pairs, blocked by ADAPTIVE-depth
-    * LSH (Similarity.adaptiveLshBlocks, baseBits = 8, cap 512). The
-    * r12 form pinned the depth at 8 bits, which is the fixed-depth
-    * quadratic the q65 audit already retired: with 256 buckets frozen,
-    * within-block pairs grow as (n/256)² — the r13 ×100 audit measured
-    * it superlinear (×124) at 200k vectors. Adaptive refinement bounds
-    * blocks at the cap so pair volume stays ~n·cap/2. Oracle
-    * precondition (same as q65/q196): at sf0.01 the corpus total
-    * (500 vectors) is UNDER the cap, so refinement can never fire and
-    * every block key is bucket₈ + (8 << 24) — the constant the DuckDB
-    * oracle adds to its fixed 8-bit bucket replay. */
-  private def qEmbeddingNearDup(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val blocked = Similarity.adaptiveLshBlocks(t.embeddings, "embedding",
-      "lsh_blk", baseBits = 8, maxBlockSize = 512)
-    Similarity.cosineNearDupPairs(blocked, "vec_id", "embedding",
-        "lsh_blk", threshold = 0.2)
-      .orderBy(col("blk"), col("id1"), col("id2"))
-  }
-
-  /** Repetition quality signals: duplicate 3-gram ratio + top-word
-    * share (TextAnalysis.repetitionSignals). */
-  private def qRepetition(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    TextAnalysis.repetitionSignals(t.documents, "text", "doc_id")
-      .orderBy(col("doc_id"))
-  }
-
-  /** IVF ANN: label-seeded coarse quantizer, search within the query's
-    * cell only (Similarity.ivfKnn). */
-  private def qIvfAnn(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Similarity.ivfKnn(t.embeddings, t.embeddings.filter(col("vec_id") < 8),
-        "vec_id", "embedding", "label", k = 5)
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** Label-free IVF build: Lloyd's k-means over the embeddings with a
-    * deterministic hash seed and rounded centroids
-    * (Similarity.kmeansCells) — the quantizer a production corpus
-    * without labels feeds into writeIvfIndex. */
-  private def qKmeansCells(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Similarity.kmeansCells(t.embeddings, "vec_id", "embedding",
-        k = 4, iters = 2)
-      .select(col("vec_id"), col("cell"))
-      .orderBy(col("vec_id"))
-  }
-
-  /** Columns profiled by q57 and its generated oracle — one list, two
-    * engines. Booleans mark numeric columns (mean defined). */
-  private val ProfileCols = Seq(
-    ("l_orderkey", true), ("l_quantity", true),
-    ("l_returnflag", false), ("l_shipdate", false))
-
-  /** One-pass relational profile (Profiling.profile) over mixed-type
-    * lineitem columns. */
-  private def qProfile(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Profiling.profile(t.lineitem, ProfileCols.map(_._1))
-  }
-
-  /** Deterministic corpus shuffle (Sampling.deterministicShuffle):
-    * training order as a salted-hash total sort, positions verified
-    * within hash shards (partitioned window, never a global one). */
-  private def qShuffle(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("shard"))
-      .orderBy(col("shuffle_key"), col("doc_id"))
-    Sampling.deterministicShuffle(t.documents.select("doc_id"),
-        "doc_id", epoch = 1)
-      .withColumn("shard", pmod(col("shuffle_key"), lit(8)).cast("int"))
-      .withColumn("pos", row_number().over(w))
-      .select(col("doc_id"), col("shuffle_key"), col("shard"), col("pos"))
-      .orderBy(col("shard"), col("pos"))
-  }
-
-  /** Product quantization + ADC search (Similarity.pqTrain/pqEncode/
-    * pqSearch): 4 subspaces × 8 sub-centroids trained per-subspace by
-    * the deterministic k-means, candidates scored by code lookup. */
-  private def qPqAdc(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val books = Similarity.pqTrain(t.embeddings, "vec_id", "embedding",
-      m = 4, k = 8, iters = 1, dims = 64)
-    val codes = Similarity.pqEncode(t.embeddings, "vec_id", "embedding",
-      books)
-    Similarity.pqSearch(codes, t.embeddings.filter(col("vec_id") < 4),
-        "vec_id", "embedding", books, topK = 5)
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** The persisted-index ANN read path, end to end: build the IVF-flat
-    * index to disk (label-derived 4-dp centroids, posting lists =
-    * parquet partitions, precomputed norms), then probe it with
-    * nProbe=2 via Similarity.ivfKnnFromIndex — the partition-pruned
-    * read a 100 TB deployment actually serves queries from, and the
-    * multi-probe recall knob, both under the DuckDB hash gate. */
-  private def qIvfIndex(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_ivfidx_${math.abs(dir.hashCode)}").getPath
-    // skip-if-exists build (the S2 fetch pattern): an index is built
-    // once and served many times — repeat calls time the PROBE, the
-    // path a deployment actually serves queries from. The _SUCCESS
-    // marker of the postings write (the last build step) gates reuse;
-    // the build is fully deterministic, so reuse cannot change results.
-    if (!new java.io.File(path, "postings/_SUCCESS").exists())
-      Similarity.writeIvfIndex(t.embeddings, "vec_id", "embedding",
-        "label", path)
-    Similarity.ivfKnnFromIndex(s, path,
-        t.embeddings.filter(col("vec_id") < 8), "vec_id", "embedding",
-        k = 5, nProbe = 2)
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** The composed IVF-PQ index read path, end to end: train the
-    * codebooks, persist coarse-cell-partitioned code-only postings,
-    * then ADC-probe via Similarity.pqSearchFromIndex — partition
-    * pruning AND ~32× less scanned data per candidate, hash-matched
-    * against a full DuckDB replay (train → encode → coarse-assign →
-    * prune → ADC). */
-  private def qPqIndex(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_pqidx_${math.abs(dir.hashCode)}").getPath
-    // skip-if-exists build, as in qIvfIndex: train + persist once
-    // (deterministic), probe per call — codebooks travel WITH the
-    // index, so a probe needs only the path.
-    if (!new java.io.File(path, "postings/_SUCCESS").exists()) {
-      val books = Similarity.pqTrain(t.embeddings, "vec_id", "embedding",
-        m = 4, k = 8, iters = 1, dims = 64)
-      Similarity.writeIvfPqIndex(t.embeddings, "vec_id", "embedding",
-        "label", books, path)
-    }
-    Similarity.pqSearchFromIndex(s, path,
-        t.embeddings.filter(col("vec_id") < 4), "vec_id", "embedding",
-        topK = 5)
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** The index MAINTENANCE path under the hash gate: build the
-    * IVF-flat index from the EVEN half of the corpus, upsert the ODD
-    * half against the frozen stored centroids
-    * (Similarity.upsertIvfIndex — computed cell placement, crash-safe
-    * partition swaps), then probe with nProbe=2. The oracle replays
-    * rebuild-from-union under the same frozen geometry: centroids from
-    * evens only, assignment of ALL vectors, cell-pruned cosine top-k —
-    * so a probe after upsert must equal a rebuild, hash-exactly. */
-  private def qIvfUpsert(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_ivfups_${math.abs(dir.hashCode)}").getPath
-    // skip-if-exists gate on a marker written AFTER the upsert lands —
-    // build+upsert are deterministic, so reuse cannot change results;
-    // repeat calls time the probe (the served path), as in qIvfIndex
-    val marker = new java.io.File(path, "_UPSERTED")
-    if (!marker.exists()) {
-      Similarity.writeIvfIndex(
-        t.embeddings.filter(col("vec_id") % 2 === 0),
-        "vec_id", "embedding", "label", path)
-      Similarity.upsertIvfIndex(s, path,
-        t.embeddings.filter(col("vec_id") % 2 === 1),
-        "vec_id", "embedding")
-      marker.createNewFile()
-    }
-    Similarity.ivfKnnFromIndex(s, path,
-        t.embeddings.filter(col("vec_id") < 8), "vec_id", "embedding",
-        k = 5, nProbe = 2)
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** REAL image decode end to end: deterministic 24-bit BMP fixtures
-    * encoded per partition, header fields parsed back by codegen'd
-    * expressions (MultiModal.decodeBmpMeta), pixels walked by the
-    * batched pure-JVM decoder (MultiModal.bmpPixelStats). The oracle
-    * never sees the bytes — it recomputes dims, file size (incl. the
-    * 4-byte row stride) and per-channel means from the same closed
-    * forms, so any mis-parse of offsets, padding, BGR order or the
-    * bottom-up rows breaks the hash match. */
-  private def qBmpDecode(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val fx = MultiModal.syntheticBmp(t.documents.select("doc_id"), "doc_id")
-    val meta = MultiModal.decodeBmpMeta(fx)
-      .select(col("doc_id"), col("width"), col("height"), col("channels"),
-        col("payload_len"))
-    val stats = MultiModal.bmpPixelStats(fx)
-      .select(col("doc_id"), round(col("mean_r"), 4).as("mean_r"),
-        round(col("mean_g"), 4).as("mean_g"),
-        round(col("mean_b"), 4).as("mean_b"))
-    meta.join(stats, Seq("doc_id")).orderBy(col("doc_id"))
-  }
-
-  /** REAL PNG decode end to end via the JDK's `javax.imageio` reader:
-    * deterministic PNG fixtures (same closed-form pixels as q60's BMPs)
-    * encoded per partition by the JDK's PNG writer, decoded back by
-    * MultiModal.imagePixelStats. PNG is lossless, so the per-channel
-    * means must hit the closed form EXACTLY; the oracle recomputes
-    * dims and means from the formulas without ever seeing bytes. */
-  private def qPngDecode(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val fx = MultiModal.syntheticImage(
-      t.documents.select("doc_id"), "doc_id", "png")
-    MultiModal.imagePixelStats(fx)
-      .select(col("doc_id"), col("width"), col("height"), col("channels"),
-        round(col("mean_r"), 4).as("mean_r"),
-        round(col("mean_g"), 4).as("mean_g"),
-        round(col("mean_b"), 4).as("mean_b"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** REAL JPEG header probe via the ImageIO reader registry
-    * (MultiModal.imageMeta): format name, dims and band count read from
-    * container headers WITHOUT pixel decode — the scan-speed shape for
-    * corpus-wide media stats. JPEG decode is lossy so the contract is
-    * metadata only; dims/bands are exact and closed-form. */
-  private def qJpegMeta(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val fx = MultiModal.syntheticImage(
-      t.documents.select("doc_id"), "doc_id", "jpg")
-    MultiModal.imageMeta(fx)
-      .select(col("doc_id"), col("format"), col("width"), col("height"),
-        col("channels"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Corpus-trained BPE token counts (TextAnalysis.bpeTokenCounts):
-    * BpeMerges rounds of iterative pair-count aggregation learn merge
-    * ranks from the corpus itself; per-doc counts under the learned
-    * tokenizer. The oracle replays the ENTIRE training loop in
-    * generated per-iteration SQL — any drift in pair counting, the
-    * (count desc, pair asc) tie-break, or greedy merge application
-    * breaks the hash. */
-  private def qBpeTokens(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    TextAnalysis.bpeTokenCounts(
-        t.documents.select(col("doc_id"), col("text")), "text", "doc_id")
-      .orderBy(col("doc_id"))
-  }
-
-  /** REAL audio decode end to end: deterministic PCM16 WAV fixtures
-    * (RIFF container written by the pure-JVM encoder), header fields
-    * parsed back by codegen'd expressions (MultiModal.decodeWavMeta),
-    * every sample folded into exact integer sums by the batched walk
-    * (MultiModal.wavSampleStats). The oracle recomputes rate/channels/
-    * frames/duration and the sample sums from the same closed forms
-    * without seeing bytes — any mis-parse of the 44-byte header, the
-    * little-endian shorts or channel interleaving breaks the hash. */
-  private def qWavDecode(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val fx = MultiModal.syntheticWav(t.documents.select("doc_id"), "doc_id")
-    val meta = MultiModal.decodeWavMeta(fx)
-      .select(col("doc_id"), col("sample_rate"), col("n_channels"),
-        col("n_frames"), col("duration_ms"))
-    val stats = MultiModal.wavSampleStats(fx)
-      .select(col("doc_id"), col("sum_samples"), col("sum_sq"),
-        round(sqrt(col("sum_sq") /
-          (col("n_frames") * col("n_channels"))), 4).as("rms"))
-    meta.join(stats, Seq("doc_id")).orderBy(col("doc_id"))
-  }
-
-  /** Per-language quantile quality gate
-    * (TextAnalysis.qualityQuantileGate): each language keeps docs above
-    * its own P75 quality score — a relative curation bar. */
-  private def qQualityGate(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val scored = TextAnalysis.qualityScore(
-      t.documents.select(col("doc_id"), col("lang"), col("text")), "text")
-    TextAnalysis.qualityQuantileGate(scored, "lang", "quality_score", 0.75)
-      .groupBy(col("lang"), col("threshold"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept"))
-      .withColumn("kept_ratio",
-        round(col("n_kept").cast("double") / col("n_docs"), 6))
-      .orderBy(col("lang"))
-  }
-
-  /** Power-of-two length bucketing (Packing.lengthBuckets) over
-    * whitespace token counts per language — the padding-waste report a
-    * dynamic-batching trainer schedules from. */
-  private def qLengthBuckets(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val toks = TextAnalysis.tokenCounts(
-        t.documents.select(col("doc_id"), col("lang"), col("text")), "text")
-      .select(col("doc_id"), col("lang"), col("ws_tokens").as("n_tokens"))
-    Packing.lengthBuckets(toks, "n_tokens", keys = Seq("lang"))
-      .orderBy(col("lang"), col("bucket_cap"))
-  }
-
-  /** SemDeDup-style semantic dedup, composed end to end from existing
-    * operators: embedding near-dup pairs (LSH-bucket blocked cosine,
-    * the q40 stage) → connected components (Dedup.duplicateClusters) →
-    * keep the min-id representative per semantic cluster. Output is
-    * the per-vector verdict a curation pipeline acts on. */
-  private def qSemanticDedup(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    // adaptive-depth blocking: 8 base bits exactly as before at test
-    // scale (no block exceeds the cap there, so the oracle's fixed
-    // 8-bit replay still matches); dense/over-cap blocks sub-split
-    // with more hyperplane bits instead of going |block|² — the ×100
-    // scaling run caught fixed-depth at 187M pairs / ×121 per decade
-    val withBucket = Similarity.adaptiveLshBlocks(t.embeddings,
-      "embedding", "lsh_blk", baseBits = 8)
-    val pairs = Similarity.cosineNearDupPairs(withBucket, "vec_id",
-      "embedding", "lsh_blk", threshold = 0.2)
-    Dedup.duplicateClusters(pairs)
-      .select(col("id").as("vec_id"), col("cluster"),
-        (col("id") === col("cluster")).as("keeper"))
-      .orderBy(col("vec_id"))
-  }
-
-  /** Period-over-period percentage change (TimeSeriesOps.pctChange) —
-    * the series-tiempo representation_mode the reference ecosystem
-    * serves; ÷0-safe, null at series start. */
-  private def qPctChange(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val monthly = t.lineitem.groupBy(
-        col("l_returnflag").as("serie_id"),
-        trunc(col("l_shipdate"), "month").as("indice_tiempo"))
-      .agg(round(sum(col("l_quantity")), 2).as("valor"))
-    TimeSeriesOps.pctChange(monthly)
-      .orderBy(col("serie_id"), col("indice_tiempo"))
-  }
-
-  /** As-of join (TimeSeriesOps.asofJoin): every event aligned to the
-    * most recent reference mark at-or-before it per user — the union +
-    * last(ignoreNulls) window shape, zero join nodes, one shuffle. The
-    * oracle is DuckDB's NATIVE ASOF JOIN, an independent implementation
-    * of the semantics rather than a replay of the trick. */
-  private def qAsofJoin(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val ev = t.events.select(col("user_id"),
-      unix_micros(col("ts")).as("us"), col("event_id"),
-      round(col("value"), 2).as("value"))
-    val marks = ev.filter(col("event_id") % 7 === 0)
-      .groupBy(col("user_id"), col("us"))
-      .agg(max(col("value")).as("mark"))
-    TimeSeriesOps.asofJoin(ev, marks, Seq("user_id"), "us", Seq("mark"))
-      .select(col("user_id"), col("us"), col("event_id"), col("value"),
-        col("asof_mark"))
-      .orderBy(col("user_id"), col("us"), col("event_id"))
-  }
-
-  /** Resample/collapse (TimeSeriesOps.resample): monthly sums from
-    * lineitem collapsed to quarterly averages — one groupBy, no
-    * window. */
-  private def qResample(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val monthly = t.lineitem.groupBy(
-        col("l_returnflag").as("serie_id"),
-        trunc(col("l_shipdate"), "month").as("indice_tiempo"))
-      .agg(round(sum(col("l_quantity")), 2).as("valor"))
-    TimeSeriesOps.resample(monthly, Frequency.Quarterly, "avg")
-      .orderBy(col("serie_id"), col("period"))
-  }
-
-  /** Forward fill (TimeSeriesOps.forwardFill): deterministically
-    * injected nulls repaired from the latest preceding non-null value
-    * per series. */
-  private def qFfill(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val series = t.events.select(
-      col("user_id").cast("string").as("serie_id"),
-      unix_micros(col("ts")).as("indice_tiempo"), col("event_id"),
-      when(col("event_id") % 3 === 0, lit(null))
-        .otherwise(round(col("value"), 2)).as("valor"))
-    TimeSeriesOps.forwardFill(series, tieCols = Seq("event_id"))
-      .orderBy(col("serie_id").cast("long"), col("indice_tiempo"),
-        col("event_id"))
-  }
-
-  /** Rolling stats (TimeSeriesOps.rollingStats): 5-observation moving
-    * average/extrema per series; the mean runs over exact integer cents
-    * so sliding-frame summation order cannot drift between engines. */
-  private def qRolling(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val series = t.events.select(
-      col("user_id").cast("string").as("serie_id"),
-      unix_micros(col("ts")).as("indice_tiempo"), col("event_id"),
-      round(col("value"), 2).as("valor"))
-    TimeSeriesOps.rollingStats(series, k = 5, tieCols = Seq("event_id"))
-      .select(col("serie_id"), col("indice_tiempo"), col("event_id"),
-        col("valor"), col("n_window"), col("roll_avg"), col("roll_min"),
-        col("roll_max"))
-      .orderBy(col("serie_id").cast("long"), col("indice_tiempo"),
-        col("event_id"))
-  }
-
-  /** Per-source document cap (Curation.capPerGroup): at most 15 docs
-    * per source, longest-first — the C4/RefinedWeb "max pages per
-    * domain" curation rule; the rank filter plans as WindowGroupLimit
-    * so map tasks pre-prune before the shuffle. */
-  private def qSourceCap(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Curation.capPerGroup(
-        t.documents.select(col("doc_id"), col("source"), col("n_chars")),
-        "source", "doc_id", maxPerGroup = 15,
-        priorityDesc = Seq("n_chars"))
-      .select(col("doc_id"), col("source"), col("n_chars"), col("grp_rank"))
-      .orderBy(col("source"), col("grp_rank"))
-  }
-
-  /** Target shares for the q70 mixture rebalance — en down-weighted
-    * toward a balanced multilingual mixture. Shared with the generated
-    * oracle so the two sides cannot drift. */
-  private val MixtureShares: Seq[(String, Double)] =
-    Seq("de" -> 0.2, "en" -> 0.3, "es" -> 0.2, "fr" -> 0.15, "zh" -> 0.15)
-
-  /** Mixture rebalancing (Sampling.mixtureRebalance): per-language
-    * keep-rates that hit the target shares by downsampling only, then
-    * the per-language kept counts under the deterministic hash gate. */
-  private def qMixture(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Sampling.mixtureRebalance(t.documents, "lang", "doc_id",
-        MixtureShares.toMap)
-      .groupBy(col("lang"), col("rate_bp"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("sampled"), 1L).otherwise(0L)).as("n_kept"))
-      .orderBy(col("lang"))
-  }
-
-  /** Corpus-trained unigram LM scoring (TextAnalysis.unigramLogProb):
-    * mean token log-probability per document — the dependency-free form
-    * of CCNet-style LM quality filtering. */
-  private def qUnigramLm(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    TextAnalysis.unigramLogProb(t.documents, "text", "doc_id")
-      .orderBy(col("doc_id"))
-  }
-
-  /** BM25 top-k retrieval for a fixed query-term bag
-    * (TextAnalysis.bm25TopK) — the corpus-slice retrieval primitive. */
-  private def qBm25(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    TextAnalysis.bm25TopK(t.documents, "text", "doc_id",
-      Seq("spark", "window", "join"), k = 10)
-  }
-
-  /** Interpolated bigram LM scores (TextAnalysis.bigramLogProb) — the
-    * transition-aware upgrade of q71's unigram quality signal. */
-  private def qBigramLm(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    TextAnalysis.bigramLogProb(t.documents, "text", "doc_id")
-      .orderBy(col("doc_id"))
-  }
-
-  /** Repeated-shingle boilerplate coverage per document
-    * (TextAnalysis.boilerplateSpans). */
-  private def qBoilerplate(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    TextAnalysis.boilerplateSpans(t.documents, "text", "doc_id",
-      n = 3, minDf = 3)
-      .orderBy(col("doc_id"))
-  }
-
-  /** Linear interpolation of injected gaps (TimeSeriesOps.interpolate)
-    * — nulls between observations repaired on the straight line through
-    * their neighbours; leading/trailing nulls stay null. */
-  private def qInterpolate(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val series = t.events.select(
-      col("user_id").cast("string").as("serie_id"),
-      unix_micros(col("ts")).as("indice_tiempo"), col("event_id"),
-      when(col("event_id") % 3 === 0, lit(null))
-        .otherwise(round(col("value"), 2)).as("valor"))
-    TimeSeriesOps.interpolate(series, tieCols = Seq("event_id"))
-      .orderBy(col("serie_id").cast("long"), col("indice_tiempo"),
-        col("event_id"))
-  }
-
-  /** Rolling z-score anomaly screen (TimeSeriesOps.rollingAnomaly):
-    * verdict computed in EXACT integer cents — `(n·x−s)² > kσ²·(n·sq−s²)`
-    * — so the boolean never depends on FP summation order. */
-  private def qRollingAnomaly(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val series = t.events.select(
-      col("user_id").cast("string").as("serie_id"),
-      unix_micros(col("ts")).as("indice_tiempo"), col("event_id"),
-      round(col("value"), 2).as("valor"))
-    TimeSeriesOps.rollingAnomaly(series, k = 8, kSigma = 2, minObs = 4,
-        tieCols = Seq("event_id"))
-      .select(col("serie_id"), col("indice_tiempo"), col("event_id"),
-        col("valor"), col("n_w"), col("anomaly"), col("zscore"))
-      .orderBy(col("serie_id").cast("long"), col("indice_tiempo"),
-        col("event_id"))
-  }
-
-  /** Edit-distance verification of candidate pairs
-    * (Dedup.editDistanceVerify) — same deterministic pair frame as q32,
-    * character-level verdict instead of shingle overlap. */
-  private def qEditDistance(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Dedup.editDistanceVerify(t.documents, langBlockedPairs(t, 3),
-        "text", "doc_id")
-      .select(col("id1"), col("id2"), col("len1"), col("len2"),
-        col("edit_dist"), col("dist_ratio"), col("near_dup"))
-      .orderBy(col("id1"), col("id2"))
-  }
-
-  /** Shingle containment (Dedup.shingleContainment) — the subset-dup
-    * signal Jaccard misses; same pair frame as q32. */
-  private def qContainment(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Dedup.shingleContainment(t.documents, langBlockedPairs(t, 3),
-        "text", "doc_id")
-      .select(col("id1"), col("id2"), col("n_inter"), col("n1"), col("n2"),
-        col("containment"))
-      .orderBy(col("id1"), col("id2"))
-  }
-
-  /** Additive seasonal decomposition (TimeSeriesOps.seasonalDecompose):
-    * monthly revenue split into trend + month-of-year seasonal +
-    * residual, all FP reduced to fixed expressions over exact integer
-    * cents. */
-  private def qSeasonal(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val monthly = t.lineitem.groupBy(
-        col("l_returnflag").as("serie_id"),
-        trunc(col("l_shipdate"), "month").as("indice_tiempo"))
-      .agg(round(sum(col("l_quantity")), 2).as("valor"))
-    TimeSeriesOps.seasonalDecompose(monthly, period = 12)
-      .select(col("serie_id"), col("indice_tiempo"), col("valor"),
-        col("trend"), col("seasonal"), col("residual"))
-      .orderBy(col("serie_id"), col("indice_tiempo"))
-  }
-
-  /** Ordered conversion funnel (EventAnalytics.funnel): view → click →
-    * purchase, strictly-after semantics, mean inter-step lag from exact
-    * integer µs sums. */
-  private def qFunnel(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val ev = t.events.select(col("user_id"), col("event_type"),
-      unix_micros(col("ts")).as("us"))
-    EventAnalytics.funnel(ev, Seq("view", "click", "purchase"))
-      .orderBy(col("step"))
-  }
-
-  /** Time-to-convert percentiles per funnel step
-    * (EventAnalytics.funnelTiming): exact p50/p90/max lag seconds. */
-  private def qFunnelTiming(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val ev = t.events.select(col("user_id"), col("event_type"),
-      unix_micros(col("ts")).as("us"))
-    EventAnalytics.funnelTiming(ev, Seq("view", "click", "purchase"))
-      .orderBy(col("step"))
-  }
-
-  /** Weekly retention cohorts (EventAnalytics.retentionCohorts):
-    * integer epoch-week cohort crossed with activity-week offset. */
-  private def qRetention(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val ev = t.events.select(col("user_id"),
-      unix_micros(col("ts")).as("us"))
-    EventAnalytics.retentionCohorts(ev)
-      .orderBy(col("cohort_week"), col("week_offset"))
-  }
-
-  /** Snapshot diff (Snapshot.diff): row-level added/removed/changed/
-    * unchanged classification of two order-book snapshots — the
-    * re-harvest "which series changed" report at row grain. Prices
-    * compare in exact integer cents so the change verdict is
-    * engine-portable; ~1/7 of the overlap is mutated. */
-  private def qSnapshotDiff(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val base = t.orders.select(col("o_orderkey"), col("o_orderstatus"),
-      round(col("o_totalprice") * 100).cast("long").as("price_cents"),
-      col("o_orderdate"))
-    val oldSnap = base.filter(col("o_orderdate") < lit("1995-07-01"))
-      .drop("o_orderdate")
-    val newSnap = base.filter(col("o_orderdate") >= lit("1993-07-01"))
-      .select(col("o_orderkey"), col("o_orderstatus"),
-        when(col("o_orderkey") % 7 === 0, col("price_cents") + 1000L)
-          .otherwise(col("price_cents")).as("price_cents"))
-    Snapshot.diff(oldSnap, newSnap, Seq("o_orderkey"),
-        Seq("o_orderstatus", "price_cents"))
-      .orderBy(col("o_orderkey"))
-  }
-
-  /** Exact vocabulary heavy hitters (TextAnalysis.topTokens): top-10
-    * normalized tokens per language; the bounded-memory Misra-Gries
-    * companion (Sketches.heavyHitters) is spec-covered since its
-    * residual counts are merge-order-dependent. */
-  private def qTopTokens(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    TextAnalysis.topTokens(t.documents, "text", "lang", k = 10)
-      .orderBy(col("stratum"), col("rank"))
-  }
-
-  /** Incremental dedup (Dedup.writeSignatureIndex /
-    * dedupAgainstIndex): even doc_ids are the served corpus whose LSH
-    * postings persist as an index; odd doc_ids are the arriving crawl
-    * batch probing it. Same skip-if-exists build gate as q58 — repeat
-    * calls time the probe, the path a pipeline actually runs per
-    * batch. */
-  private def qIncrementalDedup(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_sigidx_${math.abs(dir.hashCode)}").getPath
-    if (!new java.io.File(path, "buckets/_SUCCESS").exists())
-      Dedup.writeSignatureIndex(
-        t.documents.filter(col("doc_id") % 2 === 0), "text", "doc_id", path)
-    Dedup.dedupAgainstIndex(
-        t.documents.filter(col("doc_id") % 2 === 1), "text", "doc_id", path)
-      .orderBy(col("doc_id"))
-  }
-
-  /** Per-language winsorization of document length
-    * (Curation.winsorize): [p05, p95] exact-percentile clip thresholds
-    * (6-dp-rounded before comparison) and the per-side clip counts. */
-  private def qWinsorize(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Curation.winsorize(
-        t.documents.select(col("lang"), col("doc_id"), col("n_chars")),
-        "lang", "n_chars", pLo = 0.05, pHi = 0.95)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        max(col("lo")).as("lo"), max(col("hi")).as("hi"),
-        sum(when(col("clip_dir") === -1, 1L).otherwise(0L)).as("n_clip_lo"),
-        sum(when(col("clip_dir") === 1, 1L).otherwise(0L)).as("n_clip_hi"))
-      .orderBy(col("lang"))
-  }
-
-  /** Character-distribution entropy per doc (TextAnalysis.charEntropy,
-    * the native codegen'd CharEntropyExpr) — order-independent fold,
-    * 6-dp round. */
-  private def qCharEntropy(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    t.documents.select(col("doc_id"),
-        round(TextAnalysis.charEntropy(col("text")), 6).as("entropy"),
-        col("n_chars"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Distribution drift between corpus halves (Profiling.psiDrift):
-    * per-language PSI of document length, equal-width bins over the
-    * reference half's range — the pre-retraining drift monitor. */
-  private def qPsiDrift(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Profiling.psiDrift(
-        t.documents.filter(col("doc_id") % 2 === 0),
-        t.documents.filter(col("doc_id") % 2 === 1),
-        "n_chars", "lang", bins = 10)
-      .orderBy(col("lang"))
-  }
-
-  /** Cross-source duplication matrix (Dedup.sourceOverlap): shared
-    * distinct digests + overlap coefficient per source pair. */
-  private def qSourceOverlap(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Dedup.sourceOverlap(t.documents, "text", "doc_id", "source")
-      .orderBy(col("source1"), col("source2"))
-  }
-
-  /** Per-doc 3-gram novelty of the odd half vs the even half's shingle
-    * vocabulary (TextAnalysis.ngramNovelty). */
-  private def qNgramNovelty(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    TextAnalysis.ngramNovelty(
-        t.documents.filter(col("doc_id") % 2 === 1),
-        t.documents.filter(col("doc_id") % 2 === 0),
-        "text", "doc_id", n = 3)
-      .orderBy(col("doc_id"))
-  }
-
-  /** Deterministic weighted sampling (Sampling.weightedSample): top-5
-    * A-ES winners per language, length-weighted. */
-  private def qWeightedSample(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Sampling.weightedSample(t.documents, "lang", "doc_id", "n_chars",
-        k = 5)
-      .select(col("lang"), col("doc_id"), col("n_chars"),
-        col("priority"), col("rank"))
-      .orderBy(col("lang"), col("rank"))
-  }
-
-  /** Embedding-corpus QA (Profiling.embeddingDimStats): per-dimension
-    * mean/std/min/max — the collapsed-dimension detector. */
-  private def qDimStats(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Profiling.embeddingDimStats(t.embeddings, "embedding")
-      .orderBy(col("dim"))
-  }
-
-  /** PMI collocations (TextAnalysis.pmiCollocations): top adjacent
-    * token pairs that co-occur beyond chance. */
-  private def qPmi(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    TextAnalysis.pmiCollocations(t.documents, "text", minCount = 5, k = 50)
-  }
-
-  /** Schema-drift report between lineitem halves
-    * (Profiling.profileDiff): null-spike / distinct-drop / mean-shift
-    * flags per column. */
-  private def qProfileDiff(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Profiling.profileDiff(
-      t.lineitem.filter(col("l_orderkey") % 2 === 0),
-      t.lineitem.filter(col("l_orderkey") % 2 === 1),
-      ProfileCols.map(_._1))
-  }
-
-  /** Per-event-type daily trend (TimeSeriesOps.linearTrend):
-    * closed-form OLS over exact integer sums, slope in cents/day. */
-  private def qTrend(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val daily = t.events.select(col("event_type"),
-        floor(unix_micros(col("ts")) / lit(86400000000L)).cast("long")
-          .as("day"),
-        round(col("value") * 100).cast("long").as("cents"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(sum(col("cents")).as("day_cents"))
-    TimeSeriesOps.linearTrend(daily, "event_type", "day", "day_cents")
-      .orderBy(col("event_type"))
-  }
-
-  /** Per-event-type CUSUM changepoint over daily totals
-    * (TimeSeriesOps.cusumChangepoint): integer-scaled statistic. */
-  private def qChangepoint(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val daily = t.events.select(col("event_type"),
-        floor(unix_micros(col("ts")) / lit(86400000000L)).cast("long")
-          .as("day"),
-        round(col("value") * 100).cast("long").as("cents"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(sum(col("cents")).as("day_cents"))
-    TimeSeriesOps.cusumChangepoint(daily, "event_type", "day", "day_cents")
-      .orderBy(col("event_type"))
-  }
-
-  /** Per-language percentile-rank calibration of document length
-    * (Curation.percentileCalibrate). */
-  private def qPercentRank(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Curation.percentileCalibrate(t.documents, "lang", "n_chars")
-      .select(col("doc_id"), col("lang"), col("n_chars"), col("pct_rank"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Source concentration per language (Profiling.sourceConcentration):
-    * HHI + top-source share — the diversity monitor. */
-  private def qConcentration(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Profiling.sourceConcentration(t.documents, "lang", "source")
-      .orderBy(col("lang"))
-  }
-
-  /** Duplicate inflation per source (Dedup.dupInflation): raw rows vs
-    * distinct digests. */
-  private def qDupInflation(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Dedup.dupInflation(t.documents, "text", "source")
-      .orderBy(col("source"))
-  }
-
-  /** ANN evaluation harness (Similarity.recallAtK): per-query recall
-    * of the 8-bit LSH probe against exact brute-force top-5. */
-  private def qRecall(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val queries = t.embeddings.filter(col("vec_id") < 8)
-    val exact = Similarity.bruteForceKnn(queries, t.embeddings,
-      "vec_id", "embedding", k = 5)
-    val approx = Similarity.lshKnn(t.embeddings, queries,
-      "vec_id", "embedding", nBits = 8, k = 5)
-    Similarity.recallAtK(approx, exact, k = 5)
-      .orderBy(col("query_id"))
-  }
-
-  /** Item-side benchmark leakage (TextAnalysis.benchmarkLeakage):
-    * which benchmark docs are compromised, by how many corpus docs. */
-  private def qLeakage(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    TextAnalysis.benchmarkLeakage(
-        t.documents.filter(col("doc_id") >= 20),
-        t.documents.filter(col("doc_id") < 20),
-        "text", "doc_id", n = 3, threshold = 0.5, maxDocFreq = 100)
-      .orderBy(col("bench_id"))
-  }
-
-  /** Per-language length histogram with explicit bin edges
-    * (Profiling.histogramReport). */
-  private def qHistogram(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Profiling.histogramReport(t.documents, "n_chars", "lang", bins = 10)
-      .orderBy(col("lang"), col("bin"))
-  }
-
-  /** Targets for q100: even sources get 0.09, odd sources are
-    * unplanned (1e-6 smoothing -> visible KL penalty). */
-  private val MixTargets: Map[String, Double] =
-    (0 until 20 by 2).map(i => s"src$i" -> 0.09).toMap
-
-  /** Realized-vs-target mixture divergence (Profiling.mixKlDivergence)
-    * per language, in nats. */
-  private def qMixKl(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Profiling.mixKlDivergence(t.documents, "lang", "source", MixTargets)
-      .orderBy(col("lang"))
-  }
-
-  /** Multimodal plumbing: binary payload + stubbed decode + frame
-    * sampling (MultiModal). */
-  private def qMultimodal(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val df = MultiModal.sampleFrames(
-      MultiModal.frameIndexStub(
-        MultiModal.decodeImageMetaStub(
-          MultiModal.attachPayload(
-            t.documents.select(col("doc_id"), col("text")), "text"))),
-      every = 5)
-    df.select(col("doc_id"), col("payload_len"), col("width"), col("height"),
-        col("channels"), col("n_frames"), col("n_sampled"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Portable KMV distinct sketch: approx distinct users per event type
-    * — unlike HLL (q26, engine-specific), the k-minimum-values estimate
-    * over the portable hash is reproducible by ANY engine, so this one
-    * hash-matches the oracle (Sketches.kmvDistinct). */
-  private def qKmvDistinct(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Sketches.kmvDistinct(t.events, "event_type", "user_id", k = 64)
-      .orderBy(col("event_type"))
-  }
-
-  /** Duplicate clusters: LSH candidate pairs → connected components →
-    * per-cluster sizes (Dedup.duplicateClusters — the "keep one per
-    * cluster" completion of the dedup story). */
-  private def qDupClusters(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val sig = Dedup.minhashSignature(t.documents, "text", "doc_id", k = 8)
-    val pairs = Dedup.candidatePairs(
-      Dedup.lshBuckets(sig, "doc_id", k = 8, bands = 4), "doc_id")
-    Dedup.duplicateClusters(pairs)
-      .groupBy(col("cluster")).agg(count(lit(1)).as("n_members"))
-      .orderBy(col("cluster"))
-  }
-
-  /** Deterministic hash-based train/val/test split: counts per
-    * (language, split) — stable across runs/engines/cluster sizes
-    * (Sampling.withSplit). */
-  private def qSplit(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Sampling.withSplit(t.documents, "doc_id")
-      .groupBy(col("lang"), col("split")).agg(count(lit(1)).as("n"))
-      .orderBy(col("lang"), col("split"))
-  }
-
-  /** Corpus TF-IDF top terms per language
-    * (TextAnalysis.tfidfTopTerms). */
-  private def qTfidf(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    TextAnalysis.tfidfTopTerms(t.documents, "text", "lang", "doc_id", k = 5)
-      .orderBy(col("lang"), col("rank"))
-  }
-
-  /** PII scrubbing: per-doc counts of redacted entities + a hash of the
-    * scrubbed text (TextAnalysis.redactPii). */
-  private def qPiiRedact(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    // salt the synthetic corpus with PII-bearing suffixes so the
-    // redaction has something to bite on, deterministically per doc
-    val salted = t.documents.select(col("doc_id"),
-      concat(col("text"),
-        when(col("doc_id") % 3 === 0,
-          concat(lit(" contact user"), col("doc_id"),
-            lit("@example.org now"))).otherwise(lit("")),
-        when(col("doc_id") % 5 === 0,
-          concat(lit(" see https://example.org/d/"), col("doc_id")))
-          .otherwise(lit("")),
-        when(col("doc_id") % 7 === 0, lit(" from 10.0.0.1"))
-          .otherwise(lit(""))).as("text"))
-    salted.select(col("doc_id"),
-        size(regexp_extract_all(col("text"),
-          lit(TextAnalysis.EmailPattern), lit(0))).as("n_email"),
-        size(regexp_extract_all(col("text"),
-          lit(TextAnalysis.UrlPattern), lit(0))).as("n_url"),
-        md5(TextAnalysis.redactPii(col("text"))).as("redacted_md5"))
-      .select(col("doc_id"), col("n_email").cast("long").as("n_email"),
-        col("n_url").cast("long").as("n_url"), col("redacted_md5"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Benchmark decontamination: shingle-overlap ratio of each corpus
-    * doc against the benchmark set (docs 0-19), flagged at 0.5
-    * (TextAnalysis.decontaminationRatios). */
-  private def qDecontaminate(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val benchmark = t.documents.filter(col("doc_id") < 20)
-    val corpus = t.documents.filter(col("doc_id") >= 20)
-    TextAnalysis.decontaminationRatios(corpus, benchmark, "text", "doc_id")
-      .select(col("doc_id"), col("n_sh"), col("n_hit"),
-        col("overlap_ratio"), col("contaminated"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Stratified deterministic sampling: per-language keep rates (en is
-    * over-represented in the synthetic corpus, zh up-weighted) — the
-    * training-mixture constructor (Sampling.withStratifiedFlag). */
-  private def qStratifiedSample(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Sampling.withStratifiedFlag(t.documents, "lang", "doc_id",
-        Map("en" -> 0.2, "zh" -> 0.5), defaultRate = 0.35)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("sampled"), 1L).otherwise(0L)).as("n_sampled"))
-      .orderBy(col("lang"))
-  }
-
-  /** Chunk-level (line/paragraph-style) exact dedup with reassembly
-    * (Dedup.chunkDedup): per-doc chunk counts + digest of the
-    * deduplicated text. */
-  private def qChunkDedup(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Dedup.chunkDedup(t.documents, "text", "doc_id", chunkTokens = 8)
-      .orderBy(col("doc_id"))
-  }
-
-  /** Corpus composition stats per language: count, mean and exact
-    * p50/p90/p99 of document length (TextAnalysis.corpusStats). */
-  private def qCorpusStats(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    TextAnalysis.corpusStats(t.documents, "lang", "n_chars")
-      .orderBy(col("lang"))
-  }
-
-  /** Curation funnel with first-failing-rule attribution over a corpus
-    * with planted duplicates: per (language, reason) counts
-    * (Curation.funnel). */
-  private def qCurationFunnel(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val base = t.documents.select(col("doc_id"), col("lang"), col("text"))
-    val planted = base.filter(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 1000000).as("doc_id"), col("lang"),
-        col("text"))
-    Curation.funnel(base.union(planted), "text", "doc_id")
-      .groupBy(col("lang"), col("reason"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("lang"), col("reason"))
-  }
-
-  /** Sequence packing into 512-token context windows per source shard:
-    * per-bin fill report (Packing.packBins / binStats). */
-  private def qPack(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val docs = t.documents.select(col("source"), col("doc_id"),
-      size(GF.wsTokens(col("text"))).cast("long").as("n_tokens"))
-    val packed = Packing.packBins(docs, "source", "doc_id", "n_tokens",
-      capacity = 512L)
-    Packing.binStats(packed, "source", "n_tokens", capacity = 512L)
-      .orderBy(col("source"), col("bin"))
-  }
-
-  /** Exact per-language quantiles of document length at VALUE grain —
-    * no row sort, no sketch (Profiling.exactQuantilesByValue). */
-  private def qExactQuantiles(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Profiling.exactQuantilesByValue(t.documents, "n_chars", "lang",
-        Seq(0.25, 0.5, 0.75, 0.9, 0.99))
-      .orderBy(col("lang"), col("q"))
-  }
-
-  /** Encoding-quality scoring over a corpus salted with deterministic
-    * transcoding damage (TextAnalysis.encodingQuality): replacement
-    * chars, control bytes, mojibake signatures, ascii ratio. */
-  private def qEncQuality(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    // salt: doc_id%4==0 gets a mis-decoded accent, %5==0 mis-decoded
-    // curly quotes, %7==0 a replacement char, %11==0 a BEL control byte
-    val salted = t.documents.select(col("doc_id"), concat(col("text"),
-      when(col("doc_id") % 4 === 0, lit(" cafÃ©"))
-        .otherwise(lit("")),
-      when(col("doc_id") % 5 === 0,
-        lit(" â€œokâ€")).otherwise(lit("")),
-      when(col("doc_id") % 7 === 0, lit(" x�y")).otherwise(lit("")),
-      when(col("doc_id") % 11 === 0, lit(" ab")).otherwise(lit("")))
-      .as("text"))
-    TextAnalysis.encodingQuality(salted, "text", "doc_id")
-      .orderBy(col("doc_id"))
-  }
-
-  /** Point-in-interval join, bucket-blocked (TimeSeriesOps
-    * .pointInIntervalJoin): events matched to incident windows derived
-    * from the nation dim; per-window event count / distinct users /
-    * value total. */
-  private def qIntervalJoin(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val windows = t.nation.select(
-      col("n_nationkey").as("window_id"),
-      (lit("2024-01-01").cast("timestamp") +
-        make_dt_interval(col("n_nationkey"))).as("start_ts"),
-      (lit("2024-01-01").cast("timestamp") +
-        make_dt_interval(col("n_nationkey"),
-          (col("n_nationkey") % 3 + 1) * 6)).as("end_ts"))
-    TimeSeriesOps.pointInIntervalJoin(t.events, "ts", windows,
-        "start_ts", "end_ts", bucketUs = 6L * 3600L * 1000000L)
-      .groupBy(col("iv_window_id").as("window_id"))
-      .agg(count(lit(1)).as("n_events"),
-        countDistinct(col("user_id")).as("n_users"),
-        round(sum(col("value")), 2).as("sum_value"))
-      .orderBy(col("window_id"))
-  }
-
-  /** Zipf's-law fit of the corpus vocabulary (TextAnalysis.zipfFit):
-    * one row, OLS over the top-100 token ranks. */
-  private def qZipf(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    TextAnalysis.zipfFit(t.documents, "text", topN = 100)
-  }
-
-  /** Domain-blocklist filter with parent-domain semantics
-    * (Curation.domainBlocklist): per (source, blocking entry) counts
-    * over synthesized crawl URLs. */
-  private def qBlocklist(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val withUrl = t.documents.select(col("doc_id"), col("source"),
-      concat(lit("https://"),
-        when(col("doc_id") % 3 === 0, lit("ads."))
-          .when(col("doc_id") % 3 === 1, lit("www."))
-          .otherwise(lit("")),
-        col("source"), lit(".example."),
-        when(col("doc_id") % 2 === 0, lit("com")).otherwise(lit("net")),
-        lit("/page/"), col("doc_id")).as("url"))
-    Curation.domainBlocklist(withUrl, "url", "doc_id",
-        Seq("src0.example.com", "example.net", "ads.src1.example.com"))
-      .groupBy(col("source"),
-        coalesce(col("blocked_by"), lit("-")).as("blocked_by"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("source"), col("blocked_by"))
-  }
-
-  /** URL canonicalization dedup (GF.canonicalizeUrl): four cosmetic
-    * variants per page (tracking params, www + trailing slash, fragment
-    * + gclid, mixed-case host) collapse to one canonical key. */
-  private def qUrlCanon(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val urls = t.documents.select(col("doc_id"),
-      concat(
-        when(col("doc_id") % 4 === 2, lit("https://www.example.com"))
-          .otherwise(lit("https://Example.com")),
-        lit("/Docs/"), (col("doc_id") / 4).cast("long"),
-        when(col("doc_id") % 4 === 1, lit("?utm_source=feed&utm_medium=rss"))
-          .when(col("doc_id") % 4 === 2, lit("/"))
-          .when(col("doc_id") % 4 === 3, lit("?gclid=xyz#section"))
-          .otherwise(lit(""))).as("url"))
-    urls.select(col("doc_id"), GF.canonicalizeUrl(col("url")).as("canon"))
-      .groupBy(col("canon"))
-      .agg(count(lit(1)).as("n_variants"), min(col("doc_id")).as("min_doc"))
-      .orderBy(col("canon"))
-  }
-
-  /** Inter-arrival bot detection (EventAnalytics.botScore) over events
-    * with a deterministically compressed "scripted" cohort (every 5th
-    * user's clock divided by 10⁵). */
-  private def qBotDetect(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val ev = t.events.select(col("user_id"), col("event_id"),
-      when(col("user_id") % 5 === 0,
-        floor(unix_micros(col("ts")) / 100000L).cast("long"))
-        .otherwise(unix_micros(col("ts"))).as("us"))
-    EventAnalytics.botScore(ev, minEvents = 20L)
-      .orderBy(col("user_id"))
-  }
-
-  /** SCD2 validity intervals from the event change log
-    * (EventAnalytics.validityIntervals): consecutive identical states
-    * collapse, each surviving change carries its half-open window. */
-  private def qScd2(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val ev = t.events.select(col("user_id"),
-      unix_micros(col("ts")).as("us"), col("event_id"), col("event_type"))
-    EventAnalytics.validityIntervals(ev, "user_id", "us", "event_id",
-        "event_type")
-      .orderBy(col("user_id"), col("valid_from"), col("state"))
-  }
-
-  /** Temperature-scaled mixture allocation over sources
-    * (Sampling.temperatureAllocation): weight ∝ √count, exact integer
-    * token budget via largest-remainder apportionment. */
-  private def qTemperatureMix(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Sampling.temperatureAllocation(t.documents, "source",
-        budget = 1000000L)
-      .orderBy(col("source"))
-  }
-
-  /** C4/Gopher rule-based quality filter (TextAnalysis.gopherRules)
-    * over documents salted with deterministic line structure: every doc
-    * gets a terminal period, every 3rd bullet lines, every 4th an
-    * unpunctuated trailing line, every 10th a lorem-ipsum footer. */
-  private def qGopherRules(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val salted = t.documents.select(col("doc_id"), concat(
-      col("text"), lit("."),
-      when(col("doc_id") % 3 === 0,
-        lit("\n- item one\n- item two")).otherwise(lit("")),
-      when(col("doc_id") % 4 === 0,
-        lit("\nTrailing line without punct")).otherwise(lit("")),
-      when(col("doc_id") % 10 === 0,
-        lit("\nLorem ipsum dolor sit amet.")).otherwise(lit("")))
-      .as("text"))
-    TextAnalysis.gopherRules(salted, "text", "doc_id")
-      .orderBy(col("doc_id"))
-  }
-
-  /** Code-vs-prose routing (TextAnalysis.codeDetect) over documents
-    * salted with deterministic code blocks for every 4th doc. */
-  private def qCodeDetect(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val salted = t.documents.select(col("doc_id"), concat(col("text"),
-      when(col("doc_id") % 4 === 0, lit(
-        "\ndef load(path):\n    return read(path);\nimport os\nx = 1;"))
-        .otherwise(lit("")),
-      when(col("doc_id") % 7 === 0, lit("\nplain trailing prose line"))
-        .otherwise(lit(""))).as("text"))
-    TextAnalysis.codeDetect(salted, "text", "doc_id")
-      .orderBy(col("doc_id"))
-  }
-
-  /** MP4 container triage (MultiModal.decodeMp4Meta): header-only box
-    * walk over closed-form fixtures (every 2nd led by a free box, so
-    * fixed-offset shortcuts would fail). */
-  private def qMp4Meta(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    MultiModal.decodeMp4Meta(MultiModal.syntheticMp4(
-        t.documents.select(col("doc_id")), "doc_id"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Per-track MP4 descent (MultiModal.decodeMp4Tracks): tkhd
-    * id/dims, hdlr handler, stsd codec fourcc per track of the
-    * synthetic fixtures — every field closed-form in (doc_id, track
-    * ordinal) for the oracle. */
-  private def qMp4Tracks(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    MultiModal.decodeMp4Tracks(MultiModal.syntheticMp4(
-        t.documents.select(col("doc_id")), "doc_id"))
-      .orderBy(col("doc_id"), col("track_id"))
-  }
-
-  /** Cross-document duplicated-span coverage (Dedup.duplicateSpans):
-    * rolling 20-char grams at every position, grams shared by >= 2
-    * distinct docs mark spans, per-doc interval-union coverage — the
-    * alignment-free "memorized substring" pass chunk dedup misses. */
-  private def qDupSpans(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Dedup.duplicateSpans(t.documents, "text", "doc_id", gramLen = 20)
-      .orderBy(col("doc_id"))
-  }
-
-  /** Token-budget curriculum phases (Sampling.curriculumPhases): score
-    * = distinct-token ratio (lexical-diversity quality proxy), order
-    * (score desc, id), phase = floor(tokens-before / 2000) via the
-    * scalable two-pass (bin-offset + per-bin window) running sum. */
-  private def qCurriculum(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val ws = GF.wsTokens(col("text"))
-    val scored = t.documents.select(col("doc_id"),
-      size(ws).cast("long").as("n_tokens"),
-      (size(array_distinct(ws)).cast("double") /
-        size(ws).cast("double")).as("score"))
-    Sampling.curriculumPhases(scored, "score", "n_tokens", "doc_id",
-        phaseBudget = 2000L)
-      .select(col("doc_id"), col("n_tokens"),
-        round(col("score"), 4).as("score"), col("phase"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Per-channel audio features (MultiModal.wavChannelFeatures) over
-    * the closed-form WAV fixtures: zero crossings, silence frames,
-    * peak, per-channel DC sum — all exact integers the oracle
-    * recomputes from the generator formula without the bytes. */
-  private def qAudioFeatures(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    MultiModal.wavChannelFeatures(MultiModal.syntheticWav(
-        t.documents.select(col("doc_id")), "doc_id"))
-      .orderBy(col("doc_id"), col("channel"))
-  }
-
-  /** Local-supplier volume (the TPC-H Q5 shape): revenue per nation
-    * where the customer and the line's supplier share a nation, region-
-    * and date-bracketed. The nation/region dims broadcast; the only
-    * shuffles are the two fact-grain equi-joins (orders on custkey,
-    * lineitem on orderkey) — at 100 TB those co-partition on their join
-    * keys and AQE picks the sides. */
-  private def qLocalSupplierVolume(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val asiaNations = t.nation
-      .join(broadcast(t.region.filter(col("r_name") === "ASIA")),
-        col("n_regionkey") === col("r_regionkey"))
-      .select(col("n_nationkey"), col("n_name"))
-    val datedOrders = t.orders.filter(
-      col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-      col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
-    // Runtime bloom prune (JoinPrune): only ~15% of orders survive the
-    // date window, so lineitem's shuffle input is pruned by a bloom
-    // over the surviving orderkeys BEFORE the exchange — at 100 TB the
-    // fact shuffle is the cost center and the one dim-side bloom
-    // aggregate (behind the pushed date filter) is noise. Sizing comes
-    // from plan statistics (driver-side, no pre-count scan), refined
-    // downward from the conf default; under-sizing only degrades fpp.
-    // The inner join below removes the bloom's false positives, so
-    // results are identical to the unpruned plan.
-    val lineitem = JoinPrune.buildBloom(datedOrders, "o_orderkey") match {
-      case Some(bloom) => JoinPrune.bloomPrune(t.lineitem, "l_orderkey", bloom)
-      case None => t.lineitem.limit(0)
-    }
-    t.customer
-      .join(datedOrders, col("c_custkey") === col("o_custkey"))
-      .join(lineitem, col("o_orderkey") === col("l_orderkey"))
-      .join(broadcast(t.supplier), col("l_suppkey") === col("s_suppkey") &&
-        col("c_nationkey") === col("s_nationkey"))
-      .join(broadcast(asiaNations), col("s_nationkey") === col("n_nationkey"))
-      .groupBy(col("n_name").as("nation"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-        .as("revenue"))
-      .orderBy(col("revenue").desc, col("nation"))
-  }
-
-  /** Bilateral trade flows (the TPC-H Q7 shape): shipped revenue
-    * between two named nations in both directions, by ship year. The
-    * supplier/customer nation tags come from broadcast dims; the fact
-    * joins stay on their natural keys. */
-  private def qNationTrade(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val pair = Seq("NATION_1", "NATION_2")
-    val supN = t.supplier
-      .join(broadcast(t.nation.filter(col("n_name").isin(pair: _*))),
-        col("s_nationkey") === col("n_nationkey"))
-      .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-    val cusN = t.customer
-      .join(broadcast(t.nation.filter(col("n_name").isin(pair: _*))),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(col("c_custkey"), col("n_name").as("cust_nation"))
-    t.lineitem
-      .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-      .join(broadcast(supN), col("l_suppkey") === col("s_suppkey"))
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .join(cusN, col("o_custkey") === col("c_custkey"))
-      .filter(col("supp_nation") =!= col("cust_nation"))
-      .groupBy(col("supp_nation"), col("cust_nation"),
-        year(col("l_shipdate")).as("ship_year"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-        .as("revenue"))
-      .orderBy(col("supp_nation"), col("cust_nation"), col("ship_year"))
-  }
-
-  /** Product-line profit (the TPC-H Q9 shape): per supplier-nation and
-    * order year, margin over a modeled unit cost (0.6 × retail — the
-    * schema carries no partsupp supplycost) for PROMO-type parts. The
-    * part filter broadcasts and prunes lineitem BEFORE the orders join,
-    * so the big join only moves matching rows. */
-  private def qProductProfit(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val promoParts = t.part.filter(col("p_type") === "PROMO")
-      .select(col("p_partkey"), col("p_retailprice"))
-    t.lineitem
-      .join(broadcast(promoParts), col("l_partkey") === col("p_partkey"))
-      .join(broadcast(t.supplier), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(t.nation), col("s_nationkey") === col("n_nationkey"))
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("n_name").as("nation"),
-        year(col("o_orderdate")).as("order_year"))
-      // per-row margin stays double (bit-identical across engines);
-      // the SUM runs in decimal(30,10) so accumulation is exact and
-      // ORDER-INDEPENDENT — the double sum's ±ulp, which depends on
-      // partitioning, crossed a 2-dp rounding boundary on 2 of 175
-      // groups at sf0.1 and flipped the last digit vs the oracle
-      .agg(round(sum((col("l_extendedprice") * (lit(1) - col("l_discount")) -
-          lit(0.6) * col("p_retailprice") * col("l_quantity"))
-          .cast("decimal(30,10)")), 2).cast("double")
-        .as("profit"))
-      .orderBy(col("nation"), col("order_year").desc)
-  }
-
-  /** Returned-item losers (the TPC-H Q10 shape): top-20 customers by
-    * returned revenue in a quarter. One orders→lineitem shuffle join;
-    * customer+nation resolve by broadcast after the aggregate, so the
-    * wide name/acctbal columns never enter the shuffle. */
-  private def qReturnedCustomers(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val lost = t.orders
-      .filter(col("o_orderdate") >= lit("1996-10-01").cast("timestamp") &&
-        col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
-      .join(t.lineitem.filter(col("l_returnflag") === "R"),
-        col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("o_custkey"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-        .as("revenue"))
-    lost.join(t.customer, col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
-      .select(col("c_custkey"), col("c_name"), col("n_name").as("nation"),
-        round(col("c_acctbal"), 2).as("acctbal"), col("revenue"))
-      .orderBy(col("revenue").desc, col("c_custkey"))
-      .limit(20)
-  }
-
-  /** Priority-by-linestatus counts (the TPC-H Q12 shape — the schema
-    * has no shipmode, so linestatus plays the mode axis): per
-    * linestatus shipped in 1997, how many lines belong to critical
-    * (1-URGENT / 2-HIGH) vs other-priority orders. Conditional-count
-    * aggregation after one fact join. */
-  private def qPriorityLines(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val crit = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    t.lineitem
-      .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("l_linestatus"))
-      .agg(sum(when(crit, 1L).otherwise(0L)).as("critical_lines"),
-        sum(when(crit, 0L).otherwise(1L)).as("other_lines"))
-      .orderBy(col("l_linestatus"))
-  }
-
-  /** Promo revenue share (the TPC-H Q14 shape): the percentage of one
-    * month's discounted revenue from PROMO-type parts — a broadcast
-    * part join folded into a single conditional-sum aggregate (no
-    * second scan, no scalar subquery). */
-  private def qPromoShare(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    t.lineitem
-      .filter(col("l_shipdate") >= lit("1997-03-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1997-04-01").cast("timestamp"))
-      .join(broadcast(t.part.select(col("p_partkey"), col("p_type"))),
-        col("l_partkey") === col("p_partkey"))
-      .agg(round(sum(when(col("p_type") === "PROMO",
-          col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .otherwise(lit(0.0))) * 100.0 /
-        sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 4)
-        .as("promo_share_pct"))
-  }
-
-  /** Large-volume orders (the TPC-H Q18 shape): orders whose total
-    * quantity exceeds 250, with their customer. The HAVING aggregate
-    * runs at order grain FIRST (partial map-side sums), and only the
-    * surviving ~0.2% of orders join back to customer/orders — a
-    * broadcast at any scale because the filter is what's small, not
-    * the table. */
-  private def qLargeOrders(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val big = t.lineitem.groupBy(col("l_orderkey"))
-      .agg(round(sum(col("l_quantity")), 2).as("total_qty"))
-      .filter(col("total_qty") > 250.0)
-    t.orders.join(big, col("o_orderkey") === col("l_orderkey"))
-      .join(t.customer, col("o_custkey") === col("c_custkey"))
-      .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
-        col("o_orderdate").cast("date").as("order_date"),
-        round(col("o_totalprice"), 2).as("total_price"), col("total_qty"))
-      .orderBy(col("total_qty").desc, col("o_orderkey"))
-  }
-
-  /** Accent/case-fold canonicalization (EntityResolution.foldKey — the
-    * native codegen'd FoldTextExpr): documents salted with a fixed
-    * accented prefix fold to matching keys; the oracle reproduces the
-    * fold with utf8proc's strip_accents + lower. */
-  private def qTextFold(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val salted = concat(lit("Café Ñandú ÀÉÎÕÜ "),
-      substring(col("text"), 1, 40))
-    t.documents.select(col("doc_id"),
-        EntityResolution.foldKey(salted).as("folded"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Blocked fuzzy entity matching (EntityResolution.blockedNamePairs
-    * — the native codegen'd JaroWinklerExpr): customer names blocked
-    * by key range (custkey DIV 100), top-2 most similar per left
-    * record. The block key is the scale lesson the ×100 audit taught
-    * twice (q65 LSH blocks, q204 simhash bands): a block key with
-    * FIXED cardinality — the original (nation, custkey mod 10) had
-    * 250 values forever — makes within-block all-pairs grow ~n²/250
-    * (4.5B Jaro evaluations at ×100, measured 569 s). Key-RANGE
-    * blocks invert that: block SIZE is pinned (≤100 dense TPC-H
-    * custkeys) and block COUNT grows with the data, so candidates are
-    * exactly 49.5 pairs per customer at any scale. The oracle
-    * recomputes pair scores with DuckDB's jaro_winkler_similarity
-    * (verified same semantics: prefix cap 4, scale 0.1, 0.7 boost
-    * threshold). */
-  private def qJaroWinklerMatch(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val blocked = t.customer.select(col("c_custkey"), col("c_name"),
-      floor(col("c_custkey") / 100).cast("string").as("block"))
-    EntityResolution.blockedNamePairs(blocked, "c_custkey", "c_name",
-        "block", minSim = 0.9, k = 2)
-      .select(col("id_a"), col("id_b"), col("sim"))
-      .orderBy(col("id_a"), col("sim").desc, col("id_b"))
-  }
-
-  /** Referential-integrity audit (EntityResolution.referentialAudit):
-    * the FK battery a lake gate runs before publishing — anti-join
-    * orphan probes at fact grain, 1-row report per check. */
-  private def qRefIntegrity(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    EntityResolution.referentialAudit(Seq(
-        ("lineitem.orderkey", t.lineitem, "l_orderkey", t.orders, "o_orderkey"),
-        ("lineitem.partkey", t.lineitem, "l_partkey", t.part, "p_partkey"),
-        ("lineitem.suppkey", t.lineitem, "l_suppkey", t.supplier, "s_suppkey"),
-        ("orders.custkey", t.orders, "o_custkey", t.customer, "c_custkey"),
-        ("events.user_id", t.events, "user_id", t.customer, "c_custkey")))
-      .orderBy(col("check"))
-  }
-
-  /** Benford first-digit audit (EntityResolution.benfordDigits) over
-    * order totals — digit from the decimal string of floor(x), exact
-    * in both engines where a log10/pow round-trip is not. */
-  private def qBenford(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    EntityResolution.benfordDigits(t.orders, "o_totalprice")
-  }
-
-  /** Johnson-Lindenstrauss random projection
-    * (Similarity.randomProjection): 64-dim embeddings to 8 dims via
-    * the closed-form ±1 LCG-parity matrix — the oracle regenerates the
-    * identical matrix from (d, j) arithmetic and order-folds the same
-    * float sums. */
-  private def qRandomProjection(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Similarity.randomProjection(t.embeddings, "vec_id", "embedding", k = 8)
-      .orderBy(col("vec_id"), col("dim"))
-  }
-
-  /** Per-dimension z-score standardization (Similarity.standardizeDims)
-    * of the embedding table — dim-grain population stats broadcast back
-    * onto the exploded rows. */
-  private def qStandardizeDims(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Similarity.standardizeDims(t.embeddings, "vec_id", "embedding")
-      .orderBy(col("vec_id"), col("dim"))
-  }
-
-  /** Brand co-purchase lift (Baskets.pairLift): brands co-occurring in
-    * the same order, joint support ≥ 5, lift over the order universe —
-    * basket width bounded by the 25-brand domain, pair shuffle at
-    * brand-pair grain. */
-  private def qCopurchaseLift(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val baskets = t.lineitem
-      .join(broadcast(t.part.select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
-      .select(col("l_orderkey"), col("p_brand"))
-    Baskets.pairLift(baskets, "l_orderkey", "p_brand", minSupport = 5L)
-      .orderBy(col("item_a"), col("item_b"))
-  }
-
-  /** Dominant principal component (Profiling.pcaPowerComponent):
-    * 3 exact-integer power iterations over the 1e-6-quantized
-    * covariance — float arithmetic only in the one-per-cell closed
-    * form and the final normalization, so the oracle reproduces every
-    * intermediate bit-for-bit. */
-  private def qPcaPower(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Profiling.pcaPowerComponent(t.embeddings, "embedding", iters = 3)
-  }
-
-  /** BPE serving path (TextAnalysis.bpeEncode): merges trained on
-    * documents applied to HELD-OUT words (reversed doc words — OOV
-    * sequences the training table never saw) as one chained-replace
-    * projection, no vocabulary join. */
-  private def qBpeEncode(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val (merges, _) = TextAnalysis.bpeLearn(t.documents, "text", "doc_id")
-    val held = t.documents.filter(col("doc_id") % 7 === 0)
-      .select(explode(regexp_extract_all(lower(col("text")),
-        lit("[a-z0-9]+"), lit(0))).as("w"))
-      .select(reverse(col("w")).as("word")).distinct()
-    TextAnalysis.bpeEncode(held, "word", merges)
-      .orderBy(col("word"))
-  }
-
-  /** First/last-touch attribution (EventAnalytics.conversionAttribution):
-    * purchase value credited to the user's earliest and latest prior
-    * non-purchase event type — one user-keyed window, both models. */
-  private def qAttribution(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    EventAnalytics.conversionAttribution(t.events, "user_id", "ts",
-        "event_id", "event_type", "value", conversionType = "purchase")
-      .orderBy(col("model"), col("touch_type"))
-  }
-
-  /** Per-node triangle counts (GraphOps.triangleCounts) over the brand
-    * co-purchase graph (q174's ≥5-support edges): a<b<c wedge closure,
-    * each triangle found once, credited to all three corners. */
-  private def qTriangles(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val baskets = t.lineitem
-      .join(broadcast(t.part.select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
-      .select(col("l_orderkey"), col("p_brand"))
-    val edges = Baskets.pairLift(baskets, "l_orderkey", "p_brand",
-        minSupport = 5L)
-      .select(col("item_a"), col("item_b"))
-    GraphOps.triangleCounts(edges, "item_a", "item_b")
-      .orderBy(col("node"))
-  }
-
-  /** Equi-depth binning (Profiling.equiDepthBins): deciles of event
-    * value per event type. Per-bin count and envelope are
-    * tiebreak-invariant, so no id column is needed. */
-  private def qEquiDepth(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Profiling.equiDepthBins(t.events, "event_type", "value", nBins = 10)
-      .orderBy(col("event_type"), col("bin"))
-  }
-
-  /** Key-skew diagnostic (Skew.keySkewReport) on lineitem's part key:
-    * exact Gini/topk-share from count-grain integer identities. */
-  private def qKeySkew(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Skew.keySkewReport(t.lineitem, "l_partkey")
-  }
-
-  /** Event-type transition matrix (EventAnalytics.transitionMatrix):
-    * adjacent-pair counts + row-normalized probabilities per user
-    * stream. */
-  private def qTransitions(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    EventAnalytics.transitionMatrix(t.events, "user_id", "ts",
-        "event_id", "event_type")
-      .orderBy(col("from_type"), col("to_type"))
-  }
-
-  /** Exact similarity join via prefix filtering
-    * (Dedup.prefixFilterJoin): the AllPairs/PPJoin candidate rule over
-    * rare-first shingle prefixes, verified by exact intersection. The
-    * oracle computes the BRUTE-FORCE Jaccard join — the algorithm must
-    * reproduce the specification's exact pair set. */
-  private def qPrefixFilterJoin(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Dedup.prefixFilterJoin(t.documents, "text", "doc_id",
-        threshold = 0.5, shingleN = 3)
-      .orderBy(col("id_a"), col("id_b"))
-  }
-
-  /** Native as-of join (graft.plans.AsOfJoin → AsOfJoinExec via the
-    * injected strategy): q61's exact workload through the custom
-    * whole-operator path — one merge pass per co-partitioned sorted
-    * partition, no union, no window state. Same DuckDB ASOF JOIN
-    * oracle. */
-  private def qAsofNative(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val ev = t.events.select(col("user_id"),
-      unix_micros(col("ts")).as("us"), col("event_id"),
-      round(col("value"), 2).as("value"))
-    val marks = ev.filter(col("event_id") % 7 === 0)
-      .groupBy(col("user_id"), col("us"))
-      .agg(max(col("value")).as("mark"))
-    TimeSeriesOps.asofJoinNative(ev, marks, Seq("user_id"), "us",
-        Seq("mark"))
-      .select(col("user_id"), col("us"), col("event_id"), col("value"),
-        col("asof_mark"))
-      .orderBy(col("user_id"), col("us"), col("event_id"))
-  }
-
-  /** Order-priority checking (the TPC-H Q4 shape): per priority, how
-    * many 1997-Q1 orders had at least one line shipped more than 60
-    * days after ordering (the schema carries no commit/receipt dates,
-    * so ship-lag plays the lateness axis). The EXISTS decorrelates to
-    * a LEFT SEMI join — the fact side is pre-filtered by the date
-    * bracket before the shuffle, and each order emits at most once no
-    * matter how many late lines it has. */
-  private def qOrderPriority(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    t.orders
-      .filter(col("o_orderdate") >= lit("1997-01-01").cast("timestamp") &&
-        col("o_orderdate") < lit("1997-04-01").cast("timestamp"))
-      .join(t.lineitem,
-        col("o_orderkey") === col("l_orderkey") &&
-          col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"),
-        "left_semi")
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("late_orders"))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  /** National market share (the TPC-H Q8 shape): of all revenue ASIA
-    * customers ordered in 1996-1997, the fraction supplied by
-    * NATION_1, per order year. Both nation tags resolve from broadcast
-    * dims; the numerator/denominator fold into ONE conditional-sum
-    * aggregate — no second pass, no scalar subquery. */
-  private def qMarketShare(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val asiaCust = t.customer
-      .join(broadcast(t.nation
-          .join(broadcast(t.region.filter(col("r_name") === "ASIA")),
-            col("n_regionkey") === col("r_regionkey"))
-          .select(col("n_nationkey"))),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(col("c_custkey"))
-    val suppNation = t.supplier
-      .join(broadcast(t.nation), col("s_nationkey") === col("n_nationkey"))
-      .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-    t.orders
-      .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
-      .join(asiaCust, col("o_custkey") === col("c_custkey"), "left_semi")
-      .join(t.lineitem, col("o_orderkey") === col("l_orderkey"))
-      .join(broadcast(suppNation), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(year(col("o_orderdate")).as("order_year"))
-      .agg(round(
-        sum(when(col("supp_nation") === "NATION_1",
-            col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .otherwise(lit(0.0))) /
-        sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 4)
-        .as("mkt_share"))
-      .orderBy(col("order_year"))
-  }
-
-  /** Customer order-count distribution (the TPC-H Q13 shape): how many
-    * customers placed exactly N non-urgent orders — INCLUDING the
-    * zero-order bucket, which is why the join must be LEFT OUTER from
-    * customer (an inner join silently drops the most interesting row).
-    * Two order-of-magnitude-shrinking aggregations: customer grain,
-    * then count grain. */
-  private def qCustDistribution(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val perCust = t.customer
-      .join(t.orders.filter(col("o_orderpriority") =!= "1-URGENT"),
-        col("c_custkey") === col("o_custkey"), "left")
-      .groupBy(col("c_custkey"))
-      .agg(count(col("o_orderkey")).as("c_count"))
-    perCust.groupBy(col("c_count"))
-      .agg(count(lit(1)).as("custdist"))
-      .orderBy(col("custdist").desc, col("c_count").desc)
-  }
-
-  /** Top supplier by quarterly revenue (the TPC-H Q15 shape): the
-    * supplier(s) whose 1997-Q1 shipped revenue equals the maximum. The
-    * supplier-grain revenue frame is materialized ONCE
-    * (localCheckpoint — it is supplier-sized, i.e. tiny), then both
-    * the 1-row max and the equality filter read it: one lineitem scan,
-    * and the max arrives as a broadcast cross join, not a driver
-    * collect. Ties all surface (revenue is rounded to cents BEFORE the
-    * max so the equality is exact). */
-  private def qTopSupplier(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val rev = t.lineitem
-      .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1997-04-01").cast("timestamp"))
-      .groupBy(col("l_suppkey"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-        .as("total_revenue"))
-      .graftCp(false)
-    val best = rev.agg(max(col("total_revenue")).as("max_revenue"))
-    rev.crossJoin(broadcast(best))
-      .filter(col("total_revenue") === col("max_revenue"))
-      .join(broadcast(t.supplier), col("l_suppkey") === col("s_suppkey"))
-      .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
-      .orderBy(col("s_suppkey"))
-  }
-
-  /** Supplier exclusion count (the TPC-H Q16 shape, the NOT-IN half —
-    * q115 covers the distinct-count half): distinct suppliers per
-    * (brand, size) over observed part-supplier pairs, EXCLUDING
-    * negative-balance suppliers (the schema's stand-in for the
-    * complaints clause) via a broadcast LEFT ANTI join, for a bounded
-    * size set. The (partkey, suppkey) distinct runs BEFORE the part
-    * join, so the dedup shuffle moves two ints per row. */
-  private def qExcludedSuppliers(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val ps = t.lineitem.select(col("l_partkey"), col("l_suppkey")).distinct()
-    val complained = t.supplier.filter(col("s_acctbal") < 0)
-      .select(col("s_suppkey"))
-    ps.join(broadcast(complained), col("l_suppkey") === col("s_suppkey"),
-        "left_anti")
-      .join(broadcast(t.part
-          .filter(col("p_size").isin(1, 9, 19, 29, 39, 49))
-          .select(col("p_partkey"), col("p_brand"), col("p_size"))),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy(col("p_brand"), col("p_size"))
-      .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-      .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_size"))
-  }
-
-  /** Small-quantity revenue (the TPC-H Q17 shape): average yearly
-    * revenue lost if sub-20%-of-average-quantity orders of one brand's
-    * parts stopped. The correlated per-part AVG decorrelates to a
-    * window over l_partkey — ONE shuffle keyed on the part, no
-    * aggregate-then-rejoin, and the brand filter broadcasts into the
-    * scan so only that brand's lines ever move. */
-  private def qSmallQtyRevenue(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("l_partkey"))
-    t.lineitem
-      .join(broadcast(t.part.filter(col("p_brand") === "Brand#3")
-          .select(col("p_partkey"))),
-        col("l_partkey") === col("p_partkey"), "left_semi")
-      .withColumn("avg_qty", avg(col("l_quantity")).over(w))
-      .filter(col("l_quantity") < lit(0.2) * col("avg_qty"))
-      .agg(round(sum(col("l_extendedprice")) / 7.0, 2).as("avg_yearly"))
-  }
-
-  /** Disjunctive-predicate revenue (the TPC-H Q19 shape): revenue from
-    * three OR'd (brand × size-range × quantity-range) bundles. The
-    * part side broadcasts with only the size/brand columns; the
-    * cross-side disjunction evaluates as one codegen'd boolean after
-    * the join, while the common `l_quantity <= 36` upper bound is
-    * factored out so it pushes into the lineitem scan. */
-  private def qDisjunctiveRevenue(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val bundle =
-      (col("p_brand") === "Brand#1" && col("p_size").between(1, 5) &&
-        col("l_quantity").between(1, 11)) ||
-      (col("p_brand") === "Brand#2" && col("p_size").between(1, 10) &&
-        col("l_quantity").between(10, 20)) ||
-      (col("p_brand") === "Brand#3" && col("p_size").between(1, 15) &&
-        col("l_quantity").between(20, 36))
-    t.lineitem
-      .filter(col("l_quantity") >= 1 && col("l_quantity") <= 36)
-      .join(broadcast(t.part.select(col("p_partkey"), col("p_brand"),
-          col("p_size"))),
-        col("l_partkey") === col("p_partkey"))
-      .filter(bundle)
-      .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-        .as("revenue"))
-  }
-
-  /** Bulk-supplier shortlist (the TPC-H Q20 shape): NATION_1 suppliers
-    * who moved more than 1.5× the average (supplier, part) volume of
-    * red parts in 1997 — a SCALE-INVARIANT threshold (a fixed cutoff
-    * selects everything or nothing as SF moves). The nested EXISTS
-    * chain decorrelates to an aggregate-then-SEMI-join pipeline: the
-    * part filter broadcasts into the fact scan, the qty aggregate runs
-    * at (supplier, part) grain ONCE (localCheckpoint — both the 1-row
-    * average and the filter read it), and only qualifying suppkeys
-    * reach the supplier dim. */
-  private def qBulkSuppliers(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val spQty = t.lineitem
-      .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-      .join(broadcast(t.part.filter(col("p_name").startsWith("red"))
-          .select(col("p_partkey"))),
-        col("l_partkey") === col("p_partkey"), "left_semi")
-      .groupBy(col("l_suppkey"), col("l_partkey"))
-      .agg(sum(col("l_quantity")).as("qty"))
-      .graftCp(false)
-    val bar = spQty.agg((avg(col("qty")) * 1.5).as("qty_bar"))
-    val bulky = spQty.crossJoin(broadcast(bar))
-      .filter(col("qty") > col("qty_bar"))
-    t.supplier
-      .join(broadcast(t.nation.filter(col("n_name") === "NATION_1")),
-        col("s_nationkey") === col("n_nationkey"))
-      .join(bulky, col("s_suppkey") === col("l_suppkey"), "left_semi")
-      .select(col("s_suppkey"), col("s_name"))
-      .orderBy(col("s_suppkey"))
-  }
-
-  /** Suppliers who kept orders waiting (the TPC-H Q21 shape): for
-    * finished multi-supplier orders, the supplier who was the ONLY
-    * late one (ship-lag > 60 days plays the receipt-lag axis). The
-    * EXISTS / NOT-EXISTS pair decorrelates to ONE order-grain
-    * aggregate — distinct suppliers and distinct LATE suppliers per
-    * order — joined back to the late lines; no triple self-join of
-    * lineitem, and the order-grain frame is what shuffles. */
-  private def qWaitingSuppliers(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    // materialized ONCE (localCheckpoint): the order-grain aggregate
-    // AND the late-line filter both read it — one lineitem⋈orders
-    // join, not two
-    val lines = t.lineitem
-      .join(t.orders.filter(col("o_orderstatus") === "F"),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("l_orderkey"), col("l_suppkey"),
-        (col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"))
-          .as("late"))
-      .graftCp(false)
-    val orderStats = lines.groupBy(col("l_orderkey"))
-      .agg(countDistinct(col("l_suppkey")).as("n_supp"),
-        countDistinct(when(col("late"), col("l_suppkey"))).as("n_late_supp"))
-      .filter(col("n_supp") > 1 && col("n_late_supp") === 1)
-      .select(col("l_orderkey").as("wait_orderkey"))
-    val waiting = lines.filter(col("late"))
-      .join(orderStats, col("l_orderkey") === col("wait_orderkey"),
-        "left_semi")
-      .select(col("l_orderkey"), col("l_suppkey")).distinct()
-    waiting.groupBy(col("l_suppkey"))
-      .agg(count(lit(1)).as("numwait"))
-      .join(broadcast(t.supplier), col("l_suppkey") === col("s_suppkey"))
-      .select(col("s_name"), col("numwait"))
-      .orderBy(col("numwait").desc, col("s_name"))
-      .limit(20)
-  }
-
-  /** Dormant high-balance customers (the TPC-H Q22 shape): per country
-    * code (nationkey mod 10 plays the phone prefix), customers whose
-    * balance beats the positive-balance average of the selected codes
-    * AND who placed no order since 1999 (every synthetic customer has
-    * SOME order, so recency plays the no-orders clause). The scalar
-    * AVG broadcast-cross-joins back; the inactivity check is a LEFT
-    * ANTI against the date-pruned orders scan — two dim-sized
-    * customer passes, one slim fact scan. */
-  private def qDormantCustomers(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val sel = t.customer
-      .withColumn("cntrycode", (col("c_nationkey") % 10).cast("int"))
-      .filter(col("cntrycode").isin(1, 2, 3, 4, 7))
-    val avgBal = sel.filter(col("c_acctbal") > 0.0)
-      .agg(avg(col("c_acctbal")).as("avg_bal"))
-    sel.crossJoin(broadcast(avgBal))
-      .filter(col("c_acctbal") > col("avg_bal"))
-      .join(t.orders
-          .filter(col("o_orderdate") >= lit("1999-01-01").cast("timestamp"))
-          .select(col("o_custkey")),
-        col("c_custkey") === col("o_custkey"), "left_anti")
-      .groupBy(col("cntrycode"))
-      .agg(count(lit(1)).as("numcust"),
-        round(sum(col("c_acctbal")), 2).as("totacctbal"))
-      .orderBy(col("cntrycode"))
-  }
-
-  /** q29 re-expressed over the native bounded-state KMV aggregate
-    * ([[graft.functions.KmvSketchAgg]] via Sketches.kmvDistinctNative):
-    * same estimator, same output, but the shuffle carries a ≤k-long
-    * buffer per (partition, group) instead of one row per distinct
-    * hash — shares q29's oracle verbatim, so the two forms are proven
-    * equal by the gate itself. */
-  private def qKmvNative(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Sketches.kmvDistinctNative(t.events, "event_type", "user_id", k = 64)
-      .orderBy(col("event_type"))
-  }
-
-  /** Interval-overlap counting (TimeSeriesOps.intervalOverlapCounts):
-    * how many AUTOMOBILE-segment order fulfillment windows overlap
-    * each BUILDING-segment window ([orderdate, +14d), half-open).
-    * Formerly ran through the pair-materializing
-    * [[TimeSeriesOps.intervalOverlapJoin]]: with a FIXED 6-month date
-    * range, ×100 data density makes overlapping pairs grow ~density²
-    * for data reasons (~10⁹ pair rows at ×100 just to count them), so
-    * the count form answers the same question by order statistics —
-    * two distributed ranks, zero pairs, every frame linear. The
-    * oracle still counts the brute-force pairs, which is exactly what
-    * proves the rank algebra (incl. half-open tie handling) right. */
-  private def qIntervalOverlap(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    def windows(segment: String) = t.orders
-      .join(broadcast(t.customer.filter(col("c_mktsegment") === segment)
-          .select(col("c_custkey"))),
-        col("o_custkey") === col("c_custkey"), "left_semi")
-      .filter(col("o_orderdate") >= lit("1997-01-01").cast("timestamp") &&
-        col("o_orderdate") < lit("1997-07-01").cast("timestamp"))
-      .select(col("o_orderkey").as("wid"), col("o_orderdate").as("ws"),
-        (col("o_orderdate") + expr("INTERVAL 14 DAYS")).as("we"))
-    TimeSeriesOps.intervalOverlapCounts(
-        windows("BUILDING"), windows("AUTOMOBILE"), "wid", "ws", "we",
-        bucketUs = 14L * 86400000000L)
-      .filter(col("n_overlap") > 0)
-      .select(col("wid").as("building_order"), col("n_overlap"))
-      .orderBy(col("building_order"))
-  }
-
-  /** Margin-based pair mining at the scale path
-    * (Similarity.blockedMarginBitextPairs): label-0 vectors as the
-    * source side, label-1 as the target — each source's nearest
-    * same-block target with its ratio margin over both k=4 block
-    * neighborhoods and the mutual-rank-1 flag. Neighborhoods live in
-    * deterministic 4-bit hyperplane-LSH blocks (adaptively refined
-    * past the 512 cap, the q65 treatment), so pair volume is
-    * ~n·cap/4 instead of |src|·|tgt| — the brute form of this query
-    * measured ×132/decade at the ×100 audit. The margin stays
-    * exact-integer algebra over 1e-6-quantized sims and the blocks
-    * never refine at oracle scale, so DuckDB reproduces every digit
-    * from the fixed 4-bit bucket. */
-  private def qBitextMining(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Similarity.blockedMarginBitextPairs(
-        t.embeddings.filter(col("label") === 0),
-        t.embeddings.filter(col("label") === 1),
-        "vec_id", "embedding", k = 4, baseBits = 4, maxBlockSize = 512)
-      .orderBy(col("src_id"))
-  }
-
-  /** Exact-k deterministic per-group sample (Sampling.bottomK): ten
-    * docs per language by bottom-k hash priority — reproducible by any
-    * engine, stable under corpus growth, WindowGroupLimit-pruned. */
-  private def qBottomKSample(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Sampling.bottomK(t.documents, "lang", "doc_id", k = 10)
-      .select(col("lang"), col("doc_id"), col("source"))
-      .orderBy(col("lang"), col("doc_id"))
-  }
-
-  /** Full CUBE aggregation (q25 covers ROLLUP; this is the other
-    * grouping-sets shape): doc counts and total characters at every
-    * (lang, source) granularity — per cell, per lang, per source,
-    * grand total — with the grouping_id bitmask distinguishing real
-    * NULLs from subtotal rows. One Expand + one aggregate; subtotals
-    * ride the same shuffle as the base cells. */
-  private def qCubeStats(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    t.documents.cube(col("lang"), col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"),
-        grouping_id().cast("int").as("gid"))
-      .select(col("lang"), col("source"), col("n_docs"), col("total_chars"),
-        col("gid"))
-      .orderBy(col("gid"), col("lang"), col("source"))
-  }
-
-  /** Golden-record survivorship (EntityResolution.survivorship): each
-    * user's event history collapses to one record where event_type and
-    * value keep their most recent NON-NULL values independently (the
-    * corpus is salted with deterministic nulls so "latest row wins"
-    * would LOSE data — the per-field max_by must not). */
-  private def qSurvivorship(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val updates = t.events.select(col("user_id"),
-      unix_micros(col("ts")).as("us"), col("event_id"),
-      when(col("event_id") % 5 === 0, lit(null).cast("string"))
-        .otherwise(col("event_type")).as("etype"),
-      when(col("event_id") % 3 === 0, lit(null).cast("double"))
-        .otherwise(round(col("value"), 2)).as("val"))
-    EntityResolution.survivorship(updates, "user_id",
-        Seq("us", "event_id"), Seq("etype", "val"))
-      .select(col("user_id"), col("etype"), col("val"), col("n_updates"))
-      .orderBy(col("user_id"))
-  }
-
-  /** Pipeline-parity capstone: a three-stage curation pipeline —
-    * quality gate (token floor + length ceiling) → exact dedup
-    * (keep-min per normalized-text digest) → stratified hash-gated
-    * sampling — composed from the REAL operators and verified
-    * end-to-end against one oracle that replays every stage in SQL.
-    * FullFlowSpec checks composition plumbing; this checks composed
-    * SEMANTICS against an independent engine. Per (lang, source):
-    * surviving docs and their token mass (what the mixture allocator
-    * downstream would consume). */
-  private def qPipelineParity(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val toks = t.documents.select(col("doc_id"), col("lang"),
-      col("source"), col("text"),
-      size(GF.wsTokens(col("text"))).as("n_tokens"), col("n_chars"))
-    val gated = toks.filter(col("n_tokens") >= 5 && col("n_chars") <= 4000)
-    val deduped = Dedup.exactDedup(gated, "text", "doc_id")
-    val sampled = Sampling.stratifiedSample(deduped, "lang", "doc_id",
-      Map("en" -> 0.2, "zh" -> 0.5), defaultRate = 0.35)
-    sampled.groupBy(col("lang"), col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("total_tokens"))
-      .orderBy(col("lang"), col("source"))
-  }
-
-  /** Windowed distinct-count through the SQL surface: daily distinct
-    * users per (event type, day) via `graft_kmv` in PLAIN SPARK SQL (the
-    * injected-function path — proving the native aggregate composes
-    * with any SQL workload, not only the Scala API). k=8 so busy
-    * days cross into estimation while quiet ones stay exact. */
-  private def qKmvWindow(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.register(s)
-    val t = Tables(s, dir)
-    t.events.select(col("event_type"),
-        col("ts").cast("date").as("day"),
-        GF.hash32(col("user_id").cast("string")).as("h"))
-      .createOrReplaceTempView("kmv_events")
-    s.sql("""
-      SELECT event_type, day,
-        CASE WHEN kmv.n_seen < 8 OR kmv.kth_min <= 0
-               THEN CAST(kmv.n_seen AS DOUBLE)
-             ELSE round((8 - 1) * 4294967296.0 / kmv.kth_min, 2)
-        END AS approx_distinct,
-        kmv.n_seen AS n_seen
-      FROM (SELECT event_type, day, graft_kmv(h, 8) AS kmv
-            FROM kmv_events GROUP BY event_type, day)
-      ORDER BY event_type, day""")
-  }
-
-  /** KMV sketch algebra (Sketches.kmvPairOverlap): audience overlap
-    * between every pair of event types — union cardinality and Jaccard
-    * estimated from the bottom-64 sketches ALONE, no re-scan of the
-    * pair. The cross-source overlap question q85 answers exactly at
-    * digest grain, answered here at metadata scale. */
-  private def qKmvOverlap(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Sketches.kmvPairOverlap(t.events, "event_type", "user_id", k = 64)
-      .orderBy(col("g1"), col("g2"))
-  }
-
-  /** Time-weighted average (TimeSeriesOps.twap): per (user, event
-    * type), the duration-weighted mean event value — the irregular-
-    * sampling-proof mean. Values quantize to exact cents before the
-    * weighting so the decimal accumulation replays anywhere.
-    * `event_id` is the tiebreak: events CAN tie on (user, type, ts),
-    * and without a unique ordering the lead() window — hence which
-    * tied row carries the interval — is engine-dependent. */
-  private def qTwap(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val ev = t.events.select(col("user_id"), col("event_type"),
-      unix_micros(col("ts")).as("us"), col("event_id"),
-      round(col("value") * 100).cast("long").as("cents"))
-    TimeSeriesOps.twap(ev, Seq("user_id", "event_type"), "us", "cents",
-        tieCols = Seq("event_id"))
-      .orderBy(col("user_id"), col("event_type"))
-  }
-
-  /** SimHash hamming-ball near-dup pairs (Dedup.simhashHammingPairs):
-    * all doc pairs within hamming distance 3 of each other's 64-bit
-    * SimHash, found by generalized-pigeonhole banding — the oracle
-    * brute-forces every pair, so the banding must lose nothing. Two
-    * 32-bit bands at probe radius 1 (any pair within distance 3 sits
-    * within hamming 1 of one band, caught by the single-bit-flip
-    * probe join): the ×100 audit measured the earlier 4×16-bit exact
-    * banding at 205.9M candidates on 500k docs — correlated natural-
-    * language fingerprints skew fixed 65,536-value buckets quadratically
-    * — where the 2^32-value band domain holds the same output to a
-    * candidate count near the true-pair floor. */
-  private def qSimhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Dedup.simhashHammingPairs(t.documents, "text", "doc_id",
-        maxHamming = 3, nBits = 64, bands = 2)
-      .orderBy(col("id_a"), col("id_b"))
-  }
-
-  /** Matryoshka-truncation recall (Similarity.truncatedRecall): for
-    * eight query vectors, how much of the exact 64-dim top-5 the
-    * 16-dim prefix ranking keeps — the measurement behind serving a
-    * truncated first-stage index. */
-  private def qMatryoshka(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Similarity.truncatedRecall(
-        t.embeddings.filter(col("vec_id") < 8), t.embeddings,
-        "vec_id", "embedding", dims = 16, k = 5)
-      .orderBy(col("query_id"))
-  }
-
-  /** Functional-dependency audit (Profiling.functionalDependencies):
-    * does o_orderkey determine o_custkey (a real key), and do
-    * o_custkey → o_orderpriority / o_orderstatus hold (they must not —
-    * customers place orders of many priorities)? */
-  private def qFdAudit(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Profiling.functionalDependencies(t.orders, Seq(
-        "o_orderkey" -> "o_custkey",
-        "o_custkey" -> "o_orderpriority",
-        "o_custkey" -> "o_orderstatus"))
-      .orderBy(col("lhs"), col("rhs"))
-  }
-
-  /** Trailing-7-day distinct users per day via the KMV aggregate: each
-    * (day, user) contribution EXPLODES to the 7 target days whose
-    * trailing window contains it, and `graft_kmv` absorbs the
-    * duplicates (sketches are sets — no pre-distinct pass needed).
-    * The sliding-distinct shape with bounded per-window state: 7×
-    * row amplification of slim (date, long) rows, never a range join,
-    * never a per-window re-scan. */
-  private def qSlidingDistinct(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val ev = t.events.select(col("ts").cast("date").as("day"),
-      GF.hash32(col("user_id").cast("string")).as("h"))
-    val days = ev.select(col("day")).distinct()
-    val k = 64
-    ev.withColumn("target",
-        explode(sequence(col("day"), date_add(col("day"), 6))))
-      .join(broadcast(days.withColumnRenamed("day", "target")),
-        Seq("target"), "left_semi")
-      .groupBy(col("target").as("day"))
-      .agg(Sketches.kmvAgg(col("h"), k).as("kmv"))
-      .select(col("day"),
-        Sketches.kmvEstimate(col("kmv.n_seen"), col("kmv.kth_min"), k)
-          .as("approx_distinct_7d"),
-        col("kmv.n_seen").as("n_seen"))
-      .orderBy(col("day"))
-  }
-
-  /** Exact weighted median (Profiling.weightedMedian): per return
-    * flag, the price-cents value at which half the shipped QUANTITY
-    * sits below — the volume-weighted "typical price" an unweighted
-    * median misstates. Integer crossing test, zero interpolation. */
-  private def qWeightedMedian(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val li = t.lineitem.select(col("l_returnflag"),
-      round(col("l_extendedprice") * 100).cast("long").as("cents"),
-      round(col("l_quantity")).cast("long").as("qty"))
-    Profiling.weightedMedian(li, "l_returnflag", "cents", "qty")
-      .orderBy(col("l_returnflag"))
-  }
-
-  /** Robust outliers (Profiling.madOutliers): per language, document
-    * lengths beyond 3 MADs of the median — the outlier screen the
-    * outliers themselves cannot skew (a mean/σ z-score gate moves
-    * with every monster doc it should be catching). */
-  private def qMadOutliers(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Profiling.madOutliers(t.documents, "lang", "n_chars", nMads = 3)
-      .orderBy(col("lang"))
-  }
-
-  /** A/B conversion lift (EventAnalytics.abLift): users assigned to
-    * three deterministic variants by id hash bucket, conversion =
-    * ever purchased; every variant pair reports rates, lift, and the
-    * two-proportion z statistic. */
-  private def qAbLift(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val units = t.events.groupBy(col("user_id"))
-      .agg(max(when(col("event_type") === "purchase", true)
-        .otherwise(false)).as("converted"))
-      .select(concat(lit("v"), pmod(col("user_id"), lit(3)))
-        .as("variant"), col("converted"))
-    EventAnalytics.abLift(units, "variant", "converted")
-      .orderBy(col("variant_a"), col("variant_b"))
-  }
-
-  /** Header/detail reconciliation (EntityResolution.reconcile):
-    * o_totalprice vs the sum of its lineitems' extended prices, in
-    * exact cents, summarized per order status — how big and how
-    * frequent the rollup disagreement is (the synthetic generator
-    * does NOT maintain the invariant, which is precisely what a
-    * reconciliation audit exists to expose). */
-  private def qReconcile(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val rows = EntityResolution.reconcile(
-      t.orders, "o_orderkey",
-      round(col("o_totalprice") * 100).cast("long"),
-      t.lineitem, "l_orderkey",
-      round(col("l_extendedprice") * 100).cast("long"))
-    rows.join(t.orders.select(col("o_orderkey"), col("o_orderstatus")),
-        Seq("o_orderkey"))
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(when(col("n_lines") === 0, 1L).otherwise(0L))
-          .as("n_no_lines"),
-        sum(when(col("diff_cents") =!= 0, 1L).otherwise(0L))
-          .as("n_mismatched"),
-        max(abs(col("diff_cents"))).as("max_abs_diff_cents"))
-      .orderBy(col("o_orderstatus"))
-  }
-
-  /** Activity streaks (EventAnalytics.activityStreaks): per user, how
-    * many consecutive-day runs their activity splits into, the longest
-    * run, and total active days — the gaps-and-islands idiom. */
-  private def qStreaks(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    EventAnalytics.activityStreaks(
-        t.events.select(col("user_id"), col("ts").cast("date").as("day")),
-        "user_id", "day")
-      .orderBy(col("user_id"))
-  }
-
-  /** 2-D skyline (Profiling.skyline2D): per brand, parts on the
-    * (price ↓, size ↑) Pareto front — no other part of the brand is
-    * both no-more-expensive and no-smaller with one strict. The
-    * window formulation replaces the quadratic EXISTS; the oracle
-    * IS the quadratic EXISTS, so the front must agree exactly. */
-  private def qSkyline(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val p = t.part.select(col("p_brand"), col("p_partkey"),
-      round(col("p_retailprice") * 100).cast("long").as("price_cents"),
-      col("p_size"))
-    Profiling.skyline2D(p, "p_brand", "price_cents", "p_size")
-      .select(col("p_brand"), col("p_partkey"), col("price_cents"),
-        col("p_size"))
-      .orderBy(col("p_brand"), col("p_partkey"))
-  }
-
-  /** Per-group mode (Profiling.modeBy): each language's most frequent
-    * source, with the winner's count and the count-tie width —
-    * deterministic smallest-value tiebreak. */
-  private def qMode(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Profiling.modeBy(t.documents, "lang", "source")
-      .orderBy(col("lang"))
-  }
-
-  /** Conversion-lag CDF: of users who signed up, what share had
-    * purchased within d days of their FIRST signup, for d = 0..7 —
-    * first-touch timestamps from one user-grain aggregate, day-grain
-    * counts, one cumulative window over eight rows. Users whose first
-    * purchase predates signup count at lag 0 (clamped — the synthetic
-    * stream has no causality guarantee, and dropping them would
-    * overstate the funnel). */
-  private def qConversionLag(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val firsts = t.events
-      .groupBy(col("user_id"))
-      .agg(
-        min(when(col("event_type") === "signup", unix_micros(col("ts"))))
-          .as("s_us"),
-        min(when(col("event_type") === "purchase", unix_micros(col("ts"))))
-          .as("p_us"))
-      .filter(col("s_us").isNotNull)
-      .graftCp(false)
-    val total = firsts.agg(count(lit(1)).as("n_signup"))
-    val lags = firsts.filter(col("p_us").isNotNull)
-      .select(greatest(
-        floor((col("p_us") - col("s_us")) / 86400000000L).cast("long"),
-        lit(0L)).as("lag_days"))
-      .filter(col("lag_days") <= 7)
-      .groupBy(col("lag_days")).agg(count(lit(1)).as("n_day"))
-    val wc = org.apache.spark.sql.expressions.Window
-      .orderBy(col("lag_days"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding, 0)
-    lags
-      .withColumn("n_cum", sum(col("n_day")).over(wc))
-      .crossJoin(broadcast(total))
-      .select(col("lag_days"), col("n_cum"),
-        round(col("n_cum") / col("n_signup").cast("double"), 6)
-          .as("share"))
-      .orderBy(col("lag_days"))
-  }
-
-  /** Daily bounce rate over q24's session definition (30-minute
-    * inactivity gap): per day of session start, sessions, single-event
-    * bounces, and the rate — the session-quality metric layered on the
-    * sessionizer, one extra day-grain aggregate. */
-  private def qBounceRate(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("us"))
-    val sessions = t.events
-      .select(col("user_id"), unix_micros(col("ts")).as("us"))
-      .withColumn("_prev", lag(col("us"), 1).over(w))
-      .withColumn("_new", when(col("_prev").isNull ||
-        col("us") - col("_prev") > 1800000000L, 1L).otherwise(0L))
-      .withColumn("session_idx", sum(col("_new")).over(
-        w.rowsBetween(org.apache.spark.sql.expressions.Window
-          .unboundedPreceding, 0)))
-      .groupBy(col("user_id"), col("session_idx"))
-      .agg(count(lit(1)).as("n_events"), min(col("us")).as("start_us"))
-    sessions
-      .groupBy(timestamp_micros(col("start_us")).cast("date").as("day"))
-      .agg(count(lit(1)).as("n_sessions"),
-        sum(when(col("n_events") === 1, 1L).otherwise(0L)).as("n_bounces"))
-      .select(col("day"), col("n_sessions"), col("n_bounces"),
-        round(col("n_bounces") / col("n_sessions").cast("double"), 6)
-          .as("bounce_rate"))
-      .orderBy(col("day"))
-  }
-
-  /** Exact audience overlap matrix — the ground truth q202's sketch
-    * algebra estimates: per event-type pair, users active in BOTH,
-    * union, and exact Jaccard. Distinct (user, type) first; the
-    * self-join keys on user and a user meets only its own handful of
-    * types, so the pair stream is bounded by Σ_user types(user)². */
-  private def qAudienceOverlap(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val ut = t.events.select(col("user_id"), col("event_type")).distinct()
-      .graftCp(false)
-    val sizes = ut.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-    val both = ut.select(col("user_id"), col("event_type").as("g1"))
-      .join(ut.select(col("user_id"), col("event_type").as("g2")),
-        Seq("user_id"))
-      .filter(col("g1") < col("g2"))
-      .groupBy(col("g1"), col("g2"))
-      .agg(count(lit(1)).as("n_both"))
-    both
-      .join(broadcast(sizes.select(col("event_type").as("g1"),
-        col("n").as("n1"))), Seq("g1"))
-      .join(broadcast(sizes.select(col("event_type").as("g2"),
-        col("n").as("n2"))), Seq("g2"))
-      .select(col("g1"), col("g2"), col("n_both"),
-        (col("n1") + col("n2") - col("n_both")).as("n_union"),
-        round(col("n_both").cast("double") /
-          (col("n1") + col("n2") - col("n_both")), 6).as("jaccard"))
-      .orderBy(col("g1"), col("g2"))
-  }
-
-  /** Year-over-year growth per nation: order-year revenue with the
-    * prior year's via one partitioned lag, growth null on the first
-    * year (no fabricated zero base). Post-aggregation windowing — the
-    * lag runs over nation×year grain, never the fact rows. */
-  private def qYoyGrowth(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val yearly = t.orders
-      .join(t.customer, col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("n_name").as("nation"),
-        year(col("o_orderdate")).as("order_year"))
-      .agg(round(sum(col("o_totalprice")), 2).as("revenue"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("nation")).orderBy(col("order_year"))
-    yearly
-      .withColumn("prev_revenue", lag(col("revenue"), 1).over(w))
-      .select(col("nation"), col("order_year"), col("revenue"),
-        col("prev_revenue"),
-        round((col("revenue") - col("prev_revenue")) * 100.0 /
-          col("prev_revenue"), 4).as("yoy_pct"))
-      .orderBy(col("nation"), col("order_year"))
-  }
-
-  /** Ratio-to-report: each order priority's share of its status's
-    * total revenue — aggregate once, then a group-total window over
-    * the status×priority grain (never a second scan or a scalar
-    * subquery per group). */
-  private def qRevenueShare(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val g = t.orders.groupBy(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(sum(col("o_totalprice")).as("_rev"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("o_orderstatus"))
-    g.select(col("o_orderstatus"), col("o_orderpriority"),
-        round(col("_rev"), 2).as("revenue"),
-        round(col("_rev") * 100.0 / sum(col("_rev")).over(w), 4)
-          .as("share_pct"))
-      .orderBy(col("o_orderstatus"), col("o_orderpriority"))
-  }
-
-  /** Melt / unpivot round-trip: the lang×source count matrix pivoted
-    * WIDE (q07's shape) and melted back long with `stack` — proving
-    * the wide form loses nothing. The oracle computes the long form
-    * directly, so pivot→melt must be the identity on present cells
-    * (absent combinations stack as nulls and are filtered, matching
-    * the long form's absence). */
-  private def qMeltRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val sources = t.documents.select(col("source")).distinct()
-      .collect().map(_.getString(0)).sorted
-    val wide = t.documents.groupBy(col("lang"))
-      .pivot("source", sources).agg(count(lit(1)))
-    wide.select(col("lang"), meltStack(sources, "source", "n_docs"))
-      .filter(col("n_docs").isNotNull)
-      .orderBy(col("lang"), col("source"))
-  }
 
   /** `stack()` melt over dynamically-discovered pivot column names,
     * with SQL-injection-proof escaping: the names come from DATA (a
@@ -3560,5780 +38,31 @@ object SparkEntry {
       s") as ($varCol, $valCol)")
   }
 
-  /** View→purchase conversion via the NATIVE as-of join (second
-    * workload through plans.AsOfJoin): each purchase picks the user's
-    * most recent prior-or-same-instant view, and converts if it was
-    * within the hour — per day, purchases, view-attributed purchases,
-    * and within-the-hour conversions. */
-  private def qViewToPurchase(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val ev = t.events.select(col("user_id"),
-      unix_micros(col("ts")).as("us"), col("event_type"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("us"))
-    val views = ev.filter(col("event_type") === "view")
-      .groupBy(col("user_id"), col("us"))
-      .agg(count(lit(1)).as("_n"))
-      .select(col("user_id"), col("us"), col("us").as("view_us"))
-    TimeSeriesOps.asofJoinNative(purchases, views, Seq("user_id"), "us",
-        Seq("view_us"))
-      .groupBy(timestamp_micros(col("us")).cast("date").as("day"))
-      .agg(count(lit(1)).as("n_purchases"),
-        sum(when(col("asof_view_us").isNotNull, 1L).otherwise(0L))
-          .as("n_attributed"),
-        sum(when(col("us") - col("asof_view_us") <= 3600000000L, 1L)
-          .otherwise(0L)).as("n_within_hour"))
-      .orderBy(col("day"))
+  /** Every query, each declared once next to its builder. */
+  val all: Seq[Q] = Seq(RelationalQueries, ReportsQueries, SourcesQueries,
+    BasketsQueries, CurationQueries, DedupQueries, EntityResolutionQueries,
+    EventAnalyticsQueries, GraphOpsQueries, JoinPruneQueries, LakeQueries,
+    MultiModalQueries, PackingQueries, ProfilingQueries, SamplingQueries,
+    SimilarityQueries, SketchesQueries, SkewQueries, SnapshotQueries,
+    TextAnalysisQueries, TimeSeriesOpsQueries).flatMap(_.all)
+
+  /** Query name → builder over a table directory. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map(q => q.name -> q.build).toMap
+
+  /** Query name → the DuckDB SQL its result must match. */
+  val oracleSql: Map[String, String] = all.map(q => q.name -> q.oracle).toMap
+
+  /** The queries named in the comma-separated `names` (every query when
+    * None) as (name, build) pairs sorted by name. Throws on a name no
+    * query has, so a typo cannot select nothing and pass. */
+  def selectQueries(names: Option[String])
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val wanted = names.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val unknown = wanted.getOrElse(Set.empty[String]) -- queries.keySet
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+    queries.toSeq.filter { case (n, _) => wanted.forall(_.contains(n)) }
+      .sortBy(_._1)
   }
-
-  /** Inter-event gap histogram: per event type, user-keyed consecutive
-    * gaps bucketed by decimal order of magnitude (log10 seconds) — the
-    * cadence fingerprint that separates machine bursts from human
-    * pacing at a glance. One keyed window + one bucket-grain count. */
-  private def qGapHistogram(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type"), col("user_id")).orderBy(col("us"))
-    t.events.select(col("event_type"), col("user_id"),
-        unix_micros(col("ts")).as("us"))
-      .withColumn("_gap", col("us") - lag(col("us"), 1).over(w))
-      .filter(col("_gap").isNotNull && col("_gap") > 0)
-      // exact integer decade: floor(log10(n)) == digits(n) − 1 for any
-      // positive integer, minus 6 to land in seconds — no libm, so no
-      // engine disagreement at exact powers of ten
-      .withColumn("log10_s",
-        (length(col("_gap").cast("string")) - 7).cast("int"))
-      .groupBy(col("event_type"), col("log10_s"))
-      .agg(count(lit(1)).as("n_gaps"))
-      .orderBy(col("event_type"), col("log10_s"))
-  }
-
-  /** Top user journeys: each user's first five event types in exact
-    * (timestamp, event_id) order joined into a path string, counted
-    * across users — the "what do people actually do first" view. The
-    * rank-5 prefilter prunes as WindowGroupLimit; the path assembles
-    * from ONE array_sort over the per-user collected structs (total
-    * order ⇒ engine-identical strings). */
-  private def qTopJourneys(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id"))
-      .orderBy(col("us"), col("event_id"))
-    val journeys = t.events.select(col("user_id"),
-        unix_micros(col("ts")).as("us"), col("event_id"),
-        col("event_type"))
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= 5)
-      .groupBy(col("user_id"))
-      .agg(concat_ws(">", transform(
-        array_sort(collect_list(struct(col("us"), col("event_id"),
-          col("event_type")))),
-        x => x.getField("event_type"))).as("journey"))
-    journeys.groupBy(col("journey")).agg(count(lit(1)).as("n_users"))
-      .orderBy(col("n_users").desc, col("journey"))
-      .limit(10)
-  }
-
-  /** Point-in-time reconstruction from q134's SCD2 intervals: the
-    * state of every user AS OF 2024-01-15 12:00 UTC, summarized per
-    * state — the time-travel consumer the validity intervals exist
-    * for (half-open [from, to), open tail). */
-  private def qTimeTravel(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val asOfUs = 1705320000000000L
-    val ev = t.events.select(col("user_id"),
-      unix_micros(col("ts")).as("us"), col("event_id"), col("event_type"))
-    EventAnalytics.validityIntervals(ev, "user_id", "us", "event_id",
-        "event_type")
-      .filter(col("valid_from") <= asOfUs &&
-        (col("valid_to").isNull || col("valid_to") > asOfUs))
-      .groupBy(col("state"))
-      .agg(count(lit(1)).as("n_users"))
-      .orderBy(col("state"))
-  }
-
-  /** Trailing-7-day revenue via a RANGE window frame (every other
-    * window in the suite is a ROWS frame; a calendar-trailing sum must
-    * be RANGE over epoch days or missing days silently shrink the
-    * window): per order day, that day's and the trailing week's
-    * revenue in exact cents. */
-  private def qRollingRevenue(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val daily = t.orders
-      .groupBy(datediff(col("o_orderdate").cast("date"),
-        lit("1970-01-01").cast("date")).as("epoch_day"))
-      .agg(sum(round(col("o_totalprice") * 100).cast("long"))
-        .as("day_cents"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("epoch_day")).rangeBetween(-6, 0)
-    daily
-      .withColumn("week_cents", sum(col("day_cents")).over(w))
-      .select(date_add(lit("1970-01-01").cast("date"),
-          col("epoch_day").cast("int")).as("day"),
-        col("day_cents"), col("week_cents"))
-      .orderBy(col("day"))
-  }
-
-  /** Coverage cutoff: per language, the smallest prefix of sources
-    * (largest first) covering ≥ 80% of documents — "how many sources
-    * until the corpus is mostly explained". Share ranks prune as a
-    * window; the first-crossing filter keeps the whole qualifying
-    * prefix INCLUDING the row that crosses. Exact integer crossing:
-    * 5·cum ≥ 4·total. */
-  private def qCoverageCutoff(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val counts = t.documents.groupBy(col("lang"), col("source"))
-      .agg(count(lit(1)).as("n"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("lang")).orderBy(col("n").desc, col("source"))
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("lang"))
-    counts
-      .withColumn("_cum", sum(col("n")).over(
-        w.rowsBetween(org.apache.spark.sql.expressions.Window
-          .unboundedPreceding, 0)))
-      .withColumn("_tot", sum(col("n")).over(wAll))
-      // keep every source up to and including the 80% crossing: rows
-      // whose PRECEDING cumulative is still short of the bar
-      .filter((col("_cum") - col("n")) * 5 < col("_tot") * 4)
-      .select(col("lang"), col("source"), col("n"),
-        round(col("_cum") / col("_tot").cast("double"), 6)
-          .as("cum_share"))
-      .orderBy(col("lang"), col("cum_share"), col("source"))
-  }
-
-  /** Bloom-pruned semi join (the explicit InjectRuntimeFilter shape):
-    * lineitem restricted to recent URGENT orders — a dim subset that is
-    * selective (~5% of orders) but, at 100 TB, too large to broadcast.
-    * `JoinPrune.bloomSemiJoin` builds a distributed bloom over the
-    * surviving orderkeys and plants a codegen'd `might_contain` probe
-    * directly on the lineitem scan, so only matching rows (plus ~fpp
-    * false positives, removed by the real semi join that follows) ever
-    * enter the exchange. Results are byte-identical to the plain semi
-    * join — which is exactly what the oracle runs. */
-  private def qBloomSemiJoin(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val build = t.orders.filter(col("o_orderpriority") === "1-URGENT" &&
-      col("o_orderdate") >= lit("2000-01-01").cast("timestamp"))
-    // sizing is FREE: plan statistics (sizeInBytes ÷ key width, or an
-    // exact rowCount when the plan carries one) size the sketch with
-    // no pre-count scan, refined downward from the 1M conf default —
-    // under-sizing only degrades fpp (extra false positives, removed
-    // by the real semi join), never results
-    JoinPrune.bloomSemiJoin(t.lineitem, build,
-        "l_orderkey", "o_orderkey")
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(count(lit(1)).as("n_items"),
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-          .as("revenue"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
-  }
-
-  /** Per-process lake root for queries that persist tables/files as
-    * part of their read path (q228's bucketed tables, q229's kept
-    * corpus). A per-run temp directory — NOT a fixed /tmp path — so
-    * concurrent bench/test/verify processes never clobber each other's
-    * tables and nothing stale survives across runs; within the process
-    * the skip-if-exists build gates still amortize builds across
-    * bench passes. */
-  private lazy val lakeRoot: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_lake_")
-    // deleteOnExit only removes EMPTY directories and the lake is
-    // always populated — recursively delete on JVM shutdown instead
-    // (children first), so bench/verify processes don't leak a full
-    // bucketed-table tree per run
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      try Files.walk(d).sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      catch { case _: Throwable => () }
-    }))
-    d.toString
-  }
-
-  /** Bucketed co-located join (SeriesLake.writeBucketed): both join
-    * sides land as bucket-sorted tables hashed on their order key with
-    * the SAME bucket count, so the fact join plans as a sort-merge join
-    * with NO ShuffleExchange below it (PlanSpec asserts exactly that) —
-    * the pay-the-shuffle-once layout contract of the 100 TB tier.
-    * Build-once/probe-many, like the persisted ANN indexes (q58/q59):
-    * the bucketed write is the pay-once layout job, gated skip-if-
-    * exists on its _SUCCESS marker, so repeat calls (bench timed
-    * passes; every downstream join/agg on the key at cluster scale)
-    * time the exchange-free PROBE — the number a deployment cares
-    * about. Results are layout-independent, so the oracle replays the
-    * plain join from the raw tables. */
-  private def qBucketedJoin(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    // dir-keyed like the ANN index paths, in case one process gates
-    // several scale factors. The gate checks BOTH the _SUCCESS marker
-    // of the LAST build step and the session catalog (the read path is
-    // s.table(...), and a restarted SparkContext in the same JVM would
-    // have files but an empty catalog — the marker alone would skip
-    // the build and then fail TABLE_OR_VIEW_NOT_FOUND).
-    val key = math.abs(dir.hashCode)
-    if (!new java.io.File(s"$lakeRoot/q228_items_$key/_SUCCESS").exists() ||
-        !s.catalog.tableExists(s"q228_orders_bkt_$key") ||
-        !s.catalog.tableExists(s"q228_items_bkt_$key")) {
-      SeriesLake.writeBucketed(
-        t.orders
-          .filter(col("o_orderdate") >= lit("1997-01-01").cast("timestamp"))
-          .select(col("o_orderkey"), col("o_orderpriority")),
-        s"q228_orders_bkt_$key", s"$lakeRoot/q228_orders_$key",
-        bucketKey = "o_orderkey", buckets = 16, sortCols = Seq("o_orderkey"))
-      SeriesLake.writeBucketed(
-        t.lineitem.select(col("l_orderkey"), col("l_extendedprice"),
-          col("l_discount")),
-        s"q228_items_bkt_$key", s"$lakeRoot/q228_items_$key",
-        bucketKey = "l_orderkey", buckets = 16, sortCols = Seq("l_orderkey"))
-    }
-    s.table(s"q228_orders_bkt_$key")
-      .join(s.table(s"q228_items_bkt_$key"),
-        col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_items"),
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-          .as("revenue"))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  /** Single-pass pipeline telemetry via `Dataset.observe`: the ingest
-    * and post-gate metrics ride the SAME action that writes the kept
-    * corpus — at 100 TB, data-quality counters must never cost a
-    * second scan, and `observe` plants `CollectMetrics` nodes whose
-    * aggregates accumulate inside the one write job (exactly the
-    * AccumulatorV2 mechanism, but declarative and plan-visible). The
-    * query's RESULT is the funnel report assembled from the observed
-    * values; the oracle recomputes the same aggregates from the raw
-    * table, proving the in-flight metrics equal a dedicated pass. */
-  private def qObserveMetrics(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val inObs = org.apache.spark.sql.Observation()
-    val keptObs = org.apache.spark.sql.Observation()
-    t.documents.select(col("doc_id"), col("lang"), col("n_chars"))
-      .observe(inObs, count(lit(1)).as("n_in"),
-        sum(col("n_chars")).as("chars_in"))
-      .filter(col("n_chars") >= 200)
-      .observe(keptObs, count(lit(1)).as("n_kept"),
-        sum(col("n_chars")).as("chars_kept"))
-      .write.mode("overwrite").parquet(s"$lakeRoot/q229_kept")
-    // A MISSING key means the observe plumbing broke — fail with the
-    // metric's name, not an opaque NoSuchElementException. Only the
-    // sums may be legitimately null (empty input after the gate);
-    // counts never are.
-    def l(m: Map[String, Any], k: String, nullableSum: Boolean): Long =
-      m.get(k) match {
-        case None =>
-          sys.error(s"observed metric '$k' missing; got keys ${m.keys}")
-        case Some(null) if nullableSum => 0L
-        case Some(null) =>
-          sys.error(s"observed count '$k' was null — observe regression")
-        case Some(v) => v.asInstanceOf[Long]
-      }
-    val (in, kept) = (inObs.get, keptObs.get)
-    import s.implicits._
-    Seq((l(in, "n_in", nullableSum = false),
-        l(in, "chars_in", nullableSum = true),
-        l(kept, "n_kept", nullableSum = false),
-        l(kept, "chars_kept", nullableSum = true)))
-      .toDF("n_in", "chars_in", "n_kept", "chars_kept")
-      .withColumn("kept_ratio",
-        round(col("n_kept") / col("n_in").cast("double"), 6))
-  }
-
-  /** Count-Min Sketch frequency estimates (Sketches.cmsTopKAccuracy
-    * over the native [[graft.functions.CmsSketchAgg]]): the
-    * frequency-estimate member of the sketch trio — KMV answers "how
-    * many distinct?", Misra-Gries "which candidates are heavy?", CMS
-    * "how often does THIS key occur?" from one fixed
-    * depth × width counter matrix, no vocabulary shuffle. The query is
-    * the accuracy harness (the q97 recall-harness discipline): sketch
-    * the corpus token stream, then grade the 10 true-heaviest tokens —
-    * true count, estimate, overcount. One-sided error (overcount ≥ 0,
-    * collisions only add) and the row hashes are the portable minhash
-    * universal family, so the oracle replays every counter and every
-    * estimate digit — not just the bound. */
-  private def qCmsFreq(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val toks = t.documents.select(
-      explode(Dedup.normTokens(col("text"))).as("tok"))
-    Sketches.cmsTopKAccuracy(toks, "tok", depth = 4, width = 1024,
-        topK = 10)
-      .withColumnRenamed("value", "tok")
-  }
-
-  /** Windowed CMS through the SQL surface: per (event type, day), the
-    * Count-Min estimate of a fixed 5-user watchlist's event counts via
-    * `graft_cms` in PLAIN SPARK SQL (the q201 discipline: the native
-    * aggregate must compose with any SQL workload, not only the Scala
-    * API). depth 2 × width 64 on purpose — busy (type, day) cells
-    * produce real collisions so the one-sided overcount is exercised,
-    * quiet cells stay exact. The watchlist probe is a literal
-    * expression over the broadcast sketch rows: at 100 TB the
-    * per-window sketches are metadata (one 2×64 matrix per cell)
-    * while the raw (user, type, day) grain never shuffles. The true
-    * counts come from one watchlist-filtered exact pass — the
-    * verification half of the harness, same as q230. */
-  private def qCmsWindow(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.register(s)
-    val t = Tables(s, dir)
-    t.events.select(col("event_type"),
-        col("ts").cast("date").as("day"),
-        GF.hash32(col("user_id").cast("string")).as("h"),
-        col("user_id"))
-      .createOrReplaceTempView("cms_events")
-    s.sql("""
-      WITH sk AS (SELECT event_type, day, graft_cms(h, 2, 64) AS cms
-                  FROM cms_events GROUP BY event_type, day),
-      w AS (SELECT uid, CAST(conv(substring(md5(CAST(uid AS STRING)),
-                1, 8), 16, 10) AS BIGINT) AS uh
-            FROM VALUES (1), (2), (3), (4), (5) AS t(uid)),
-      est AS (SELECT s.event_type, s.day, w.uid,
-          least(
-            element_at(element_at(s.cms, 1),
-              CAST(((w.uh * 1 + 17) % 4294967311) % 64 AS INT) + 1),
-            element_at(element_at(s.cms, 2),
-              CAST(((w.uh * 3 + 118) % 4294967311) % 64 AS INT) + 1))
-            AS cms_est
-        FROM sk s CROSS JOIN w),
-      tru AS (SELECT event_type, day, user_id AS uid,
-            count(*) AS true_cnt
-          FROM cms_events WHERE user_id IN (1, 2, 3, 4, 5)
-          GROUP BY event_type, day, user_id)
-      SELECT e.event_type, e.day, CAST(e.uid AS BIGINT) AS uid,
-        CAST(coalesce(t.true_cnt, 0) AS BIGINT) AS true_cnt,
-        e.cms_est,
-        e.cms_est - CAST(coalesce(t.true_cnt, 0) AS BIGINT) AS overcount
-      FROM est e LEFT JOIN tru t
-        ON e.event_type = t.event_type AND e.day = t.day
-           AND e.uid = t.uid
-      ORDER BY event_type, day, uid""")
-  }
-
-  /** HDR quantile-sketch accuracy harness
-    * (Sketches.hdrQuantileAccuracy, the q230/q97 discipline): per
-    * language, grade the sketch's P1/P25/P50/P75/P99 of document text
-    * length against the exact rank-⌈φ·N⌉ values — estimate, relative
-    * error and the 2^−7 in-bound verdict side by side. The exact side
-    * exists only to grade; the production path is one bounded-state
-    * aggregate (map-side mergeable bucket map, ~2^7·log₂(range)
-    * entries) + plain-projection probes — the quantile member of the
-    * sketch family next to KMV/Misra-Gries/CMS, and the 100 TB answer
-    * to q127's exact value-grain quantiles. */
-  private def qHdrQuantiles(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Sketches.hdrQuantileAccuracy(
-        t.documents.filter(col("text").isNotNull)
-          .select(col("lang"), length(col("text")).cast("long")
-            .as("text_len")),
-        "lang", "text_len", sBits = 7,
-        phis = Seq(0.01, 0.25, 0.5, 0.75, 0.99))
-      .withColumnRenamed("grp", "lang")
-  }
-
-  /** Exact-substring dedup (Dedup.exactSubstrSpans — ExactSubstr
-    * semantics, Lee et al. 2021): every maximal span of >= 8 tokens
-    * repeated verbatim anywhere in the corpus, at arbitrary token
-    * offsets, one row per occurrence with boundaries and the span's
-    * content md5. Pair-free relational reformulation of the
-    * suffix-array algorithm: repeated-L-gram start positions →
-    * gaps-and-islands maximal runs — a boilerplate span repeated m
-    * times costs m position rows, never m² pairs. */
-  private def qExactSubstr(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Dedup.exactSubstrSpans(
-        t.documents.filter(col("text").isNotNull), "text", "doc_id",
-        minTokens = 8)
-      .select(col("doc_id"),
-        col("span_start").cast("long").as("span_start"),
-        col("span_end").cast("long").as("span_end"),
-        col("span_tokens").cast("long").as("span_tokens"),
-        col("span_md5"))
-      .orderBy(col("doc_id"), col("span_start"))
-  }
-
-  /** The ExactSubstr REMOVAL transform (Dedup.exactSubstrDedup): the
-    * corpus with every token covered by a repeated >= 8-token span
-    * dropped from every occurrence — one row per document with the
-    * surviving-text md5, so the gate checks the actual cleaned
-    * content, untouched docs and whole-doc drops included. */
-  private def qExactSubstrDedup(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Dedup.exactSubstrDedup(
-        t.documents.filter(col("text").isNotNull), "text", "doc_id",
-        minTokens = 8)
-      .orderBy(col("doc_id"))
-  }
-
-  /** Persistable + re-mergeable sketch columns (the lakehouse rollup
-    * pattern): per-(lang, source) KMV/CMS/HDR sketch states roll up to
-    * lang grain THROUGH THE STORED-STATE MERGE AGGREGATES
-    * (Sketches.kmvMergeState / cmsMerge / hdrMerge) and are compared
-    * hash-exactly against a direct lang-grain build — the q234 gate
-    * for "daily sketches on parquet → monthly rollup without
-    * rescanning raw data". All three states are symmetric multiset
-    * functions, so merged ≡ direct to the digest; the oracle replays
-    * the two-level rollup itself (per-source states merged in SQL),
-    * not just the direct build. */
-  private def qSketchRollup(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val k = 64; val depth = 2; val width = 64; val sBits = 7
-    val d = t.documents.filter(col("text").isNotNull)
-      .select(col("lang"), col("source"),
-        GF.hash32(col("text")).as("h"),
-        length(col("text")).cast("long").as("len"))
-    val sub = d.groupBy(col("lang"), col("source"))
-      .agg(Sketches.kmvState(col("h"), k).as("kmv"),
-        Sketches.cmsAgg(col("h"), depth, width).as("cms"),
-        Sketches.hdrAgg(col("len"), sBits).as("hdr"))
-    val merged = sub.groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_sub"),
-        Sketches.kmvMergeState(col("kmv"), k).as("kmv_m"),
-        Sketches.cmsMerge(col("cms"), depth, width).as("cms_m"),
-        Sketches.hdrMerge(col("hdr")).as("hdr_m"))
-    val direct = d.groupBy(col("lang"))
-      .agg(Sketches.kmvState(col("h"), k).as("kmv_d"),
-        Sketches.cmsAgg(col("h"), depth, width).as("cms_d"),
-        Sketches.hdrAgg(col("len"), sBits).as("hdr_d"))
-    merged.join(direct, Seq("lang"))
-      .select(col("lang"), col("n_sub"),
-        (col("kmv_m") === col("kmv_d")).as("kmv_eq"),
-        Sketches.longArrayDigest(col("kmv_m")).as("kmv_digest"),
-        Sketches.kmvEstimateFromState(col("kmv_m"), k).as("kmv_est"),
-        (col("cms_m") === col("cms_d")).as("cms_eq"),
-        Sketches.cmsDigest(col("cms_m")).as("cms_digest"),
-        (col("hdr_m") === col("hdr_d")).as("hdr_eq"),
-        Sketches.hdrDigest(col("hdr_m")).as("hdr_digest"),
-        Sketches.hdrQuantile(col("hdr_m"), 0.5, sBits).as("hdr_p50"))
-      .orderBy(col("lang"))
-  }
-
-  /** Unigram-LM (SentencePiece-style) tokenizer training
-    * (TextAnalysis.unigramLmTrain): 2 rounds of full soft EM — the
-    * forward-backward recursions over every segmentation of every
-    * word — with every double sum order-pinned, so the DuckDB oracle
-    * replays the whole training loop bit-for-bit (recursive CTEs walk
-    * the same α/β recursions in the same l-ascending term order).
-    * Output: the top-40 pieces by final probability. */
-  private def qUnigramTokenizer(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val probs = TextAnalysis.unigramLmTrain(
-      t.documents.filter(col("text").isNotNull), "text", "doc_id",
-      maxPieceLen = 4, emIters = 2, minFreq = 2L)
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("p").desc, col("piece"))
-    probs.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 40)
-      .select(col("rank"), col("piece"), round(col("p"), 8).as("p"))
-      .orderBy(col("rank"))
-  }
-
-  // -------------------------------------------------------------------
-  // Registry
-  // -------------------------------------------------------------------
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_pricing_summary" -> (qPricingSummary _),
-    "q02_indicators" -> (qIndicators _),
-    "q03_method_classify" -> (qMethodClassify _),
-    "q04_semi_join" -> (qSemiJoin _),
-    "q05_anti_join" -> (qAntiJoin _),
-    "q06_star_revenue" -> (qStarRevenue _),
-    "q07_pivot_daily" -> (qPivotDaily _),
-    "q08_distinct" -> (qDistinct _),
-    "q09_union_report" -> (qUnionReport _),
-    "q10_status_sort" -> (qStatusSort _),
-    "q11_first_valid" -> (qFirstValid _),
-    "q12_string_funcs" -> (qStringFuncs _),
-    "q13_cell_coords" -> (qCellCoords _),
-    "q14_freq_map" -> (qFreqMap _),
-    "q15_missing_norm" -> (qMissingNorm _),
-    "q16_url_rewrite" -> (qUrlRewrite _),
-    "q17_path_assembly" -> (qPathAssembly _),
-    "q18_monotonic" -> (qMonotonic _),
-    "q19_freq_gaps" -> (qFreqGaps _),
-    "q20_validation_summary" -> (qValidationSummary _),
-    "q21_complete_calendar" -> (qCompleteCalendar _),
-    "q22_scrape_grid" -> (qScrapeGrid _),
-    "q23_scrape_wide" -> (qScrapeWide _),
-    "q27_composed_time" -> (qComposedTime _),
-    "q28_composed_two_col" -> (qComposedTwoCol _),
-    "q29_kmv_distinct" -> (qKmvDistinct _),
-    "q24_sessionize" -> (qSessionize _),
-    "q25_rollup" -> (qRollup _),
-    "q26_approx_distinct" -> (qApproxDistinct _),
-    "q30_exact_dedup" -> (qExactDedup _),
-    "q31_minhash_lsh" -> (qMinhashLsh _),
-    "q32_ngram_jaccard" -> (qNgramJaccard _),
-    "q33_simhash" -> (qSimhash _),
-    "q34_knn_cosine" -> (qKnnCosine _),
-    "q35_lsh_ann" -> (qLshAnn _),
-    "q36_langid" -> (qLangId _),
-    "q37_quality" -> (qQuality _),
-    "q38_token_counts" -> (qTokenCounts _),
-    "q39_fingerprint" -> (qFingerprint _),
-    "q40_embedding_near_dup" -> (qEmbeddingNearDup _),
-    "q41_multimodal" -> (qMultimodal _),
-    "q42_ivf_ann" -> (qIvfAnn _),
-    "q43_repetition" -> (qRepetition _),
-    "q44_dup_clusters" -> (qDupClusters _),
-    "q45_hash_split" -> (qSplit _),
-    "q46_tfidf" -> (qTfidf _),
-    "q47_pii_redact" -> (qPiiRedact _),
-    "q48_decontaminate" -> (qDecontaminate _),
-    "q49_stratified_sample" -> (qStratifiedSample _),
-    "q50_chunk_dedup" -> (qChunkDedup _),
-    "q51_corpus_stats" -> (qCorpusStats _),
-    "q52_curation_funnel" -> (qCurationFunnel _),
-    "q53_pack" -> (qPack _),
-    "q54_kmeans_cells" -> (qKmeansCells _),
-    "q55_pq_adc" -> (qPqAdc _),
-    "q56_shuffle" -> (qShuffle _),
-    "q57_profile" -> (qProfile _),
-    "q58_ivf_index" -> (qIvfIndex _),
-    "q59_pq_index" -> (qPqIndex _),
-    "q60_bmp_decode" -> (qBmpDecode _),
-    "q61_asof_join" -> (qAsofJoin _),
-    "q65_semantic_dedup" -> (qSemanticDedup _),
-    "q66_pct_change" -> (qPctChange _),
-    "q67_length_buckets" -> (qLengthBuckets _),
-    "q68_quality_gate" -> (qQualityGate _),
-    "q62_resample" -> (qResample _),
-    "q63_ffill" -> (qFfill _),
-    "q64_rolling" -> (qRolling _),
-    "q69_source_cap" -> (qSourceCap _),
-    "q70_mixture" -> (qMixture _),
-    "q71_unigram_lm" -> (qUnigramLm _),
-    "q72_interpolate" -> (qInterpolate _),
-    "q73_rolling_anomaly" -> (qRollingAnomaly _),
-    "q74_edit_distance" -> (qEditDistance _),
-    "q75_containment" -> (qContainment _),
-    "q76_seasonal" -> (qSeasonal _),
-    "q77_funnel" -> (qFunnel _),
-    "q78_retention" -> (qRetention _),
-    "q79_snapshot_diff" -> (qSnapshotDiff _),
-    "q80_top_tokens" -> (qTopTokens _),
-    "q81_incremental_dedup" -> (qIncrementalDedup _),
-    "q82_winsorize" -> (qWinsorize _),
-    "q83_char_entropy" -> (qCharEntropy _),
-    "q84_psi_drift" -> (qPsiDrift _),
-    "q85_source_overlap" -> (qSourceOverlap _),
-    "q86_ngram_novelty" -> (qNgramNovelty _),
-    "q87_weighted_sample" -> (qWeightedSample _),
-    "q88_funnel_timing" -> (qFunnelTiming _),
-    "q89_dim_stats" -> (qDimStats _),
-    "q90_pmi" -> (qPmi _),
-    "q91_profile_diff" -> (qProfileDiff _),
-    "q92_trend" -> (qTrend _),
-    "q93_changepoint" -> (qChangepoint _),
-    "q94_percent_rank" -> (qPercentRank _),
-    "q95_concentration" -> (qConcentration _),
-    "q96_dup_inflation" -> (qDupInflation _),
-    "q97_ann_recall" -> (qRecall _),
-    "q98_bench_leakage" -> (qLeakage _),
-    "q99_histogram" -> (qHistogram _),
-    "q100_mix_kl" -> (qMixKl _),
-    "q101_png_decode" -> (qPngDecode _),
-    "q102_jpeg_meta" -> (qJpegMeta _),
-    "q103_bpe_tokens" -> (qBpeTokens _),
-    "q104_ivf_upsert" -> (qIvfUpsert _),
-    "q105_wav_decode" -> (qWavDecode _),
-    "q106_bm25" -> (qBm25 _),
-    "q107_bigram_lm" -> (qBigramLm _),
-    "q108_boilerplate" -> (qBoilerplate _),
-    "q109_sq8_knn" -> (qSq8Knn _),
-    "q110_pagerank" -> (qPageRank _),
-    "q111_chunking" -> (qChunking _),
-    "q112_ppr" -> (qPprExpand _),
-    "q113_ahash_dup" -> (qAhashDup _),
-    "q114_ship_priority" -> (qShipPriority _),
-    "q115_part_supplier" -> (qPartSupplier _),
-    "q116_window_rank" -> (qWindowRank _),
-    "q117_setops" -> (qSetOps _),
-    "q118_datetime" -> (qDatetime _),
-    "q119_hard_negatives" -> (qHardNegatives _),
-    "q120_bigram_gate" -> (qBigramGate _),
-    "q121_dsir" -> (qDsir _),
-    "q122_canonical" -> (qCanonical _),
-    "q123_json_props" -> (qJsonProps _),
-    "q124_sq8_rerank" -> (qSq8Rerank _),
-    "q125_rrf_fusion" -> (qRrfFusion _),
-    "q126_lsh_recall" -> (qLshRecall _),
-    "q127_exact_quantiles" -> (qExactQuantiles _),
-    "q128_enc_quality" -> (qEncQuality _),
-    "q129_interval_join" -> (qIntervalJoin _),
-    "q130_zipf" -> (qZipf _),
-    "q131_blocklist" -> (qBlocklist _),
-    "q132_url_canon" -> (qUrlCanon _),
-    "q133_bot_detect" -> (qBotDetect _),
-    "q134_scd2" -> (qScd2 _),
-    "q135_temperature_mix" -> (qTemperatureMix _),
-    "q136_gopher_rules" -> (qGopherRules _),
-    "q137_code_detect" -> (qCodeDetect _),
-    "q138_mp4_meta" -> (qMp4Meta _),
-    "q139_lsh_bucket_cap" -> (qLshBucketCap _),
-    "q140_mp4_tracks" -> (qMp4Tracks _),
-    "q141_dup_spans" -> (qDupSpans _),
-    "q142_curriculum" -> (qCurriculum _),
-    "q143_audio_features" -> (qAudioFeatures _),
-    "q144_dhash_dup" -> (qDhashDup _),
-    "q145_embedding_hygiene" -> (qEmbeddingHygiene _),
-    "q146_retrieval_metrics" -> (qRetrievalMetrics _),
-    "q147_image_clusters" -> (qImageClusters _),
-    "q148_min_cost_supplier" -> (qMinCostSupplier _),
-    "q149_important_parts" -> (qImportantParts _),
-    "q150_langid_calibration" -> (qLangidCalibration _),
-    "q151_multiprobe_lsh" -> (qMultiProbeLsh _),
-    "q152_leakage_split" -> (qLeakageSplit _),
-    "q153_k_anonymity" -> (qKAnonymity _),
-    "q154_ewma" -> (qEwma _),
-    "q155_token_budget" -> (qTokenBudget _),
-    "q156_deflate_ratio" -> (qDeflateRatio _),
-    "q157_embedding_outliers" -> (qEmbeddingOutliers _),
-    "q158_mmr_rerank" -> (qMmrRerank _),
-    "q159_corr_matrix" -> (qCorrMatrix _),
-    "q160_mutual_info" -> (qMutualInfo _),
-    "q161_local_supplier_volume" -> (qLocalSupplierVolume _),
-    "q162_nation_trade" -> (qNationTrade _),
-    "q163_product_profit" -> (qProductProfit _),
-    "q164_returned_customers" -> (qReturnedCustomers _),
-    "q165_priority_lines" -> (qPriorityLines _),
-    "q166_promo_share" -> (qPromoShare _),
-    "q167_large_orders" -> (qLargeOrders _),
-    "q168_text_fold" -> (qTextFold _),
-    "q169_jaro_winkler" -> (qJaroWinklerMatch _),
-    "q170_ref_integrity" -> (qRefIntegrity _),
-    "q171_benford" -> (qBenford _),
-    "q172_random_projection" -> (qRandomProjection _),
-    "q173_standardize_dims" -> (qStandardizeDims _),
-    "q174_copurchase_lift" -> (qCopurchaseLift _),
-    "q175_pca_power" -> (qPcaPower _),
-    "q176_bpe_encode" -> (qBpeEncode _),
-    "q177_attribution" -> (qAttribution _),
-    "q178_triangles" -> (qTriangles _),
-    "q179_equi_depth" -> (qEquiDepth _),
-    "q180_key_skew" -> (qKeySkew _),
-    "q181_transitions" -> (qTransitions _),
-    "q182_prefix_filter_join" -> (qPrefixFilterJoin _),
-    "q183_asof_native" -> (qAsofNative _),
-    "q184_order_priority" -> (qOrderPriority _),
-    "q185_market_share" -> (qMarketShare _),
-    "q186_cust_distribution" -> (qCustDistribution _),
-    "q187_top_supplier" -> (qTopSupplier _),
-    "q188_excluded_suppliers" -> (qExcludedSuppliers _),
-    "q189_small_qty_revenue" -> (qSmallQtyRevenue _),
-    "q190_disjunctive_revenue" -> (qDisjunctiveRevenue _),
-    "q191_bulk_suppliers" -> (qBulkSuppliers _),
-    "q192_waiting_suppliers" -> (qWaitingSuppliers _),
-    "q193_dormant_customers" -> (qDormantCustomers _),
-    "q194_kmv_native" -> (qKmvNative _),
-    "q195_interval_overlap" -> (qIntervalOverlap _),
-    "q196_bitext_mining" -> (qBitextMining _),
-    "q197_bottomk_sample" -> (qBottomKSample _),
-    "q198_cube_stats" -> (qCubeStats _),
-    "q199_survivorship" -> (qSurvivorship _),
-    "q200_pipeline_parity" -> (qPipelineParity _),
-    "q201_kmv_window" -> (qKmvWindow _),
-    "q202_kmv_overlap" -> (qKmvOverlap _),
-    "q203_twap" -> (qTwap _),
-    "q204_simhash_pairs" -> (qSimhashPairs _),
-    "q205_matryoshka_recall" -> (qMatryoshka _),
-    "q206_fd_audit" -> (qFdAudit _),
-    "q207_sliding_distinct" -> (qSlidingDistinct _),
-    "q208_weighted_median" -> (qWeightedMedian _),
-    "q209_mad_outliers" -> (qMadOutliers _),
-    "q210_ab_lift" -> (qAbLift _),
-    "q211_reconcile" -> (qReconcile _),
-    "q212_streaks" -> (qStreaks _),
-    "q213_skyline" -> (qSkyline _),
-    "q214_mode" -> (qMode _),
-    "q215_conversion_lag" -> (qConversionLag _),
-    "q216_bounce_rate" -> (qBounceRate _),
-    "q217_audience_overlap" -> (qAudienceOverlap _),
-    "q218_yoy_growth" -> (qYoyGrowth _),
-    "q219_revenue_share" -> (qRevenueShare _),
-    "q220_melt_roundtrip" -> (qMeltRoundtrip _),
-    "q221_view_to_purchase" -> (qViewToPurchase _),
-    "q222_gap_histogram" -> (qGapHistogram _),
-    "q223_top_journeys" -> (qTopJourneys _),
-    "q224_time_travel" -> (qTimeTravel _),
-    "q225_rolling_revenue" -> (qRollingRevenue _),
-    "q226_coverage_cutoff" -> (qCoverageCutoff _),
-    "q227_bloom_semi_join" -> (qBloomSemiJoin _),
-    "q228_bucketed_join" -> (qBucketedJoin _),
-    "q229_observe_metrics" -> (qObserveMetrics _),
-    "q230_cms_freq" -> (qCmsFreq _),
-    "q231_cms_window" -> (qCmsWindow _),
-    "q232_hdr_quantiles" -> (qHdrQuantiles _),
-    "q233_exact_substr" -> (qExactSubstr _),
-    "q234_sketch_rollup" -> (qSketchRollup _),
-    "q235_unigram_tok" -> (qUnigramTokenizer _),
-    "q236_exact_substr_dedup" -> (qExactSubstrDedup _),
-  )
-
-  // -------------------------------------------------------------------
-  // DuckDB oracles — same table names, same aliases, same rounding.
-  // Portable-hash and tokenization fragments are generated from the same
-  // Scala constants the operators use, so the two sides cannot drift.
-  // -------------------------------------------------------------------
-
-  private val missingTokensSqlList: String =
-    GF.MissingTokens.map(t => "'" + t + "'").mkString("[", ", ", "]")
-
-  /** DuckDB equivalent of GF.hash32 (hexOffset selects the md5 window,
-    * matching the Scala default of 1). */
-  private def hash32Sql(x: String, hexOffset: Int = 1): String =
-    s"CAST(('0x' || substr(md5($x), $hexOffset, 8)) AS BIGINT)"
-
-  /** DuckDB equivalent of Dedup.normalizeText over `text`. */
-  private val normTextSql: String =
-    "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), '\\s+', ' ', 'g'))"
-
-  /** DuckDB equivalent of GF.wsTokens. */
-  private def wsTokensSql(x: String): String =
-    s"list_filter(string_split_regex($x, '\\s+'), t -> len(t) > 0)"
-
-  /** Shared CTE chain replaying Dedup.exactSubstrSpans (tokenize →
-    * stride-1 8-gram hash pairs → repeated grams → gaps-and-islands
-    * maximal spans `sp`), used by both the q233 span gate and the
-    * q236 removal-transform gate. */
-  private lazy val exactSubstrCtesSql: String =
-    s"""t AS (SELECT doc_id, ${wsTokensSql("text")} AS arr
-       |  FROM documents WHERE text IS NOT NULL),
-       |g AS (SELECT doc_id, i AS pos,
-       |    ${hash32Sql("array_to_string(arr[i+1:i+8], ' ')")} AS h1,
-       |    ${hash32Sql("array_to_string(arr[i+1:i+8], ' ')", 9)} AS h2
-       |  FROM t, unnest(range(0, len(arr) - 7)) AS u(i)
-       |  WHERE len(arr) >= 8),
-       |rep AS (SELECT h1, h2 FROM g GROUP BY 1, 2
-       |  HAVING count(*) >= 2),
-       |f AS (SELECT g.doc_id, g.pos FROM g JOIN rep USING (h1, h2)),
-       |isl AS (SELECT doc_id, pos, pos - row_number() OVER
-       |    (PARTITION BY doc_id ORDER BY pos) AS grp
-       |  FROM f),
-       |sp AS (SELECT doc_id, min(pos) AS span_start,
-       |    max(pos) + 8 AS span_end
-       |  FROM isl GROUP BY doc_id, grp)""".stripMargin
-
-  /** DuckDB replay of TextAnalysis.unigramLmTrain — the WHOLE training
-    * loop, program-generated per EM round so the two sides cannot
-    * drift: recursive CTEs walk the α/β recursions carrying a 4-slot
-    * window of previous values, the 4 l-terms sum in the same
-    * left-associated order as the Scala chain, expected counts fold
-    * over (word, i, l)-sorted lists with an explicit 0.0 seed
-    * (list_prepend) exactly like Spark's aggregate(…, 0.0, +), and
-    * the normalizer folds piece-sorted. Bit-exact, not just
-    * rounded-digit-exact. */
-  private def unigramLmOracleSql(emIters: Int): String = {
-    // the 4-term α/β step at new index n, joined piece probs c1..c4:
-    // (((t1 + t2) + t3) + t4), t_l = coalesce(c_l.p, 0) * win[5-l]
-    val step = "(((coalesce(c1.p, 0) * r.win[4] + " +
-      "coalesce(c2.p, 0) * r.win[3]) + " +
-      "coalesce(c3.p, 0) * r.win[2]) + " +
-      "coalesce(c4.p, 0) * r.win[1])"
-    def recCte(k: Int, name: String, iExpr: Int => String): String = {
-      val joins = (1 to 4).map { l =>
-        s"  LEFT JOIN cand$k c$l ON c$l.word = r.word AND c$l.l = $l " +
-          s"AND c$l.i = ${iExpr(l)}"
-      }.mkString("\n")
-      s"""$name$k(word, len, j, v, win) AS (
-         |  SELECT word, len, 0, CAST(1.0 AS DOUBLE),
-         |    CAST([0.0, 0.0, 0.0, 1.0] AS DOUBLE[])
-         |  FROM words
-         |  UNION ALL
-         |  SELECT r.word, r.len, r.j + 1, $step,
-         |    [r.win[2], r.win[3], r.win[4], $step]
-         |  FROM $name$k r
-         |$joins
-         |  WHERE r.j < r.len)""".stripMargin
-    }
-    val iters = (1 to emIters).map { k =>
-      val prev = if (k == 1) "probs0" else s"probs${k - 1}"
-      // α at new index n = r.j + 1: piece starts at i = n - l;
-      // β (reversed, γ[t]): piece starts at i = len - n, all four l
-      val alpha = recCte(k, "alpha", l => s"r.j + 1 - $l")
-      val beta = recCte(k, "beta", _ => "r.len - r.j - 1")
-      s"""cand$k AS (SELECT o.word, o.freq, o.len, o.i, o.l, o.piece, p.p
-         |  FROM occ o JOIN $prev p USING (piece)),
-         |$alpha,
-         |$beta,
-         |ev$k AS (SELECT c.piece, c.word, c.i, c.l,
-         |    c.freq * ai.v * c.p * bj.v / al.v AS contrib
-         |  FROM cand$k c
-         |  JOIN alpha$k ai ON ai.word = c.word AND ai.j = c.i
-         |  JOIN alpha$k al ON al.word = c.word AND al.j = c.len
-         |  JOIN beta$k bj ON bj.word = c.word
-         |    AND bj.j = c.len - (c.i + c.l)),
-         |ec$k AS (SELECT piece, list_reduce(
-         |    list_prepend(CAST(0.0 AS DOUBLE), list_transform(
-         |      list(struct_pack(w := word, i := i, l := l, c := contrib)
-         |        ORDER BY word, i, l), x -> x.c)),
-         |    (a, b) -> a + b) AS ec
-         |  FROM ev$k GROUP BY piece),
-         |tot$k AS (SELECT list_reduce(
-         |    list_prepend(CAST(0.0 AS DOUBLE), list_transform(
-         |      list(struct_pack(p := piece, e := ec) ORDER BY piece),
-         |      x -> x.e)),
-         |    (a, b) -> a + b) AS t FROM ec$k),
-         |probs$k AS (SELECT piece, ec / t AS p FROM ec$k, tot$k)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH RECURSIVE w0 AS (SELECT
-       |    unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS word
-       |  FROM documents WHERE text IS NOT NULL),
-       |words AS (SELECT word, count(*) AS freq,
-       |    CAST(length(word) AS INT) AS len
-       |  FROM w0 GROUP BY 1),
-       |occ AS (SELECT word, freq, len, CAST(u.i AS INT) AS i,
-       |    CAST(v.l AS INT) AS l,
-       |    substr(word, CAST(u.i AS INT) + 1, CAST(v.l AS INT)) AS piece
-       |  FROM words, unnest(range(0, len)) AS u(i),
-       |    unnest(range(1, 5)) AS v(l)
-       |  WHERE u.i + v.l <= len),
-       |pf AS (SELECT piece, sum(freq) AS pfreq FROM occ GROUP BY 1),
-       |vocab AS (SELECT piece, pfreq FROM pf
-       |  WHERE pfreq >= 2 OR length(piece) = 1),
-       |tot0 AS (SELECT sum(pfreq) AS t FROM vocab),
-       |probs0 AS (SELECT piece, CAST(pfreq AS DOUBLE) / t AS p
-       |  FROM vocab, tot0),
-       |$iters
-       |SELECT CAST(row_number() OVER (ORDER BY p DESC, piece) AS BIGINT)
-       |    AS rank,
-       |  piece, round(p, 8) AS p
-       |FROM probs$emIters ORDER BY p DESC, piece LIMIT 40""".stripMargin
-  }
-
-  /** DuckDB equivalent of Similarity.cosine (sequential fold order). */
-  private def cosineSql(a: String, b: String): String = {
-    def dot(x: String, y: String) =
-      s"list_aggregate(list_transform(generate_series(1, len($a)), i -> $x[i]::DOUBLE * $y[i]::DOUBLE), 'sum')"
-    s"(${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)})))"
-  }
-
-  /** Shared shingle CTE (3-gram shingles of normalized text), DuckDB
-    * equivalent of Dedup.shingles(n=3). */
-  private val shinglesCteSql: String =
-    s"""docs_norm AS (SELECT doc_id, $normTextSql AS norm FROM documents),
-       |toks AS (SELECT doc_id, ${wsTokensSql("norm")} AS arr FROM docs_norm),
-       |sh AS (SELECT doc_id, unnest(CASE WHEN len(arr) >= 3
-       |  THEN list_distinct(list_transform(generate_series(1, len(arr) - 2),
-       |       i -> arr[i] || ' ' || arr[i+1] || ' ' || arr[i+2]))
-       |  ELSE [array_to_string(arr, ' ')] END) AS shingle FROM toks)""".stripMargin
-
-  /** Shared similarity-graph CTE chain (follows [[shinglesCteSql]],
-    * ends at `verts` + `od`) — the q110/q112 edge build: lang-blocked
-    * bounded pairs sharing >= 1 shingle, symmetrized. */
-  private val graphCteSql: String =
-    s"""prs AS (SELECT d1.doc_id AS id1, d2.doc_id AS id2
-       |  FROM documents d1 JOIN documents d2 ON d1.lang = d2.lang
-       |  AND d2.doc_id > d1.doc_id AND d2.doc_id <= d1.doc_id + 10),
-       |e0 AS (SELECT DISTINCT p.id1, p.id2 FROM prs p
-       |  JOIN sh a ON a.doc_id = p.id1
-       |  JOIN sh b ON b.doc_id = p.id2 AND a.shingle = b.shingle),
-       |edges AS (SELECT id1 AS src, id2 AS dst FROM e0
-       |  UNION ALL SELECT id2, id1 FROM e0),
-       |verts AS (SELECT src AS id FROM edges
-       |  UNION SELECT dst FROM edges),
-       |od AS (SELECT src, CAST(count(*) AS BIGINT) AS outdeg
-       |  FROM edges GROUP BY src)""".stripMargin
-
-  /** Prefixed, doc-filtered variant of [[shinglesCteSql]] (ends at
-    * `<pfx>sh`) so one query can shingle two document subsets — q86
-    * shingles the current half against the reference half. */
-  private def shinglesCteFor(pfx: String, where: String): String =
-    s"""${pfx}d AS (SELECT doc_id, $normTextSql AS norm FROM documents
-       |  WHERE $where),
-       |${pfx}t AS (SELECT doc_id, ${wsTokensSql("norm")} AS arr FROM ${pfx}d),
-       |${pfx}sh AS (SELECT doc_id, unnest(CASE WHEN len(arr) >= 3
-       |  THEN list_distinct(list_transform(generate_series(1, len(arr) - 2),
-       |       i -> arr[i] || ' ' || arr[i+1] || ' ' || arr[i+2]))
-       |  ELSE [array_to_string(arr, ' ')] END) AS shingle FROM ${pfx}t)""".stripMargin
-
-  /** Shared minhash-LSH candidate-pair CTE chain (ends at `pairs`);
-    * reused by q31 and the q44 duplicate-cluster closure. Generated
-    * from the SAME Scala constants Dedup uses. */
-  /** Shared minhash-LSH bucket CTE chain (ends at `buckets(doc_id,
-    * band, bucket)`); the q81 index probe replays it with a parity
-    * split. */
-  private val lshBucketsCteSql: String = {
-    val k = 8; val bands = 4; val r = k / bands
-    val mins = (0 until k).map(i =>
-      s"min((h * ${2 * i + 1} + ${101 * i + 17}) % ${GF.MinhashPrime}) AS mh$i")
-      .mkString(", ")
-    val bandSelects = (0 until bands).map { b =>
-      val slice = (b * r until (b + 1) * r)
-        .map(i => s"CAST(mh$i AS VARCHAR)").mkString(" || '_' || ")
-      s"SELECT doc_id, $b AS band, md5($slice) AS bucket FROM sig"
-    }.mkString("\nUNION ALL\n")
-    s"""$shinglesCteSql,
-       |hashed AS (SELECT doc_id, ${hash32Sql("shingle")} AS h FROM sh),
-       |sig AS (SELECT doc_id, $mins FROM hashed GROUP BY doc_id),
-       |buckets AS (
-       |$bandSelects)""".stripMargin
-  }
-
-  private val lshPairsCteSql: String =
-    s"""$lshBucketsCteSql,
-       |pairs AS (SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2
-       |  FROM buckets l JOIN buckets r
-       |  ON l.band = r.band AND l.bucket = r.bucket AND l.doc_id < r.doc_id)""".stripMargin
-
-  /** Quality-signal CTE chain ending at `qsc(doc_id, n_tokens, …,
-    * quality_score)` — the DuckDB replay of TextAnalysis.qualityScore,
-    * shared by q37 and the q68 quantile gate. */
-  private lazy val qualityCtesSql: String = {
-    val allStop = sqlStringList(
-      TextAnalysis.StopwordsByLang.flatMap(_._2).distinct)
-    s"""t AS (SELECT doc_id, text, length(text)::DOUBLE AS n_chars,
-       |    ${wsTokensSql("text")} AS toks,
-       |    ${wsTokensSql("lower(text)")} AS ltoks
-       |  FROM documents),
-       |qsig AS (SELECT doc_id,
-       |  len(toks) AS n_tokens,
-       |  round(length(array_to_string(toks, ''))::DOUBLE /
-       |    nullif(len(toks), 0)::DOUBLE, 6) AS mean_token_len,
-       |  round((n_chars - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g'))) /
-       |    nullif(n_chars, 0.0), 6) AS punct_ratio,
-       |  round((n_chars - length(regexp_replace(text, '[0-9]', '', 'g'))) /
-       |    nullif(n_chars, 0.0), 6) AS digit_ratio,
-       |  round((n_chars - length(regexp_replace(text, '[A-Z]', '', 'g'))) /
-       |    nullif(n_chars, 0.0), 6) AS upper_ratio,
-       |  round(len(list_filter(ltoks, w -> list_contains($allStop, w)))::DOUBLE /
-       |    nullif(len(toks), 0)::DOUBLE, 6) AS stopword_ratio
-       |  FROM t),
-       |qsc AS (SELECT doc_id, n_tokens, mean_token_len, punct_ratio,
-       |  digit_ratio, upper_ratio, stopword_ratio,
-       |  round(greatest(0.0, least(1.0,
-       |    0.4 * least(n_tokens::DOUBLE / 50.0, 1.0) +
-       |    0.4 * least(stopword_ratio * 5.0, 1.0) +
-       |    0.2 * (1.0 - least(punct_ratio * 4.0, 1.0)))), 6) AS quality_score
-       |  FROM qsig)""".stripMargin
-  }
-
-  /** Shared SQ8 dequantization CTE chain (ends at `q(query_id, qv)` and
-    * `c(cand_id, cv)`) — the DuckDB replay of Similarity.sq8Stats +
-    * sq8Reconstruct, shared by q109 and the q124 rerank. */
-  private val sq8CtesSql: String =
-    s"""dims AS (SELECT vec_id, unnest(embedding) AS v,
-       |    unnest(generate_series(1, len(embedding))) AS d
-       |  FROM embeddings),
-       |st AS (SELECT d, min(CAST(v AS DOUBLE)) AS mn,
-       |    max(CAST(v AS DOUBLE)) AS mx FROM dims GROUP BY d),
-       |rec AS (SELECT vec_id, list(CASE WHEN mx - mn = 0 THEN mn
-       |      ELSE greatest(least(round((CAST(v AS DOUBLE) - mn)
-       |          / (mx - mn) * 255), 255.0e0), 0.0e0)
-       |        * (mx - mn) / 255.0e0 + mn END ORDER BY d) AS cv
-       |  FROM dims JOIN st USING (d) GROUP BY vec_id),
-       |q AS (SELECT vec_id AS query_id, embedding AS qv
-       |  FROM embeddings WHERE vec_id < 8),
-       |c AS (SELECT vec_id AS cand_id, cv FROM rec)""".stripMargin
-
-  /** DuckDB equivalent of Similarity.planeProjection for bit j. */
-  private def planeProjSql(j: Int): String =
-    s"list_aggregate(list_transform(generate_series(1, len(embedding)), " +
-      s"i -> embedding[i]::DOUBLE * (CASE WHEN ${hash32Sql(s"'${j}_' || CAST(i - 1 AS VARCHAR)")} % 2 = 0 " +
-      s"THEN 1.0 ELSE -1.0 END)), 'sum')"
-
-  private def sqlStringList(xs: Seq[String]): String =
-    xs.map(x => "'" + x + "'").mkString("[", ", ", "]")
-
-  /** DuckDB replay of the full PQ pipeline (pqTrain + pqEncode +
-    * pqSearch): per subspace, a hash-seeded Lloyd chain on the vector
-    * slice, a re-estimated codebook, code assignment — then ADC
-    * scoring as an ORDER BY s sum of per-subspace contributions (the
-    * same sequential fold order as the Spark zip_with/aggregate).
-    * Generated from the SAME m/k/iters/dims constants as the query.
-    * With `coarse = true` the replay adds the IVF-PQ index gate: every
-    * (query, candidate) pair must share the nearest label-derived 4-dp
-    * coarse centroid — exactly the posting-list partitions a
-    * pqSearchFromIndex probe reads. */
-  private def pqOracleSql(m: Int, k: Int, iters: Int, dims: Int,
-      topK: Int, maxQ: Int, coarse: Boolean = false): String = {
-    val sub = dims / m
-    def dotSql(a: String, b: String): String =
-      s"list_aggregate(list_transform(generate_series(1, len($a)), " +
-        s"i -> $a[i]::DOUBLE * $b[i]::DOUBLE), 'sum')"
-    def centOf(src: String): String =
-      s"""(SELECT cell, list(c ORDER BY d) AS centroid FROM (
-         |    SELECT cell, d, round(avg(x), 4) AS c FROM (
-         |      SELECT cell, unnest(sv)::DOUBLE AS x,
-         |             unnest(generate_series(1, len(sv))) AS d FROM $src)
-         |    GROUP BY cell, d) GROUP BY cell)""".stripMargin
-    def assignOf(book: String, s: Int): String =
-      s"""(SELECT vec_id, sv, cell FROM (
-         |    SELECT t.vec_id, t.sv, b.cell,
-         |      row_number() OVER (PARTITION BY t.vec_id
-         |        ORDER BY round(${cosineSql("t.sv", "b.centroid")}, 6)
-         |          DESC NULLS LAST, b.cell) AS rn
-         |    FROM sl$s t, $book b) WHERE rn = 1)""".stripMargin
-    val perSub = (0 until m).map { s =>
-      val lloyd = (1 to iters).map(i =>
-        s"c${s}_$i AS ${centOf(s"a${s}_${i - 1}")},\n" +
-          s"a${s}_$i AS ${assignOf(s"c${s}_$i", s)}").mkString(",\n")
-      s"""sl$s AS (SELECT vec_id,
-         |    embedding[${s * sub + 1}:${(s + 1) * sub}] AS sv
-         |  FROM embeddings),
-         |a${s}_0 AS (SELECT vec_id, sv,
-         |    CAST(${hash32Sql("CAST(vec_id AS VARCHAR)")} % $k AS INT)
-         |      AS cell FROM sl$s),
-         |$lloyd,
-         |bk$s AS ${centOf(s"a${s}_$iters")},
-         |en$s AS ${assignOf(s"bk$s", s)},
-         |ct$s AS (SELECT q.vec_id AS query_id, e.vec_id AS cand_id,
-         |    $s AS s, ${dotSql("q.sv", "b.centroid")} AS pdot,
-         |    ${dotSql("b.centroid", "b.centroid")} AS cn2
-         |  FROM sl$s q, en$s e, bk$s b
-         |  WHERE e.cell = b.cell AND q.vec_id < $maxQ)""".stripMargin
-    }.mkString(",\n")
-    val unions = (0 until m).map(s => s"SELECT * FROM ct$s")
-      .mkString("\nUNION ALL\n")
-    val coarseCtes = if (!coarse) "" else
-      s""",
-         |cdims AS (SELECT label AS cell, unnest(embedding)::DOUBLE AS x,
-         |       unnest(generate_series(1, len(embedding))) AS d
-         |  FROM embeddings),
-         |ccd AS (SELECT cell, d, round(avg(x), 4) AS c
-         |  FROM cdims GROUP BY cell, d),
-         |ccent AS (SELECT cell, list(c ORDER BY d) AS centroid
-         |  FROM ccd GROUP BY cell),
-         |cassign AS (SELECT e.vec_id, c.cell,
-         |    round(${cosineSql("e.embedding", "c.centroid")}, 6) AS csim
-         |  FROM embeddings e CROSS JOIN ccent c),
-         |casg AS (SELECT vec_id, cell FROM (SELECT *, row_number() OVER
-         |    (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rn
-         |  FROM cassign) WHERE rn = 1)""".stripMargin
-    val coarseJoin = if (!coarse) "" else
-      "\n  JOIN casg g1 ON g1.vec_id = a.query_id" +
-        "\n  JOIN casg g2 ON g2.vec_id = a.cand_id AND g2.cell = g1.cell"
-    s"""WITH $perSub$coarseCtes,
-       |contribs AS (
-       |$unions),
-       |agg AS (SELECT query_id, cand_id,
-       |    list_aggregate(list(pdot ORDER BY s), 'sum') AS adc,
-       |    sqrt(list_aggregate(list(cn2 ORDER BY s), 'sum')) AS recn
-       |  FROM contribs GROUP BY query_id, cand_id),
-       |qn AS (SELECT vec_id AS query_id,
-       |    sqrt(${dotSql("embedding", "embedding")}) AS qn
-       |  FROM embeddings WHERE vec_id < $maxQ),
-       |scored AS (SELECT a.query_id, a.cand_id,
-       |    round(a.adc / NULLIF(q.qn * a.recn, 0), 6) AS sim_adc
-       |  FROM agg a JOIN qn q USING (query_id)$coarseJoin
-       |  WHERE a.query_id <> a.cand_id),
-       |ranked AS (SELECT *, row_number() OVER
-       |    (PARTITION BY query_id ORDER BY sim_adc DESC, cand_id)
-       |      AS "rank" FROM scored)
-       |SELECT query_id, cand_id, sim_adc, CAST("rank" AS INT) AS "rank"
-       |FROM ranked WHERE "rank" <= $topK
-       |ORDER BY query_id, "rank"""".stripMargin
-  }
-
-  /** DuckDB replay of Similarity.kmeansCells: same seed hash (portable
-    * md5-prefix, mod k), same 4-dp centroid rounding, same 6-dp cosine
-    * with lowest-cell tie-break — one CTE pair per Lloyd iteration,
-    * generated from the SAME k/iters constants the query uses. */
-  private def kmeansOracleSql(k: Int, iters: Int): String = {
-    val seed = s"asg0 AS (SELECT vec_id, embedding, " +
-      s"CAST(${hash32Sql("CAST(vec_id AS VARCHAR)")} % $k AS INT) AS cell " +
-      "FROM embeddings)"
-    val steps = (1 to iters).map { i =>
-      s"""cd$i AS (SELECT cell, d, round(avg(x), 4) AS c FROM (
-         |    SELECT cell, unnest(embedding)::DOUBLE AS x,
-         |           unnest(generate_series(1, len(embedding))) AS d
-         |    FROM asg${i - 1}) GROUP BY cell, d),
-         |cent$i AS (SELECT cell, list(c ORDER BY d) AS centroid
-         |  FROM cd$i GROUP BY cell),
-         |sc$i AS (SELECT e.vec_id, e.embedding, c.cell,
-         |    round(${cosineSql("e.embedding", "c.centroid")}, 6) AS csim
-         |  FROM embeddings e CROSS JOIN cent$i c),
-         |asg$i AS (SELECT vec_id, embedding, cell FROM (
-         |    SELECT *, row_number() OVER
-         |      (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rn
-         |    FROM sc$i) WHERE rn = 1)""".stripMargin
-    }
-    s"WITH $seed,\n${steps.mkString(",\n")}\n" +
-      s"SELECT vec_id, CAST(cell AS INT) AS cell FROM asg$iters\n" +
-      "ORDER BY vec_id"
-  }
-
-  private val scrapeGridSql: String =
-    s"""grid AS (
-       |  SELECT 'hoja' AS sheet, 1 AS row, CAST(event_id + 1 AS INT) AS col,
-       |         CASE WHEN event_id = 0 THEN 'indice_tiempo'
-       |              ELSE 's' || CAST(event_id + 1 AS VARCHAR) END AS value
-       |  FROM events WHERE event_id < 6
-       |  UNION ALL
-       |  SELECT 'hoja', CAST(event_id % 200 + 2 AS INT) AS row,
-       |         CAST(event_id // 200 + 1 AS INT) AS col,
-       |         CASE WHEN event_id // 200 + 1 = 1 THEN
-       |             '20' || lpad(CAST((event_id % 200) // 12 AS VARCHAR), 2, '0') ||
-       |             '-' || lpad(CAST((event_id % 200) % 12 + 1 AS VARCHAR), 2, '0')
-       |           WHEN event_id % 13 = 0 THEN
-       |             $missingTokensSqlList[CAST(event_id % 19 + 1 AS INT)]
-       |           ELSE CAST(CAST(value AS DECIMAL(12,2)) AS VARCHAR) END AS value
-       |  FROM events WHERE event_id < 1000
-       |)""".stripMargin
-
-  private val scrapeLongSql: String =
-    s"""WITH $scrapeGridSql,
-       |tm AS (
-       |  SELECT row, CAST(value || '-01' AS DATE) AS indice_tiempo
-       |  FROM grid WHERE sheet = 'hoja' AND col = 1 AND row >= 2
-       |    AND regexp_matches(trim(value), '^\\d{4}-\\d{2}$$')
-       |),
-       |vals AS (
-       |  SELECT row, 's' || CAST(col AS VARCHAR) AS serie_id,
-       |         CASE WHEN value IS NULL OR list_contains($missingTokensSqlList, trim(value)) THEN NULL
-       |              ELSE TRY_CAST(trim(value) AS DOUBLE) END AS valor
-       |  FROM grid WHERE sheet = 'hoja' AND col >= 2 AND row >= 2
-       |)
-       |SELECT serie_id, indice_tiempo, valor
-       |FROM tm JOIN vals USING (row)""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_quantity), 2) AS sum_qty,
-        |  round(sum(l_extendedprice), 2) AS sum_base_price,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-        |  round(avg(l_quantity), 4) AS avg_qty,
-        |  count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q02_indicators" ->
-      """WITH ds AS (
-        |  SELECT count(*) AS datasets,
-        |    count(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS datasets_ok,
-        |    count(CASE WHEN o_orderstatus NOT IN ('F','O') THEN 1 END) AS datasets_error
-        |  FROM orders),
-        |dist AS (
-        |  SELECT count(*) AS distributions,
-        |    count(CASE WHEN l_returnflag = 'N' THEN 1 END) AS distributions_ok,
-        |    count(CASE WHEN l_returnflag NOT IN ('N','R') THEN 1 END) AS distributions_error
-        |  FROM lineitem)
-        |SELECT ds.*, dist.*,
-        |  coalesce(round(distributions_ok * 100.0 / nullif(distributions, 0), 3), 0.0)
-        |    AS distributions_percentage
-        |FROM ds, dist""".stripMargin,
-
-    "q03_method_classify" ->
-      """WITH manifest AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 5 = 0 THEN 'http://x/' || source || '.csv' END AS downloadURL,
-        |    'http://y/' || source || '.' ||
-        |      (['txt','TXT','xlsx','XLS','zip'])[CAST(doc_id % 5 + 1 AS INT)] AS scrapingFileURL
-        |  FROM documents),
-        |m AS (
-        |  SELECT CASE
-        |    WHEN downloadURL IS NOT NULL THEN 'csv_file'
-        |    WHEN lower(list_extract(string_split(scrapingFileURL, '.'), -1)) = 'txt' THEN 'text_file'
-        |    WHEN lower(list_extract(string_split(scrapingFileURL, '.'), -1)) IN ('xls','xlsx') THEN 'excel_file'
-        |    END AS method
-        |  FROM manifest)
-        |SELECT method, count(*) AS n FROM m GROUP BY method ORDER BY method""".stripMargin,
-
-    "q04_semi_join" ->
-      """SELECT c_mktsegment, count(*) AS n_customers
-        |FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q05_anti_join" ->
-      """SELECT n_name, count(*) AS n_customers
-        |FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
-        |  AND o.o_orderpriority = '1-URGENT')
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-
-    "q06_star_revenue" ->
-      """SELECT r_name, n_name,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-
-    "q07_pivot_daily" ->
-      """SELECT CAST(ts AS DATE) AS day,
-        |  round(sum(CASE WHEN event_type = 'click' THEN value END), 2) AS click,
-        |  round(sum(CASE WHEN event_type = 'error' THEN value END), 2) AS error,
-        |  round(sum(CASE WHEN event_type = 'purchase' THEN value END), 2) AS purchase,
-        |  round(sum(CASE WHEN event_type = 'signup' THEN value END), 2) AS signup,
-        |  round(sum(CASE WHEN event_type = 'view' THEN value END), 2) AS view
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q08_distinct" ->
-      """SELECT user_id, count(*) AS n_types FROM (
-        |  SELECT DISTINCT user_id, event_type FROM events)
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q09_union_report" ->
-      """SELECT label, count(*) AS n FROM (
-        |  SELECT o_orderstatus AS label FROM orders
-        |  UNION ALL SELECT l_returnflag FROM lineitem)
-        |GROUP BY label ORDER BY label""".stripMargin,
-
-    "q10_status_sort" ->
-      """SELECT distribution_status, count(*) AS n,
-        |  CASE distribution_status WHEN 'ERROR' THEN 0 WHEN 'WARNING' THEN 1
-        |    WHEN 'OK' THEN 2 ELSE 3 END AS rank
-        |FROM (SELECT CASE WHEN o_orderkey % 10 < 6 THEN 'OK'
-        |        WHEN o_orderkey % 10 < 9 THEN 'WARNING' ELSE 'ERROR' END
-        |        AS distribution_status FROM orders)
-        |GROUP BY distribution_status ORDER BY rank""".stripMargin,
-
-    "q11_first_valid" ->
-      """SELECT c_custkey, c_name, c_mktsegment FROM customer c
-        |WHERE c_acctbal > 0
-        |  AND EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        |ORDER BY c_custkey LIMIT 1""".stripMargin,
-
-    "q12_string_funcs" ->
-      """SELECT p_partkey, replace(p_name, ' ', '') AS name_nospace,
-        |  lower(list_extract(string_split('a/b/' || p_brand || '.' ||
-        |    CAST(p_size AS VARCHAR), '.'), -1)) AS ext,
-        |  list_extract(string_split('http://h/x/' || p_brand || '/' || p_name,
-        |    '/'), -1) AS base
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "q13_cell_coords" ->
-      """WITH c AS (
-        |  SELECT p_partkey,
-        |    (CASE WHEN p_partkey % 3 = 0 THEN chr(CAST(65 + p_partkey % 26 AS INT)) ELSE '' END)
-        |    || chr(CAST(65 + p_partkey % 5 AS INT))
-        |    || CAST(p_partkey % 90 + 1 AS VARCHAR) AS coord
-        |  FROM part),
-        |p AS (
-        |  SELECT p_partkey, coord,
-        |    string_split(upper(regexp_extract(coord, '^([A-Za-z]+)[0-9]+$', 1)), '')
-        |      AS letters
-        |  FROM c)
-        |SELECT p_partkey, coord,
-        |  CAST(nullif(regexp_extract(coord, '^[A-Za-z]+([0-9]+)$', 1), '') AS INT)
-        |    AS row_num,
-        |  CAST(list_sum(list_transform(letters,
-        |    (ch, i) -> (ascii(ch) - 64) * (26 ** (len(letters) - i)))) AS INT)
-        |    AS col_num
-        |FROM p ORDER BY p_partkey""".stripMargin,
-
-    "q14_freq_map" ->
-      """WITH f AS (
-        |  SELECT (['R/P1Y','R/P6M','R/P3M','R/P1M','R/P1D',NULL])
-        |    [CAST(o_orderkey % 6 + 1 AS INT)] AS freq_iso
-        |  FROM orders)
-        |SELECT freq_iso,
-        |  CASE freq_iso WHEN 'R/P1Y' THEN 'Y' WHEN 'R/P6M' THEN 'S'
-        |    WHEN 'R/P3M' THEN 'Q' WHEN 'R/P1M' THEN 'M' WHEN 'R/P1D' THEN 'D'
-        |    END AS freq_code,
-        |  count(*) AS n
-        |FROM f GROUP BY freq_iso, freq_code ORDER BY freq_iso""".stripMargin,
-
-    "q15_missing_norm" ->
-      s"""WITH raw AS (
-         |  SELECT event_type,
-         |    CASE WHEN event_id % 7 = 0
-         |      THEN $missingTokensSqlList[CAST(event_id % 19 + 1 AS INT)]
-         |      ELSE CAST(CAST(value AS DECIMAL(12,2)) AS VARCHAR) END AS raw
-         |  FROM events),
-         |norm AS (
-         |  SELECT event_type,
-         |    CASE WHEN raw IS NULL OR list_contains($missingTokensSqlList, trim(raw))
-         |      THEN NULL ELSE TRY_CAST(trim(raw) AS DOUBLE) END AS v
-         |  FROM raw)
-         |SELECT event_type, count(*) AS n_rows, count(v) AS n_values,
-         |  round(sum(v), 2) AS sum_value
-         |FROM norm GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q16_url_rewrite" ->
-      """WITH p AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 2 = 0
-        |      THEN '/data/output/catalog/' || source || '/file.csv'
-        |      ELSE '/tmp/' || source END AS path
-        |  FROM documents)
-        |SELECT doc_id, path,
-        |  CASE WHEN starts_with(path, '/data/output')
-        |    THEN 'https://h' || substring(path, 13)
-        |    ELSE '' END AS url
-        |FROM p ORDER BY doc_id""".stripMargin,
-
-    "q17_path_assembly" ->
-      """SELECT doc_id,
-        |  concat_ws('/', 'catalog', 'cat1', 'dataset', source, 'distribution',
-        |    source || '.' || CAST(doc_id % 7 AS VARCHAR), 'download',
-        |    coalesce(CASE WHEN doc_id % 3 = 0 THEN 'f' || CAST(doc_id AS VARCHAR) || '.csv' END,
-        |      source || '.' || CAST(doc_id % 7 AS VARCHAR) || '.csv')) AS path
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q18_monotonic" ->
-      """SELECT CAST(user_id AS VARCHAR) AS serie_id,
-        |  count(*) - count(DISTINCT CAST(ts AS DATE)) AS n_violations
-        |FROM events GROUP BY user_id
-        |HAVING count(*) - count(DISTINCT CAST(ts AS DATE)) > 0
-        |ORDER BY user_id""".stripMargin,
-
-    "q19_freq_gaps" ->
-      """WITH months AS (
-        |  SELECT DISTINCT l_returnflag AS serie_id,
-        |    CAST(date_trunc('month', l_shipdate) AS DATE) AS indice_tiempo
-        |  FROM lineitem),
-        |holed AS (
-        |  SELECT * FROM months WHERE month(indice_tiempo) % 5 <> 0),
-        |lagged AS (
-        |  SELECT serie_id, indice_tiempo,
-        |    lag(indice_tiempo) OVER (PARTITION BY serie_id ORDER BY indice_tiempo)
-        |      AS prev_tiempo
-        |  FROM holed)
-        |SELECT serie_id, prev_tiempo, indice_tiempo,
-        |  CAST(date_diff('month', prev_tiempo, indice_tiempo) AS INT)
-        |    AS gap_periods
-        |FROM lagged
-        |WHERE prev_tiempo IS NOT NULL
-        |  AND date_diff('month', prev_tiempo, indice_tiempo) <> 1
-        |ORDER BY serie_id, indice_tiempo""".stripMargin,
-
-    "q20_validation_summary" ->
-      """WITH series AS (
-        |  SELECT event_type AS serie_id, CAST(ts AS DATE) AS indice_tiempo,
-        |    CASE WHEN value >= 10 THEN value END AS valor
-        |  FROM events),
-        |agg AS (
-        |  SELECT serie_id, count(*) AS n_rows, count(valor) AS n_values,
-        |    count(*) - count(DISTINCT indice_tiempo) AS n_not_increasing,
-        |    count(DISTINCT indice_tiempo) AS n_periods,
-        |    min(indice_tiempo) AS first_period, max(indice_tiempo) AS last_period
-        |  FROM series GROUP BY serie_id)
-        |SELECT serie_id, n_rows, n_values, n_not_increasing, n_periods,
-        |  first_period, last_period,
-        |  round(1.0 - n_values / CAST(n_rows AS DOUBLE), 6) AS missing_ratio,
-        |  n_not_increasing = 0 AS is_monotonic,
-        |  n_periods = n_rows AS is_distinct,
-        |  (n_rows > 0 AND n_not_increasing = 0 AND n_periods = n_rows
-        |    AND 1.0 - n_values / CAST(n_rows AS DOUBLE) <= 0.5) AS is_valid
-        |FROM agg ORDER BY serie_id""".stripMargin,
-
-    "q21_complete_calendar" ->
-      """WITH months AS (
-        |  SELECT DISTINCT l_returnflag AS serie_id,
-        |    CAST(date_trunc('month', l_shipdate) AS DATE) AS indice_tiempo
-        |  FROM lineitem),
-        |holed AS (
-        |  SELECT * FROM months WHERE month(indice_tiempo) % 5 <> 0),
-        |bounds AS (
-        |  SELECT serie_id, min(indice_tiempo) AS lo, max(indice_tiempo) AS hi
-        |  FROM holed GROUP BY serie_id),
-        |cal AS (
-        |  SELECT b.serie_id, CAST(gs.d AS DATE) AS indice_tiempo
-        |  FROM bounds b,
-        |    LATERAL (SELECT unnest(generate_series(b.lo::TIMESTAMP,
-        |      b.hi::TIMESTAMP, INTERVAL 1 MONTH)) AS d) gs)
-        |SELECT c.serie_id, c.indice_tiempo,
-        |  h.indice_tiempo IS NOT NULL AS has_value
-        |FROM cal c LEFT JOIN holed h
-        |  ON c.serie_id = h.serie_id AND c.indice_tiempo = h.indice_tiempo
-        |ORDER BY c.serie_id, c.indice_tiempo""".stripMargin,
-
-    "q22_scrape_grid" ->
-      (scrapeLongSql + "\nORDER BY serie_id, indice_tiempo"),
-
-    "q23_scrape_wide" ->
-      s"""WITH long_form AS ($scrapeLongSql)
-         |SELECT indice_tiempo,
-         |  max(CASE WHEN serie_id = 's2' THEN valor END) AS s2,
-         |  max(CASE WHEN serie_id = 's3' THEN valor END) AS s3,
-         |  max(CASE WHEN serie_id = 's4' THEN valor END) AS s4,
-         |  max(CASE WHEN serie_id = 's5' THEN valor END) AS s5,
-         |  max(CASE WHEN serie_id = 's6' THEN valor END) AS s6
-         |FROM long_form GROUP BY indice_tiempo ORDER BY indice_tiempo""".stripMargin,
-
-    "q27_composed_time" ->
-      s"""WITH grid AS (
-         |  SELECT CAST(event_id + 2 AS INT) AS row, 1 AS col,
-         |    CASE WHEN event_id % 5 = 0
-         |         THEN CAST(CAST(event_id // 5 + 2000 AS INT) AS VARCHAR)
-         |         ELSE ['I','II','III','IV'][CAST(event_id % 5 AS INT)]
-         |    END AS value
-         |  FROM events WHERE event_id < 100
-         |  UNION ALL
-         |  SELECT CAST(event_id + 2 AS INT), 2,
-         |    CAST(CAST(value AS DECIMAL(12,2)) AS VARCHAR)
-         |  FROM events WHERE event_id < 100 AND event_id % 5 <> 0
-         |),
-         |tm0 AS (
-         |  SELECT row, value,
-         |    last_value(CASE WHEN regexp_matches(trim(value), '^\\d{4}$$')
-         |        THEN trim(value) END IGNORE NULLS)
-         |      OVER (ORDER BY row ROWS BETWEEN UNBOUNDED PRECEDING
-         |        AND CURRENT ROW) AS yr
-         |  FROM grid WHERE col = 1 AND row >= 2),
-         |tm AS (
-         |  SELECT row, CASE trim(value)
-         |    WHEN 'I' THEN make_date(CAST(yr AS INT), 1, 1)
-         |    WHEN 'II' THEN make_date(CAST(yr AS INT), 4, 1)
-         |    WHEN 'III' THEN make_date(CAST(yr AS INT), 7, 1)
-         |    WHEN 'IV' THEN make_date(CAST(yr AS INT), 10, 1) END
-         |    AS indice_tiempo
-         |  FROM tm0),
-         |vals AS (
-         |  SELECT row, 'v2' AS serie_id,
-         |    TRY_CAST(trim(value) AS DOUBLE) AS valor
-         |  FROM grid WHERE col = 2 AND row >= 2)
-         |SELECT serie_id, indice_tiempo, valor
-         |FROM tm JOIN vals USING (row)
-         |WHERE indice_tiempo IS NOT NULL
-         |ORDER BY indice_tiempo""".stripMargin,
-
-    "q28_composed_two_col" ->
-      s"""WITH grid AS (
-         |  SELECT CAST(event_id + 2 AS INT) AS row, 1 AS col,
-         |    CAST(CAST(event_id // 5 + 2000 AS INT) AS VARCHAR) AS value
-         |  FROM events WHERE event_id < 100 AND event_id % 5 = 0
-         |  UNION ALL
-         |  SELECT CAST(event_id + 2 AS INT), 2,
-         |    ['I','II','III','IV'][CAST(event_id % 5 AS INT)]
-         |  FROM events WHERE event_id < 100 AND event_id % 5 <> 0
-         |  UNION ALL
-         |  SELECT CAST(event_id + 2 AS INT), 3,
-         |    CAST(CAST(value AS DECIMAL(12,2)) AS VARCHAR)
-         |  FROM events WHERE event_id < 100 AND event_id % 5 <> 0
-         |),
-         |rows_ AS (
-         |  SELECT row,
-         |    max(CASE WHEN col = 2 THEN value END) AS v,
-         |    max(CASE WHEN col = 1 THEN value END) AS lv
-         |  FROM grid WHERE row >= 2 AND col IN (1, 2) GROUP BY row),
-         |tm0 AS (
-         |  SELECT row, v,
-         |    last_value(CASE
-         |        WHEN v IS NOT NULL AND regexp_matches(trim(v), '^\\d{4}$$')
-         |          THEN trim(v)
-         |        WHEN lv IS NOT NULL AND regexp_matches(trim(lv), '^\\d{4}$$')
-         |          THEN trim(lv) END IGNORE NULLS)
-         |      OVER (ORDER BY row ROWS BETWEEN UNBOUNDED PRECEDING
-         |        AND CURRENT ROW) AS yr
-         |  FROM rows_),
-         |tm AS (
-         |  SELECT row, CASE trim(v)
-         |    WHEN 'I' THEN make_date(CAST(yr AS INT), 1, 1)
-         |    WHEN 'II' THEN make_date(CAST(yr AS INT), 4, 1)
-         |    WHEN 'III' THEN make_date(CAST(yr AS INT), 7, 1)
-         |    WHEN 'IV' THEN make_date(CAST(yr AS INT), 10, 1) END
-         |    AS indice_tiempo
-         |  FROM tm0),
-         |vals AS (
-         |  SELECT row, 'v3' AS serie_id,
-         |    TRY_CAST(trim(value) AS DOUBLE) AS valor
-         |  FROM grid WHERE col = 3 AND row >= 2)
-         |SELECT serie_id, indice_tiempo, valor
-         |FROM tm JOIN vals USING (row)
-         |WHERE indice_tiempo IS NOT NULL
-         |ORDER BY indice_tiempo""".stripMargin,
-
-    "q29_kmv_distinct" ->
-      s"""WITH h AS (SELECT DISTINCT event_type,
-         |    ${hash32Sql("CAST(user_id AS VARCHAR)")} AS h
-         |  FROM events),
-         |r AS (SELECT event_type, h, row_number() OVER
-         |    (PARTITION BY event_type ORDER BY h) AS rn FROM h),
-         |t AS (SELECT event_type, count(*) AS n_seen, max(h) AS kth_min
-         |  FROM r WHERE rn <= 64 GROUP BY event_type)
-         |SELECT event_type,
-         |  CASE WHEN n_seen < 64 OR kth_min <= 0 THEN CAST(n_seen AS DOUBLE)
-         |       ELSE round((64 - 1) * 4294967296.0 / kth_min, 2)
-         |  END AS approx_distinct,
-         |  CAST(n_seen AS BIGINT) AS n_seen
-         |FROM t ORDER BY event_type""".stripMargin,
-
-    "q24_sessionize" ->
-      """WITH e AS (SELECT user_id, value, epoch_us(ts) AS us FROM events),
-        |lagged AS (SELECT *, lag(us) OVER (PARTITION BY user_id ORDER BY us)
-        |    AS prev_us FROM e),
-        |flagged AS (SELECT *, CASE WHEN prev_us IS NULL
-        |    OR us - prev_us > 1800000000 THEN 1 ELSE 0 END AS new_s
-        |  FROM lagged),
-        |s AS (SELECT *, CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY us
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx FROM flagged)
-        |SELECT user_id, session_idx, count(*) AS n_events,
-        |  round(sum(value), 2) AS sum_value,
-        |  min(us) AS start_us, max(us) AS end_us
-        |FROM s GROUP BY user_id, session_idx
-        |ORDER BY user_id, session_idx""".stripMargin,
-
-    "q25_rollup" ->
-      """SELECT o_orderpriority, o_orderstatus, count(*) AS n,
-        |  round(sum(o_totalprice), 2) AS total_price
-        |FROM orders
-        |GROUP BY ROLLUP (o_orderpriority, o_orderstatus)
-        |ORDER BY o_orderpriority NULLS FIRST, o_orderstatus NULLS FIRST""".stripMargin,
-
-    // the HLL value is engine-specific, so the oracle pins the portable
-    // columns and asserts the ±5% accuracy bound the Spark side computes
-    // from its own estimate (a drifting HLL flips the boolean → hash
-    // mismatch)
-    "q26_approx_distinct" ->
-      """SELECT l_returnflag, count(DISTINCT l_partkey) AS exact_parts,
-        |  count(*) AS n_rows, TRUE AS approx_within_5pct
-        |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-
-    "q30_exact_dedup" ->
-      s"""WITH docs2 AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0),
-         |h AS (SELECT md5($normTextSql) AS digest, doc_id FROM docs2)
-         |SELECT digest, count(*) AS group_size, min(doc_id) AS keeper_id
-         |FROM h GROUP BY digest HAVING count(*) > 1 ORDER BY keeper_id""".stripMargin,
-
-    "q31_minhash_lsh" ->
-      s"""WITH $lshPairsCteSql
-         |SELECT count(*) AS n_pairs,
-         |  CAST(coalesce(sum(id1 + id2), 0) AS BIGINT) AS pair_checksum
-         |FROM pairs""".stripMargin,
-
-    "q32_ngram_jaccard" ->
-      s"""WITH $shinglesCteSql,
-         |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-         |pairs AS (SELECT d1.doc_id AS id1, d2.doc_id AS id2
-         |  FROM documents d1 JOIN documents d2 ON d1.lang = d2.lang
-         |  AND d2.doc_id > d1.doc_id AND d2.doc_id <= d1.doc_id + 3),
-         |inter AS (SELECT p.id1, p.id2, count(*) AS n_inter
-         |  FROM pairs p
-         |  JOIN sh a ON a.doc_id = p.id1
-         |  JOIN sh b ON b.doc_id = p.id2 AND a.shingle = b.shingle
-         |  GROUP BY p.id1, p.id2)
-         |SELECT p.id1, p.id2,
-         |  round(CAST(coalesce(n_inter, 0) AS DOUBLE) /
-         |    (s1.n_sh + s2.n_sh - coalesce(n_inter, 0)), 6) AS jaccard
-         |FROM pairs p
-         |LEFT JOIN inter ON inter.id1 = p.id1 AND inter.id2 = p.id2
-         |JOIN sizes s1 ON s1.doc_id = p.id1
-         |JOIN sizes s2 ON s2.doc_id = p.id2
-         |ORDER BY p.id1, p.id2""".stripMargin,
-
-    "q33_simhash" ->
-      s"""WITH docs_norm AS (SELECT doc_id, $normTextSql AS norm FROM documents),
-         |t AS (SELECT doc_id, unnest(${wsTokensSql("norm")}) AS tok FROM docs_norm),
-         |h AS (SELECT doc_id, ${hash32Sql("tok")} AS h FROM t),
-         |bits AS (SELECT doc_id, b.bit,
-         |    sum(CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END) AS s
-         |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS bit) b
-         |  GROUP BY doc_id, b.bit)
-         |SELECT doc_id,
-         |  CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << bit) ELSE 0 END)
-         |    AS BIGINT) AS simhash
-         |FROM bits GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q34_knn_cosine" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 8),
-         |c AS (SELECT vec_id AS cand_id, embedding AS cv FROM embeddings),
-         |scored AS (
-         |  SELECT query_id, cand_id, round(${cosineSql("qv", "cv")}, 6) AS sim
-         |  FROM c, q WHERE query_id <> cand_id),
-         |ranked AS (SELECT *, row_number() OVER
-         |    (PARTITION BY query_id ORDER BY sim DESC, cand_id) AS "rank"
-         |  FROM scored)
-         |SELECT query_id, cand_id, sim, CAST("rank" AS INT) AS "rank"
-         |FROM ranked WHERE "rank" <= 5
-         |ORDER BY query_id, "rank"""".stripMargin,
-
-    "q35_lsh_ann" -> {
-      val projs = (0 until 8).map(j => s"${planeProjSql(j)} AS p$j")
-        .mkString(",\n  ")
-      val bucket = (0 until 8)
-        .map(j => s"(CASE WHEN p$j > 0 THEN CAST(${1L << j} AS BIGINT) ELSE 0 END)")
-        .mkString(" + ")
-      s"""WITH sig AS (SELECT vec_id,
-         |  $projs
-         |  FROM embeddings),
-         |b AS (SELECT vec_id, $bucket AS bucket FROM sig),
-         |q AS (SELECT e.vec_id AS query_id, e.embedding AS qv, b.bucket
-         |  FROM embeddings e JOIN b ON e.vec_id = b.vec_id WHERE e.vec_id < 8),
-         |c AS (SELECT e.vec_id AS cand_id, e.embedding AS cv, b.bucket
-         |  FROM embeddings e JOIN b ON e.vec_id = b.vec_id),
-         |scored AS (
-         |  SELECT query_id, cand_id, round(${cosineSql("qv", "cv")}, 6) AS sim
-         |  FROM c JOIN q USING (bucket) WHERE query_id <> cand_id),
-         |ranked AS (SELECT *, row_number() OVER
-         |    (PARTITION BY query_id ORDER BY sim DESC, cand_id) AS "rank"
-         |  FROM scored)
-         |SELECT query_id, cand_id, sim, CAST("rank" AS INT) AS "rank"
-         |FROM ranked WHERE "rank" <= 5
-         |ORDER BY query_id, "rank"""".stripMargin
-    },
-
-    "q36_langid" -> {
-      val langs = TextAnalysis.StopwordsByLang.sortBy(_._1)
-      val scoreCols = TextAnalysis.StopwordsByLang.map { case (l, words) =>
-        s"len(list_filter(toks, w -> list_contains(${sqlStringList(words)}, w))) AS score_$l"
-      }.mkString(",\n  ")
-      val mx = langs.map(l => s"score_${l._1}").mkString("greatest(", ", ", ")")
-      val guess = langs.map { case (l, _) =>
-        s"WHEN score_$l = $mx THEN '$l'"
-      }.mkString("\n    ")
-      s"""WITH t AS (SELECT doc_id, lang AS lang_true,
-         |    ${wsTokensSql("lower(text)")} AS toks FROM documents),
-         |sc AS (SELECT doc_id, lang_true,
-         |  $scoreCols
-         |  FROM t)
-         |SELECT doc_id, lang_true, score_en, score_es, score_fr, score_de, score_zh,
-         |  CASE WHEN $mx = 0 THEN 'und'
-         |    $guess
-         |  END AS lang_guess
-         |FROM sc ORDER BY doc_id""".stripMargin
-    },
-
-    "q37_quality" ->
-      s"WITH $qualityCtesSql\nSELECT * FROM qsc ORDER BY doc_id",
-
-    // thresholds are quantile_cont over 6-dp scores, rounded to 6 dp on
-    // BOTH sides before the >= comparison (same interpolation formula
-    // as Spark's percentile, see q51)
-    "q68_quality_gate" ->
-      s"""WITH $qualityCtesSql,
-         |j AS (SELECT d.lang, q.quality_score
-         |  FROM qsc q JOIN documents d USING (doc_id)),
-         |th AS (SELECT lang,
-         |    round(quantile_cont(quality_score, 0.75), 6) AS threshold
-         |  FROM j GROUP BY lang)
-         |SELECT j.lang, th.threshold, count(*) AS n_docs,
-         |  CAST(sum(CASE WHEN j.quality_score >= th.threshold
-         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-         |  round(sum(CASE WHEN j.quality_score >= th.threshold
-         |    THEN 1 ELSE 0 END) / CAST(count(*) AS DOUBLE), 6) AS kept_ratio
-         |FROM j JOIN th USING (lang)
-         |GROUP BY j.lang, th.threshold
-         |ORDER BY j.lang""".stripMargin,
-
-    "q38_token_counts" ->
-      s"""SELECT doc_id,
-         |  len(${wsTokensSql("text")}) AS ws_tokens,
-         |  len(regexp_extract_all(text, '${GF.BpeTokenRegex}')) AS bpe_tokens
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q39_fingerprint" ->
-      s"""WITH docs_norm AS (SELECT doc_id, $normTextSql AS norm FROM documents),
-         |t AS (SELECT doc_id,
-         |    unnest(${wsTokensSql("norm")}) AS tok,
-         |    unnest(generate_series(1, len(${wsTokensSql("norm")}))) AS pos1
-         |  FROM docs_norm),
-         |sh AS (SELECT doc_id, pos1,
-         |    count(*) OVER (PARTITION BY doc_id) AS n_toks,
-         |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
-         |      || ' ' || lead(tok, 3) OVER w AS shingle
-         |  FROM t WINDOW w AS (PARTITION BY doc_id ORDER BY pos1)),
-         |h AS (SELECT doc_id, pos1, n_toks, ${hash32Sql("shingle")} AS h
-         |  FROM sh WHERE pos1 - 1 <= n_toks - 4),
-         |win AS (SELECT doc_id, pos1, n_toks, min(h) OVER
-         |    (PARTITION BY doc_id ORDER BY pos1
-         |     ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fingerprint
-         |  FROM h),
-         |fps AS (SELECT DISTINCT doc_id, fingerprint FROM win
-         |  WHERE pos1 - 1 <= n_toks - 7),
-         |cnt AS (SELECT doc_id, count(*) AS n_winnow FROM fps GROUP BY doc_id)
-         |SELECT d.doc_id,
-         |  CAST(('0x' || substr(md5(md5(d.norm)), 1, 8)) AS BIGINT) AS doc_fp,
-         |  coalesce(cnt.n_winnow, 0) AS n_winnow
-         |FROM docs_norm d LEFT JOIN cnt ON d.doc_id = cnt.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // blk carries adaptiveLshBlocks' depth in the key (bits << 24);
-    // at sf0.01 the whole corpus (500 vectors) is under the 512 cap so
-    // refinement never fires and depth is the constant 8 — the oracle
-    // replays the fixed 8-bit bucket plus that constant (the q65/q196
-    // under-cap oracle pattern; precondition asserted in OperatorsSpec)
-    "q40_embedding_near_dup" -> {
-      val projs = (0 until 8).map(j => s"${planeProjSql(j)} AS p$j")
-        .mkString(",\n  ")
-      val bucket = (0 until 8)
-        .map(j => s"(CASE WHEN p$j > 0 THEN CAST(${1L << j} AS BIGINT) ELSE 0 END)")
-        .mkString(" + ") + s" + CAST(${8L << 24} AS BIGINT)"
-      s"""WITH sig AS (SELECT vec_id, $projs FROM embeddings),
-         |b AS (SELECT vec_id, $bucket AS blk FROM sig),
-         |l AS (SELECT b.blk, e.vec_id AS id1, e.embedding AS v1
-         |  FROM embeddings e JOIN b ON e.vec_id = b.vec_id),
-         |r AS (SELECT b.blk, e.vec_id AS id2, e.embedding AS v2
-         |  FROM embeddings e JOIN b ON e.vec_id = b.vec_id),
-         |p AS (SELECT blk, id1, id2, round(${cosineSql("v1", "v2")}, 6) AS sim
-         |  FROM l JOIN r USING (blk) WHERE id1 < id2)
-         |SELECT blk, id1, id2, sim FROM p WHERE sim >= 0.2
-         |ORDER BY blk, id1, id2""".stripMargin
-    },
-
-    "q42_ivf_ann" ->
-      s"""WITH dims AS (
-         |  SELECT label AS cell, unnest(embedding)::DOUBLE AS x,
-         |         unnest(generate_series(1, len(embedding))) AS d
-         |  FROM embeddings),
-         |cd AS (SELECT cell, d, round(avg(x), 4) AS c
-         |  FROM dims GROUP BY cell, d),
-         |cent AS (SELECT cell, list(c ORDER BY d) AS centroid
-         |  FROM cd GROUP BY cell),
-         |assign AS (
-         |  SELECT e.vec_id, e.embedding, c.cell,
-         |    round(${cosineSql("e.embedding", "c.centroid")}, 6) AS csim
-         |  FROM embeddings e CROSS JOIN cent c),
-         |best AS (SELECT *, row_number() OVER
-         |    (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rn
-         |  FROM assign),
-         |asg AS (SELECT vec_id, embedding, cell FROM best WHERE rn = 1),
-         |q AS (SELECT vec_id AS query_id, embedding AS qv, cell
-         |  FROM asg WHERE vec_id < 8),
-         |c AS (SELECT vec_id AS cand_id, embedding AS cv, cell FROM asg),
-         |scored AS (
-         |  SELECT query_id, cand_id, round(${cosineSql("qv", "cv")}, 6) AS sim
-         |  FROM c JOIN q USING (cell) WHERE query_id <> cand_id),
-         |ranked AS (SELECT *, row_number() OVER
-         |    (PARTITION BY query_id ORDER BY sim DESC, cand_id) AS "rank"
-         |  FROM scored)
-         |SELECT query_id, cand_id, sim, CAST("rank" AS INT) AS "rank"
-         |FROM ranked WHERE "rank" <= 5
-         |ORDER BY query_id, "rank"""".stripMargin,
-
-    // same k/iters constants as qKmeansCells — the SQL is generated,
-    // so the two sides cannot drift
-    "q54_kmeans_cells" -> kmeansOracleSql(k = 4, iters = 2),
-
-    // same m/k/iters/dims constants as qPqAdc
-    "q55_pq_adc" ->
-      pqOracleSql(m = 4, k = 8, iters = 1, dims = 64, topK = 5, maxQ = 4),
-
-    // the q42 replay with the query side widened to its best TWO cells
-    // (rn <= 2) — the from-index nProbe=2 probe of qIvfIndex; candidate
-    // assignment (the posting-list layout) stays top-1
-    "q58_ivf_index" ->
-      s"""WITH dims AS (
-         |  SELECT label AS cell, unnest(embedding)::DOUBLE AS x,
-         |         unnest(generate_series(1, len(embedding))) AS d
-         |  FROM embeddings),
-         |cd AS (SELECT cell, d, round(avg(x), 4) AS c
-         |  FROM dims GROUP BY cell, d),
-         |cent AS (SELECT cell, list(c ORDER BY d) AS centroid
-         |  FROM cd GROUP BY cell),
-         |assign AS (
-         |  SELECT e.vec_id, e.embedding, c.cell,
-         |    round(${cosineSql("e.embedding", "c.centroid")}, 6) AS csim
-         |  FROM embeddings e CROSS JOIN cent c),
-         |best AS (SELECT *, row_number() OVER
-         |    (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rn
-         |  FROM assign),
-         |asg AS (SELECT vec_id, embedding, cell FROM best WHERE rn = 1),
-         |q AS (SELECT vec_id AS query_id, embedding AS qv, cell
-         |  FROM best WHERE rn <= 2 AND vec_id < 8),
-         |c AS (SELECT vec_id AS cand_id, embedding AS cv, cell FROM asg),
-         |scored AS (
-         |  SELECT query_id, cand_id, round(${cosineSql("qv", "cv")}, 6) AS sim
-         |  FROM c JOIN q USING (cell) WHERE query_id <> cand_id),
-         |ranked AS (SELECT *, row_number() OVER
-         |    (PARTITION BY query_id ORDER BY sim DESC, cand_id) AS "rank"
-         |  FROM scored)
-         |SELECT query_id, cand_id, sim, CAST("rank" AS INT) AS "rank"
-         |FROM ranked WHERE "rank" <= 5
-         |ORDER BY query_id, "rank"""".stripMargin,
-
-    // the q58 replay with frozen-geometry maintenance: centroids come
-    // from the EVEN half only (the build set), but assignment covers
-    // ALL vectors (build set + upserted odds) — a probe after upsert
-    // must equal this rebuild-from-union exactly
-    "q104_ivf_upsert" ->
-      s"""WITH dims AS (
-         |  SELECT label AS cell, unnest(embedding)::DOUBLE AS x,
-         |         unnest(generate_series(1, len(embedding))) AS d
-         |  FROM embeddings WHERE vec_id % 2 = 0),
-         |cd AS (SELECT cell, d, round(avg(x), 4) AS c
-         |  FROM dims GROUP BY cell, d),
-         |cent AS (SELECT cell, list(c ORDER BY d) AS centroid
-         |  FROM cd GROUP BY cell),
-         |assign AS (
-         |  SELECT e.vec_id, e.embedding, c.cell,
-         |    round(${cosineSql("e.embedding", "c.centroid")}, 6) AS csim
-         |  FROM embeddings e CROSS JOIN cent c),
-         |best AS (SELECT *, row_number() OVER
-         |    (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rn
-         |  FROM assign),
-         |asg AS (SELECT vec_id, embedding, cell FROM best WHERE rn = 1),
-         |q AS (SELECT vec_id AS query_id, embedding AS qv, cell
-         |  FROM best WHERE rn <= 2 AND vec_id < 8),
-         |c AS (SELECT vec_id AS cand_id, embedding AS cv, cell FROM asg),
-         |scored AS (
-         |  SELECT query_id, cand_id, round(${cosineSql("qv", "cv")}, 6) AS sim
-         |  FROM c JOIN q USING (cell) WHERE query_id <> cand_id),
-         |ranked AS (SELECT *, row_number() OVER
-         |    (PARTITION BY query_id ORDER BY sim DESC, cand_id) AS "rank"
-         |  FROM scored)
-         |SELECT query_id, cand_id, sim, CAST("rank" AS INT) AS "rank"
-         |FROM ranked WHERE "rank" <= 5
-         |ORDER BY query_id, "rank"""".stripMargin,
-
-    // the q55 replay gated by the coarse posting-list layout — the
-    // pqSearchFromIndex probe of qPqIndex
-    "q59_pq_index" ->
-      pqOracleSql(m = 4, k = 8, iters = 1, dims = 64, topK = 5, maxQ = 4,
-        coarse = true),
-
-    // integer bit arithmetic for the 2^k boundary on BOTH sides (never
-    // floating log2); DuckDB sums of INTs are HUGEINT, hence the casts
-    "q67_length_buckets" ->
-      s"""WITH toks AS (SELECT doc_id, lang,
-         |    greatest(len(${wsTokensSql("text")}), 1) AS n
-         |  FROM documents),
-         |b AS (SELECT lang, n, CASE WHEN n = 1 THEN CAST(1 AS BIGINT)
-         |    ELSE (CAST(1 AS BIGINT) << length(bin(n - 1))) END
-         |      AS bucket_cap
-         |  FROM toks)
-         |SELECT lang, bucket_cap, count(*) AS n_docs,
-         |  CAST(sum(n) AS BIGINT) AS sum_tokens,
-         |  CAST(count(*) * bucket_cap - sum(n) AS BIGINT) AS padding,
-         |  round(CAST(count(*) * bucket_cap - sum(n) AS DOUBLE) /
-         |    (count(*) * bucket_cap), 6) AS waste_ratio
-         |FROM b GROUP BY lang, bucket_cap
-         |ORDER BY lang, bucket_cap""".stripMargin,
-
-    // the q40 near-dup pair chain closed into semantic clusters by the
-    // same recursive transitive closure the q44 oracle uses
-    "q65_semantic_dedup" -> {
-      val projs = (0 until 8).map(j => s"${planeProjSql(j)} AS p$j")
-        .mkString(",\n  ")
-      val bucket = (0 until 8)
-        .map(j => s"(CASE WHEN p$j > 0 THEN CAST(${1L << j} AS BIGINT) ELSE 0 END)")
-        .mkString(" + ")
-      s"""WITH RECURSIVE sig AS (SELECT vec_id, $projs FROM embeddings),
-         |b AS (SELECT vec_id, $bucket AS blk FROM sig),
-         |l AS (SELECT b.blk, e.vec_id AS id1, e.embedding AS v1
-         |  FROM embeddings e JOIN b ON e.vec_id = b.vec_id),
-         |r AS (SELECT b.blk, e.vec_id AS id2, e.embedding AS v2
-         |  FROM embeddings e JOIN b ON e.vec_id = b.vec_id),
-         |p AS (SELECT blk, id1, id2, round(${cosineSql("v1", "v2")}, 6) AS sim
-         |  FROM l JOIN r USING (blk) WHERE id1 < id2),
-         |np AS (SELECT id1, id2 FROM p WHERE sim >= 0.2),
-         |edges AS (SELECT id1 AS a, id2 AS b FROM np
-         |  UNION SELECT id2 AS a, id1 AS b FROM np),
-         |closure(a, b) AS (
-         |  SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-         |  UNION
-         |  SELECT c.a, e.b FROM closure c JOIN edges e ON c.b = e.a),
-         |labels AS (SELECT a AS id, min(b) AS cluster
-         |  FROM closure GROUP BY a)
-         |SELECT id AS vec_id, cluster, id = cluster AS keeper
-         |FROM labels ORDER BY vec_id""".stripMargin
-    },
-
-    "q66_pct_change" ->
-      """WITH monthly AS (SELECT l_returnflag AS serie_id,
-        |    CAST(date_trunc('month', l_shipdate) AS DATE) AS indice_tiempo,
-        |    round(sum(l_quantity), 2) AS valor
-        |  FROM lineitem GROUP BY 1, 2),
-        |lagged AS (SELECT *, lag(valor) OVER (PARTITION BY serie_id
-        |    ORDER BY indice_tiempo) AS prev_valor FROM monthly)
-        |SELECT serie_id, indice_tiempo, valor, prev_valor,
-        |  round((valor - prev_valor) / NULLIF(prev_valor, 0), 6)
-        |    AS pct_change
-        |FROM lagged ORDER BY serie_id, indice_tiempo""".stripMargin,
-
-    // DuckDB's NATIVE ASOF JOIN — an independent implementation of the
-    // as-of semantics checking the Spark union+window shape
-    "q61_asof_join" ->
-      """WITH l AS (SELECT user_id, epoch_us(ts) AS us, event_id,
-        |    round(value, 2) AS value FROM events),
-        |r AS (SELECT user_id, us, max(value) AS mark FROM l
-        |  WHERE event_id % 7 = 0 GROUP BY user_id, us)
-        |SELECT l.user_id, l.us, l.event_id, l.value, r.mark AS asof_mark
-        |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.us >= r.us
-        |ORDER BY l.user_id, l.us, l.event_id""".stripMargin,
-
-    "q62_resample" ->
-      """WITH monthly AS (SELECT l_returnflag AS serie_id,
-        |    CAST(date_trunc('month', l_shipdate) AS DATE) AS indice_tiempo,
-        |    round(sum(l_quantity), 2) AS valor
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT serie_id,
-        |  CAST(date_trunc('quarter', indice_tiempo) AS DATE) AS period,
-        |  round(avg(valor), 4) AS valor, count(*) AS n_points
-        |FROM monthly GROUP BY 1, 2
-        |ORDER BY serie_id, period""".stripMargin,
-
-    "q63_ffill" ->
-      """WITH s AS (SELECT CAST(user_id AS VARCHAR) AS serie_id,
-        |    epoch_us(ts) AS indice_tiempo, event_id,
-        |    CASE WHEN event_id % 3 = 0 THEN NULL
-        |         ELSE round(value, 2) END AS valor
-        |  FROM events)
-        |SELECT serie_id, indice_tiempo, event_id, valor,
-        |  last_value(valor IGNORE NULLS) OVER (PARTITION BY serie_id
-        |    ORDER BY indice_tiempo, event_id ROWS UNBOUNDED PRECEDING)
-        |    AS valor_filled
-        |FROM s
-        |ORDER BY CAST(serie_id AS BIGINT), indice_tiempo, event_id""".stripMargin,
-
-    // the rolling mean folds EXACT integer cents, so DuckDB's
-    // segment-tree sliding-window summation and Spark's running fold
-    // agree bit-for-bit
-    "q64_rolling" ->
-      """WITH s AS (SELECT CAST(user_id AS VARCHAR) AS serie_id,
-        |    epoch_us(ts) AS indice_tiempo, event_id,
-        |    round(value, 2) AS valor FROM events),
-        |c AS (SELECT *, CAST(round(valor * 100) AS BIGINT) AS cents FROM s),
-        |w AS (SELECT serie_id, indice_tiempo, event_id, valor,
-        |    count(cents) OVER win AS n_window,
-        |    sum(cents) OVER win AS sum_cents,
-        |    min(valor) OVER win AS roll_min,
-        |    max(valor) OVER win AS roll_max
-        |  FROM c WINDOW win AS (PARTITION BY serie_id
-        |    ORDER BY indice_tiempo, event_id
-        |    ROWS BETWEEN 4 PRECEDING AND CURRENT ROW))
-        |SELECT serie_id, indice_tiempo, event_id, valor, n_window,
-        |  round(sum_cents / (n_window * 100.0), 4) AS roll_avg,
-        |  roll_min, roll_max
-        |FROM w
-        |ORDER BY CAST(serie_id AS BIGINT), indice_tiempo, event_id""".stripMargin,
-
-    "q69_source_cap" ->
-      """WITH r AS (SELECT doc_id, source, n_chars,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY n_chars DESC, doc_id) AS grp_rank
-        |  FROM documents)
-        |SELECT doc_id, source, n_chars, CAST(grp_rank AS INT) AS grp_rank
-        |FROM r WHERE grp_rank <= 15
-        |ORDER BY source, grp_rank""".stripMargin,
-
-    // shares CTE generated from the SAME Scala constants qMixture uses;
-    // CAST to DOUBLE because DuckDB parses bare 0.2 as DECIMAL
-    "q70_mixture" ->
-      s"""WITH shares AS (SELECT * FROM (VALUES ${
-            MixtureShares.map { case (l, sh) =>
-              s"('$l', CAST($sh AS DOUBLE))" }.mkString(", ")
-          }) AS t(lang, share)),
-         |cnt AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
-         |j AS (SELECT s.lang, share, n FROM shares s JOIN cnt USING (lang)),
-         |sc AS (SELECT min(CAST(n AS DOUBLE) / share) AS scale FROM j),
-         |rates AS (SELECT lang,
-         |    CAST(floor(least(share * scale / n, 1.0) * 10000) AS BIGINT)
-         |      AS rate_bp
-         |  FROM j, sc),
-         |d AS (SELECT lang, doc_id,
-         |    ${hash32Sql("CAST(doc_id AS VARCHAR)")} % 10000 AS bucket
-         |  FROM documents)
-         |SELECT d.lang, r.rate_bp, count(*) AS n_docs,
-         |  CAST(sum(CASE WHEN bucket < rate_bp THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_kept
-         |FROM d JOIN rates r USING (lang)
-         |GROUP BY d.lang, r.rate_bp
-         |ORDER BY d.lang""".stripMargin,
-
-    // per-doc fold order pinned by list(... ORDER BY pos) so the FP sum
-    // matches Spark's sequential aggregate over the position-sorted array
-    "q71_unigram_lm" ->
-      s"""WITH docs_norm AS (SELECT doc_id, $normTextSql AS norm
-         |  FROM documents),
-         |arrs AS (SELECT doc_id, ${wsTokensSql("norm")} AS arr
-         |  FROM docs_norm),
-         |toks AS (SELECT doc_id, unnest(arr) AS tok,
-         |    unnest(generate_series(1, len(arr))) AS pos FROM arrs),
-         |lm AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok),
-         |tot AS (SELECT CAST(sum(cnt) AS DOUBLE) AS total FROM lm),
-         |perdoc AS (SELECT doc_id, count(*) AS n,
-         |    list_aggregate(list(ln(CAST(cnt AS DOUBLE)) ORDER BY pos),
-         |      'sum') AS s
-         |  FROM toks JOIN lm USING (tok) GROUP BY doc_id)
-         |SELECT doc_id, CAST(n AS INT) AS n_tokens,
-         |  round((s - CAST(n AS DOUBLE) * ln(total)) / CAST(n AS DOUBLE), 6)
-         |    AS logprob
-         |FROM perdoc, tot ORDER BY doc_id""".stripMargin,
-
-    "q72_interpolate" ->
-      """WITH s AS (SELECT CAST(user_id AS VARCHAR) AS serie_id,
-        |    epoch_us(ts) AS indice_tiempo, event_id,
-        |    CASE WHEN event_id % 3 = 0 THEN NULL
-        |         ELSE round(value, 2) END AS valor
-        |  FROM events),
-        |w AS (SELECT serie_id, indice_tiempo, event_id, valor,
-        |    last_value(valor IGNORE NULLS) OVER back AS prev_v,
-        |    last_value(CASE WHEN valor IS NOT NULL THEN indice_tiempo END
-        |      IGNORE NULLS) OVER back AS prev_t,
-        |    first_value(valor IGNORE NULLS) OVER fwd AS next_v,
-        |    first_value(CASE WHEN valor IS NOT NULL THEN indice_tiempo END
-        |      IGNORE NULLS) OVER fwd AS next_t
-        |  FROM s WINDOW
-        |    back AS (PARTITION BY serie_id ORDER BY indice_tiempo, event_id
-        |      ROWS UNBOUNDED PRECEDING),
-        |    fwd AS (PARTITION BY serie_id ORDER BY indice_tiempo, event_id
-        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        |SELECT serie_id, indice_tiempo, event_id, valor,
-        |  CASE WHEN valor IS NOT NULL THEN valor
-        |       ELSE round(prev_v + (next_v - prev_v) *
-        |         (CAST(indice_tiempo - prev_t AS DOUBLE) /
-        |          CAST(next_t - prev_t AS DOUBLE)), 6) END AS valor_interp
-        |FROM w
-        |ORDER BY CAST(serie_id AS BIGINT), indice_tiempo, event_id""".stripMargin,
-
-    // trend/seasonal/residual all reduce to fixed double expressions
-    // over exact integer cents (13·cents − Σcents is the scaled
-    // detrended value), so the decomposition hash-matches
-    "q76_seasonal" ->
-      """WITH monthly AS (SELECT l_returnflag AS serie_id,
-        |    CAST(date_trunc('month', l_shipdate) AS DATE) AS indice_tiempo,
-        |    round(sum(l_quantity), 2) AS valor
-        |  FROM lineitem GROUP BY 1, 2),
-        |c AS (SELECT *, CAST(round(valor * 100) AS BIGINT) AS cents
-        |  FROM monthly),
-        |w AS (SELECT *, count(cents) OVER win AS n_c,
-        |    sum(cents) OVER win AS s_c
-        |  FROM c WINDOW win AS (PARTITION BY serie_id
-        |    ORDER BY indice_tiempo
-        |    ROWS BETWEEN 6 PRECEDING AND 6 FOLLOWING)),
-        |d AS (SELECT *,
-        |    CASE WHEN n_c = 13 THEN 13 * cents - s_c END AS detr,
-        |    month(indice_tiempo) AS moy FROM w),
-        |seas AS (SELECT serie_id, moy, sum(detr) AS sum_d,
-        |    count(*) AS n_d
-        |  FROM d WHERE detr IS NOT NULL GROUP BY 1, 2)
-        |SELECT d.serie_id, d.indice_tiempo, d.valor,
-        |  CASE WHEN n_c = 13
-        |       THEN round(CAST(s_c AS DOUBLE) / 1300.0, 6) END AS trend,
-        |  round(CAST(sum_d AS DOUBLE) / (1300.0 * n_d), 6) AS seasonal,
-        |  CASE WHEN n_c = 13
-        |       THEN round(cents / 100.0 - CAST(s_c AS DOUBLE) / 1300.0 -
-        |         CAST(sum_d AS DOUBLE) / (1300.0 * n_d), 6) END AS residual
-        |FROM d LEFT JOIN seas
-        |  ON d.serie_id = seas.serie_id AND d.moy = seas.moy
-        |ORDER BY d.serie_id, d.indice_tiempo""".stripMargin,
-
-    "q77_funnel" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us
-        |  FROM events),
-        |s1 AS (SELECT user_id, min(us) AS t FROM e
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(us) AS t, min(s1.t) AS t_prev
-        |  FROM e JOIN s1 ON e.user_id = s1.user_id AND e.us > s1.t
-        |  WHERE event_type = 'click' GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(us) AS t, min(s2.t) AS t_prev
-        |  FROM e JOIN s2 ON e.user_id = s2.user_id AND e.us > s2.t
-        |  WHERE event_type = 'purchase' GROUP BY 1)
-        |SELECT 1 AS step, 'view' AS event_type, count(*) AS n_users,
-        |  CAST(NULL AS DOUBLE) AS avg_lag_sec FROM s1
-        |UNION ALL
-        |SELECT 2, 'click', count(*),
-        |  round(CAST(sum(t - t_prev) AS DOUBLE) /
-        |    (count(*) * 1000000.0), 6) FROM s2
-        |UNION ALL
-        |SELECT 3, 'purchase', count(*),
-        |  round(CAST(sum(t - t_prev) AS DOUBLE) /
-        |    (count(*) * 1000000.0), 6) FROM s3
-        |ORDER BY step""".stripMargin,
-
-    "q88_funnel_timing" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us
-        |  FROM events),
-        |s1 AS (SELECT user_id, min(us) AS t FROM e
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(us) AS t, min(s1.t) AS t_prev
-        |  FROM e JOIN s1 ON e.user_id = s1.user_id AND e.us > s1.t
-        |  WHERE event_type = 'click' GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(us) AS t, min(s2.t) AS t_prev
-        |  FROM e JOIN s2 ON e.user_id = s2.user_id AND e.us > s2.t
-        |  WHERE event_type = 'purchase' GROUP BY 1)
-        |SELECT 2 AS step, 'click' AS event_type, count(*) AS n_users,
-        |  round(quantile_cont(t - t_prev, 0.5) / 1000000.0, 6)
-        |    AS p50_lag_sec,
-        |  round(quantile_cont(t - t_prev, 0.9) / 1000000.0, 6)
-        |    AS p90_lag_sec,
-        |  round(CAST(max(t - t_prev) AS DOUBLE) / 1000000.0, 6)
-        |    AS max_lag_sec
-        |FROM s2
-        |UNION ALL
-        |SELECT 3, 'purchase', count(*),
-        |  round(quantile_cont(t - t_prev, 0.5) / 1000000.0, 6),
-        |  round(quantile_cont(t - t_prev, 0.9) / 1000000.0, 6),
-        |  round(CAST(max(t - t_prev) AS DOUBLE) / 1000000.0, 6)
-        |FROM s3
-        |ORDER BY step""".stripMargin,
-
-    "q78_retention" ->
-      """WITH e AS (SELECT user_id,
-        |    epoch_us(ts) // 604800000000 AS week FROM events),
-        |c AS (SELECT user_id, min(week) AS cohort_week FROM e GROUP BY 1)
-        |SELECT cohort_week, week - cohort_week AS week_offset,
-        |  count(DISTINCT e.user_id) AS n_users
-        |FROM e JOIN c USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q79_snapshot_diff" ->
-      """WITH base AS (SELECT o_orderkey, o_orderstatus,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
-        |    o_orderdate FROM orders),
-        |old AS (SELECT o_orderkey, o_orderstatus, price_cents FROM base
-        |  WHERE o_orderdate < DATE '1995-07-01'),
-        |new AS (SELECT o_orderkey, o_orderstatus,
-        |    CASE WHEN o_orderkey % 7 = 0 THEN price_cents + 1000
-        |         ELSE price_cents END AS price_cents
-        |  FROM base WHERE o_orderdate >= DATE '1993-07-01')
-        |SELECT coalesce(o.o_orderkey, n.o_orderkey) AS o_orderkey,
-        |  o.o_orderstatus AS old_o_orderstatus,
-        |  o.price_cents AS old_price_cents,
-        |  n.o_orderstatus AS new_o_orderstatus,
-        |  n.price_cents AS new_price_cents,
-        |  CASE WHEN o.o_orderkey IS NULL THEN 'added'
-        |       WHEN n.o_orderkey IS NULL THEN 'removed'
-        |       WHEN o.o_orderstatus IS NOT DISTINCT FROM n.o_orderstatus
-        |        AND o.price_cents IS NOT DISTINCT FROM n.price_cents
-        |         THEN 'unchanged'
-        |       ELSE 'changed' END AS status
-        |FROM old o FULL OUTER JOIN new n ON o.o_orderkey = n.o_orderkey
-        |ORDER BY 1""".stripMargin,
-
-    "q80_top_tokens" ->
-      s"""WITH docs_norm AS (SELECT lang, $normTextSql AS norm
-         |  FROM documents),
-         |toks AS (SELECT lang AS stratum, unnest(${wsTokensSql("norm")})
-         |    AS tok FROM docs_norm),
-         |counts AS (SELECT stratum, tok, count(*) AS n FROM toks
-         |  GROUP BY 1, 2),
-         |ranked AS (SELECT stratum, tok, n, row_number() OVER (
-         |    PARTITION BY stratum ORDER BY n DESC, tok) AS rank
-         |  FROM counts)
-         |SELECT stratum, tok, n, CAST(rank AS INT) AS rank FROM ranked
-         |WHERE rank <= 10 ORDER BY stratum, rank""".stripMargin,
-
-    "q81_incremental_dedup" ->
-      s"""WITH $lshBucketsCteSql,
-         |hits AS (SELECT b.doc_id, count(DISTINCT c.corpus_id) AS n_hits
-         |  FROM (SELECT doc_id, band, bucket FROM buckets
-         |        WHERE doc_id % 2 = 1) b
-         |  JOIN (SELECT doc_id AS corpus_id, band, bucket FROM buckets
-         |        WHERE doc_id % 2 = 0) c
-         |  ON b.band = c.band AND b.bucket = c.bucket
-         |  GROUP BY 1),
-         |batchdocs AS (SELECT DISTINCT doc_id FROM documents
-         |  WHERE doc_id % 2 = 1)
-         |SELECT d.doc_id, coalesce(h.n_hits, 0) AS n_hits,
-         |  coalesce(h.n_hits, 0) > 0 AS is_dup,
-         |  false AS hits_capped
-         |FROM batchdocs d LEFT JOIN hits h USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
-
-    "q82_winsorize" ->
-      """WITH th AS (SELECT lang,
-        |    round(quantile_cont(n_chars::DOUBLE, 0.05), 6) AS lo,
-        |    round(quantile_cont(n_chars::DOUBLE, 0.95), 6) AS hi
-        |  FROM documents GROUP BY lang)
-        |SELECT d.lang, count(*) AS n_docs, max(th.lo) AS lo,
-        |  max(th.hi) AS hi,
-        |  CAST(sum(CASE WHEN d.n_chars::DOUBLE < th.lo THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_clip_lo,
-        |  CAST(sum(CASE WHEN d.n_chars::DOUBLE > th.hi THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_clip_hi
-        |FROM documents d JOIN th USING (lang)
-        |GROUP BY d.lang ORDER BY d.lang""".stripMargin,
-
-    "q84_psi_drift" ->
-      """WITH ref AS (SELECT lang, n_chars::DOUBLE AS v FROM documents
-        |  WHERE doc_id % 2 = 0),
-        |cur AS (SELECT lang, n_chars::DOUBLE AS v FROM documents
-        |  WHERE doc_id % 2 = 1),
-        |edges AS (SELECT lang, min(v) AS lo, max(v) AS hi FROM ref
-        |  GROUP BY lang),
-        |rb AS (SELECT r.lang,
-        |    CASE WHEN e.hi = e.lo THEN 0
-        |         ELSE least(greatest(
-        |           floor((r.v - e.lo) / ((e.hi - e.lo) / 10)), 0), 9)
-        |    END AS bin, count(*) AS n_ref
-        |  FROM ref r JOIN edges e USING (lang) GROUP BY 1, 2),
-        |cb AS (SELECT c.lang,
-        |    CASE WHEN e.hi = e.lo THEN 0
-        |         ELSE least(greatest(
-        |           floor((c.v - e.lo) / ((e.hi - e.lo) / 10)), 0), 9)
-        |    END AS bin, count(*) AS n_cur
-        |  FROM cur c JOIN edges e USING (lang) GROUP BY 1, 2),
-        |j AS (SELECT coalesce(rb.lang, cb.lang) AS lang,
-        |    coalesce(rb.bin, cb.bin) AS bin,
-        |    coalesce(n_ref, 0) AS n_ref, coalesce(n_cur, 0) AS n_cur
-        |  FROM rb FULL OUTER JOIN cb
-        |  ON rb.lang = cb.lang AND rb.bin = cb.bin),
-        |tot AS (SELECT lang, sum(n_ref) AS t_ref, sum(n_cur) AS t_cur
-        |  FROM j GROUP BY 1),
-        |p AS (SELECT j.lang,
-        |    greatest(n_ref / t_ref, 1e-6) AS p_ref,
-        |    greatest(n_cur / t_cur, 1e-6) AS p_cur
-        |  FROM j JOIN tot USING (lang)),
-        |psi AS (SELECT lang,
-        |    round(sum((p_cur - p_ref) * ln(p_cur / p_ref)), 6) AS psi,
-        |    count(*) AS n_bins_present
-        |  FROM p GROUP BY lang),
-        |curonly AS (SELECT DISTINCT c.lang FROM cur c
-        |  WHERE NOT EXISTS (SELECT 1 FROM edges e WHERE e.lang = c.lang))
-        |SELECT * FROM (SELECT * FROM psi UNION ALL
-        |  SELECT lang, CAST(NULL AS DOUBLE) AS psi,
-        |    CAST(0 AS BIGINT) AS n_bins_present FROM curonly)
-        |ORDER BY lang""".stripMargin,
-
-    "q85_source_overlap" ->
-      s"""WITH sd AS (SELECT DISTINCT source, md5($normTextSql) AS digest
-         |  FROM documents),
-         |sizes AS (SELECT source, count(*) AS n FROM sd GROUP BY 1),
-         |shared AS (SELECT a.source AS source1, b.source AS source2,
-         |    count(*) AS n_shared
-         |  FROM sd a JOIN sd b ON a.digest = b.digest
-         |    AND a.source < b.source
-         |  GROUP BY 1, 2)
-         |SELECT m1.source AS source1, m2.source AS source2,
-         |  CAST(coalesce(sh.n_shared, 0) AS BIGINT) AS n_shared,
-         |  m1.n AS n1, m2.n AS n2,
-         |  round(CAST(coalesce(sh.n_shared, 0) AS DOUBLE) /
-         |    least(m1.n, m2.n), 6) AS overlap
-         |FROM sizes m1 JOIN sizes m2 ON m1.source < m2.source
-         |LEFT JOIN shared sh
-         |  ON sh.source1 = m1.source AND sh.source2 = m2.source
-         |ORDER BY source1, source2""".stripMargin,
-
-    "q86_ngram_novelty" ->
-      s"""WITH ${shinglesCteFor("c", "doc_id % 2 = 1")},
-         |${shinglesCteFor("r", "doc_id % 2 = 0")},
-         |cdist AS (SELECT DISTINCT doc_id, shingle FROM csh),
-         |vocab AS (SELECT DISTINCT shingle FROM rsh)
-         |SELECT c.doc_id, count(*) AS n_shingles,
-         |  CAST(sum(CASE WHEN v.shingle IS NULL THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_novel,
-         |  round(CAST(sum(CASE WHEN v.shingle IS NULL THEN 1 ELSE 0 END)
-         |    AS DOUBLE) / count(*), 6) AS novelty
-         |FROM cdist c LEFT JOIN vocab v ON c.shingle = v.shingle
-         |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin,
-
-    "q87_weighted_sample" ->
-      s"""WITH p AS (SELECT lang, doc_id, n_chars,
-         |    round(ln((${hash32Sql("doc_id::VARCHAR")} + 0.5)
-         |        / 4294967296.0) / CAST(n_chars AS DOUBLE), 9) AS priority
-         |  FROM documents WHERE n_chars > 0),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY lang
-         |    ORDER BY priority DESC, doc_id) AS rank FROM p)
-         |SELECT lang, doc_id, n_chars, priority, CAST(rank AS INT) AS rank
-         |FROM r WHERE rank <= 5 ORDER BY lang, rank""".stripMargin,
-
-    "q93_changepoint" ->
-      """WITH e AS (SELECT event_type,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-        |d AS (SELECT event_type, day AS x, sum(cents) AS y FROM e
-        |  GROUP BY 1, 2),
-        |t AS (SELECT event_type, count(*) AS n, sum(y) AS sy FROM d
-        |  GROUP BY 1),
-        |s AS (SELECT d.event_type, x, t.n,
-        |    row_number() OVER (PARTITION BY d.event_type ORDER BY x) AS k,
-        |    sum(y) OVER (PARTITION BY d.event_type ORDER BY x
-        |      ROWS UNBOUNDED PRECEDING) AS cum, t.sy
-        |  FROM d JOIN t USING (event_type)),
-        |a AS (SELECT event_type, n, x,
-        |    abs(n * cum - k * sy) AS s_abs,
-        |    row_number() OVER (PARTITION BY event_type
-        |      ORDER BY abs(n * cum - k * sy) DESC, x) AS rnk
-        |  FROM s)
-        |SELECT event_type, n, x AS cp_x, CAST(s_abs AS BIGINT) AS s_abs,
-        |  round(s_abs::DOUBLE / (n * 100.0), 6) AS shift
-        |FROM a WHERE rnk = 1 ORDER BY event_type""".stripMargin,
-
-    "q97_ann_recall" -> {
-      val projs = (0 until 8).map(j => s"${planeProjSql(j)} AS p$j")
-        .mkString(",\n  ")
-      val bucket = (0 until 8)
-        .map(j => s"(CASE WHEN p$j > 0 THEN CAST(${1L << j} AS BIGINT) ELSE 0 END)")
-        .mkString(" + ")
-      s"""WITH xq AS (SELECT vec_id AS query_id, embedding AS qv
-         |  FROM embeddings WHERE vec_id < 8),
-         |xc AS (SELECT vec_id AS cand_id, embedding AS cv FROM embeddings),
-         |xs AS (SELECT query_id, cand_id,
-         |    round(${cosineSql("qv", "cv")}, 6) AS sim
-         |  FROM xc, xq WHERE query_id <> cand_id),
-         |ex AS (SELECT query_id, cand_id FROM (SELECT *, row_number()
-         |    OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id)
-         |    AS rnk FROM xs) WHERE rnk <= 5),
-         |sig AS (SELECT vec_id,
-         |  $projs
-         |  FROM embeddings),
-         |b AS (SELECT vec_id, $bucket AS bucket FROM sig),
-         |aq AS (SELECT e.vec_id AS query_id, e.embedding AS qv, b.bucket
-         |  FROM embeddings e JOIN b ON e.vec_id = b.vec_id
-         |  WHERE e.vec_id < 8),
-         |ac AS (SELECT e.vec_id AS cand_id, e.embedding AS cv, b.bucket
-         |  FROM embeddings e JOIN b ON e.vec_id = b.vec_id),
-         |as_ AS (SELECT query_id, cand_id,
-         |    round(${cosineSql("qv", "cv")}, 6) AS sim
-         |  FROM ac JOIN aq USING (bucket) WHERE query_id <> cand_id),
-         |ap AS (SELECT query_id, cand_id FROM (SELECT *, row_number()
-         |    OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id)
-         |    AS rnk FROM as_) WHERE rnk <= 5),
-         |hits AS (SELECT a.query_id, count(*) AS n_hits
-         |  FROM ap a JOIN ex e
-         |  ON a.query_id = e.query_id AND a.cand_id = e.cand_id
-         |  GROUP BY 1),
-         |qs AS (SELECT DISTINCT query_id FROM ex)
-         |SELECT qs.query_id,
-         |  CAST(coalesce(n_hits, 0) AS BIGINT) AS n_hits,
-         |  round(coalesce(n_hits, 0)::DOUBLE / 5, 6) AS recall
-         |FROM qs LEFT JOIN hits USING (query_id)
-         |ORDER BY query_id""".stripMargin
-    },
-
-    "q99_histogram" ->
-      """WITH e AS (SELECT lang, min(n_chars::DOUBLE) AS lo,
-        |    max(n_chars::DOUBLE) AS hi FROM documents GROUP BY 1),
-        |h AS (SELECT d.lang,
-        |    CASE WHEN e.hi = e.lo THEN 0
-        |      ELSE least(greatest(floor((d.n_chars::DOUBLE - e.lo) /
-        |        ((e.hi - e.lo) / 10)), 0), 9) END AS bin,
-        |    count(*) AS n
-        |  FROM documents d JOIN e USING (lang) GROUP BY 1, 2)
-        |SELECT h.lang, CAST(h.bin AS BIGINT) AS bin,
-        |  round(e.lo + h.bin * ((e.hi - e.lo) / 10), 6) AS lo_edge,
-        |  round(e.lo + (h.bin + 1) * ((e.hi - e.lo) / 10), 6) AS hi_edge,
-        |  n
-        |FROM h JOIN e USING (lang) ORDER BY lang, bin""".stripMargin,
-
-    "q100_mix_kl" -> {
-      val caseQ = MixTargets.toSeq.sortBy(_._1)
-        .map { case (s, q) => s"WHEN source = '$s' THEN $q" }
-        .mkString("\n    ")
-      s"""WITH c AS (SELECT lang, source, count(*) AS n_src
-         |  FROM documents GROUP BY 1, 2),
-         |w AS (SELECT lang, n_src,
-         |    CASE $caseQ ELSE 1e-6 END AS q
-         |  FROM c)
-         |SELECT lang, CAST(sum(n_src) AS BIGINT) AS n_rows,
-         |  round((sum(n_src * ln(n_src)) - sum(n_src * ln(q)))
-         |    / sum(n_src) - ln(sum(n_src)), 6) AS kl_nats
-         |FROM w GROUP BY lang ORDER BY lang""".stripMargin
-    },
-
-    "q95_concentration" ->
-      """WITH c AS (SELECT lang, source, count(*) AS n_src
-        |  FROM documents GROUP BY 1, 2)
-        |SELECT lang, count(*) AS n_sources,
-        |  CAST(sum(n_src) AS BIGINT) AS n_rows,
-        |  round(max(n_src)::DOUBLE / sum(n_src), 6) AS top_share,
-        |  round(sum(n_src * n_src)::DOUBLE /
-        |    (sum(n_src) * sum(n_src)), 6) AS hhi
-        |FROM c GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "q96_dup_inflation" ->
-      s"""WITH d AS (SELECT source, md5($normTextSql) AS digest
-         |  FROM documents)
-         |SELECT source, count(*) AS n_docs,
-         |  count(DISTINCT digest) AS n_distinct,
-         |  round(count(*)::DOUBLE / count(DISTINCT digest), 6)
-         |    AS inflation
-         |FROM d GROUP BY source ORDER BY source""".stripMargin,
-
-    "q94_percent_rank" ->
-      """SELECT doc_id, lang, n_chars,
-        |  round(percent_rank() OVER (PARTITION BY lang
-        |    ORDER BY n_chars::DOUBLE), 6) AS pct_rank
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q92_trend" ->
-      """WITH e AS (SELECT event_type,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-        |d AS (SELECT event_type, day, sum(cents) AS y FROM e
-        |  GROUP BY 1, 2),
-        |m AS (SELECT event_type, min(day) AS x0 FROM d GROUP BY 1),
-        |p AS (SELECT d.event_type, d.day - m.x0 AS x, y
-        |  FROM d JOIN m USING (event_type)),
-        |s AS (SELECT event_type, count(*) AS n, sum(x) AS sx,
-        |    sum(y) AS sy, sum(x * y) AS sxy, sum(x * x) AS sxx
-        |  FROM p GROUP BY 1)
-        |SELECT event_type, n,
-        |  CASE WHEN n * sxx - sx * sx = 0 THEN NULL
-        |    ELSE round((n * sxy - sx * sy)::DOUBLE /
-        |      (n * sxx - sx * sx), 6) END AS slope,
-        |  CASE WHEN n * sxx - sx * sx = 0 THEN NULL
-        |    ELSE round((sy * sxx - sx * sxy)::DOUBLE /
-        |      (n * sxx - sx * sx), 6) END AS intercept
-        |FROM s ORDER BY event_type""".stripMargin,
-
-    "q90_pmi" ->
-      s"""WITH dn AS (SELECT $normTextSql AS norm FROM documents),
-         |tk AS (SELECT ${wsTokensSql("norm")} AS arr FROM dn),
-         |uni AS (SELECT unnest(arr) AS tok FROM tk),
-         |uc AS (SELECT tok, count(*) AS c_tok FROM uni GROUP BY 1),
-         |nu AS (SELECT sum(c_tok) AS n_uni FROM uc),
-         |bg AS (SELECT unnest(CASE WHEN len(arr) >= 2
-         |    THEN list_transform(generate_series(1, len(arr) - 1),
-         |         i -> arr[i] || ' ' || arr[i+1])
-         |    ELSE CAST([] AS VARCHAR[]) END) AS bigram FROM tk),
-         |bc AS (SELECT bigram, count(*) AS c_ab FROM bg GROUP BY 1),
-         |nb AS (SELECT sum(c_ab) AS n_bi FROM bc),
-         |cand AS (SELECT bigram, c_ab,
-         |    string_split(bigram, ' ')[1] AS w1,
-         |    string_split(bigram, ' ')[2] AS w2
-         |  FROM bc WHERE c_ab >= 5)
-         |SELECT c.bigram, c.c_ab, a.c_tok AS c_a, b.c_tok AS c_b,
-         |  round(ln((c.c_ab::DOUBLE / n_bi) /
-         |    ((a.c_tok::DOUBLE / n_uni) * (b.c_tok::DOUBLE / n_uni))), 6)
-         |    AS pmi
-         |FROM cand c
-         |CROSS JOIN nu CROSS JOIN nb
-         |JOIN uc a ON c.w1 = a.tok
-         |JOIN uc b ON c.w2 = b.tok
-         |ORDER BY pmi DESC, bigram LIMIT 50""".stripMargin,
-
-    "q91_profile_diff" -> {
-      def sideSql(sfx: String, parity: Int): String =
-        ProfileCols.map { case (c, isNum) =>
-          val mean = if (isNum) s"round(avg($c), 4)" else "CAST(NULL AS DOUBLE)"
-          s"""SELECT '$c' AS "column",
-             |  round((count(*) - count($c))::DOUBLE / count(*), 6)
-             |    AS null_rate_$sfx,
-             |  count(DISTINCT $c) AS n_distinct_$sfx,
-             |  $mean AS mean_$sfx
-             |FROM lineitem WHERE l_orderkey % 2 = $parity""".stripMargin
-        }.mkString("(", "\nUNION ALL\n", ")")
-      s"""WITH r AS ${sideSql("ref", 0)},
-         |c AS ${sideSql("cur", 1)}
-         |SELECT r."column", null_rate_ref, null_rate_cur,
-         |  n_distinct_ref, n_distinct_cur, mean_ref, mean_cur,
-         |  (null_rate_cur - null_rate_ref > 0.05) AS null_spike,
-         |  (n_distinct_cur < 0.5 * n_distinct_ref) AS distinct_drop,
-         |  CASE WHEN mean_ref IS NULL OR mean_cur IS NULL THEN false
-         |    ELSE abs(mean_cur - mean_ref) > 0.1 * abs(mean_ref)
-         |  END AS mean_shift
-         |FROM r JOIN c USING ("column")
-         |ORDER BY r."column"""".stripMargin
-    },
-
-    "q89_dim_stats" ->
-      """WITH x AS (SELECT unnest(embedding) AS v,
-        |    unnest(generate_series(0, len(embedding) - 1)) AS dim
-        |  FROM embeddings)
-        |SELECT CAST(dim AS INT) AS dim, count(*) AS n,
-        |  round(avg(v::DOUBLE), 6) AS mean,
-        |  round(stddev(v::DOUBLE), 6) AS std,
-        |  min(v::DOUBLE) AS min_v, max(v::DOUBLE) AS max_v
-        |FROM x GROUP BY dim ORDER BY dim""".stripMargin,
-
-    "q83_char_entropy" ->
-      """WITH ch AS (SELECT doc_id, unnest(string_split(text, '')) AS c
-        |  FROM documents),
-        |cnt AS (SELECT doc_id, c, count(*) AS k FROM ch GROUP BY 1, 2),
-        |ent AS (SELECT doc_id, CAST(sum(k) AS DOUBLE) AS n,
-        |    sum(k * ln(k)) AS s FROM cnt GROUP BY 1)
-        |SELECT d.doc_id,
-        |  round(coalesce(ln(e.n) - e.s / e.n, 0.0), 6) AS entropy,
-        |  d.n_chars
-        |FROM documents d LEFT JOIN ent e USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // the anomaly verdict multiplies the z-test through by n² so it
-    // compares exact integers; only the reported zscore touches FP
-    "q73_rolling_anomaly" ->
-      """WITH s AS (SELECT CAST(user_id AS VARCHAR) AS serie_id,
-        |    epoch_us(ts) AS indice_tiempo, event_id,
-        |    round(value, 2) AS valor FROM events),
-        |c AS (SELECT *, CAST(round(valor * 100) AS BIGINT) AS cents FROM s),
-        |w AS (SELECT serie_id, indice_tiempo, event_id, valor, cents,
-        |    count(cents) OVER win AS n_w,
-        |    sum(cents) OVER win AS s_w,
-        |    sum(cents * cents) OVER win AS sq_w
-        |  FROM c WINDOW win AS (PARTITION BY serie_id
-        |    ORDER BY indice_tiempo, event_id
-        |    ROWS BETWEEN 8 PRECEDING AND 1 PRECEDING)),
-        |d AS (SELECT *, n_w * cents - s_w AS dev,
-        |    n_w * sq_w - s_w * s_w AS varn FROM w)
-        |SELECT serie_id, indice_tiempo, event_id, valor, n_w,
-        |  (n_w >= 4 AND dev * dev > 4 * varn) AS anomaly,
-        |  CASE WHEN n_w >= 4 AND varn > 0
-        |       THEN round(CAST(dev AS DOUBLE) / sqrt(CAST(varn AS DOUBLE)), 6)
-        |  END AS zscore
-        |FROM d
-        |ORDER BY CAST(serie_id AS BIGINT), indice_tiempo, event_id""".stripMargin,
-
-    "q74_edit_distance" ->
-      s"""WITH norm AS (SELECT doc_id, lang, $normTextSql AS norm
-         |  FROM documents),
-         |pairs AS (SELECT d1.doc_id AS id1, d2.doc_id AS id2,
-         |    d1.norm AS t1, d2.norm AS t2
-         |  FROM norm d1 JOIN norm d2 ON d1.lang = d2.lang
-         |  AND d2.doc_id > d1.doc_id AND d2.doc_id <= d1.doc_id + 3)
-         |SELECT id1, id2,
-         |  CAST(len(t1) AS INT) AS len1, CAST(len(t2) AS INT) AS len2,
-         |  CAST(levenshtein(t1, t2) AS INT) AS edit_dist,
-         |  round(CAST(levenshtein(t1, t2) AS DOUBLE) /
-         |    greatest(len(t1), len(t2)), 6) AS dist_ratio,
-         |  round(CAST(levenshtein(t1, t2) AS DOUBLE) /
-         |    greatest(len(t1), len(t2)), 6) <= 0.3 AS near_dup
-         |FROM pairs ORDER BY id1, id2""".stripMargin,
-
-    "q75_containment" ->
-      s"""WITH $shinglesCteSql,
-         |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-         |pairs AS (SELECT d1.doc_id AS id1, d2.doc_id AS id2
-         |  FROM documents d1 JOIN documents d2 ON d1.lang = d2.lang
-         |  AND d2.doc_id > d1.doc_id AND d2.doc_id <= d1.doc_id + 3),
-         |inter AS (SELECT p.id1, p.id2, count(*) AS n_inter
-         |  FROM pairs p
-         |  JOIN sh a ON a.doc_id = p.id1
-         |  JOIN sh b ON b.doc_id = p.id2 AND a.shingle = b.shingle
-         |  GROUP BY p.id1, p.id2)
-         |SELECT p.id1, p.id2,
-         |  CAST(coalesce(n_inter, 0) AS BIGINT) AS n_inter,
-         |  s1.n_sh AS n1, s2.n_sh AS n2,
-         |  round(CAST(coalesce(n_inter, 0) AS DOUBLE) /
-         |    least(s1.n_sh, s2.n_sh), 6) AS containment
-         |FROM pairs p
-         |LEFT JOIN inter ON inter.id1 = p.id1 AND inter.id2 = p.id2
-         |JOIN sizes s1 ON s1.doc_id = p.id1
-         |JOIN sizes s2 ON s2.doc_id = p.id2
-         |ORDER BY p.id1, p.id2""".stripMargin,
-
-    // closed-form replay of the BMP fixtures qBmpDecode encodes and
-    // decodes: dims/pixel values are functions of doc_id, file size
-    // includes the 4-byte row stride the encoder writes
-    "q60_bmp_decode" ->
-      """WITH base AS (SELECT doc_id, doc_id % 16 + 1 AS w,
-        |    doc_id % 8 + 1 AS h FROM documents),
-        |xs AS (SELECT doc_id, w, h,
-        |    unnest(generate_series(0, w - 1)) AS x FROM base),
-        |px AS (SELECT doc_id, x,
-        |    unnest(generate_series(0, h - 1)) AS y FROM xs),
-        |m AS (SELECT doc_id,
-        |    round(avg(CAST((doc_id + 7*x + 13*y) % 256 AS DOUBLE)), 4)
-        |      AS mean_r,
-        |    round(avg(CAST((doc_id + 7*x + 13*y + 31) % 256 AS DOUBLE)), 4)
-        |      AS mean_g,
-        |    round(avg(CAST((doc_id + 7*x + 13*y + 62) % 256 AS DOUBLE)), 4)
-        |      AS mean_b
-        |  FROM px GROUP BY doc_id)
-        |SELECT b.doc_id, CAST(b.w AS BIGINT) AS width,
-        |  CAST(b.h AS BIGINT) AS height, CAST(3 AS BIGINT) AS channels,
-        |  CAST(54 + b.h * ((3 * b.w + 3) // 4 * 4) AS BIGINT)
-        |    AS payload_len,
-        |  m.mean_r, m.mean_g, m.mean_b
-        |FROM base b JOIN m USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
-
-    // same closed forms as q60, minus payload_len (PNG byte length is
-    // encoder-dependent, not closed-form) — lossless decode must hit
-    // the per-channel means exactly
-    "q101_png_decode" ->
-      """WITH base AS (SELECT doc_id, doc_id % 16 + 1 AS w,
-        |    doc_id % 8 + 1 AS h FROM documents),
-        |xs AS (SELECT doc_id, w, h,
-        |    unnest(generate_series(0, w - 1)) AS x FROM base),
-        |px AS (SELECT doc_id, x,
-        |    unnest(generate_series(0, h - 1)) AS y FROM xs),
-        |m AS (SELECT doc_id,
-        |    round(avg(CAST((doc_id + 7*x + 13*y) % 256 AS DOUBLE)), 4)
-        |      AS mean_r,
-        |    round(avg(CAST((doc_id + 7*x + 13*y + 31) % 256 AS DOUBLE)), 4)
-        |      AS mean_g,
-        |    round(avg(CAST((doc_id + 7*x + 13*y + 62) % 256 AS DOUBLE)), 4)
-        |      AS mean_b
-        |  FROM px GROUP BY doc_id)
-        |SELECT b.doc_id, CAST(b.w AS BIGINT) AS width,
-        |  CAST(b.h AS BIGINT) AS height, CAST(3 AS BIGINT) AS channels,
-        |  m.mean_r, m.mean_g, m.mean_b
-        |FROM base b JOIN m USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
-
-    // JPEG is lossy: the contract is header metadata (format, dims,
-    // bands), all closed-form
-    "q102_jpeg_meta" ->
-      """SELECT doc_id, 'jpeg' AS format,
-        |  CAST(doc_id % 16 + 1 AS BIGINT) AS width,
-        |  CAST(doc_id % 8 + 1 AS BIGINT) AS height,
-        |  CAST(3 AS BIGINT) AS channels
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // rate/channels/frames/duration and exact-integer sample sums from
-    // the fixture generator's closed forms — PCM16 is exact, so no
-    // tolerance anywhere except the final 4-dp rms rounding
-    "q105_wav_decode" ->
-      """WITH base AS (SELECT doc_id,
-        |    8000 + (doc_id % 4) * 4000 AS rate,
-        |    doc_id % 2 + 1 AS nch,
-        |    doc_id % 50 + 10 AS frames FROM documents),
-        |fr AS (SELECT doc_id, rate, nch, frames,
-        |    unnest(generate_series(0, frames - 1)) AS i FROM base),
-        |sm AS (SELECT doc_id, i, rate, nch, frames,
-        |    unnest(generate_series(0, nch - 1)) AS ch FROM fr),
-        |v AS (SELECT doc_id,
-        |    ((doc_id * 31 + i * 7 + ch * 13) % 2001) - 1000 AS s
-        |  FROM sm),
-        |agg AS (SELECT doc_id, CAST(sum(s) AS BIGINT) AS sum_samples,
-        |    CAST(sum(s * s) AS BIGINT) AS sum_sq
-        |  FROM v GROUP BY doc_id)
-        |SELECT b.doc_id, CAST(b.rate AS BIGINT) AS sample_rate,
-        |  CAST(b.nch AS BIGINT) AS n_channels,
-        |  CAST(b.frames AS BIGINT) AS n_frames,
-        |  CAST((b.frames * 1000) // b.rate AS BIGINT) AS duration_ms,
-        |  a.sum_samples, a.sum_sq,
-        |  round(sqrt(CAST(a.sum_sq AS DOUBLE) / (b.frames * b.nch)), 4)
-        |    AS rms
-        |FROM base b JOIN agg a USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
-
-    // full replay of the BPE training loop: one generated (pair-count,
-    // argmax, merge-apply) CTE triple per round, TextAnalysis.BpeMerges
-    // rounds. replace() substitutes left-to-right non-overlapping in
-    // both engines, which is exactly greedy BPE merge semantics.
-    "q103_bpe_tokens" -> {
-      val iters = (1 to TextAnalysis.BpeMerges).map { i =>
-        val prev = s"w${i - 1}"
-        s"""s$i AS (SELECT seg, freq,
-           |    unnest(generate_series(1,
-           |      len(string_split(seg, ' ')) - 1)) AS i
-           |  FROM $prev),
-           |p$i AS (SELECT string_split(seg, ' ')[i] || ' ' ||
-           |    string_split(seg, ' ')[i + 1] AS pair, sum(freq) AS c
-           |  FROM s$i GROUP BY 1),
-           |m$i AS (SELECT pair FROM p$i ORDER BY c DESC, pair LIMIT 1),
-           |w$i AS (SELECT w.word, w.freq,
-           |    replace(w.seg, m.pair, replace(m.pair, '> <', '')) AS seg
-           |  FROM $prev w, m$i m)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH docw AS (SELECT doc_id,
-         |    unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS word
-         |  FROM documents),
-         |w0 AS (SELECT word, CAST(count(*) AS BIGINT) AS freq,
-         |    array_to_string(list_transform(regexp_extract_all(word, '.'),
-         |      x -> '<' || x || '>'), ' ') AS seg
-         |  FROM docw GROUP BY word),
-         |$iters
-         |SELECT d.doc_id, CAST(count(*) AS BIGINT) AS n_words,
-         |  CAST(sum(len(string_split(w.seg, ' '))) AS BIGINT)
-         |    AS n_bpe_tokens
-         |FROM docw d JOIN w${TextAnalysis.BpeMerges} w USING (word)
-         |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin
-    },
-
-    // Constants are written in e-notation so DuckDB parses them as
-    // DOUBLE (bare decimals parse as DECIMAL, whose exact arithmetic
-    // diverges from the JVM's IEEE-754 path before the 6-dp round).
-    "q106_bm25" ->
-      s"""WITH docs_norm AS (SELECT doc_id, $normTextSql AS norm FROM documents),
-         |toks AS (SELECT doc_id, unnest(${wsTokensSql("norm")}) AS tok
-         |  FROM docs_norm),
-         |dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-         |corpus AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(sum(dl) AS BIGINT) AS sum_dl FROM dl),
-         |q AS (SELECT doc_id, tok FROM toks
-         |  WHERE tok IN ('spark', 'window', 'join')),
-         |dfq AS (SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-         |  FROM q GROUP BY tok),
-         |tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-         |  FROM q GROUP BY doc_id, tok),
-         |sc AS (SELECT t.doc_id, t.tok,
-         |    ln(1.0e0 + (c.n_docs - d.df + 5e-1) / (d.df + 5e-1)) *
-         |    (t.tf * (1.2e0 + 1.0e0) / (t.tf + 1.2e0 * ((1.0e0 - 7.5e-1)
-         |      + 7.5e-1 * CAST(l.dl AS DOUBLE) * c.n_docs / c.sum_dl)))
-         |      AS s
-         |  FROM tf t JOIN dfq d USING (tok) JOIN dl l USING (doc_id),
-         |    corpus c)
-         |SELECT doc_id,
-         |  round(list_aggregate(list(s ORDER BY tok), 'sum'), 6) AS bm25,
-         |  CAST(count(*) AS INT) AS n_terms_hit
-         |FROM sc GROUP BY doc_id
-         |ORDER BY bm25 DESC, doc_id LIMIT 10""".stripMargin,
-
-    "q107_bigram_lm" ->
-      s"""WITH docs_norm AS (SELECT doc_id, $normTextSql AS norm FROM documents),
-         |arrs AS (SELECT doc_id, ${wsTokensSql("norm")} AS arr
-         |  FROM docs_norm),
-         |toks AS (SELECT doc_id, unnest(arr) AS tok,
-         |    unnest(generate_series(1, len(arr))) AS pos FROM arrs),
-         |bi AS (SELECT * FROM (SELECT doc_id, pos, tok,
-         |    lag(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
-         |  FROM toks) WHERE prev IS NOT NULL),
-         |c1 AS (SELECT tok, CAST(count(*) AS BIGINT) AS c1
-         |  FROM toks GROUP BY tok),
-         |tot AS (SELECT CAST(sum(c1) AS BIGINT) AS total FROM c1),
-         |c2 AS (SELECT prev, tok, CAST(count(*) AS BIGINT) AS c2
-         |  FROM bi GROUP BY prev, tok),
-         |lp AS (SELECT b.doc_id, b.pos,
-         |    ln(7e-1 * c2.c2 / p.c1 + (1.0e0 - 7e-1) * c1.c1 / t.total)
-         |      AS lp
-         |  FROM bi b
-         |  JOIN c2 ON c2.prev = b.prev AND c2.tok = b.tok
-         |  JOIN c1 p ON p.tok = b.prev
-         |  JOIN c1 ON c1.tok = b.tok, tot t),
-         |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         |    round(list_aggregate(list(lp ORDER BY pos), 'sum')
-         |      / count(*), 6) AS logprob
-         |  FROM lp GROUP BY doc_id)
-         |SELECT d.doc_id, coalesce(a.n_bigrams, 0) AS n_bigrams, a.logprob
-         |FROM (SELECT DISTINCT doc_id FROM documents) d
-         |LEFT JOIN agg a USING (doc_id) ORDER BY d.doc_id""".stripMargin,
-
-    "q108_boilerplate" ->
-      s"""WITH docs_norm AS (SELECT doc_id, $normTextSql AS norm FROM documents),
-         |arrs AS (SELECT doc_id, ${wsTokensSql("norm")} AS arr
-         |  FROM docs_norm),
-         |st AS (SELECT doc_id,
-         |    unnest(generate_series(1, greatest(len(arr) - 2, 0))) AS i,
-         |    arr FROM arrs),
-         |sh AS (SELECT doc_id, i,
-         |    arr[i] || ' ' || arr[i+1] || ' ' || arr[i+2] AS shingle
-         |  FROM st),
-         |bo AS (SELECT shingle FROM sh GROUP BY shingle
-         |  HAVING count(DISTINCT doc_id) >= 3),
-         |cov AS (SELECT DISTINCT s.doc_id, s.i + o.o AS p
-         |  FROM sh s JOIN bo USING (shingle)
-         |  CROSS JOIN (SELECT unnest(generate_series(0, 2)) AS o) o),
-         |nb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_boiler
-         |  FROM cov GROUP BY doc_id)
-         |SELECT a.doc_id, CAST(len(a.arr) AS BIGINT) AS n_tokens,
-         |  coalesce(nb.n_boiler, 0) AS n_boiler,
-         |  round(coalesce(nb.n_boiler, 0) / CAST(len(a.arr) AS BIGINT), 6)
-         |    AS boiler_ratio
-         |FROM arrs a LEFT JOIN nb USING (doc_id)
-         |ORDER BY a.doc_id""".stripMargin,
-
-    "q109_sq8_knn" ->
-      s"""WITH $sq8CtesSql,
-         |scored AS (SELECT query_id, cand_id,
-         |    round(${cosineSql("qv", "cv")}, 6) AS sim
-         |  FROM c, q WHERE query_id <> cand_id),
-         |ranked AS (SELECT *, row_number() OVER
-         |    (PARTITION BY query_id ORDER BY sim DESC, cand_id) AS "rank"
-         |  FROM scored)
-         |SELECT query_id, cand_id, sim, CAST("rank" AS INT) AS "rank"
-         |FROM ranked WHERE "rank" <= 5
-         |ORDER BY query_id, "rank"""".stripMargin,
-
-    // LSH candidates ∩ window vs exact-Jaccard truth (>= 1e-2) on the
-    // same window domain; counts + guarded ratio rounds
-    "q126_lsh_recall" ->
-      s"""WITH $lshPairsCteSql,
-         |wprs AS (SELECT d1.doc_id AS id1, d2.doc_id AS id2
-         |  FROM documents d1 JOIN documents d2 ON d1.lang = d2.lang
-         |  AND d2.doc_id > d1.doc_id AND d2.doc_id <= d1.doc_id + 10),
-         |candw AS (SELECT p.id1, p.id2 FROM pairs p
-         |  JOIN wprs w ON w.id1 = p.id1 AND w.id2 = p.id2),
-         |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-         |inter AS (SELECT p.id1, p.id2, count(*) AS n_inter
-         |  FROM wprs p
-         |  JOIN sh a ON a.doc_id = p.id1
-         |  JOIN sh b ON b.doc_id = p.id2 AND a.shingle = b.shingle
-         |  GROUP BY p.id1, p.id2),
-         |truth AS (SELECT p.id1, p.id2
-         |  FROM wprs p
-         |  LEFT JOIN inter ON inter.id1 = p.id1 AND inter.id2 = p.id2
-         |  JOIN sizes s1 ON s1.doc_id = p.id1
-         |  JOIN sizes s2 ON s2.doc_id = p.id2
-         |  WHERE round(CAST(coalesce(n_inter, 0) AS DOUBLE) /
-         |    (s1.n_sh + s2.n_sh - coalesce(n_inter, 0)), 6) >= 1e-2),
-         |hit AS (SELECT CAST(count(*) AS BIGINT) AS n_hit
-         |  FROM truth t JOIN candw c ON c.id1 = t.id1 AND c.id2 = t.id2)
-         |SELECT
-         |  (SELECT CAST(count(*) AS BIGINT) FROM candw) AS n_candidates,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_true,
-         |  (SELECT n_hit FROM hit) AS n_hit,
-         |  round((SELECT n_hit FROM hit) / nullif(
-         |    CAST((SELECT count(*) FROM truth) AS DOUBLE), 0.0e0), 6)
-         |    AS recall,
-         |  round((SELECT n_hit FROM hit) / nullif(
-         |    CAST((SELECT count(*) FROM candw) AS DOUBLE), 0.0e0), 6)
-         |    AS "precision"""".stripMargin,
-
-    // q106's BM25 chain ranked 1..10 + the cosine top-10 of query
-    // vector 0, fused by sum of 1/(60 + rank) in (ranker, rank) order
-    "q125_rrf_fusion" ->
-      s"""WITH docs_norm AS (SELECT doc_id, $normTextSql AS norm FROM documents),
-         |toks AS (SELECT doc_id, unnest(${wsTokensSql("norm")}) AS tok
-         |  FROM docs_norm),
-         |dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-         |corpus AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(sum(dl) AS BIGINT) AS sum_dl FROM dl),
-         |q AS (SELECT doc_id, tok FROM toks
-         |  WHERE tok IN ('spark', 'window', 'join')),
-         |dfq AS (SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-         |  FROM q GROUP BY tok),
-         |tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-         |  FROM q GROUP BY doc_id, tok),
-         |sc AS (SELECT t.doc_id, t.tok,
-         |    ln(1.0e0 + (c.n_docs - d.df + 5e-1) / (d.df + 5e-1)) *
-         |    (t.tf * (1.2e0 + 1.0e0) / (t.tf + 1.2e0 * ((1.0e0 - 7.5e-1)
-         |      + 7.5e-1 * CAST(l.dl AS DOUBLE) * c.n_docs / c.sum_dl)))
-         |      AS s
-         |  FROM tf t JOIN dfq d USING (tok) JOIN dl l USING (doc_id),
-         |    corpus c),
-         |bm AS (SELECT doc_id,
-         |    round(list_aggregate(list(s ORDER BY tok), 'sum'), 6) AS bm25
-         |  FROM sc GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT 10),
-         |bmr AS (SELECT doc_id, row_number() OVER
-         |    (ORDER BY bm25 DESC, doc_id) AS rank FROM bm),
-         |qv0 AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-         |cos AS (SELECT vec_id AS doc_id,
-         |    round(${cosineSql("qv", "cv")}, 6) AS sim
-         |  FROM (SELECT vec_id, embedding AS cv FROM embeddings
-         |    WHERE vec_id <> 0), qv0),
-         |ct AS (SELECT doc_id, sim FROM cos
-         |  ORDER BY sim DESC, doc_id LIMIT 10),
-         |cr AS (SELECT doc_id, row_number() OVER
-         |    (ORDER BY sim DESC, doc_id) AS rank FROM ct),
-         |fused AS (SELECT doc_id, 'bm25' AS ranker, rank FROM bmr
-         |  UNION ALL SELECT doc_id, 'cosine' AS ranker, rank FROM cr),
-         |agg AS (SELECT doc_id, CAST(count(*) AS INT) AS n_rankers,
-         |    round(list_aggregate(
-         |      list(1.0e0 / (6e1 + rank) ORDER BY ranker, rank),
-         |      'sum'), 6) AS rrf
-         |  FROM fused GROUP BY doc_id)
-         |SELECT doc_id, n_rankers, rrf FROM agg
-         |ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin,
-
-    // SQ8 coarse top-12 (q109's chain) reranked by exact cosine on the
-    // raw embeddings
-    "q124_sq8_rerank" ->
-      s"""WITH $sq8CtesSql,
-         |coarse_sc AS (SELECT query_id, cand_id,
-         |    round(${cosineSql("qv", "cv")}, 6) AS sim
-         |  FROM c, q WHERE query_id <> cand_id),
-         |coarse AS (SELECT query_id, cand_id FROM (SELECT *,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY sim DESC, cand_id) AS rn FROM coarse_sc)
-         |  WHERE rn <= 12),
-         |cf AS (SELECT vec_id AS cand_id, embedding AS cv2
-         |  FROM embeddings),
-         |rer AS (SELECT k.query_id, k.cand_id,
-         |    round(${cosineSql("qv", "cv2")}, 6) AS sim
-         |  FROM coarse k
-         |  JOIN cf ON cf.cand_id = k.cand_id
-         |  JOIN q ON q.query_id = k.query_id),
-         |ranked AS (SELECT *, row_number() OVER
-         |    (PARTITION BY query_id ORDER BY sim DESC, cand_id) AS "rank"
-         |  FROM rer)
-         |SELECT query_id, cand_id, sim, CAST("rank" AS INT) AS "rank"
-         |FROM ranked WHERE "rank" <= 5
-         |ORDER BY query_id, "rank"""".stripMargin,
-
-    "q110_pagerank" -> {
-      val iters = (1 to 5).map { i =>
-        s"""c$i AS (SELECT e.dst, e.src, r.r / o.outdeg AS contrib
-           |  FROM edges e JOIN r${i - 1} r ON r.id = e.src
-           |  JOIN od o ON o.src = e.src),
-           |a$i AS (SELECT dst,
-           |    list_aggregate(list(contrib ORDER BY src), 'sum') AS m
-           |  FROM c$i GROUP BY dst),
-           |r$i AS (SELECT v.id, (1.0e0 - 8.5e-1) / (SELECT n FROM nv)
-           |    + 8.5e-1 * coalesce(a.m, 0.0e0) AS r
-           |  FROM verts v LEFT JOIN a$i a ON a.dst = v.id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $shinglesCteSql,
-         |$graphCteSql,
-         |nv AS (SELECT CAST(count(*) AS BIGINT) AS n FROM verts),
-         |r0 AS (SELECT id, 1.0e0 / (SELECT n FROM nv) AS r FROM verts),
-         |$iters
-         |SELECT id, round(r, 6) AS pagerank FROM r5
-         |ORDER BY id""".stripMargin
-    },
-
-    // Personalized variant: restart mass on the 3 smallest vertex ids;
-    // zero-rank vertices appear as 0.0 contribs here, which are no-ops
-    // in the IEEE fold — the Spark side carries the nonzero support set
-    // only, bit-identically
-    "q112_ppr" -> {
-      val iters = (1 to 5).map { i =>
-        s"""c$i AS (SELECT e.dst, e.src, r.r / o.outdeg AS contrib
-           |  FROM edges e JOIN r${i - 1} r ON r.id = e.src
-           |  JOIN od o ON o.src = e.src),
-           |a$i AS (SELECT dst,
-           |    list_aggregate(list(contrib ORDER BY src), 'sum') AS m
-           |  FROM c$i GROUP BY dst),
-           |r$i AS (SELECT v.id,
-           |    (CASE WHEN v.id IN (SELECT id FROM seeds)
-           |          THEN (1.0e0 - 8.5e-1) / (SELECT n FROM ns)
-           |          ELSE 0.0e0 END)
-           |    + 8.5e-1 * coalesce(a.m, 0.0e0) AS r
-           |  FROM verts v LEFT JOIN a$i a ON a.dst = v.id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $shinglesCteSql,
-         |$graphCteSql,
-         |seeds AS (SELECT id FROM verts ORDER BY id LIMIT 3),
-         |ns AS (SELECT CAST(count(*) AS BIGINT) AS n FROM seeds),
-         |r0 AS (SELECT v.id, CASE WHEN v.id IN (SELECT id FROM seeds)
-         |    THEN 1.0e0 / (SELECT n FROM ns) ELSE 0.0e0 END AS r
-         |  FROM verts v),
-         |$iters
-         |SELECT id, round(r, 6) AS ppr FROM r5
-         |ORDER BY id""".stripMargin
-    },
-
-    // aHash replayed from the synthetic fixture's closed form: gray =
-    // Σ_c (id + 7x + 13y + 31c) % 256, integer box-downsample to a 4×2
-    // grid, cross-multiplied brightness test — decode-free oracle for
-    // the decode-real Spark side
-    "q113_ahash_dup" ->
-      """WITH base AS (SELECT doc_id, doc_id % 16 + 1 AS w,
-        |    doc_id % 8 + 1 AS h FROM documents),
-        |xs AS (SELECT doc_id, w, h,
-        |    unnest(generate_series(0, w - 1)) AS x FROM base),
-        |px AS (SELECT doc_id, w, h, x,
-        |    unnest(generate_series(0, h - 1)) AS y FROM xs),
-        |g AS (SELECT doc_id,
-        |    (y * 2 // h) * 4 + (x * 4 // w) AS cell,
-        |    (doc_id + 7*x + 13*y) % 256 + (doc_id + 7*x + 13*y + 31) % 256
-        |      + (doc_id + 7*x + 13*y + 62) % 256 AS gray
-        |  FROM px),
-        |cells AS (SELECT doc_id, cell, sum(gray) AS cs, count(*) AS cc
-        |  FROM g GROUP BY doc_id, cell),
-        |tot AS (SELECT doc_id, sum(cs) AS ts, sum(cc) AS tc
-        |  FROM cells GROUP BY doc_id),
-        |allc AS (SELECT b.doc_id, c.cell FROM base b
-        |  CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS cell) c),
-        |bits AS (SELECT a.doc_id, a.cell,
-        |    CASE WHEN coalesce(cs, 0) * tc > ts * coalesce(cc, 0)
-        |         THEN 1 ELSE 0 END AS bit
-        |  FROM allc a
-        |  LEFT JOIN cells USING (doc_id, cell)
-        |  JOIN tot USING (doc_id)),
-        |hs AS (SELECT doc_id,
-        |    CAST(sum(bit * (CAST(1 AS BIGINT) << cell)) AS BIGINT) AS ahash
-        |  FROM bits GROUP BY doc_id)
-        |SELECT a.doc_id AS id1, b.doc_id AS id2,
-        |  CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS hamming,
-        |  CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) <= 1 AS is_dup
-        |FROM hs a JOIN hs b
-        |  ON b.doc_id > a.doc_id AND b.doc_id <= a.doc_id + 8
-        |ORDER BY id1, id2""".stripMargin,
-
-    "q114_ship_priority" ->
-      """SELECT l_orderkey, CAST(o_orderdate AS DATE) AS order_date,
-        |  o_orderpriority,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-06-01 00:00:00'
-        |  AND l_shipdate > TIMESTAMP '1998-06-01 00:00:00'
-        |GROUP BY 1, 2, 3
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-
-    "q115_part_supplier" ->
-      """SELECT p_brand, p_type,
-        |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_suppliers,
-        |  CAST(count(*) AS BIGINT) AS n_items
-        |FROM part JOIN lineitem ON p_partkey = l_partkey
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q116_window_rank" ->
-      """SELECT lang, doc_id, n_chars,
-        |  CAST(ntile(4) OVER w AS INT) AS quartile,
-        |  round(cume_dist() OVER w, 6) AS cume,
-        |  CAST(dense_rank() OVER w AS INT) AS drank
-        |FROM documents
-        |WINDOW w AS (PARTITION BY lang ORDER BY n_chars, doc_id)
-        |ORDER BY lang, doc_id""".stripMargin,
-
-    "q117_setops" ->
-      """SELECT user_id, CAST(ts AS DATE) AS day
-        |FROM events WHERE event_type = 'click'
-        |INTERSECT
-        |SELECT user_id, CAST(ts AS DATE) AS day
-        |FROM events WHERE event_type = 'purchase'
-        |EXCEPT
-        |SELECT user_id, CAST(ts AS DATE) AS day
-        |FROM events WHERE event_type = 'error'
-        |ORDER BY user_id, day""".stripMargin,
-
-    "q118_datetime" ->
-      """SELECT event_id, CAST(ts AS DATE) AS day,
-        |  CAST(date_trunc('month', ts) AS DATE) AS month_start,
-        |  last_day(CAST(ts AS DATE)) AS month_end,
-        |  CAST(quarter(ts) AS INT) AS qtr,
-        |  CAST(date_diff('day', DATE '2020-01-01', CAST(ts AS DATE))
-        |    AS INT) AS days_since,
-        |  CAST(CAST(ts AS DATE) + INTERVAL 3 MONTH AS DATE)
-        |    AS plus_quarter
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q119_hard_negatives" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv,
-         |    label AS q_label FROM embeddings WHERE vec_id < 8),
-         |c AS (SELECT vec_id AS cand_id, embedding AS cv,
-         |    label AS c_label FROM embeddings),
-         |scored AS (SELECT query_id, q_label, cand_id, c_label,
-         |    round(${cosineSql("qv", "cv")}, 6) AS sim
-         |  FROM c, q WHERE q_label <> c_label),
-         |ranked AS (SELECT *, row_number() OVER
-         |    (PARTITION BY query_id ORDER BY sim DESC, cand_id) AS "rank"
-         |  FROM scored)
-         |SELECT query_id, q_label, cand_id, c_label, sim,
-         |  CAST("rank" AS INT) AS "rank"
-         |FROM ranked WHERE "rank" <= 3
-         |ORDER BY query_id, "rank"""".stripMargin,
-
-    // q107's LM replayed, then the exact-percentile keep gate per lang
-    "q120_bigram_gate" ->
-      s"""WITH docs_norm AS (SELECT doc_id, $normTextSql AS norm FROM documents),
-         |arrs AS (SELECT doc_id, ${wsTokensSql("norm")} AS arr
-         |  FROM docs_norm),
-         |toks AS (SELECT doc_id, unnest(arr) AS tok,
-         |    unnest(generate_series(1, len(arr))) AS pos FROM arrs),
-         |bi AS (SELECT * FROM (SELECT doc_id, pos, tok,
-         |    lag(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
-         |  FROM toks) WHERE prev IS NOT NULL),
-         |c1 AS (SELECT tok, CAST(count(*) AS BIGINT) AS c1
-         |  FROM toks GROUP BY tok),
-         |tot AS (SELECT CAST(sum(c1) AS BIGINT) AS total FROM c1),
-         |c2 AS (SELECT prev, tok, CAST(count(*) AS BIGINT) AS c2
-         |  FROM bi GROUP BY prev, tok),
-         |lp AS (SELECT b.doc_id, b.pos,
-         |    ln(7e-1 * c2.c2 / p.c1 + (1.0e0 - 7e-1) * c1.c1 / t.total)
-         |      AS lp
-         |  FROM bi b
-         |  JOIN c2 ON c2.prev = b.prev AND c2.tok = b.tok
-         |  JOIN c1 p ON p.tok = b.prev
-         |  JOIN c1 ON c1.tok = b.tok, tot t),
-         |agg AS (SELECT doc_id,
-         |    round(list_aggregate(list(lp ORDER BY pos), 'sum')
-         |      / count(*), 6) AS logprob
-         |  FROM lp GROUP BY doc_id),
-         |sc AS (SELECT d.lang, a.doc_id, a.logprob
-         |  FROM agg a JOIN documents d USING (doc_id)),
-         |th AS (SELECT lang, round(quantile_cont(logprob, 0.25), 6)
-         |    AS threshold FROM sc GROUP BY lang)
-         |SELECT sc.lang, sc.doc_id, sc.logprob, th.threshold,
-         |  sc.logprob >= th.threshold AS kept
-         |FROM sc JOIN th USING (lang)
-         |ORDER BY sc.lang, sc.doc_id""".stripMargin,
-
-    // q44's transitive closure composed with q37's quality CTEs: the
-    // per-cluster argmax (quality desc, id asc) is the canonical doc
-    "q122_canonical" ->
-      s"""WITH RECURSIVE $lshPairsCteSql,
-         |edges AS (SELECT id1 AS a, id2 AS b FROM pairs
-         |  UNION SELECT id2 AS a, id1 AS b FROM pairs),
-         |closure(a, b) AS (
-         |  SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-         |  UNION
-         |  SELECT c.a, e.b FROM closure c JOIN edges e ON c.b = e.a),
-         |labels AS (SELECT a AS id, min(b) AS cluster
-         |  FROM closure GROUP BY a),
-         |$qualityCtesSql,
-         |j AS (SELECT l.cluster, l.id, q.quality_score
-         |  FROM labels l JOIN qsc q ON q.doc_id = l.id),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY cluster
-         |    ORDER BY quality_score DESC, id) AS rn FROM j),
-         |m AS (SELECT cluster, CAST(count(*) AS BIGINT) AS n_members
-         |  FROM j GROUP BY cluster)
-         |SELECT r.cluster, m.n_members, r.id AS winner_id,
-         |  r.quality_score AS best_quality
-         |FROM r JOIN m USING (cluster) WHERE rn = 1
-         |ORDER BY r.cluster""".stripMargin,
-
-    "q123_json_props" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS sum_k,
-        |  CAST(min(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS min_k,
-        |  CAST(max(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS max_k,
-        |  round(avg(CAST(props->>'k' AS BIGINT)), 6) AS avg_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // add-half smoothed target/corpus unigram LMs, position-sorted fold
-    "q121_dsir" ->
-      s"""WITH docs_norm AS (SELECT doc_id, lang, $normTextSql AS norm
-         |  FROM documents),
-         |arrs AS (SELECT doc_id, lang, ${wsTokensSql("norm")} AS arr
-         |  FROM docs_norm),
-         |toks AS (SELECT doc_id, lang = 'en' AS tgt, unnest(arr) AS tok,
-         |    unnest(generate_series(1, len(arr))) AS pos FROM arrs),
-         |cc AS (SELECT tok, CAST(count(*) AS BIGINT) AS c_c
-         |  FROM toks GROUP BY tok),
-         |ct AS (SELECT tok, CAST(count(*) AS BIGINT) AS c_t
-         |  FROM toks WHERE tgt GROUP BY tok),
-         |tot AS (SELECT CAST(sum(c_c) AS BIGINT) AS t_c,
-         |    CAST(count(*) AS BIGINT) AS vocab FROM cc),
-         |tt AS (SELECT CAST(sum(c_t) AS BIGINT) AS t_t FROM ct),
-         |lp AS (SELECT k.doc_id, k.pos,
-         |    ln((coalesce(ct.c_t, 0) + 5e-1) / (tt.t_t + 5e-1 * tot.vocab))
-         |    - ln((cc.c_c + 5e-1) / (tot.t_c + 5e-1 * tot.vocab)) AS lp
-         |  FROM toks k JOIN cc USING (tok) LEFT JOIN ct USING (tok),
-         |    tot, tt)
-         |SELECT doc_id, CAST(count(*) AS INT) AS n_tokens,
-         |  round(list_aggregate(list(lp ORDER BY pos), 'sum') / count(*), 6)
-         |    AS log_ratio
-         |FROM lp GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // chunkSize=16, overlap=4 -> stride 12; last start =
-    // floor((n-overlap-1)/stride)*stride clamped at 0
-    "q111_chunking" ->
-      s"""WITH docs_norm AS (SELECT doc_id, $normTextSql AS norm FROM documents),
-         |arrs AS (SELECT doc_id, ${wsTokensSql("norm")} AS arr
-         |  FROM docs_norm),
-         |nz AS (SELECT doc_id, arr FROM arrs WHERE len(arr) > 0),
-         |st AS (SELECT doc_id, arr, unnest(generate_series(0,
-         |    greatest(CAST(floor((len(arr) - 4 - 1) / 12.0e0) AS BIGINT),
-         |      0) * 12, 12)) AS s FROM nz),
-         |ch AS (SELECT doc_id, s, list_slice(arr, s + 1, s + 16) AS chunk
-         |  FROM st)
-         |SELECT doc_id, CAST(s // 12 AS INT) AS chunk_idx,
-         |  CAST(s AS BIGINT) AS start_pos,
-         |  CAST(len(chunk) AS INT) AS n_tokens,
-         |  array_to_string(chunk, ' ') AS chunk_text
-         |FROM ch ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // generated from the same ProfileCols list as qProfile
-    "q57_profile" -> ProfileCols.map { case (c, isNum) =>
-      val mean = if (isNum) s"round(avg($c), 4)" else "CAST(NULL AS DOUBLE)"
-      s"""SELECT '$c' AS "column", count(*) AS n_rows,
-         |  count(*) - count($c) AS n_null,
-         |  count(DISTINCT $c) AS n_distinct,
-         |  CAST(min($c) AS VARCHAR) AS min_value,
-         |  CAST(max($c) AS VARCHAR) AS max_value,
-         |  $mean AS mean_value FROM lineitem""".stripMargin
-    }.mkString("", "\nUNION ALL\n", "\nORDER BY \"column\""),
-
-    // same epoch salt ("sh1_") and shard modulus as qShuffle
-    "q56_shuffle" ->
-      s"""WITH k AS (SELECT doc_id,
-         |    ${hash32Sql("'sh1_' || CAST(doc_id AS VARCHAR)")}
-         |      AS shuffle_key
-         |  FROM documents)
-         |SELECT doc_id, shuffle_key,
-         |  CAST(shuffle_key % 8 AS INT) AS shard,
-         |  CAST(row_number() OVER (PARTITION BY shuffle_key % 8
-         |    ORDER BY shuffle_key, doc_id) AS INT) AS pos
-         |FROM k ORDER BY shard, pos""".stripMargin,
-
-    "q43_repetition" ->
-      s"""WITH $shinglesCteSql,
-         |gram_raw AS (
-         |  SELECT toks.doc_id,
-         |    CASE WHEN len(arr) >= 3 THEN len(arr) - 2 ELSE 1 END AS n_grams
-         |  FROM toks),
-         |gram_distinct AS (
-         |  SELECT doc_id, count(DISTINCT shingle) AS n_distinct_grams
-         |  FROM sh GROUP BY doc_id),
-         |grams AS (
-         |  SELECT r.doc_id, r.n_grams, d.n_distinct_grams,
-         |    round(1.0 - CAST(d.n_distinct_grams AS DOUBLE) / r.n_grams, 6)
-         |      AS dup_gram_ratio
-         |  FROM gram_raw r JOIN gram_distinct d ON r.doc_id = d.doc_id),
-         |words AS (
-         |  SELECT doc_id, unnest(arr) AS tok FROM toks),
-         |wc AS (SELECT doc_id, tok, count(*) AS c FROM words
-         |  GROUP BY doc_id, tok),
-         |tw AS (SELECT doc_id, CAST(max(c) AS BIGINT) AS top_word_count,
-         |    CAST(sum(c) AS BIGINT) AS n_words
-         |  FROM wc GROUP BY doc_id)
-         |SELECT g.doc_id, CAST(g.n_grams AS BIGINT) AS n_grams,
-         |  g.dup_gram_ratio, tw.top_word_count, tw.n_words,
-         |  round(CAST(tw.top_word_count AS DOUBLE) / tw.n_words, 6)
-         |    AS top_word_ratio
-         |FROM grams g JOIN tw ON g.doc_id = tw.doc_id
-         |ORDER BY g.doc_id""".stripMargin,
-
-    "q41_multimodal" ->
-      """WITH m AS (SELECT doc_id, md5(text) AS hx FROM documents),
-        |meta AS (SELECT doc_id,
-        |  CAST(octet_length(unhex(hx)) AS BIGINT) AS payload_len,
-        |  CAST(('0x' || substr(hx, 1, 4)) AS BIGINT) % 1024 + 16 AS width,
-        |  CAST(('0x' || substr(hx, 5, 4)) AS BIGINT) % 1024 + 16 AS height,
-        |  CAST(3 AS BIGINT) AS channels,
-        |  CAST(('0x' || substr(hx, 9, 4)) AS BIGINT) % 30 + 1 AS n_frames
-        |  FROM m)
-        |SELECT doc_id, payload_len, width, height, channels, n_frames,
-        |  len(list_filter(generate_series(0, n_frames - 1), f -> f % 5 = 0))
-        |    AS n_sampled
-        |FROM meta ORDER BY doc_id""".stripMargin,
-
-    "q44_dup_clusters" ->
-      s"""WITH RECURSIVE $lshPairsCteSql,
-         |edges AS (SELECT id1 AS a, id2 AS b FROM pairs
-         |  UNION SELECT id2 AS a, id1 AS b FROM pairs),
-         |closure(a, b) AS (
-         |  SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-         |  UNION
-         |  SELECT c.a, e.b FROM closure c JOIN edges e ON c.b = e.a),
-         |labels AS (SELECT a AS id, min(b) AS cluster
-         |  FROM closure GROUP BY a)
-         |SELECT cluster, count(*) AS n_members
-         |FROM labels GROUP BY cluster ORDER BY cluster""".stripMargin,
-
-    "q45_hash_split" ->
-      s"""WITH b AS (SELECT lang,
-         |    ${hash32Sql("CAST(doc_id AS VARCHAR)")} % 100 AS bucket
-         |  FROM documents),
-         |s AS (SELECT lang, CASE WHEN bucket < 80 THEN 'train'
-         |    WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split FROM b)
-         |SELECT lang, split, count(*) AS n
-         |FROM s GROUP BY lang, split ORDER BY lang, split""".stripMargin,
-
-    "q46_tfidf" ->
-      s"""WITH words AS (
-         |  SELECT lang, doc_id,
-         |    unnest(${wsTokensSql(normTextSql)}) AS tok
-         |  FROM documents),
-         |nd AS (SELECT lang, count(DISTINCT doc_id) AS n_docs
-         |  FROM documents GROUP BY lang),
-         |agg AS (SELECT lang, tok, count(*) AS tf,
-         |    count(DISTINCT doc_id) AS df
-         |  FROM words GROUP BY lang, tok),
-         |scored AS (SELECT a.lang, a.tok, a.tf, a.df,
-         |    round(a.tf * ln(CAST(n.n_docs AS DOUBLE) / a.df), 6) AS tfidf
-         |  FROM agg a JOIN nd n ON a.lang = n.lang),
-         |ranked AS (SELECT *, row_number() OVER
-         |    (PARTITION BY lang ORDER BY tfidf DESC, tok) AS "rank"
-         |  FROM scored)
-         |SELECT lang, tok, CAST(tf AS BIGINT) AS tf,
-         |  CAST(df AS BIGINT) AS df, tfidf, CAST("rank" AS INT) AS "rank"
-         |FROM ranked WHERE "rank" <= 5
-         |ORDER BY lang, "rank"""".stripMargin,
-
-    "q47_pii_redact" ->
-      s"""WITH salted AS (
-         |  SELECT doc_id, text ||
-         |    CASE WHEN doc_id % 3 = 0 THEN ' contact user' ||
-         |      CAST(doc_id AS VARCHAR) || '@example.org now' ELSE '' END ||
-         |    CASE WHEN doc_id % 5 = 0 THEN ' see https://example.org/d/' ||
-         |      CAST(doc_id AS VARCHAR) ELSE '' END ||
-         |    CASE WHEN doc_id % 7 = 0 THEN ' from 10.0.0.1' ELSE '' END
-         |    AS text
-         |  FROM documents)
-         |SELECT doc_id,
-         |  CAST(len(regexp_extract_all(text,
-         |    '${TextAnalysis.EmailPattern}')) AS BIGINT) AS n_email,
-         |  CAST(len(regexp_extract_all(text,
-         |    '${TextAnalysis.UrlPattern}')) AS BIGINT) AS n_url,
-         |  md5(regexp_replace(regexp_replace(regexp_replace(text,
-         |    '${TextAnalysis.UrlPattern}', '<URL>', 'g'),
-         |    '${TextAnalysis.EmailPattern}', '<EMAIL>', 'g'),
-         |    '${TextAnalysis.Ipv4Pattern}', '<IP>', 'g')) AS redacted_md5
-         |FROM salted ORDER BY doc_id""".stripMargin,
-
-    "q48_decontaminate" ->
-      s"""WITH $shinglesCteSql,
-         |bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id < 20),
-         |corpus AS (SELECT DISTINCT doc_id, shingle FROM sh
-         |  WHERE doc_id >= 20),
-         |sizes AS (SELECT doc_id, count(*) AS n_sh FROM corpus
-         |  GROUP BY doc_id),
-         |hits AS (SELECT c.doc_id, count(*) AS n_hit
-         |  FROM corpus c JOIN bench b USING (shingle) GROUP BY c.doc_id)
-         |SELECT s.doc_id, CAST(s.n_sh AS BIGINT) AS n_sh,
-         |  CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-         |  round(CAST(coalesce(h.n_hit, 0) AS DOUBLE) / s.n_sh, 6)
-         |    AS overlap_ratio,
-         |  round(CAST(coalesce(h.n_hit, 0) AS DOUBLE) / s.n_sh, 6) >= 0.5
-         |    AS contaminated
-         |FROM sizes s LEFT JOIN hits h ON s.doc_id = h.doc_id
-         |ORDER BY s.doc_id""".stripMargin,
-
-    "q98_bench_leakage" ->
-      s"""WITH $shinglesCteSql,
-         |corpus AS (SELECT DISTINCT doc_id, shingle FROM sh
-         |  WHERE doc_id >= 20),
-         |freq AS (SELECT shingle, count(*) AS df FROM corpus GROUP BY 1),
-         |rare AS (SELECT shingle FROM freq WHERE df <= 100),
-         |cr AS (SELECT c.doc_id AS corpus_id, c.shingle
-         |  FROM corpus c JOIN rare USING (shingle)),
-         |bench AS (SELECT DISTINCT doc_id AS bench_id, shingle FROM sh
-         |  WHERE doc_id < 20),
-         |bs AS (SELECT bench_id, count(*) AS n_sh FROM bench GROUP BY 1),
-         |inter AS (SELECT b.bench_id, c.corpus_id, count(*) AS n_int
-         |  FROM bench b JOIN cr c USING (shingle) GROUP BY 1, 2),
-         |per AS (SELECT i.bench_id,
-         |    round(i.n_int::DOUBLE / bs.n_sh, 6) AS containment
-         |  FROM inter i JOIN bs USING (bench_id)),
-         |agg AS (SELECT bench_id,
-         |    CAST(sum(CASE WHEN containment >= 0.5 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n_leaky_docs,
-         |    max(containment) AS max_containment
-         |  FROM per GROUP BY 1)
-         |SELECT bs.bench_id, CAST(bs.n_sh AS BIGINT) AS n_sh,
-         |  coalesce(n_leaky_docs, 0) AS n_leaky_docs,
-         |  coalesce(max_containment, 0.0) AS max_containment
-         |FROM bs LEFT JOIN agg USING (bench_id)
-         |ORDER BY bs.bench_id""".stripMargin,
-
-    "q49_stratified_sample" ->
-      s"""WITH b AS (SELECT lang,
-         |    CASE lang WHEN 'en' THEN 2000 WHEN 'zh' THEN 5000
-         |      ELSE 3500 END AS thr,
-         |    ${hash32Sql("CAST(doc_id AS VARCHAR)")} % 10000 AS bucket
-         |  FROM documents)
-         |SELECT lang, count(*) AS n_docs,
-         |  CAST(sum(CASE WHEN bucket < thr THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_sampled
-         |FROM b GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "q50_chunk_dedup" ->
-      s"""WITH docs_norm AS (SELECT doc_id, $normTextSql AS norm
-         |  FROM documents),
-         |t AS (SELECT doc_id, ${wsTokensSql("norm")} AS arr FROM docs_norm),
-         |ch0 AS (SELECT doc_id, unnest(list_transform(generate_series(1,
-         |    greatest(1, CAST(ceil(len(arr) / 8.0) AS BIGINT))),
-         |    i -> struct_pack(idx := i,
-         |      chunk := array_to_string(arr[((i-1)*8+1):(i*8)], ' '))))
-         |    AS s
-         |  FROM t),
-         |ch AS (SELECT doc_id, s.idx AS chunk_idx, s.chunk AS chunk
-         |  FROM ch0),
-         |ranked AS (SELECT *, row_number() OVER
-         |    (PARTITION BY chunk ORDER BY doc_id, chunk_idx) AS rn
-         |  FROM ch)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-         |  CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_kept,
-         |  md5(coalesce(string_agg(CASE WHEN rn = 1 THEN chunk END, ' '
-         |    ORDER BY chunk_idx), '')) AS dedup_md5
-         |FROM ranked GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q51_corpus_stats" ->
-      s"""SELECT lang, count(*) AS n_docs,
-         |  round(avg(n_chars), 4) AS mean_len,
-         |  round(quantile_cont(n_chars, 0.5), 4) AS p50,
-         |  round(quantile_cont(n_chars, 0.9), 4) AS p90,
-         |  round(quantile_cont(n_chars, 0.99), 4) AS p99
-         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "q52_curation_funnel" -> {
-      val allStop = sqlStringList(
-        TextAnalysis.StopwordsByLang.flatMap(_._2).distinct)
-      s"""WITH corpus AS (
-         |  SELECT doc_id, lang, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 1000000 AS doc_id, lang, text FROM documents
-         |  WHERE doc_id % 10 = 0),
-         |d AS (SELECT *, md5($normTextSql) AS digest FROM corpus),
-         |k AS (SELECT digest, min(doc_id) AS keeper FROM d
-         |  GROUP BY digest),
-         |t AS (SELECT d.doc_id, d.lang, d.text, k.keeper,
-         |    length(d.text)::DOUBLE AS n_chars,
-         |    ${wsTokensSql("d.text")} AS toks,
-         |    ${wsTokensSql("lower(d.text)")} AS ltoks
-         |  FROM d JOIN k USING (digest)),
-         |sig AS (SELECT doc_id, lang, keeper, len(toks) AS n_tokens,
-         |  round((n_chars - length(regexp_replace(text,
-         |    '[^A-Za-z0-9\\s]', '', 'g'))) / nullif(n_chars, 0.0), 6)
-         |    AS punct_ratio,
-         |  round(len(list_filter(ltoks,
-         |    w -> list_contains($allStop, w)))::DOUBLE /
-         |    nullif(len(toks), 0)::DOUBLE, 6) AS stopword_ratio
-         |  FROM t),
-         |r AS (SELECT lang,
-         |  CASE WHEN doc_id <> keeper THEN 'duplicate'
-         |    WHEN n_tokens < 20 THEN 'too_short'
-         |    WHEN round(greatest(0.0, least(1.0,
-         |      0.4 * least(n_tokens::DOUBLE / 50.0, 1.0) +
-         |      0.4 * least(stopword_ratio * 5.0, 1.0) +
-         |      0.2 * (1.0 - least(punct_ratio * 4.0, 1.0)))), 6) < 0.55
-         |      THEN 'low_quality'
-         |    ELSE 'kept' END AS reason
-         |  FROM sig)
-         |SELECT lang, reason, count(*) AS n
-         |FROM r GROUP BY lang, reason ORDER BY lang, reason""".stripMargin
-    },
-
-    "q53_pack" ->
-      s"""WITH t AS (SELECT source, doc_id,
-         |    len(${wsTokensSql("text")}) AS n_tokens FROM documents),
-         |c AS (SELECT source, doc_id, n_tokens,
-         |    sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id)
-         |      - n_tokens AS cum
-         |  FROM t),
-         |b AS (SELECT source, cum // 512 AS bin, n_tokens FROM c)
-         |SELECT source, CAST(bin AS BIGINT) AS bin,
-         |  count(*) AS n_docs,
-         |  CAST(sum(n_tokens) AS BIGINT) AS bin_tokens,
-         |  round(sum(n_tokens)::DOUBLE / 512, 6) AS fill_ratio
-         |FROM b GROUP BY source, bin ORDER BY source, bin""".stripMargin,
-
-    // value-grain exact quantiles: the oracle replays the SAME
-    // cumulative-window formulation (equivalent to percentile_disc —
-    // smallest v whose cumulative count reaches q*n; the q*n threshold
-    // is the identical IEEE multiply on both engines)
-    "q127_exact_quantiles" ->
-      """WITH c AS (SELECT lang, n_chars AS v, count(*) AS cnt
-        |  FROM documents GROUP BY 1, 2),
-        |w AS (SELECT lang, v,
-        |    sum(cnt) OVER (PARTITION BY lang ORDER BY v) AS cum,
-        |    sum(cnt) OVER (PARTITION BY lang) AS n FROM c),
-        |qs AS (SELECT unnest([0.25e0, 0.5e0, 0.75e0, 0.9e0, 0.99e0]) AS q)
-        |SELECT lang, q, min(v) AS value FROM w, qs
-        |WHERE CAST(cum AS DOUBLE) >= q * n
-        |GROUP BY lang, q ORDER BY lang, q""".stripMargin,
-
-    // the salt reproduces the Spark side's escapes via chr():
-    // 195/169 = mis-decoded e-acute, 226/8364/339 = mis-decoded curly
-    // quotes, 65533 = replacement char, 7 = BEL
-    "q128_enc_quality" ->
-      """WITH s AS (SELECT doc_id, text ||
-        |    (CASE WHEN doc_id % 4 = 0 THEN ' caf' || chr(195) || chr(169)
-        |          ELSE '' END) ||
-        |    (CASE WHEN doc_id % 5 = 0 THEN ' ' || chr(226) || chr(8364) ||
-        |          chr(339) || 'ok' || chr(226) || chr(8364) || chr(157)
-        |          ELSE '' END) ||
-        |    (CASE WHEN doc_id % 7 = 0 THEN ' x' || chr(65533) || 'y'
-        |          ELSE '' END) ||
-        |    (CASE WHEN doc_id % 11 = 0 THEN ' a' || chr(7) || 'b'
-        |          ELSE '' END) AS t
-        |  FROM documents),
-        |m AS (SELECT doc_id, length(t) AS len,
-        |    length(t) - length(replace(t, chr(65533), '')) AS n_repl,
-        |    length(t) - length(regexp_replace(t,
-        |      '[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]', '', 'g')) AS n_ctrl,
-        |    len(regexp_extract_all(t, '\x{00C3}[\x{0080}-\x{00BF}' ||
-        |      '\x{20AC}\x{201A}\x{0192}\x{201E}\x{2026}\x{2020}' ||
-        |      '\x{2021}\x{02C6}\x{2030}\x{0160}\x{2039}\x{0152}' ||
-        |      '\x{017D}\x{2018}\x{2019}\x{201C}\x{201D}\x{2022}' ||
-        |      '\x{2013}\x{2014}\x{02DC}\x{2122}\x{0161}\x{203A}' ||
-        |      '\x{0153}\x{017E}\x{0178}]')) +
-        |      len(regexp_extract_all(t, chr(226) || chr(8364)))
-        |        AS n_moji,
-        |    length(t) - length(regexp_replace(t, '[^\x00-\x7f]', '', 'g'))
-        |      AS n_na
-        |  FROM s)
-        |SELECT doc_id, CAST(n_repl AS BIGINT) AS n_replacement,
-        |  CAST(n_ctrl AS BIGINT) AS n_ctrl,
-        |  CAST(n_moji AS BIGINT) AS n_mojibake,
-        |  CASE WHEN len > 0 THEN round((len - n_na)::DOUBLE / len, 6)
-        |       ELSE 1.0e0 END AS ascii_ratio,
-        |  (n_repl = 0 AND n_ctrl = 0 AND n_moji = 0) AS enc_clean
-        |FROM m ORDER BY doc_id""".stripMargin,
-
-    "q129_interval_join" ->
-      """WITH w AS (SELECT n_nationkey AS window_id,
-        |    TIMESTAMP '2024-01-01' + to_days(n_nationkey) AS start_ts,
-        |    TIMESTAMP '2024-01-01' + to_days(n_nationkey) +
-        |      to_hours(((n_nationkey % 3) + 1) * 6) AS end_ts
-        |  FROM nation)
-        |SELECT w.window_id, count(*) AS n_events,
-        |  CAST(count(DISTINCT e.user_id) AS BIGINT) AS n_users,
-        |  round(sum(e.value), 2) AS sum_value
-        |FROM events e JOIN w ON e.ts >= w.start_ts AND e.ts < w.end_ts
-        |GROUP BY w.window_id ORDER BY w.window_id""".stripMargin,
-
-    "q130_zipf" ->
-      s"""WITH docs_norm AS (SELECT doc_id, $normTextSql AS norm
-         |    FROM documents),
-         |toks AS (SELECT unnest(${wsTokensSql("norm")}) AS tok
-         |  FROM docs_norm),
-         |f AS (SELECT tok, count(*) AS freq FROM toks GROUP BY tok),
-         |top AS (SELECT tok, freq FROM f ORDER BY freq DESC, tok LIMIT 100),
-         |r AS (SELECT
-         |    ln(CAST(row_number() OVER (ORDER BY freq DESC, tok) AS DOUBLE))
-         |      AS x,
-         |    ln(CAST(freq AS DOUBLE)) AS y FROM top),
-         |s AS (SELECT CAST(count(*) AS BIGINT) AS n, sum(x) AS sx,
-         |    sum(y) AS sy, sum(x*y) AS sxy, sum(x*x) AS sxx,
-         |    sum(y*y) AS syy FROM r)
-         |SELECT n AS n_ranks,
-         |  round((n*sxy - sx*sy) / (n*sxx - sx*sx), 6) AS slope,
-         |  round((sy - (n*sxy - sx*sy) / (n*sxx - sx*sx) * sx) / n, 6)
-         |    AS intercept,
-         |  round((n*sxy - sx*sy) * (n*sxy - sx*sy) /
-         |    ((n*sxx - sx*sx) * (n*syy - sy*sy)), 6) AS r2
-         |FROM s""".stripMargin,
-
-    "q131_blocklist" ->
-      """WITH d AS (SELECT doc_id, source,
-        |    'https://' || (CASE WHEN doc_id % 3 = 0 THEN 'ads.'
-        |                        WHEN doc_id % 3 = 1 THEN 'www.'
-        |                        ELSE '' END) ||
-        |    source || '.example.' ||
-        |    (CASE WHEN doc_id % 2 = 0 THEN 'com' ELSE 'net' END) ||
-        |    '/page/' || doc_id AS url
-        |  FROM documents),
-        |h AS (SELECT doc_id, source,
-        |    lower(regexp_extract(url,
-        |      '^[A-Za-z][A-Za-z0-9+.-]*://([^/:?#]+)', 1)) AS host FROM d),
-        |b AS (SELECT unnest(['src0.example.com', 'example.net',
-        |    'ads.src1.example.com']) AS entry),
-        |m AS (SELECT h.doc_id, max_by(b.entry, length(b.entry))
-        |      AS blocked_by
-        |  FROM h JOIN b ON h.host = b.entry OR h.host LIKE '%.' || b.entry
-        |  GROUP BY h.doc_id)
-        |SELECT h.source, coalesce(m.blocked_by, '-') AS blocked_by,
-        |  count(*) AS n
-        |FROM h LEFT JOIN m USING (doc_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // the canonicalization chain mirrors GF.canonicalizeUrl step for
-    // step (RE2 'g' flag = Spark's replace-all; '\1' = Spark's '$1')
-    "q132_url_canon" ->
-      """WITH u AS (SELECT doc_id,
-        |    (CASE WHEN doc_id % 4 = 2 THEN 'https://www.example.com'
-        |          ELSE 'https://Example.com' END)
-        |    || '/Docs/' || (doc_id // 4)
-        |    || (CASE WHEN doc_id % 4 = 1 THEN '?utm_source=feed&utm_medium=rss'
-        |             WHEN doc_id % 4 = 2 THEN '/'
-        |             WHEN doc_id % 4 = 3 THEN '?gclid=xyz#section'
-        |             ELSE '' END) AS url
-        |  FROM documents),
-        |c1 AS (SELECT doc_id, regexp_replace(trim(url), '#.*', '', 'g')
-        |  AS u FROM u),
-        |c2 AS (SELECT doc_id, regexp_replace(u,
-        |  '([?&])(utm_[^=&]*|gclid|fbclid)=[^&]*', '\1', 'g') AS u FROM c1),
-        |c3 AS (SELECT doc_id, regexp_replace(
-        |  regexp_replace(u, '&&+', '&', 'g'), '\?&', '?', 'g') AS u FROM c2),
-        |c4 AS (SELECT doc_id, regexp_replace(u, '[?&]+$', '', 'g')
-        |  AS u FROM c3),
-        |c5 AS (SELECT doc_id,
-        |    lower(regexp_extract(u,
-        |      '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*', 0)) ||
-        |    substr(u, length(regexp_extract(u,
-        |      '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*', 0)) + 1) AS u FROM c4),
-        |c6 AS (SELECT doc_id, regexp_replace(u,
-        |  '^([a-z][a-z0-9+.-]*://)www\.', '\1', 'g') AS u FROM c5),
-        |c7 AS (SELECT doc_id, regexp_replace(regexp_replace(u,
-        |    '^(https://[^/:?#]+):443([/?].*)?$', '\1\2', 'g'),
-        |    '^(http://[^/:?#]+):80([/?].*)?$', '\1\2', 'g') AS u FROM c6),
-        |c8 AS (SELECT doc_id, regexp_replace(u, '([^/])/$', '\1', 'g')
-        |  AS canon FROM c7)
-        |SELECT canon, count(*) AS n_variants, min(doc_id) AS min_doc
-        |FROM c8 GROUP BY canon ORDER BY canon""".stripMargin,
-
-    "q133_bot_detect" ->
-      """WITH e AS (SELECT user_id, event_id,
-        |    CASE WHEN user_id % 5 = 0 THEN epoch_us(ts) // 100000
-        |         ELSE epoch_us(ts) END AS us
-        |  FROM events),
-        |g AS (SELECT user_id, us - lag(us) OVER (PARTITION BY user_id
-        |    ORDER BY us, event_id) AS gap FROM e),
-        |a AS (SELECT user_id, count(*) AS n_events,
-        |    quantile_cont(gap, 0.5) AS median_gap_us,
-        |    round(avg(CASE WHEN gap IS NULL THEN NULL
-        |                   WHEN gap < 1000000 THEN 1.0
-        |                   ELSE 0.0 END), 6) AS fast_frac
-        |  FROM g GROUP BY user_id)
-        |SELECT user_id, n_events, median_gap_us, fast_frac,
-        |  (n_events >= 20 AND median_gap_us < 1000000.0) AS is_bot
-        |FROM a ORDER BY user_id""".stripMargin,
-
-    "q134_scd2" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_id,
-        |    event_type FROM events),
-        |c AS (SELECT user_id, event_type, us,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY us, event_id) AS prev,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY us, event_id) AS rn FROM e),
-        |ch AS (SELECT user_id, event_type AS state, us AS valid_from
-        |  FROM c WHERE rn = 1 OR event_type IS DISTINCT FROM prev),
-        |iv AS (SELECT user_id, state, valid_from,
-        |    lead(valid_from) OVER (PARTITION BY user_id
-        |      ORDER BY valid_from, state) AS valid_to FROM ch)
-        |SELECT user_id, state, valid_from, valid_to FROM iv
-        |ORDER BY user_id, valid_from, state""".stripMargin,
-
-    // √count weights: sqrt is IEEE-correctly-rounded on every engine
-    // (pow is not), the denominator folds group-sorted, the leftover is
-    // an integer sum — every double in the apportionment is bit-equal
-    "q135_temperature_mix" ->
-      """WITH c AS (SELECT source, count(*) AS n_docs,
-        |    sqrt(count(*)) AS w FROM documents GROUP BY source),
-        |tot AS (SELECT list_aggregate(list(w ORDER BY source), 'sum')
-        |    AS tot FROM c),
-        |i AS (SELECT source, n_docs, w / tot AS weight,
-        |    CAST(floor(1000000 * (w / tot)) AS BIGINT) AS base,
-        |    1000000 * (w / tot) - floor(1000000 * (w / tot)) AS rem
-        |  FROM c, tot),
-        |l AS (SELECT 1000000 - sum(base) AS leftover FROM i),
-        |r AS (SELECT *, row_number() OVER (ORDER BY rem DESC, source)
-        |    AS rk FROM i)
-        |SELECT source, n_docs, round(weight, 6) AS weight,
-        |  base + (CASE WHEN rk <= (SELECT leftover FROM l)
-        |          THEN 1 ELSE 0 END) AS alloc
-        |FROM r ORDER BY source""".stripMargin,
-
-    // stopword list generated from the SAME Scala constant gopherRules
-    // uses; bullet-class char via chr(8226) so no non-ascii literal
-    "q136_gopher_rules" -> {
-      val enStops = TextAnalysis.StopwordsByLang.toMap.apply("en")
-        .map(w => s"'$w'").mkString(", ")
-      s"""WITH s AS (SELECT doc_id, text || '.' ||
-         |    (CASE WHEN doc_id % 3 = 0 THEN chr(10) || '- item one' ||
-         |          chr(10) || '- item two' ELSE '' END) ||
-         |    (CASE WHEN doc_id % 4 = 0 THEN chr(10) ||
-         |          'Trailing line without punct' ELSE '' END) ||
-         |    (CASE WHEN doc_id % 10 = 0 THEN chr(10) ||
-         |          'Lorem ipsum dolor sit amet.' ELSE '' END) AS t
-         |  FROM documents),
-         |m AS (SELECT doc_id,
-         |    CAST(len(${wsTokensSql("t")}) AS BIGINT) AS n_words,
-         |    round(CAST(list_aggregate(list_transform(${wsTokensSql("t")},
-         |      x -> len(x)), 'sum') AS DOUBLE) /
-         |      len(${wsTokensSql("t")}), 6) AS mean_word_len,
-         |    list_filter(list_transform(string_split(t, chr(10)),
-         |      l -> trim(l)), l -> len(l) > 0) AS lines,
-         |    CAST(len(list_filter(list_distinct(
-         |      ${wsTokensSql("lower(t)")}), x -> x IN ($enStops)))
-         |      AS BIGINT) AS n_stop_hits,
-         |    contains(lower(t), 'lorem ipsum') AS has_lorem
-         |  FROM s),
-         |r AS (SELECT doc_id, n_words, mean_word_len,
-         |    round(CAST(len(list_filter(lines,
-         |      l -> regexp_matches(l, '[.!?"]$$'))) AS DOUBLE) /
-         |      len(lines), 6) AS frac_lines_end_punct,
-         |    round(CAST(len(list_filter(lines,
-         |      l -> regexp_matches(l, '^[-*' || chr(8226) || ']')))
-         |      AS DOUBLE) / len(lines), 6) AS frac_bullet_lines,
-         |    n_stop_hits, has_lorem
-         |  FROM m)
-         |SELECT doc_id, n_words, mean_word_len, frac_lines_end_punct,
-         |  frac_bullet_lines, n_stop_hits, has_lorem,
-         |  (n_words >= 10 AND n_words <= 100000 AND
-         |   mean_word_len >= 3.0 AND mean_word_len <= 10.0 AND
-         |   frac_lines_end_punct >= 0.3 AND frac_bullet_lines <= 0.9 AND
-         |   n_stop_hits >= 2 AND NOT has_lorem) AS keep
-         |FROM r ORDER BY doc_id""".stripMargin
-    },
-
-    "q137_code_detect" ->
-      """WITH s AS (SELECT doc_id, text ||
-        |    (CASE WHEN doc_id % 4 = 0 THEN chr(10) || 'def load(path):'
-        |      || chr(10) || '    return read(path);' || chr(10) ||
-        |      'import os' || chr(10) || 'x = 1;' ELSE '' END) ||
-        |    (CASE WHEN doc_id % 7 = 0 THEN chr(10) ||
-        |      'plain trailing prose line' ELSE '' END) AS t
-        |  FROM documents),
-        |m AS (SELECT doc_id,
-        |    list_filter(string_split(t, chr(10)),
-        |      l -> len(trim(l)) > 0) AS lines, t
-        |  FROM s),
-        |r AS (SELECT doc_id,
-        |    CAST(len(lines) AS BIGINT) AS n_lines,
-        |    round(CAST(len(list_filter(lines, l ->
-        |      regexp_matches(l, '^(    |\t)') OR
-        |      regexp_matches(trim(l), '[;{}]$') OR
-        |      regexp_matches(trim(l), '^(def|class|import|function|return|var|let|const|if|for|while)\b')))
-        |      AS DOUBLE) / len(lines), 6) AS frac_code_lines,
-        |    round(CAST(length(t) - length(regexp_replace(t,
-        |      '[\[\]{}();=<>]', '', 'g')) AS DOUBLE) / length(t), 6)
-        |      AS symbol_ratio
-        |  FROM m)
-        |SELECT doc_id, n_lines, frac_code_lines, symbol_ratio,
-        |  (frac_code_lines >= 0.3 OR symbol_ratio >= 0.05) AS is_code
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    // closed forms of the MP4 fixtures: the oracle never sees a byte —
-    // matching proves the box walk recovered every field exactly
-    "q138_mp4_meta" ->
-      """SELECT doc_id, true AS is_mp4, 'isom' AS major_brand,
-        |  CAST(1000 * (doc_id % 4 + 1) AS BIGINT) AS timescale,
-        |  CAST(500 * doc_id + 1000 AS BIGINT) AS duration,
-        |  CAST((500 * doc_id + 1000) * 1000 //
-        |    (1000 * (doc_id % 4 + 1)) AS BIGINT) AS duration_ms,
-        |  CAST(doc_id % 3 + 1 AS BIGINT) AS n_tracks
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // star expansion replay: buckets over the cap pair every member
-    // with the bucket's min-id hub instead of all-pairs; a cap above
-    // every bucket size must reproduce the uncapped pair set
-    "q139_lsh_bucket_cap" ->
-      s"""WITH $lshBucketsCteSql,
-         |sized AS (SELECT doc_id, band, bucket,
-         |    count(*) OVER (PARTITION BY band, bucket) AS n,
-         |    min(doc_id) OVER (PARTITION BY band, bucket) AS hub
-         |  FROM buckets),
-         |unc AS (SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2
-         |  FROM buckets l JOIN buckets r
-         |  ON l.band = r.band AND l.bucket = r.bucket
-         |    AND l.doc_id < r.doc_id),
-         |cap4 AS (SELECT DISTINCT id1, id2 FROM (
-         |  SELECT l.doc_id AS id1, r.doc_id AS id2
-         |    FROM sized l JOIN sized r
-         |    ON l.band = r.band AND l.bucket = r.bucket
-         |      AND l.doc_id < r.doc_id
-         |    WHERE l.n <= 2
-         |  UNION ALL
-         |  SELECT hub AS id1, doc_id AS id2 FROM sized
-         |    WHERE n > 2 AND doc_id <> hub)),
-         |big AS (SELECT DISTINCT id1, id2 FROM (
-         |  SELECT l.doc_id AS id1, r.doc_id AS id2
-         |    FROM sized l JOIN sized r
-         |    ON l.band = r.band AND l.bucket = r.bucket
-         |      AND l.doc_id < r.doc_id
-         |    WHERE l.n <= 1000000
-         |  UNION ALL
-         |  SELECT hub AS id1, doc_id AS id2 FROM sized
-         |    WHERE n > 1000000 AND doc_id <> hub)),
-         |ovr AS (SELECT band, bucket, count(*) AS n_docs FROM buckets
-         |  GROUP BY band, bucket HAVING count(*) > 2)
-         |SELECT
-         |  (SELECT count(*) FROM unc) AS n_uncapped,
-         |  (SELECT count(*) FROM big) AS n_capped_large,
-         |  (SELECT count(*) FROM cap4) AS n_capped,
-         |  (SELECT CAST(coalesce(sum(id1 + id2), 0) AS BIGINT) FROM cap4)
-         |    AS pair_checksum,
-         |  (SELECT count(*) FROM ovr) AS n_over_buckets,
-         |  (SELECT CAST(coalesce(sum(n_docs), 0) AS BIGINT) FROM ovr)
-         |    AS n_over_docs""".stripMargin,
-
-    // per-track closed forms of the synthetic fixture: track ordinal t
-    // in 0..doc_id%3, even t = video (avc1, 160·(t+1)×90·(t+1)), odd
-    // t = audio (mp4a, no dims)
-    "q140_mp4_tracks" ->
-      """SELECT doc_id, CAST(t + 1 AS BIGINT) AS track_id,
-        |  CASE WHEN t % 2 = 0 THEN 'vide' ELSE 'soun' END AS handler,
-        |  CAST(CASE WHEN t % 2 = 0 THEN 160 * (t + 1) ELSE 0 END
-        |    AS BIGINT) AS width,
-        |  CAST(CASE WHEN t % 2 = 0 THEN 90 * (t + 1) ELSE 0 END
-        |    AS BIGINT) AS height,
-        |  CASE WHEN t % 2 = 0 THEN 'avc1' ELSE 'mp4a' END AS codec
-        |FROM (SELECT doc_id, unnest(range(doc_id % 3 + 1)) AS t
-        |      FROM documents)
-        |ORDER BY doc_id, track_id""".stripMargin,
-
-    // rolling 20-gram at every position; duplicated = held by >= 2
-    // DISTINCT docs (intra-doc repeats collapse first); union coverage
-    // of fixed-length sorted intervals = sum(least(20, pos - prev)),
-    // 20 for the first
-    "q141_dup_spans" ->
-      """WITH g AS (SELECT doc_id, i AS pos, substr(text, i, 20) AS gram
-        |  FROM documents,
-        |    unnest(generate_series(1, length(text) - 19)) AS t(i)
-        |  WHERE length(text) >= 20),
-        |d AS (SELECT gram FROM (SELECT DISTINCT gram, doc_id FROM g)
-        |  GROUP BY gram HAVING count(*) >= 2),
-        |dp AS (SELECT g.doc_id, g.pos FROM g JOIN d USING (gram)),
-        |lg AS (SELECT doc_id, pos,
-        |    lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
-        |  FROM dp),
-        |cov AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dup_pos,
-        |    CAST(sum(CASE WHEN prev IS NULL THEN 20
-        |      ELSE least(20, pos - prev) END) AS BIGINT) AS dup_chars
-        |  FROM lg GROUP BY doc_id)
-        |SELECT d0.doc_id, CAST(length(d0.text) AS BIGINT) AS doc_len,
-        |  coalesce(cov.n_dup_pos, 0) AS n_dup_pos,
-        |  coalesce(cov.dup_chars, 0) AS dup_chars,
-        |  round(CAST(coalesce(cov.dup_chars, 0) AS DOUBLE) /
-        |    length(d0.text), 4) AS dup_frac
-        |FROM documents d0 LEFT JOIN cov USING (doc_id)
-        |ORDER BY d0.doc_id""".stripMargin,
-
-    // oracle runs the NAIVE global running sum the operator's two-pass
-    // plan is provably equal to (binning is order-consistent with the
-    // sort key, so offsets + per-bin cumsum = the global cumsum)
-    "q142_curriculum" -> {
-      val ws = wsTokensSql("text")
-      s"""WITH tk AS (SELECT doc_id,
-         |    CAST(len($ws) AS BIGINT) AS n_tokens,
-         |    CAST(len(list_distinct($ws)) AS DOUBLE) / len($ws) AS score
-         |  FROM documents)
-         |SELECT doc_id, n_tokens, round(score, 4) AS score,
-         |  CAST(coalesce(sum(n_tokens) OVER (ORDER BY score DESC, doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |    // 2000 AS BIGINT) AS phase
-         |FROM tk ORDER BY doc_id""".stripMargin
-    },
-
-    // closed forms of the WAV fixture generator (rate = 8000+(id%4)·
-    // 4000 unused here; nch = id%2+1, frames = id%50+10, s(i,ch) =
-    // ((id·31+i·7+ch·13) % 2001) − 1000); a crossing is a flip of the
-    // s >= 0 predicate between consecutive frames of the same channel
-    "q143_audio_features" ->
-      """WITH base AS (SELECT doc_id, doc_id % 2 + 1 AS nch,
-        |    doc_id % 50 + 10 AS frames FROM documents),
-        |fr AS (SELECT doc_id, nch, frames,
-        |    unnest(generate_series(0, frames - 1)) AS i FROM base),
-        |smp AS (SELECT doc_id, frames, i,
-        |    unnest(generate_series(0, nch - 1)) AS ch FROM fr),
-        |v AS (SELECT doc_id, frames, ch, i,
-        |    ((doc_id * 31 + i * 7 + ch * 13) % 2001) - 1000 AS s
-        |  FROM smp),
-        |lg AS (SELECT doc_id, ch, i, s,
-        |    lag(s) OVER (PARTITION BY doc_id, ch ORDER BY i) AS prev
-        |  FROM v),
-        |agg AS (SELECT doc_id, ch,
-        |    CAST(count(*) AS BIGINT) AS n_frames,
-        |    CAST(sum(CASE WHEN prev IS NOT NULL
-        |      AND (s >= 0) <> (prev >= 0) THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS zero_crossings,
-        |    CAST(sum(CASE WHEN abs(s) < 100 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS silence_n,
-        |    CAST(max(abs(s)) AS BIGINT) AS peak,
-        |    CAST(sum(s) AS BIGINT) AS sum_samples
-        |  FROM lg GROUP BY doc_id, ch)
-        |SELECT doc_id, CAST(ch AS BIGINT) AS channel, n_frames,
-        |  zero_crossings, silence_n, peak, sum_samples
-        |FROM agg ORDER BY doc_id, channel""".stripMargin,
-
-    // q113's closed-form fixture replayed through the dHash bit rule:
-    // 5x2 cell grid, bit (y*4+x) when right cell mean > left cell mean
-    // (cross-multiplied, empty cells are 0/0 -> bit 0)
-    "q144_dhash_dup" ->
-      """WITH base AS (SELECT doc_id, doc_id % 16 + 1 AS w,
-        |    doc_id % 8 + 1 AS h FROM documents),
-        |xs AS (SELECT doc_id, w, h,
-        |    unnest(generate_series(0, w - 1)) AS x FROM base),
-        |px AS (SELECT doc_id, w, h, x,
-        |    unnest(generate_series(0, h - 1)) AS y FROM xs),
-        |g AS (SELECT doc_id,
-        |    (y * 2 // h) * 5 + (x * 5 // w) AS cell,
-        |    (doc_id + 7*x + 13*y) % 256 + (doc_id + 7*x + 13*y + 31) % 256
-        |      + (doc_id + 7*x + 13*y + 62) % 256 AS gray
-        |  FROM px),
-        |cells AS (SELECT doc_id, cell, sum(gray) AS cs, count(*) AS cc
-        |  FROM g GROUP BY doc_id, cell),
-        |allc AS (SELECT b.doc_id, c.cell FROM base b
-        |  CROSS JOIN (SELECT unnest(generate_series(0, 9)) AS cell) c),
-        |cc0 AS (SELECT a.doc_id, a.cell, coalesce(cs, 0) AS cs,
-        |    coalesce(cc, 0) AS cc
-        |  FROM allc a LEFT JOIN cells USING (doc_id, cell)),
-        |bits AS (SELECT l.doc_id, (l.cell // 5) * 4 + (l.cell % 5) AS bi,
-        |    CASE WHEN r.cs * l.cc > l.cs * r.cc THEN 1 ELSE 0 END AS bit
-        |  FROM cc0 l JOIN cc0 r
-        |  ON r.doc_id = l.doc_id AND r.cell = l.cell + 1
-        |  WHERE l.cell % 5 < 4),
-        |hs AS (SELECT doc_id,
-        |    CAST(sum(bit * (CAST(1 AS BIGINT) << bi)) AS BIGINT) AS dhash
-        |  FROM bits GROUP BY doc_id)
-        |SELECT a.doc_id AS id1, b.doc_id AS id2,
-        |  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS hamming,
-        |  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) <= 1 AS is_dup
-        |FROM hs a JOIN hs b
-        |  ON b.doc_id > a.doc_id AND b.doc_id <= a.doc_id + 8
-        |ORDER BY id1, id2""".stripMargin,
-
-    // per-vector folds run left-to-right in both engines (HOF aggregate
-    // vs list_aggregate), so the 6-dp norms agree bit-for-bit
-    "q145_embedding_hygiene" ->
-      """WITH v AS (SELECT label, len(embedding) AS dim,
-        |    CASE WHEN len(list_filter(embedding,
-        |        x -> NOT isfinite(CAST(x AS DOUBLE)))) > 0
-        |      THEN 1 ELSE 0 END AS bad,
-        |    CASE WHEN len(list_filter(embedding,
-        |        x -> CAST(x AS DOUBLE) <> 0)) = 0
-        |      THEN 1 ELSE 0 END AS zer,
-        |    round(sqrt(coalesce(list_aggregate(list_transform(embedding,
-        |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'), 0)), 6)
-        |      AS nrm
-        |  FROM embeddings)
-        |SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
-        |  CAST(min(dim) AS BIGINT) AS dim_min,
-        |  CAST(max(dim) AS BIGINT) AS dim_max,
-        |  CAST(sum(bad) AS BIGINT) AS n_nonfinite,
-        |  CAST(sum(zer) AS BIGINT) AS n_zero,
-        |  min(nrm) AS norm_min, max(nrm) AS norm_max,
-        |  round(avg(nrm), 4) AS norm_mean
-        |FROM v GROUP BY label ORDER BY label""".stripMargin,
-
-    // log2 replayed as ln(x)/ln(2) — the exact arithmetic shape of
-    // Spark's log(base, x), so the 6-dp metrics agree
-    "q146_retrieval_metrics" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-         |  FROM embeddings WHERE vec_id < 8),
-         |c AS (SELECT vec_id AS cand_id, embedding AS cv FROM embeddings),
-         |scored AS (SELECT query_id, cand_id,
-         |    round(${cosineSql("qv", "cv")}, 6) AS sim
-         |  FROM c, q WHERE query_id <> cand_id),
-         |ranked AS (SELECT *, row_number() OVER
-         |    (PARTITION BY query_id ORDER BY sim DESC, cand_id) AS rnk
-         |  FROM scored),
-         |truth AS (SELECT a.vec_id AS query_id, b.vec_id AS cand_id
-         |  FROM embeddings a JOIN embeddings b
-         |  ON a.label = b.label AND b.vec_id <> a.vec_id
-         |  WHERE a.vec_id < 8),
-         |rel AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_rel
-         |  FROM truth GROUP BY 1),
-         |hits AS (SELECT r.query_id, CAST(count(*) AS BIGINT) AS n_hits,
-         |    min(r.rnk) AS fr,
-         |    sum(CAST(1.0 AS DOUBLE) /
-         |      (ln(CAST(r.rnk AS DOUBLE) + 1) / ln(CAST(2.0 AS DOUBLE))))
-         |      AS dcg
-         |  FROM ranked r JOIN truth t
-         |  ON t.query_id = r.query_id AND t.cand_id = r.cand_id
-         |  WHERE r.rnk <= 10 GROUP BY 1),
-         |idcg AS (SELECT query_id, n_rel,
-         |    list_aggregate(list_transform(
-         |      generate_series(1, least(n_rel, 10)),
-         |      i -> CAST(1.0 AS DOUBLE) /
-         |        (ln(CAST(i AS DOUBLE) + 1) / ln(CAST(2.0 AS DOUBLE)))),
-         |      'sum') AS ideal
-         |  FROM rel)
-         |SELECT i.query_id, i.n_rel, coalesce(h.n_hits, 0) AS n_hits,
-         |  round(coalesce(CAST(1.0 AS DOUBLE) / h.fr, 0), 6) AS rr,
-         |  round(coalesce(h.dcg, 0) / i.ideal, 6) AS ndcg
-         |FROM idcg i LEFT JOIN hits h USING (query_id)
-         |ORDER BY query_id""".stripMargin,
-
-    // q113's aHash and q144's dHash replayed over ONE shared pixel CTE,
-    // pair sets OR'd, then the q44-style recursive closure
-    "q147_image_clusters" ->
-      """WITH RECURSIVE base AS (SELECT doc_id, doc_id % 16 + 1 AS w,
-        |    doc_id % 8 + 1 AS h FROM documents),
-        |xs AS (SELECT doc_id, w, h,
-        |    unnest(generate_series(0, w - 1)) AS x FROM base),
-        |px AS (SELECT doc_id, w, h, x,
-        |    unnest(generate_series(0, h - 1)) AS y FROM xs),
-        |pxg AS (SELECT doc_id, w, h, x, y,
-        |    (doc_id + 7*x + 13*y) % 256 + (doc_id + 7*x + 13*y + 31) % 256
-        |      + (doc_id + 7*x + 13*y + 62) % 256 AS gray
-        |  FROM px),
-        |acl AS (SELECT doc_id, (y * 2 // h) * 4 + (x * 4 // w) AS cell,
-        |    gray FROM pxg),
-        |ac AS (SELECT doc_id, cell, sum(gray) AS cs, count(*) AS cc
-        |  FROM acl GROUP BY doc_id, cell),
-        |atot AS (SELECT doc_id, sum(cs) AS ts, sum(cc) AS tc
-        |  FROM ac GROUP BY doc_id),
-        |aall AS (SELECT b.doc_id, c.cell FROM base b
-        |  CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS cell) c),
-        |abits AS (SELECT a.doc_id, a.cell,
-        |    CASE WHEN coalesce(cs, 0) * tc > ts * coalesce(cc, 0)
-        |         THEN 1 ELSE 0 END AS bit
-        |  FROM aall a LEFT JOIN ac USING (doc_id, cell)
-        |  JOIN atot USING (doc_id)),
-        |ahs AS (SELECT doc_id,
-        |    CAST(sum(bit * (CAST(1 AS BIGINT) << cell)) AS BIGINT) AS hv
-        |  FROM abits GROUP BY doc_id),
-        |dcl AS (SELECT doc_id, (y * 2 // h) * 5 + (x * 5 // w) AS cell,
-        |    gray FROM pxg),
-        |dc AS (SELECT doc_id, cell, sum(gray) AS cs, count(*) AS cc
-        |  FROM dcl GROUP BY doc_id, cell),
-        |dall AS (SELECT b.doc_id, c.cell FROM base b
-        |  CROSS JOIN (SELECT unnest(generate_series(0, 9)) AS cell) c),
-        |dcc0 AS (SELECT a.doc_id, a.cell, coalesce(cs, 0) AS cs,
-        |    coalesce(cc, 0) AS cc
-        |  FROM dall a LEFT JOIN dc USING (doc_id, cell)),
-        |dbits AS (SELECT l.doc_id, (l.cell // 5) * 4 + (l.cell % 5) AS bi,
-        |    CASE WHEN r.cs * l.cc > l.cs * r.cc THEN 1 ELSE 0 END AS bit
-        |  FROM dcc0 l JOIN dcc0 r
-        |  ON r.doc_id = l.doc_id AND r.cell = l.cell + 1
-        |  WHERE l.cell % 5 < 4),
-        |dhs AS (SELECT doc_id,
-        |    CAST(sum(bit * (CAST(1 AS BIGINT) << bi)) AS BIGINT) AS hv
-        |  FROM dbits GROUP BY doc_id),
-        |apairs AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-        |  FROM ahs a JOIN ahs b
-        |  ON b.doc_id > a.doc_id AND b.doc_id <= a.doc_id + 8
-        |  WHERE bit_count(xor(a.hv, b.hv)) <= 1),
-        |dpairs AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-        |  FROM dhs a JOIN dhs b
-        |  ON b.doc_id > a.doc_id AND b.doc_id <= a.doc_id + 8
-        |  WHERE bit_count(xor(a.hv, b.hv)) <= 1),
-        |pairs AS (SELECT id1, id2 FROM apairs
-        |  UNION SELECT id1, id2 FROM dpairs),
-        |edges AS (SELECT id1 AS a, id2 AS b FROM pairs
-        |  UNION SELECT id2 AS a, id1 AS b FROM pairs),
-        |closure(a, b) AS (
-        |  SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-        |  UNION
-        |  SELECT c.a, e.b FROM closure c JOIN edges e ON c.b = e.a),
-        |labels AS (SELECT a AS id, min(b) AS cluster
-        |  FROM closure GROUP BY a)
-        |SELECT cluster, count(*) AS n_members
-        |FROM labels GROUP BY cluster ORDER BY cluster""".stripMargin,
-
-    "q148_min_cost_supplier" ->
-      """WITH supply AS (SELECT l_partkey AS partkey, l_suppkey AS suppkey,
-        |    CAST(round(CAST(min(l_extendedprice / l_quantity)
-        |      AS DECIMAL(30,12)), 4) AS DOUBLE) AS unit_cost
-        |  FROM lineitem GROUP BY 1, 2),
-        |best AS (SELECT *, min(unit_cost) OVER (PARTITION BY partkey)
-        |    AS min_cost FROM supply)
-        |SELECT p_partkey, p_name, s_name AS supplier, n_name AS nation,
-        |  unit_cost
-        |FROM best
-        |JOIN supplier ON suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN part ON partkey = p_partkey
-        |WHERE unit_cost = min_cost AND p_size < 10
-        |ORDER BY p_partkey, supplier""".stripMargin,
-
-    "q149_important_parts" ->
-      """WITH rev AS (SELECT l_partkey,
-        |    sum(l_extendedprice * (1 - l_discount)) AS v
-        |  FROM lineitem GROUP BY 1),
-        |tot AS (SELECT sum(v) AS total,
-        |    CAST(count(*) AS BIGINT) AS n_parts FROM rev)
-        |SELECT l_partkey AS partkey, round(v, 2) AS value
-        |FROM rev, tot WHERE v > total / n_parts * 1.5
-        |ORDER BY value DESC, partkey""".stripMargin,
-
-    // scores replayed from the SAME stopword constants as q36; gap is
-    // computed from the rounded bin aggregates on both sides
-    "q150_langid_calibration" -> {
-      val langs = TextAnalysis.StopwordsByLang.sortBy(_._1)
-      val scoreCols = TextAnalysis.StopwordsByLang.map { case (l, words) =>
-        s"len(list_filter(toks, w -> list_contains(${sqlStringList(words)}, w))) AS score_$l"
-      }.mkString(",\n  ")
-      val mx = langs.map(l => s"score_${l._1}").mkString("greatest(", ", ", ")")
-      val guess = langs.map { case (l, _) =>
-        s"WHEN score_$l = best THEN '$l'"
-      }.mkString("\n      ")
-      s"""WITH t AS (SELECT doc_id, lang AS lang_true,
-         |    ${wsTokensSql("lower(text)")} AS toks FROM documents),
-         |sc AS (SELECT doc_id, lang_true, len(toks) AS n_toks,
-         |  $scoreCols
-         |  FROM t),
-         |b AS (SELECT *, $mx AS best FROM sc),
-         |p AS (SELECT
-         |    round(CASE WHEN n_toks > 0
-         |      THEN CAST(best AS DOUBLE) / n_toks ELSE 0 END, 6) AS conf,
-         |    CASE WHEN (CASE WHEN best = 0 THEN 'und'
-         |      $guess
-         |      END) = lang_true THEN 1 ELSE 0 END AS ok
-         |  FROM b),
-         |bn AS (SELECT CAST(least(floor(conf * 10), 9) AS INT) AS bin,
-         |    conf, ok FROM p)
-         |SELECT bin, CAST(count(*) AS BIGINT) AS n_docs,
-         |  round(avg(conf), 4) AS mean_conf, round(avg(ok), 4) AS accuracy,
-         |  round(abs(round(avg(conf), 4) - round(avg(ok), 4)), 4) AS gap
-         |FROM bn GROUP BY bin ORDER BY bin""".stripMargin
-    },
-
-    // q35's plane projections reused; each query's probe set = home
-    // bucket + the 2 smallest-|projection| bit flips (ties by bit)
-    "q151_multiprobe_lsh" -> {
-      val projs = (0 until 8).map(j => s"${planeProjSql(j)} AS p$j")
-        .mkString(",\n  ")
-      val bucket = (0 until 8)
-        .map(j => s"(CASE WHEN p$j > 0 THEN CAST(${1L << j} AS BIGINT) ELSE 0 END)")
-        .mkString(" + ")
-      val probeRows = (0 until 8).map(j =>
-        s"SELECT vec_id, abs(p$j) AS a, $j AS j, CAST(${1L << j} AS BIGINT) AS m FROM sig WHERE vec_id < 8")
-        .mkString("\nUNION ALL\n")
-      s"""WITH sig AS (SELECT vec_id,
-         |  $projs
-         |  FROM embeddings),
-         |b AS (SELECT vec_id, $bucket AS bucket FROM sig),
-         |pl AS (
-         |$probeRows),
-         |fl AS (SELECT vec_id, m, row_number() OVER
-         |    (PARTITION BY vec_id ORDER BY a, j) AS rn FROM pl),
-         |masks AS (SELECT vec_id, CAST(0 AS BIGINT) AS m
-         |  FROM b WHERE vec_id < 8
-         |  UNION ALL SELECT vec_id, m FROM fl WHERE rn <= 2),
-         |q AS (SELECT e.vec_id AS query_id, e.embedding AS qv,
-         |    xor(b.bucket, mk.m) AS bucket
-         |  FROM embeddings e JOIN b ON e.vec_id = b.vec_id
-         |  JOIN masks mk ON mk.vec_id = e.vec_id WHERE e.vec_id < 8),
-         |c AS (SELECT e.vec_id AS cand_id, e.embedding AS cv, b.bucket
-         |  FROM embeddings e JOIN b ON e.vec_id = b.vec_id),
-         |scored AS (
-         |  SELECT query_id, cand_id, round(${cosineSql("qv", "cv")}, 6) AS sim
-         |  FROM c JOIN q USING (bucket) WHERE query_id <> cand_id),
-         |ranked AS (SELECT *, row_number() OVER
-         |    (PARTITION BY query_id ORDER BY sim DESC, cand_id) AS "rank"
-         |  FROM scored)
-         |SELECT query_id, cand_id, sim, CAST("rank" AS INT) AS "rank"
-         |FROM ranked WHERE "rank" <= 5
-         |ORDER BY query_id, "rank"""".stripMargin
-    },
-
-    // q44's closure re-derived; split key = coalesce(cluster, doc_id),
-    // same md5-window hash bucketing as Sampling.pctBucket
-    "q152_leakage_split" ->
-      s"""WITH RECURSIVE $lshPairsCteSql,
-         |edges AS (SELECT id1 AS a, id2 AS b FROM pairs
-         |  UNION SELECT id2 AS a, id1 AS b FROM pairs),
-         |closure(a, b) AS (
-         |  SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-         |  UNION
-         |  SELECT c.a, e.b FROM closure c JOIN edges e ON c.b = e.a),
-         |labels AS (SELECT a AS id, min(b) AS cluster
-         |  FROM closure GROUP BY a),
-         |keyed AS (SELECT d.doc_id,
-         |    coalesce(l.cluster, d.doc_id) AS split_key
-         |  FROM documents d LEFT JOIN labels l ON l.id = d.doc_id),
-         |bk AS (SELECT split_key,
-         |    ${hash32Sql("CAST(split_key AS VARCHAR)")} % 100 AS bucket
-         |  FROM keyed)
-         |SELECT CASE WHEN bucket < 80 THEN 'train'
-         |    WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split,
-         |  CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(count(DISTINCT split_key) AS BIGINT) AS n_clusters
-         |FROM bk GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q153_k_anonymity" ->
-      """WITH g AS (SELECT c_nationkey, c_mktsegment,
-        |    CAST(count(*) AS BIGINT) AS grp_n
-        |  FROM customer GROUP BY 1, 2)
-        |SELECT 10 AS k, CAST(count(*) AS BIGINT) AS n_groups,
-        |  CAST(sum(grp_n) AS BIGINT) AS n_rows,
-        |  CAST(min(grp_n) AS BIGINT) AS min_group,
-        |  CAST(sum(CASE WHEN grp_n < 10 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS groups_below_k,
-        |  CAST(sum(CASE WHEN grp_n < 10 THEN grp_n ELSE 0 END) AS BIGINT)
-        |    AS rows_below_k,
-        |  round(sum(CASE WHEN grp_n < 10 THEN grp_n ELSE 0 END) * 100.0e0
-        |    / sum(grp_n), 6) AS at_risk_pct
-        |FROM g""".stripMargin,
-
-    // weights generated from the same k as TimeSeriesOps.dyadicEwma;
-    // j = 0 reads the current row directly (no lag-0)
-    "q154_ewma" -> {
-      val k = 8
-      def src(j: Int) = if (j == 0) "cents" else s"lag(cents, $j) OVER w"
-      val num = (0 until k)
-        .map(j => s"coalesce(${src(j)} * ${1L << (k - 1 - j)}, 0)")
-        .mkString(" + ")
-      val den = (0 until k)
-        .map(j => s"(CASE WHEN ${src(j)} IS NOT NULL THEN ${1L << (k - 1 - j)} ELSE 0 END)")
-        .mkString(" + ")
-      s"""WITH e AS (SELECT event_type, event_id, ts,
-         |    CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-         |l AS (SELECT event_type, event_id, cents,
-         |    $num AS ewma_num,
-         |    $den AS ewma_den
-         |  FROM e WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id))
-         |SELECT event_type, event_id, cents,
-         |  CAST(ewma_num AS BIGINT) AS ewma_num,
-         |  CAST(ewma_den AS BIGINT) AS ewma_den,
-         |  round(CAST(ewma_num AS DOUBLE) / ewma_den, 6) AS ewma
-         |FROM l ORDER BY event_type, event_id""".stripMargin
-    },
-
-    // water-filling closed form: sort by r = cap/w, the level is t at
-    // the FIRST row with r >= t; all prefix sums are exact BIGINTs
-    "q155_token_budget" ->
-      s"""WITH m AS (SELECT source, CAST(sum(n_chars) AS BIGINT) AS available,
-         |    10 + (${hash32Sql("source")} % 191) AS weight_mw
-         |  FROM documents GROUP BY source),
-         |tot AS (SELECT 2 * CAST(sum(available) AS BIGINT) AS budget FROM m),
-         |b AS (SELECT source, available, weight_mw,
-         |    available * 3 AS cap,
-         |    CAST(available * 3 AS DOUBLE) / weight_mw AS r FROM m),
-         |w AS (SELECT *,
-         |    coalesce(sum(cap) OVER (ORDER BY r, source
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS cap_pre,
-         |    coalesce(sum(weight_mw) OVER (ORDER BY r, source
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS w_pre,
-         |    sum(weight_mw) OVER () AS w_tot
-         |  FROM b),
-         |lv AS (SELECT w.*,
-         |    CAST(budget - cap_pre AS DOUBLE) / (w_tot - w_pre) AS t
-         |  FROM w, tot),
-         |st AS (SELECT *, first_value(CASE WHEN r >= t THEN t END
-         |      IGNORE NULLS)
-         |    OVER (ORDER BY r, source ROWS BETWEEN UNBOUNDED PRECEDING
-         |      AND UNBOUNDED FOLLOWING) AS t_star FROM lv),
-         |al AS (SELECT source, available, cap, weight_mw,
-         |    CASE WHEN t_star IS NULL THEN cap
-         |      ELSE least(cap, CAST(floor(t_star * weight_mw) AS BIGINT))
-         |      END AS allocated
-         |  FROM st)
-         |SELECT source, available, CAST(cap AS BIGINT) AS cap,
-         |  CAST(weight_mw AS BIGINT) AS weight_mw,
-         |  CAST(allocated AS BIGINT) AS allocated,
-         |  round(CAST(allocated AS DOUBLE) / available, 6) AS epochs
-         |FROM al ORDER BY source""".stripMargin,
-
-    // DEFLATE byte counts are not SQL-expressible, so the gate frame
-    // compares what IS: n_bytes exactly (UTF-8 length via encode) and
-    // two codec self-check booleans whose correct value is the
-    // constant TRUE — `deflate_ok` (worst-case size bound + ratio
-    // consistency) and `roundtrip_ok` (inflate(deflate(text)) ==
-    // text, computed in the Spark pass). A codec regression flips a
-    // boolean and the hash goes red; the exact byte values are pinned
-    // by OperatorsSpec's independent java.util.zip recompute.
-    "q156_deflate_ratio" ->
-      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  TRUE AS deflate_ok, TRUE AS roundtrip_ok
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // 4-dp centroids (same quantization as the operator), sequential-
-    // fold cosine, exact discrete 5th percentile over the 6-dp domain
-    "q157_embedding_outliers" ->
-      s"""WITH pos AS (SELECT label, vec_id, unnest(embedding) AS x,
-         |    unnest(generate_series(1, len(embedding))) AS d
-         |  FROM embeddings),
-         |cen AS (SELECT label, d, round(avg(CAST(x AS DOUBLE)), 4) AS c
-         |  FROM pos GROUP BY label, d),
-         |cent AS (SELECT label, list(c ORDER BY d) AS centroid
-         |  FROM cen GROUP BY label),
-         |sc AS (SELECT e.label, e.vec_id,
-         |    round(${cosineSql("e.embedding", "ct.centroid")}, 6)
-         |      AS cos_centroid
-         |  FROM embeddings e JOIN cent ct USING (label)),
-         |vg AS (SELECT label, cos_centroid AS v,
-         |    CAST(count(*) AS BIGINT) AS cnt FROM sc GROUP BY 1, 2),
-         |cm AS (SELECT label, v,
-         |    sum(cnt) OVER (PARTITION BY label ORDER BY v) AS cum,
-         |    sum(cnt) OVER (PARTITION BY label) AS n FROM vg),
-         |th AS (SELECT label, min(v) AS threshold FROM cm
-         |  WHERE CAST(cum AS DOUBLE) >= 0.05e0 * n GROUP BY label)
-         |SELECT sc.label, sc.vec_id, sc.cos_centroid, th.threshold,
-         |  sc.cos_centroid <= th.threshold AS is_outlier
-         |FROM sc JOIN th USING (label)
-         |ORDER BY sc.label, sc.vec_id""".stripMargin,
-
-    // 3 unrolled greedy MMR steps at λ=0.7 over the top-10 pool.
-    // Scores are EXACT integers (1e-7 units: 7·rel6 − 3·ms6 over 6-dp-
-    // scaled sims) — λ-arithmetic on 6-dp doubles lands exactly on
-    // decimal rounding boundaries, where engines disagree; FP appears
-    // only in the display divisions, mirroring Similarity.mmrRerank
-    "q158_mmr_rerank" ->
-      s"""WITH sc0 AS (SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-         |    round(${cosineSql("q.embedding", "c.embedding")}, 6) AS rel
-         |  FROM embeddings q JOIN embeddings c ON q.vec_id < 8
-         |    AND c.vec_id <> q.vec_id),
-         |pool AS (SELECT *, CAST(round(rel * 1e6) AS BIGINT) AS rel6,
-         |    row_number() OVER (PARTITION BY query_id
-         |    ORDER BY rel DESC, cand_id) AS rnk FROM sc0),
-         |pk AS (SELECT query_id, cand_id, rel, rel6 FROM pool
-         |  WHERE rnk <= 10),
-         |ps AS (SELECT a.query_id, a.cand_id, b.cand_id AS sel_id,
-         |    CAST(round(${cosineSql("ea.embedding", "eb.embedding")} * 1e6)
-         |      AS BIGINT) AS csim6
-         |  FROM pk a JOIN pk b ON a.query_id = b.query_id
-         |    AND a.cand_id <> b.cand_id
-         |  JOIN embeddings ea ON ea.vec_id = a.cand_id
-         |  JOIN embeddings eb ON eb.vec_id = b.cand_id),
-         |s1 AS (SELECT query_id, cand_id, 1 AS mmr_rank, rel,
-         |    0.0e0 AS max_sim_sel,
-         |    CAST(7 * rel6 AS DOUBLE) / 1e7 AS mmr_score
-         |  FROM pool WHERE rnk = 1),
-         |r1 AS (SELECT p.* FROM pk p WHERE NOT EXISTS (SELECT 1 FROM s1
-         |  WHERE s1.query_id = p.query_id AND s1.cand_id = p.cand_id)),
-         |g2 AS (SELECT r.query_id, r.cand_id, max(r.rel) AS rel,
-         |    max(r.rel6) AS rel6, max(ps.csim6) AS ms6
-         |  FROM r1 r JOIN s1 ON s1.query_id = r.query_id
-         |  JOIN ps ON ps.query_id = r.query_id AND ps.cand_id = r.cand_id
-         |    AND ps.sel_id = s1.cand_id
-         |  GROUP BY r.query_id, r.cand_id),
-         |m2 AS (SELECT *, 7 * rel6 - 3 * ms6 AS sc FROM g2),
-         |w2 AS (SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY sc DESC, cand_id) AS rn FROM m2),
-         |s2 AS (SELECT query_id, cand_id, 2 AS mmr_rank, rel,
-         |    CAST(ms6 AS DOUBLE) / 1e6 AS max_sim_sel,
-         |    CAST(sc AS DOUBLE) / 1e7 AS mmr_score FROM w2 WHERE rn = 1),
-         |sel2 AS (SELECT query_id, cand_id FROM s1
-         |  UNION ALL SELECT query_id, cand_id FROM s2),
-         |r2 AS (SELECT p.* FROM pk p WHERE NOT EXISTS (SELECT 1 FROM sel2
-         |  WHERE sel2.query_id = p.query_id AND sel2.cand_id = p.cand_id)),
-         |g3 AS (SELECT r.query_id, r.cand_id, max(r.rel) AS rel,
-         |    max(r.rel6) AS rel6, max(ps.csim6) AS ms6
-         |  FROM r2 r JOIN sel2 s ON s.query_id = r.query_id
-         |  JOIN ps ON ps.query_id = r.query_id AND ps.cand_id = r.cand_id
-         |    AND ps.sel_id = s.cand_id
-         |  GROUP BY r.query_id, r.cand_id),
-         |m3 AS (SELECT *, 7 * rel6 - 3 * ms6 AS sc FROM g3),
-         |w3 AS (SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY sc DESC, cand_id) AS rn FROM m3),
-         |s3 AS (SELECT query_id, cand_id, 3 AS mmr_rank, rel,
-         |    CAST(ms6 AS DOUBLE) / 1e6 AS max_sim_sel,
-         |    CAST(sc AS DOUBLE) / 1e7 AS mmr_score FROM w3 WHERE rn = 1)
-         |SELECT query_id, cand_id, mmr_rank, rel, max_sim_sel, mmr_score
-         |FROM s1 UNION ALL SELECT query_id, cand_id, mmr_rank, rel,
-         |  max_sim_sel, mmr_score FROM s2
-         |UNION ALL SELECT query_id, cand_id, mmr_rank, rel, max_sim_sel,
-         |  mmr_score FROM s3
-         |ORDER BY query_id, mmr_rank""".stripMargin,
-
-    // exact HUGEINT power sums (sum(BIGINT) promotes), FP only in the
-    // final one-row formula — generated from the same column list
-    "q159_corr_matrix" -> {
-      val cs = Seq("l_discount", "l_extendedprice", "l_quantity", "l_tax")
-      val defs = cs.map(c => s"CAST(round($c * 100) AS BIGINT) AS x_$c")
-        .mkString(", ")
-      val sums = (cs.map(c => s"sum(x_$c) AS s_$c") ++
-        cs.map(c => s"sum(x_$c * x_$c) AS ss_$c") ++
-        (for { i <- cs.indices; j <- cs.indices if i < j }
-          yield s"sum(x_${cs(i)} * x_${cs(j)}) AS sp_${cs(i)}_${cs(j)}"))
-        .mkString(",\n    ")
-      val selects = (for { i <- cs.indices; j <- cs.indices if i < j }
-        yield {
-          val (a, b) = (cs(i), cs(j))
-          s"""SELECT '$a' AS col_x, '$b' AS col_y, CAST(n AS BIGINT) AS n,
-             |  round(CAST(n * sp_${a}_$b - s_$a * s_$b AS DOUBLE) /
-             |    nullif(sqrt(CAST(n * ss_$a - s_$a * s_$a AS DOUBLE)) *
-             |      sqrt(CAST(n * ss_$b - s_$b * s_$b AS DOUBLE)), 0.0e0),
-             |    6) AS corr
-             |  FROM s""".stripMargin
-        }).mkString("\nUNION ALL\n")
-      s"""WITH c AS (SELECT $defs FROM lineitem),
-         |s AS (SELECT CAST(count(*) AS HUGEINT) AS n,
-         |    $sums
-         |  FROM c)
-         |$selects
-         |ORDER BY col_x, col_y""".stripMargin
-    },
-
-    // cell-sorted list folds pin the IEEE summation order; NMI uses
-    // the UNROUNDED entropies (the 6-dp rounding is output-only)
-    "q160_mutual_info" ->
-      """WITH cells AS (SELECT CAST(lang AS VARCHAR) AS x,
-        |    CAST(source AS VARCHAR) AS y, CAST(count(*) AS BIGINT) AS cxy
-        |  FROM documents GROUP BY 1, 2),
-        |xs AS (SELECT x, CAST(sum(cxy) AS BIGINT) AS cx
-        |  FROM cells GROUP BY x),
-        |ys AS (SELECT y, CAST(sum(cxy) AS BIGINT) AS cy
-        |  FROM cells GROUP BY y),
-        |tot AS (SELECT CAST(sum(cxy) AS BIGINT) AS n FROM cells),
-        |terms AS (SELECT c.x, c.y,
-        |    CAST(cxy AS DOUBLE) / n *
-        |      ln((CAST(cxy AS DOUBLE) * n) / (CAST(cx AS DOUBLE) * cy))
-        |      AS term
-        |  FROM cells c JOIN xs USING (x) JOIN ys USING (y), tot),
-        |mi AS (SELECT list_aggregate(list(term ORDER BY x, y), 'sum')
-        |    AS mi FROM terms),
-        |hx AS (SELECT list_aggregate(list(
-        |    -(CAST(cx AS DOUBLE) / n) * ln(CAST(cx AS DOUBLE) / n)
-        |    ORDER BY x), 'sum') AS h_x FROM xs, tot),
-        |hy AS (SELECT list_aggregate(list(
-        |    -(CAST(cy AS DOUBLE) / n) * ln(CAST(cy AS DOUBLE) / n)
-        |    ORDER BY y), 'sum') AS h_y FROM ys, tot)
-        |SELECT n, round(h_x, 6) AS h_x, round(h_y, 6) AS h_y,
-        |  round(mi, 6) AS mi,
-        |  round(mi / nullif(least(h_x, h_y), 0.0e0), 6) AS nmi
-        |FROM tot, hx, hy, mi""".stripMargin,
-
-    "q161_local_supplier_volume" ->
-      """SELECT n_name AS nation,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n_name
-        |ORDER BY revenue DESC, nation""".stripMargin,
-
-    "q162_nation_trade" ->
-      """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-        |  CAST(year(l_shipdate) AS INT) AS ship_year,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation cn ON c_nationkey = cn.n_nationkey
-        |WHERE sn.n_name IN ('NATION_1', 'NATION_2')
-        |  AND cn.n_name IN ('NATION_1', 'NATION_2')
-        |  AND sn.n_name <> cn.n_name
-        |  AND l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1, 2, 3
-        |ORDER BY 1, 2, 3""".stripMargin,
-
-    "q163_product_profit" ->
-      """SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS order_year,
-        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
-        |    - 0.6 * p_retailprice * l_quantity AS DECIMAL(30,10))), 2)
-        |    AS DOUBLE) AS profit
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |WHERE p_type = 'PROMO'
-        |GROUP BY 1, 2
-        |ORDER BY nation, order_year DESC""".stripMargin,
-
-    "q164_returned_customers" ->
-      """SELECT c_custkey, c_name, n_name AS nation,
-        |  round(c_acctbal, 2) AS acctbal,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        |FROM orders
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1996-10-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY 1, 2, 3, 4
-        |ORDER BY revenue DESC, c_custkey
-        |LIMIT 20""".stripMargin,
-
-    "q165_priority_lines" ->
-      """SELECT l_linestatus,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS critical_lines,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-        |    THEN 0 ELSE 1 END) AS BIGINT) AS other_lines
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY l_linestatus
-        |ORDER BY l_linestatus""".stripMargin,
-
-    "q166_promo_share" ->
-      """SELECT round(
-        |  sum(CASE WHEN p_type = 'PROMO'
-        |      THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END) * 100.0
-        |  / sum(l_extendedprice * (1 - l_discount)), 4) AS promo_share_pct
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-03-01'
-        |  AND l_shipdate < TIMESTAMP '1997-04-01'""".stripMargin,
-
-    "q167_large_orders" ->
-      """WITH big AS (
-        |  SELECT l_orderkey, round(sum(l_quantity), 2) AS total_qty
-        |  FROM lineitem GROUP BY l_orderkey
-        |  HAVING round(sum(l_quantity), 2) > 250.0)
-        |SELECT c_custkey, c_name, o_orderkey,
-        |  CAST(o_orderdate AS DATE) AS order_date,
-        |  round(o_totalprice, 2) AS total_price, total_qty
-        |FROM orders
-        |JOIN big ON o_orderkey = l_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY total_qty DESC, o_orderkey""".stripMargin,
-
-    "q168_text_fold" ->
-      """SELECT doc_id,
-        |  lower(strip_accents(nfc_normalize(
-        |    'Café Ñandú ÀÉÎÕÜ ' || substr(text, 1, 40)))) AS folded
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    "q169_jaro_winkler" ->
-      """WITH blocked AS (
-        |  SELECT c_custkey, c_name,
-        |    CAST(c_custkey // 100 AS VARCHAR) AS block
-        |  FROM customer),
-        |pairs AS (
-        |  SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
-        |    round(jaro_winkler_similarity(a.c_name, b.c_name), 4) AS sim
-        |  FROM blocked a JOIN blocked b USING (block)
-        |  WHERE a.c_custkey < b.c_custkey),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (PARTITION BY id_a
-        |    ORDER BY sim DESC, id_b) AS rk
-        |  FROM pairs WHERE sim >= 0.9)
-        |SELECT id_a, id_b, sim FROM ranked WHERE rk <= 2
-        |ORDER BY id_a, sim DESC, id_b""".stripMargin,
-
-    "q170_ref_integrity" ->
-      """WITH checks AS (
-        |  SELECT 'lineitem.orderkey' AS "check",
-        |    count(*) AS "rows",
-        |    count(*) FILTER (WHERE o_orderkey IS NULL) AS orphans
-        |  FROM lineitem LEFT JOIN orders ON l_orderkey = o_orderkey
-        |  UNION ALL
-        |  SELECT 'lineitem.partkey', count(*),
-        |    count(*) FILTER (WHERE p_partkey IS NULL)
-        |  FROM lineitem LEFT JOIN part ON l_partkey = p_partkey
-        |  UNION ALL
-        |  SELECT 'lineitem.suppkey', count(*),
-        |    count(*) FILTER (WHERE s_suppkey IS NULL)
-        |  FROM lineitem LEFT JOIN supplier ON l_suppkey = s_suppkey
-        |  UNION ALL
-        |  SELECT 'orders.custkey', count(*),
-        |    count(*) FILTER (WHERE c_custkey IS NULL)
-        |  FROM orders LEFT JOIN customer ON o_custkey = c_custkey
-        |  UNION ALL
-        |  SELECT 'events.user_id', count(*),
-        |    count(*) FILTER (WHERE c_custkey IS NULL)
-        |  FROM events LEFT JOIN customer ON user_id = c_custkey
-        |    WHERE user_id IS NOT NULL)
-        |SELECT * FROM checks ORDER BY "check"""".stripMargin,
-
-    "q171_benford" ->
-      """WITH counts AS (
-        |  SELECT CAST(substr(CAST(CAST(floor(o_totalprice) AS BIGINT)
-        |      AS VARCHAR), 1, 1) AS INT) AS digit,
-        |    count(*) AS n
-        |  FROM orders WHERE o_totalprice >= 1.0
-        |  GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM counts)
-        |SELECT digit, n,
-        |  round(n / total, 6) AS obs_share,
-        |  round(log10(1.0 + 1.0 / digit), 6) AS exp_share,
-        |  round(total * pow(n / total - log10(1.0 + 1.0 / digit), 2)
-        |    / log10(1.0 + 1.0 / digit), 6) AS chi2_term
-        |FROM counts, tot
-        |ORDER BY digit""".stripMargin,
-
-    "q172_random_projection" ->
-      """WITH e AS (
-        |  SELECT vec_id, unnest(embedding) AS v,
-        |    generate_subscripts(embedding, 1) - 1 AS j
-        |  FROM embeddings),
-        |dims AS (SELECT unnest(range(8)) AS dim),
-        |terms AS (
-        |  SELECT vec_id, dim, j,
-        |    v * (CASE WHEN (j * 1103515245 + dim * 12345 + 54321)
-        |        % 97 % 2 = 0 THEN 1.0 ELSE -1.0 END) AS term
-        |  FROM e, dims)
-        |SELECT vec_id, CAST(dim AS INT) AS dim,
-        |  round(list_aggregate(list(term ORDER BY j), 'sum')
-        |    / sqrt(8.0), 6) AS value
-        |FROM terms
-        |GROUP BY vec_id, dim
-        |ORDER BY vec_id, dim""".stripMargin,
-
-    "q173_standardize_dims" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-        |    CAST(generate_subscripts(embedding, 1) - 1 AS INT) AS dim
-        |  FROM embeddings),
-        |stats AS (
-        |  SELECT dim, avg(v) AS mu, stddev_pop(v) AS sd
-        |  FROM e GROUP BY dim)
-        |SELECT vec_id, dim,
-        |  round(CASE WHEN sd > 0.0 THEN (v - mu) / sd END, 5) AS z
-        |FROM e JOIN stats USING (dim)
-        |ORDER BY vec_id, dim""".stripMargin,
-
-    "q174_copurchase_lift" ->
-      """WITH items AS (
-        |  SELECT DISTINCT l_orderkey AS b, p_brand AS i
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey),
-        |nb AS (SELECT count(DISTINCT b) AS n_baskets FROM items),
-        |marg AS (SELECT i, count(*) AS n FROM items GROUP BY i),
-        |pairs AS (
-        |  SELECT a.i AS item_a, b2.i AS item_b, count(*) AS n_both
-        |  FROM items a JOIN items b2 ON a.b = b2.b AND a.i < b2.i
-        |  GROUP BY 1, 2
-        |  HAVING count(*) >= 5)
-        |SELECT item_a, item_b, n_both,
-        |  ma.n AS n_a, mb.n AS n_b,
-        |  round(CAST(n_both AS DOUBLE) * n_baskets / (ma.n * mb.n), 4)
-        |    AS lift
-        |FROM pairs
-        |JOIN marg ma ON pairs.item_a = ma.i
-        |JOIN marg mb ON pairs.item_b = mb.i, nb
-        |ORDER BY item_a, item_b""".stripMargin,
-
-    "q175_pca_power" ->
-      """WITH e AS (
-        |  SELECT vec_id,
-        |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 10000.0)
-        |      AS BIGINT) AS xq,
-        |    CAST(generate_subscripts(embedding, 1) - 1 AS INT) AS i
-        |  FROM embeddings),
-        |nn AS (SELECT count(*) AS n FROM embeddings),
-        |sx AS (SELECT i, sum(xq) AS sx FROM e GROUP BY i),
-        |sxy AS (
-        |  SELECT a.i AS i, b.i AS j, sum(a.xq * b.xq) AS sxy
-        |  FROM e a JOIN e b USING (vec_id) GROUP BY 1, 2),
-        |cov AS (
-        |  SELECT sxy.i, sxy.j,
-        |    CAST(round((CAST(sxy AS DOUBLE) / n
-        |      - CAST(si.sx AS DOUBLE) * CAST(sj.sx AS DOUBLE) / n / n)
-        |      / 100.0) AS HUGEINT) AS c
-        |  FROM sxy JOIN sx si ON sxy.i = si.i
-        |  JOIN sx sj ON sxy.j = sj.i, nn),
-        |w1 AS (SELECT i, sum(c) AS w FROM cov GROUP BY i),
-        |w2 AS (SELECT cov.i, sum(c * w1.w) AS w
-        |  FROM cov JOIN w1 ON cov.j = w1.i GROUP BY cov.i),
-        |w3 AS (SELECT cov.i, sum(c * w2.w) AS w
-        |  FROM cov JOIN w2 ON cov.j = w2.i GROUP BY cov.i),
-        |ref3 AS (SELECT w AS ref, abs(w) AS maxabs FROM w3
-        |  ORDER BY abs(w) DESC, i LIMIT 1),
-        |ref2 AS (SELECT abs(w) AS maxabs_prev FROM w2
-        |  ORDER BY abs(w) DESC, i LIMIT 1)
-        |SELECT i AS dim,
-        |  round(CAST(w AS DOUBLE) / CAST(ref AS DOUBLE), 6) AS loading,
-        |  round(CAST(maxabs AS DOUBLE) / CAST(maxabs_prev AS DOUBLE)
-        |    / 1000000.0, 6) AS eigenvalue
-        |FROM w3, ref3, ref2
-        |ORDER BY dim""".stripMargin,
-
-    // the q103 training replay (same generated CTE chain) feeding the
-    // ENCODE path: held-out reversed words segmented by the trained
-    // merge list alone — replace() applies each rank left-to-right
-    // non-overlapping in both engines, i.e. greedy BPE
-    "q176_bpe_encode" -> {
-      val iters = (1 to TextAnalysis.BpeMerges).map { i =>
-        val prev = s"w${i - 1}"
-        s"""s$i AS (SELECT seg, freq,
-           |    unnest(generate_series(1,
-           |      len(string_split(seg, ' ')) - 1)) AS i
-           |  FROM $prev),
-           |p$i AS (SELECT string_split(seg, ' ')[i] || ' ' ||
-           |    string_split(seg, ' ')[i + 1] AS pair, sum(freq) AS c
-           |  FROM s$i GROUP BY 1),
-           |m$i AS (SELECT pair FROM p$i ORDER BY c DESC, pair LIMIT 1),
-           |w$i AS (SELECT w.word, w.freq,
-           |    replace(w.seg, m.pair, replace(m.pair, '> <', '')) AS seg
-           |  FROM $prev w, m$i m)""".stripMargin
-      }.mkString(",\n")
-      val encodes = (1 to TextAnalysis.BpeMerges).map { i =>
-        s"""e$i AS (SELECT word,
-           |    replace(w.seg, m.pair, replace(m.pair, '> <', '')) AS seg
-           |  FROM e${i - 1} w, m$i m)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH docw AS (SELECT doc_id,
-         |    unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS word
-         |  FROM documents),
-         |w0 AS (SELECT word, CAST(count(*) AS BIGINT) AS freq,
-         |    array_to_string(list_transform(regexp_extract_all(word, '.'),
-         |      x -> '<' || x || '>'), ' ') AS seg
-         |  FROM docw GROUP BY word),
-         |$iters,
-         |held AS (SELECT DISTINCT reverse(word) AS word
-         |  FROM docw WHERE doc_id % 7 = 0),
-         |e0 AS (SELECT word,
-         |    array_to_string(list_transform(regexp_extract_all(word, '.'),
-         |      x -> '<' || x || '>'), ' ') AS seg
-         |  FROM held),
-         |$encodes
-         |SELECT word, seg,
-         |  CAST(len(string_split(seg, ' ')) AS BIGINT) AS n_tokens
-         |FROM e${TextAnalysis.BpeMerges}
-         |ORDER BY word""".stripMargin
-    },
-
-    "q177_attribution" ->
-      """WITH t AS (
-        |  SELECT user_id, event_type, value,
-        |    first_value(CASE WHEN event_type <> 'purchase'
-        |        THEN event_type END IGNORE NULLS)
-        |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS f,
-        |    last_value(CASE WHEN event_type <> 'purchase'
-        |        THEN event_type END IGNORE NULLS)
-        |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS l
-        |  FROM events),
-        |p AS (SELECT * FROM t WHERE event_type = 'purchase')
-        |SELECT * FROM (
-        |  SELECT 'first' AS model, f AS touch_type,
-        |    count(*) AS n_conversions, round(sum(value), 4) AS revenue
-        |  FROM p GROUP BY 2
-        |  UNION ALL
-        |  SELECT 'last', l, count(*), round(sum(value), 4)
-        |  FROM p GROUP BY 2)
-        |ORDER BY model, touch_type NULLS FIRST""".stripMargin,
-
-    "q178_triangles" ->
-      """WITH items AS (
-        |  SELECT DISTINCT l_orderkey AS bk, p_brand AS it
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey),
-        |e AS (
-        |  SELECT a.it AS a, b2.it AS b
-        |  FROM items a JOIN items b2 ON a.bk = b2.bk AND a.it < b2.it
-        |  GROUP BY 1, 2
-        |  HAVING count(*) >= 5),
-        |wedge AS (
-        |  SELECT e1.a, e1.b, e2.b AS c
-        |  FROM e e1 JOIN e e2 ON e1.b = e2.a),
-        |tri AS (
-        |  SELECT w.a, w.b, w.c
-        |  FROM wedge w JOIN e e3 ON w.a = e3.a AND w.c = e3.b),
-        |nodes AS (SELECT unnest([a, b, c]) AS node FROM tri)
-        |SELECT node, CAST(count(*) AS BIGINT) AS n_triangles
-        |FROM nodes GROUP BY node
-        |ORDER BY node""".stripMargin,
-
-    "q179_equi_depth" ->
-      """WITH t AS (
-        |  SELECT event_type, value,
-        |    CAST(ntile(10) OVER (PARTITION BY event_type
-        |      ORDER BY value, event_id) AS INT) AS bin
-        |  FROM events)
-        |SELECT event_type, bin, count(*) AS n,
-        |  round(min(value), 4) AS v_min, round(max(value), 4) AS v_max
-        |FROM t GROUP BY 1, 2
-        |ORDER BY event_type, bin""".stripMargin,
-
-    "q180_key_skew" ->
-      """WITH kc AS (
-        |  SELECT l_partkey, CAST(count(*) AS BIGINT) AS c
-        |  FROM lineitem GROUP BY 1),
-        |g AS (SELECT c, CAST(count(*) AS BIGINT) AS m FROM kc GROUP BY c),
-        |o AS (SELECT c, m,
-        |    coalesce(sum(m) OVER (ORDER BY c
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off,
-        |    coalesce(sum(m) OVER (ORDER BY c DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS ct
-        |  FROM g),
-        |a AS (SELECT
-        |    CAST(sum(m) AS BIGINT) AS n_keys,
-        |    CAST(sum(c * m) AS BIGINT) AS n_rows,
-        |    max(c) AS maxc,
-        |    CAST(sum(c * greatest(0, least(m, 10 - ct))) AS BIGINT)
-        |      AS top10,
-        |    CAST(sum(c * (m * off + m * (m + 1) // 2)) AS BIGINT) AS ic
-        |  FROM o)
-        |SELECT n_keys, n_rows,
-        |  round(maxc / n_rows, 6) AS max_share,
-        |  round(top10 / n_rows, 6) AS top10_share,
-        |  round((2 * ic - (n_keys + 1) * n_rows)
-        |    / (n_keys * n_rows), 6) AS gini
-        |FROM a""".stripMargin,
-
-    "q181_transitions" ->
-      """WITH t AS (
-        |  SELECT user_id, event_type,
-        |    lag(event_type, 1) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS from_type
-        |  FROM events),
-        |pairs AS (
-        |  SELECT from_type, event_type AS to_type,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM t WHERE from_type IS NOT NULL
-        |  GROUP BY 1, 2),
-        |marg AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS tot
-        |  FROM pairs GROUP BY 1)
-        |SELECT from_type, to_type, n, round(n / tot, 6) AS p
-        |FROM pairs JOIN marg USING (from_type)
-        |ORDER BY from_type, to_type""".stripMargin,
-
-    // brute-force Jaccard join: the SPECIFICATION the prefix-filter
-    // algorithm must reproduce exactly (same shingling as q32)
-    "q182_prefix_filter_join" ->
-      """WITH docs_norm AS (SELECT doc_id,
-        |    trim(regexp_replace(regexp_replace(lower(text),
-        |      '[^a-z0-9]+', ' ', 'g'), '\s+', ' ', 'g')) AS norm
-        |  FROM documents),
-        |toks AS (SELECT doc_id,
-        |    list_filter(string_split_regex(norm, '\s+'),
-        |      t -> len(t) > 0) AS arr
-        |  FROM docs_norm),
-        |sh AS (SELECT DISTINCT doc_id, unnest(CASE WHEN len(arr) >= 3
-        |    THEN list_distinct(list_transform(generate_series(1,
-        |      len(arr) - 2), i -> arr[i] || ' ' || arr[i+1] || ' ' ||
-        |      arr[i+2]))
-        |    ELSE [array_to_string(arr, ' ')] END) AS shingle
-        |  FROM toks),
-        |sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n
-        |  FROM sh GROUP BY doc_id),
-        |inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CAST(count(*) AS BIGINT) AS shared
-        |  FROM sh a JOIN sh b
-        |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT id_a, id_b,
-        |  round(CAST(shared AS DOUBLE) / (sa.n + sb.n - shared), 6)
-        |    AS jaccard
-        |FROM inter
-        |JOIN sizes sa ON id_a = sa.doc_id
-        |JOIN sizes sb ON id_b = sb.doc_id
-        |WHERE CAST(shared AS DOUBLE) / (sa.n + sb.n - shared) >= 0.5
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q183_asof_native" ->
-      """WITH l AS (SELECT user_id, epoch_us(ts) AS us, event_id,
-        |    round(value, 2) AS value FROM events),
-        |r AS (SELECT user_id, us, max(value) AS mark FROM l
-        |  WHERE event_id % 7 = 0 GROUP BY user_id, us)
-        |SELECT l.user_id, l.us, l.event_id, l.value, r.mark AS asof_mark
-        |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.us >= r.us
-        |ORDER BY l.user_id, l.us, l.event_id""".stripMargin,
-
-    "q184_order_priority" ->
-      """SELECT o_orderpriority, count(*) AS late_orders
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-04-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |    WHERE l_orderkey = o_orderkey
-        |      AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    "q185_market_share" ->
-      """SELECT CAST(year(o_orderdate) AS INT) AS order_year,
-        |  round(sum(CASE WHEN sn.n_name = 'NATION_1'
-        |      THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END)
-        |    / sum(l_extendedprice * (1 - l_discount)), 4) AS mkt_share
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation cn ON c_nationkey = cn.n_nationkey
-        |JOIN region ON cn.n_regionkey = r_regionkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-
-    "q186_cust_distribution" ->
-      """WITH per_cust AS (
-        |  SELECT c_custkey, count(o_orderkey) AS c_count
-        |  FROM customer
-        |  LEFT JOIN orders ON c_custkey = o_custkey
-        |    AND o_orderpriority <> '1-URGENT'
-        |  GROUP BY c_custkey)
-        |SELECT c_count, count(*) AS custdist
-        |FROM per_cust
-        |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    "q187_top_supplier" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey,
-        |    round(sum(l_extendedprice * (1 - l_discount)), 2)
-        |      AS total_revenue
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |    AND l_shipdate < TIMESTAMP '1997-04-01'
-        |  GROUP BY l_suppkey)
-        |SELECT s_suppkey, s_name, total_revenue
-        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q188_excluded_suppliers" ->
-      """SELECT p_brand, p_size,
-        |  count(DISTINCT l_suppkey) AS supplier_cnt
-        |FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) ps
-        |JOIN part ON l_partkey = p_partkey
-        |WHERE p_size IN (1, 9, 19, 29, 39, 49)
-        |  AND l_suppkey NOT IN
-        |    (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY p_brand, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_size""".stripMargin,
-
-    "q189_small_qty_revenue" ->
-      """SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |WHERE p_brand = 'Brand#3'
-        |  AND l_quantity < 0.2 * (
-        |    SELECT avg(l2.l_quantity) FROM lineitem l2
-        |    WHERE l2.l_partkey = lineitem.l_partkey)""".stripMargin,
-
-    "q190_disjunctive_revenue" ->
-      """SELECT round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5
-        |    AND l_quantity BETWEEN 1 AND 11)
-        |  OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10
-        |    AND l_quantity BETWEEN 10 AND 20)
-        |  OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
-        |    AND l_quantity BETWEEN 20 AND 36)""".stripMargin,
-
-    "q191_bulk_suppliers" ->
-      """WITH sp AS (
-        |  SELECT l_suppkey, l_partkey, sum(l_quantity) AS qty
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |    AND l_shipdate < TIMESTAMP '1998-01-01'
-        |    AND l_partkey IN
-        |      (SELECT p_partkey FROM part WHERE p_name LIKE 'red%')
-        |  GROUP BY l_suppkey, l_partkey)
-        |SELECT s_suppkey, s_name
-        |FROM supplier
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE n_name = 'NATION_1'
-        |  AND EXISTS (
-        |    SELECT 1 FROM sp
-        |    WHERE l_suppkey = s_suppkey
-        |      AND qty > (SELECT avg(qty) * 1.5 FROM sp))
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q192_waiting_suppliers" ->
-      """WITH l AS (
-        |  SELECT l_orderkey, l_suppkey,
-        |    l_shipdate > o_orderdate + INTERVAL 60 DAY AS late
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE o_orderstatus = 'F')
-        |SELECT s_name, count(*) AS numwait
-        |FROM (
-        |  SELECT DISTINCT l_orderkey, l_suppkey FROM l l1
-        |  WHERE late
-        |    AND EXISTS (SELECT 1 FROM l l2
-        |      WHERE l2.l_orderkey = l1.l_orderkey
-        |        AND l2.l_suppkey <> l1.l_suppkey)
-        |    AND NOT EXISTS (SELECT 1 FROM l l3
-        |      WHERE l3.l_orderkey = l1.l_orderkey
-        |        AND l3.l_suppkey <> l1.l_suppkey AND l3.late))
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name
-        |LIMIT 20""".stripMargin,
-
-    "q193_dormant_customers" ->
-      """WITH sel AS (
-        |  SELECT CAST(c_nationkey % 10 AS INT) AS cntrycode,
-        |    c_custkey, c_acctbal
-        |  FROM customer
-        |  WHERE CAST(c_nationkey % 10 AS INT) IN (1, 2, 3, 4, 7))
-        |SELECT cntrycode, count(*) AS numcust,
-        |  round(sum(c_acctbal), 2) AS totacctbal
-        |FROM sel
-        |WHERE c_acctbal > (SELECT avg(c_acctbal) FROM sel
-        |    WHERE c_acctbal > 0.0)
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |    WHERE o_custkey = c_custkey
-        |      AND o_orderdate >= TIMESTAMP '1999-01-01')
-        |GROUP BY cntrycode
-        |ORDER BY cntrycode""".stripMargin,
-
-    // identical to q29's oracle by construction: the native aggregate
-    // must reproduce the composed pipeline bit-for-bit
-    "q194_kmv_native" ->
-      s"""WITH h AS (SELECT DISTINCT event_type,
-         |    ${hash32Sql("CAST(user_id AS VARCHAR)")} AS h
-         |  FROM events),
-         |r AS (SELECT event_type, h, row_number() OVER
-         |    (PARTITION BY event_type ORDER BY h) AS rn FROM h),
-         |t AS (SELECT event_type, count(*) AS n_seen, max(h) AS kth_min
-         |  FROM r WHERE rn <= 64 GROUP BY event_type)
-         |SELECT event_type,
-         |  CASE WHEN n_seen < 64 OR kth_min <= 0 THEN CAST(n_seen AS DOUBLE)
-         |       ELSE round((64 - 1) * 4294967296.0 / kth_min, 2)
-         |  END AS approx_distinct,
-         |  CAST(n_seen AS BIGINT) AS n_seen
-         |FROM t ORDER BY event_type""".stripMargin,
-
-    "q195_interval_overlap" ->
-      """WITH b AS (
-        |  SELECT o_orderkey AS wid, o_orderdate AS ws,
-        |    o_orderdate + INTERVAL 14 DAY AS we
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        |  WHERE c_mktsegment = 'BUILDING'
-        |    AND o_orderdate >= TIMESTAMP '1997-01-01'
-        |    AND o_orderdate < TIMESTAMP '1997-07-01'),
-        |a AS (
-        |  SELECT o_orderkey AS wid, o_orderdate AS ws,
-        |    o_orderdate + INTERVAL 14 DAY AS we
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        |  WHERE c_mktsegment = 'AUTOMOBILE'
-        |    AND o_orderdate >= TIMESTAMP '1997-01-01'
-        |    AND o_orderdate < TIMESTAMP '1997-07-01')
-        |SELECT b.wid AS building_order, count(*) AS n_overlap
-        |FROM b JOIN a ON b.ws < a.we AND a.ws < b.we
-        |GROUP BY b.wid
-        |ORDER BY building_order""".stripMargin,
-
-    // blocked margin mining: the block key is the fixed 4-bit
-    // hyperplane-sign bucket (adaptive refinement never fires at this
-    // scale — the q65 oracle trick); both kNN directions rank the
-    // same within-block sim matrix
-    "q196_bitext_mining" -> {
-      val projs = (0 until 4).map(j => s"${planeProjSql(j)} AS p$j")
-        .mkString(",\n  ")
-      val bucket = (0 until 4)
-        .map(j => s"(CASE WHEN p$j > 0 THEN CAST(${1L << j} AS BIGINT) ELSE 0 END)")
-        .mkString(" + ")
-      s"""WITH sig AS (SELECT vec_id, label, embedding, $projs
-         |  FROM embeddings WHERE label IN (0, 1)),
-         |b AS (SELECT vec_id, label, embedding, $bucket AS blk FROM sig),
-         |s AS (SELECT blk, vec_id, embedding FROM b WHERE label = 0),
-         |t AS (SELECT blk, vec_id, embedding FROM b WHERE label = 1),
-         |sims AS (SELECT s.vec_id AS sid, t.vec_id AS tid,
-         |    round(${cosineSql("s.embedding", "t.embedding")}, 6) AS sim
-         |  FROM s JOIN t ON s.blk = t.blk),
-         |fr AS (SELECT *, row_number() OVER
-         |    (PARTITION BY sid ORDER BY sim DESC, tid) AS rn FROM sims),
-         |fa AS (SELECT sid,
-         |    sum(CAST(round(sim * 1000000, 0) AS BIGINT)) AS fsum,
-         |    max(CASE WHEN rn = 1 THEN tid END) AS tgt_id,
-         |    max(CASE WHEN rn = 1 THEN sim END) AS sim
-         |  FROM fr WHERE rn <= 4 GROUP BY sid),
-         |br AS (SELECT *, row_number() OVER
-         |    (PARTITION BY tid ORDER BY sim DESC, sid) AS rn FROM sims),
-         |ba AS (SELECT tid,
-         |    sum(CAST(round(sim * 1000000, 0) AS BIGINT)) AS bsum,
-         |    max(CASE WHEN rn = 1 THEN sid END) AS b_src
-         |  FROM br WHERE rn <= 4 GROUP BY tid)
-         |SELECT fa.sid AS src_id, fa.tgt_id, fa.sim,
-         |  round(8.0 * CAST(round(fa.sim * 1000000, 0) AS BIGINT)
-         |    / (fsum + bsum), 6) AS margin,
-         |  (b_src = fa.sid) AS mutual
-         |FROM fa JOIN ba ON fa.tgt_id = ba.tid
-         |ORDER BY src_id""".stripMargin
-    },
-
-    "q197_bottomk_sample" ->
-      s"""WITH ranked AS (SELECT lang, doc_id, source,
-         |    row_number() OVER (PARTITION BY lang ORDER BY
-         |      ${hash32Sql("CAST(doc_id AS VARCHAR)")}, doc_id) AS rk
-         |  FROM documents)
-         |SELECT lang, doc_id, source FROM ranked WHERE rk <= 10
-         |ORDER BY lang, doc_id""".stripMargin,
-
-    "q198_cube_stats" ->
-      """SELECT lang, source, count(*) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
-        |  CAST(GROUPING(lang, source) AS INT) AS gid
-        |FROM documents
-        |GROUP BY CUBE (lang, source)
-        |ORDER BY gid, lang, source""".stripMargin,
-
-    "q199_survivorship" ->
-      """WITH u AS (SELECT user_id, epoch_us(ts) AS us, event_id,
-        |    CASE WHEN event_id % 5 = 0 THEN NULL ELSE event_type END
-        |      AS etype,
-        |    CASE WHEN event_id % 3 = 0 THEN NULL ELSE round(value, 2) END
-        |      AS val
-        |  FROM events)
-        |SELECT DISTINCT user_id,
-        |  last_value(etype IGNORE NULLS) OVER win AS etype,
-        |  last_value(val IGNORE NULLS) OVER win AS val,
-        |  count(*) OVER (PARTITION BY user_id) AS n_updates
-        |FROM u
-        |WINDOW win AS (PARTITION BY user_id ORDER BY us, event_id
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY user_id""".stripMargin,
-
-    "q200_pipeline_parity" ->
-      s"""WITH toks AS (SELECT doc_id, lang, source, text,
-         |    len(${wsTokensSql("text")}) AS n_tokens, n_chars
-         |  FROM documents),
-         |gated AS (SELECT * FROM toks
-         |  WHERE n_tokens >= 5 AND n_chars <= 4000),
-         |keep AS (SELECT min(doc_id) AS doc_id
-         |  FROM (SELECT doc_id, $normTextSql AS nt FROM gated)
-         |  GROUP BY nt),
-         |dedup AS (SELECT g.* FROM gated g
-         |  JOIN keep USING (doc_id)),
-         |sampled AS (SELECT * FROM dedup
-         |  WHERE ${hash32Sql("CAST(doc_id AS VARCHAR)")} % 10000 <
-         |    CASE lang WHEN 'en' THEN 2000 WHEN 'zh' THEN 5000
-         |    ELSE 3500 END)
-         |SELECT lang, source, count(*) AS n_docs,
-         |  CAST(sum(n_tokens) AS BIGINT) AS total_tokens
-         |FROM sampled GROUP BY 1, 2
-         |ORDER BY 1, 2""".stripMargin,
-
-    "q201_kmv_window" ->
-      s"""WITH h AS (SELECT DISTINCT event_type,
-         |    CAST(ts AS DATE) AS day,
-         |    ${hash32Sql("CAST(user_id AS VARCHAR)")} AS h
-         |  FROM events),
-         |r AS (SELECT event_type, day, h, row_number() OVER
-         |    (PARTITION BY event_type, day ORDER BY h) AS rn FROM h),
-         |t AS (SELECT event_type, day, count(*) AS n_seen,
-         |    max(h) AS kth_min
-         |  FROM r WHERE rn <= 8 GROUP BY event_type, day)
-         |SELECT event_type, day,
-         |  CASE WHEN n_seen < 8 OR kth_min <= 0 THEN CAST(n_seen AS DOUBLE)
-         |       ELSE round((8 - 1) * 4294967296.0 / kth_min, 2)
-         |  END AS approx_distinct,
-         |  CAST(n_seen AS BIGINT) AS n_seen
-         |FROM t ORDER BY event_type, day""".stripMargin,
-
-    "q202_kmv_overlap" ->
-      s"""WITH h AS (SELECT DISTINCT event_type AS g,
-         |    ${hash32Sql("CAST(user_id AS VARCHAR)")} AS h FROM events),
-         |bk AS (SELECT g, h FROM (SELECT g, h, row_number() OVER
-         |    (PARTITION BY g ORDER BY h) AS rn FROM h) WHERE rn <= 64),
-         |gs AS (SELECT DISTINCT g FROM bk),
-         |pairs AS (SELECT a.g AS g1, b.g AS g2 FROM gs a, gs b
-         |  WHERE a.g < b.g),
-         |mu AS (
-         |  SELECT p.g1, p.g2, k.h FROM pairs p JOIN bk k ON k.g = p.g1
-         |  UNION
-         |  SELECT p.g1, p.g2, k.h FROM pairs p JOIN bk k ON k.g = p.g2),
-         |topu AS (SELECT g1, g2, h FROM (SELECT g1, g2, h, row_number()
-         |    OVER (PARTITION BY g1, g2 ORDER BY h) AS rn FROM mu)
-         |  WHERE rn <= 64),
-         |fl AS (SELECT t.g1, t.g2, t.h,
-         |    CASE WHEN a.h IS NULL THEN 0 ELSE 1 END AS ina,
-         |    CASE WHEN b.h IS NULL THEN 0 ELSE 1 END AS inb
-         |  FROM topu t
-         |  LEFT JOIN bk a ON a.g = t.g1 AND a.h = t.h
-         |  LEFT JOIN bk b ON b.g = t.g2 AND b.h = t.h),
-         |agg AS (SELECT g1, g2, count(*) AS n_u, max(h) AS kth,
-         |    sum(ina * inb) AS n_common
-         |  FROM fl GROUP BY g1, g2)
-         |SELECT g1, g2,
-         |  CASE WHEN n_u < 64 OR kth <= 0 THEN CAST(n_u AS DOUBLE)
-         |       ELSE round((64 - 1) * 4294967296.0 / kth, 2)
-         |  END AS union_est,
-         |  round(CAST(n_common AS DOUBLE) / n_u, 6) AS jaccard_est,
-         |  CAST(n_common AS BIGINT) AS n_common
-         |FROM agg ORDER BY g1, g2""".stripMargin,
-
-    // event_id tiebreak in the window ORDER BY + dur > 0 filter mirror
-    // the operator: tied-timestamp rows order deterministically and
-    // the zero-duration (tied-earlier) rows drop from sums AND count
-    "q203_twap" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us,
-        |    event_id,
-        |    CAST(round(value * 100, 0) AS BIGINT) AS cents FROM events),
-        |d AS (SELECT *, lead(us) OVER (PARTITION BY user_id, event_type
-        |    ORDER BY us, event_id) - us AS dur FROM e)
-        |SELECT user_id, event_type,
-        |  round(CAST(sum(CAST(cents AS HUGEINT) * dur) AS DOUBLE)
-        |    / CAST(sum(CAST(dur AS HUGEINT)) AS DOUBLE) / 100.0, 6)
-        |    AS twap,
-        |  count(*) AS n_intervals
-        |FROM d WHERE dur > 0
-        |GROUP BY user_id, event_type
-        |ORDER BY user_id, event_type""".stripMargin,
-
-    // brute-force hamming over ALL pairs: the banding algorithm must
-    // reproduce this exactly (pigeonhole completeness gate). 64-bit
-    // fingerprint: bits 0-31 from md5 hex window 1-8, bits 32-63 from
-    // window 9-16 (GF.hash32 offset 9). Bit 63 is the BIGINT sign bit:
-    // DuckDB's `1::BIGINT << 63` raises on overflow, so that one term
-    // is the literal minimum; xor/bit_count are sign-agnostic.
-    "q204_simhash_pairs" ->
-      s"""WITH docs_norm AS (SELECT doc_id, $normTextSql AS norm FROM documents),
-         |t AS (SELECT doc_id, unnest(${wsTokensSql("norm")}) AS tok FROM docs_norm),
-         |h AS (SELECT doc_id, ${hash32Sql("tok")} AS h,
-         |    ${hash32Sql("tok", 9)} AS h2 FROM t),
-         |bits AS (SELECT doc_id, b.bit,
-         |    sum(CASE WHEN ((CASE WHEN b.bit < 32 THEN h ELSE h2 END)
-         |      >> (b.bit % 32)) & 1 = 1 THEN 1 ELSE -1 END) AS s
-         |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS bit) b
-         |  GROUP BY doc_id, b.bit),
-         |sh AS (SELECT doc_id,
-         |    CAST(sum(CASE WHEN s <= 0 THEN CAST(0 AS BIGINT)
-         |      WHEN bit = 63 THEN CAST(-9223372036854775808 AS BIGINT)
-         |      ELSE (CAST(1 AS BIGINT) << bit) END) AS BIGINT) AS simhash
-         |  FROM bits GROUP BY doc_id)
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-         |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    "q205_matryoshka_recall" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-         |    FROM embeddings WHERE vec_id < 8),
-         |c AS (SELECT vec_id AS cand_id, embedding AS cv FROM embeddings),
-         |ex AS (SELECT query_id, cand_id,
-         |    round(${cosineSql("qv", "cv")}, 6) AS sim
-         |  FROM c, q WHERE query_id <> cand_id),
-         |exr AS (SELECT query_id, cand_id FROM (SELECT *, row_number()
-         |    OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id)
-         |    AS rn FROM ex) WHERE rn <= 5),
-         |tq AS (SELECT query_id, qv[1:16] AS qv FROM q),
-         |tc AS (SELECT cand_id, cv[1:16] AS cv FROM c),
-         |tr0 AS (SELECT query_id, cand_id,
-         |    round(${cosineSql("qv", "cv")}, 6) AS sim
-         |  FROM tc, tq WHERE query_id <> cand_id),
-         |trr AS (SELECT query_id, cand_id FROM (SELECT *, row_number()
-         |    OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id)
-         |    AS rn FROM tr0) WHERE rn <= 5)
-         |SELECT e.query_id, count(*) AS k_exact,
-         |  CAST(sum(CASE WHEN t.cand_id IS NULL THEN 0 ELSE 1 END)
-         |    AS BIGINT) AS n_kept,
-         |  round(sum(CASE WHEN t.cand_id IS NULL THEN 0 ELSE 1 END)
-         |    / CAST(count(*) AS DOUBLE), 6) AS recall
-         |FROM exr e LEFT JOIN trr t
-         |  ON e.query_id = t.query_id AND e.cand_id = t.cand_id
-         |GROUP BY e.query_id
-         |ORDER BY e.query_id""".stripMargin,
-
-    "q206_fd_audit" -> {
-      def fd(a: String, b: String) =
-        s"""SELECT '$a' AS lhs, '$b' AS rhs, count(*) AS n_lhs,
-           |  CAST(sum(CASE WHEN nb > 1 THEN 1 ELSE 0 END) AS BIGINT)
-           |    AS n_violating,
-           |  sum(CASE WHEN nb > 1 THEN 1 ELSE 0 END) = 0 AS fd_holds
-           |FROM (SELECT $a, count(DISTINCT coalesce(CAST($b AS VARCHAR),
-           |  ' null')) AS nb FROM orders GROUP BY $a)""".stripMargin
-      Seq(fd("o_orderkey", "o_custkey"),
-        fd("o_custkey", "o_orderpriority"),
-        fd("o_custkey", "o_orderstatus"))
-        .mkString("", "\nUNION ALL\n", "\nORDER BY lhs, rhs")
-    },
-
-    "q207_sliding_distinct" ->
-      s"""WITH ev AS (SELECT CAST(ts AS DATE) AS day,
-         |    ${hash32Sql("CAST(user_id AS VARCHAR)")} AS h FROM events),
-         |days AS (SELECT DISTINCT day FROM ev),
-         |contrib AS (SELECT DISTINCT d.day, e.h
-         |  FROM days d JOIN ev e
-         |    ON e.day BETWEEN d.day - 6 AND d.day),
-         |r AS (SELECT day, h, row_number() OVER
-         |    (PARTITION BY day ORDER BY h) AS rn FROM contrib),
-         |t AS (SELECT day, count(*) AS n_seen, max(h) AS kth_min
-         |  FROM r WHERE rn <= 64 GROUP BY day)
-         |SELECT day,
-         |  CASE WHEN n_seen < 64 OR kth_min <= 0 THEN CAST(n_seen AS DOUBLE)
-         |       ELSE round((64 - 1) * 4294967296.0 / kth_min, 2)
-         |  END AS approx_distinct_7d,
-         |  CAST(n_seen AS BIGINT) AS n_seen
-         |FROM t ORDER BY day""".stripMargin,
-
-    "q208_weighted_median" ->
-      """WITH li AS (SELECT l_returnflag,
-        |    CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS cents,
-        |    CAST(round(l_quantity, 0) AS BIGINT) AS qty FROM lineitem),
-        |bv AS (SELECT l_returnflag, cents, sum(qty) AS w
-        |  FROM li GROUP BY 1, 2),
-        |cum AS (SELECT l_returnflag, cents,
-        |    sum(w) OVER (PARTITION BY l_returnflag ORDER BY cents
-        |      ROWS UNBOUNDED PRECEDING) AS c,
-        |    sum(w) OVER (PARTITION BY l_returnflag) AS tot
-        |  FROM bv)
-        |SELECT l_returnflag,
-        |  CAST(min(cents) AS BIGINT) AS weighted_median,
-        |  CAST(max(tot) AS BIGINT) AS total_weight
-        |FROM cum WHERE c * 2 >= tot
-        |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-
-    "q209_mad_outliers" ->
-      """WITH base AS (SELECT lang, CAST(n_chars AS BIGINT) AS x
-        |  FROM documents),
-        |m1 AS (SELECT lang, min(x) AS med FROM (
-        |    SELECT lang, x,
-        |      sum(w) OVER (PARTITION BY lang ORDER BY x
-        |        ROWS UNBOUNDED PRECEDING) AS c,
-        |      sum(w) OVER (PARTITION BY lang) AS tot
-        |    FROM (SELECT lang, x, count(*) AS w FROM base GROUP BY 1, 2))
-        |  WHERE c * 2 >= tot GROUP BY lang),
-        |dev AS (SELECT b.lang, b.x, abs(b.x - m1.med) AS d, m1.med
-        |  FROM base b JOIN m1 ON b.lang = m1.lang),
-        |m2 AS (SELECT lang, min(d) AS mad FROM (
-        |    SELECT lang, d,
-        |      sum(w) OVER (PARTITION BY lang ORDER BY d
-        |        ROWS UNBOUNDED PRECEDING) AS c,
-        |      sum(w) OVER (PARTITION BY lang) AS tot
-        |    FROM (SELECT lang, d, count(*) AS w FROM dev GROUP BY 1, 2))
-        |  WHERE c * 2 >= tot GROUP BY lang)
-        |SELECT dev.lang, count(*) AS n,
-        |  CAST(max(dev.med) AS BIGINT) AS median,
-        |  CAST(max(m2.mad) AS BIGINT) AS mad,
-        |  CAST(sum(CASE WHEN dev.d > 3 * m2.mad THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_outliers
-        |FROM dev JOIN m2 ON dev.lang = m2.lang
-        |GROUP BY dev.lang
-        |ORDER BY dev.lang""".stripMargin,
-
-    "q210_ab_lift" ->
-      """WITH units AS (SELECT 'v' || CAST(user_id % 3 AS VARCHAR)
-        |    AS variant,
-        |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) = 1
-        |      AS converted
-        |  FROM events GROUP BY user_id),
-        |g AS (SELECT variant, count(*) AS n,
-        |    CAST(sum(CASE WHEN converted THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS conv
-        |  FROM units GROUP BY variant)
-        |SELECT a.variant AS variant_a, b.variant AS variant_b,
-        |  a.n AS na, a.conv AS ca, b.n AS nb, b.conv AS cb,
-        |  round(a.conv / CAST(a.n AS DOUBLE), 6) AS rate_a,
-        |  round(b.conv / CAST(b.n AS DOUBLE), 6) AS rate_b,
-        |  round(a.conv / CAST(a.n AS DOUBLE)
-        |    - b.conv / CAST(b.n AS DOUBLE), 6) AS lift,
-        |  round((a.conv / CAST(a.n AS DOUBLE)
-        |      - b.conv / CAST(b.n AS DOUBLE))
-        |    / sqrt((a.conv + b.conv) / CAST(a.n + b.n AS DOUBLE)
-        |      * (1.0 - (a.conv + b.conv) / CAST(a.n + b.n AS DOUBLE))
-        |      * (1.0 / a.n + 1.0 / b.n)), 4) AS z
-        |FROM g a, g b WHERE a.variant < b.variant
-        |ORDER BY variant_a, variant_b""".stripMargin,
-
-    "q211_reconcile" ->
-      """WITH sums AS (SELECT l_orderkey,
-        |    CAST(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT))
-        |      AS BIGINT) AS rc, count(*) AS n_lines
-        |  FROM lineitem GROUP BY l_orderkey),
-        |r AS (SELECT o_orderstatus,
-        |    CAST(round(o_totalprice * 100, 0) AS BIGINT) AS dc,
-        |    sums.rc, coalesce(sums.n_lines, 0) AS n_lines
-        |  FROM orders LEFT JOIN sums ON o_orderkey = l_orderkey)
-        |SELECT o_orderstatus, count(*) AS n_orders,
-        |  CAST(sum(CASE WHEN n_lines = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_no_lines,
-        |  CAST(sum(CASE WHEN dc - rc <> 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_mismatched,
-        |  CAST(max(abs(dc - rc)) AS BIGINT) AS max_abs_diff_cents
-        |FROM r GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin,
-
-    "q212_streaks" ->
-      """WITH days AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
-        |  FROM events),
-        |isl AS (SELECT user_id,
-        |    day - CAST(row_number() OVER (PARTITION BY user_id
-        |      ORDER BY day) AS INT) AS grp
-        |  FROM days),
-        |runs AS (SELECT user_id, grp, count(*) AS len
-        |  FROM isl GROUP BY user_id, grp)
-        |SELECT user_id, count(*) AS n_streaks,
-        |  CAST(max(len) AS BIGINT) AS longest_streak,
-        |  CAST(sum(len) AS BIGINT) AS active_days
-        |FROM runs GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
-
-    // the independent quadratic dominance definition — the window
-    // formulation must reproduce it exactly
-    "q213_skyline" ->
-      """WITH p AS (SELECT p_brand, p_partkey,
-        |    CAST(round(p_retailprice * 100, 0) AS BIGINT)
-        |      AS price_cents, p_size
-        |  FROM part)
-        |SELECT p_brand, p_partkey, price_cents, p_size
-        |FROM p a
-        |WHERE NOT EXISTS (SELECT 1 FROM p b
-        |  WHERE b.p_brand = a.p_brand
-        |    AND b.price_cents <= a.price_cents AND b.p_size >= a.p_size
-        |    AND (b.price_cents < a.price_cents OR b.p_size > a.p_size))
-        |ORDER BY p_brand, p_partkey""".stripMargin,
-
-    "q214_mode" ->
-      """WITH c AS (SELECT lang, source, count(*) AS n
-        |  FROM documents GROUP BY lang, source),
-        |m AS (SELECT lang, max(n) AS mx FROM c GROUP BY lang),
-        |t AS (SELECT c.lang, CAST(count(*) AS BIGINT) AS n_tied
-        |  FROM c JOIN m ON c.lang = m.lang AND c.n = m.mx
-        |  GROUP BY c.lang),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY lang
-        |    ORDER BY n DESC, source) AS rk FROM c)
-        |SELECT r.lang, source AS mode, n AS n_mode, n_tied
-        |FROM r JOIN t ON r.lang = t.lang
-        |WHERE rk = 1
-        |ORDER BY r.lang""".stripMargin,
-
-    "q215_conversion_lag" ->
-      """WITH f AS (SELECT user_id,
-        |    min(CASE WHEN event_type = 'signup' THEN epoch_us(ts) END)
-        |      AS s_us,
-        |    min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END)
-        |      AS p_us
-        |  FROM events GROUP BY user_id),
-        |s AS (SELECT * FROM f WHERE s_us IS NOT NULL),
-        |tot AS (SELECT count(*) AS n_signup FROM s),
-        |lags AS (SELECT greatest(CAST(floor((p_us - s_us) / 86400000000.0)
-        |      AS BIGINT), 0) AS lag_days
-        |  FROM s WHERE p_us IS NOT NULL),
-        |days AS (SELECT lag_days, count(*) AS n_day FROM lags
-        |  WHERE lag_days <= 7 GROUP BY lag_days)
-        |SELECT lag_days,
-        |  CAST(sum(n_day) OVER (ORDER BY lag_days
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_cum,
-        |  round(sum(n_day) OVER (ORDER BY lag_days
-        |    ROWS UNBOUNDED PRECEDING)
-        |    / CAST((SELECT n_signup FROM tot) AS DOUBLE), 6) AS share
-        |FROM days
-        |ORDER BY lag_days""".stripMargin,
-
-    "q216_bounce_rate" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS us FROM events),
-        |lagged AS (SELECT *, lag(us) OVER (PARTITION BY user_id
-        |    ORDER BY us) AS prev_us FROM e),
-        |flagged AS (SELECT *, CASE WHEN prev_us IS NULL
-        |    OR us - prev_us > 1800000000 THEN 1 ELSE 0 END AS new_s
-        |  FROM lagged),
-        |s AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY us
-        |    ROWS UNBOUNDED PRECEDING) AS session_idx FROM flagged),
-        |sess AS (SELECT user_id, session_idx, count(*) AS n_events,
-        |    min(us) AS start_us
-        |  FROM s GROUP BY user_id, session_idx),
-        |d AS (SELECT CAST(make_timestamp(start_us) AS DATE) AS day,
-        |    n_events FROM sess)
-        |SELECT day, count(*) AS n_sessions,
-        |  CAST(sum(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_bounces,
-        |  round(sum(CASE WHEN n_events = 1 THEN 1 ELSE 0 END)
-        |    / CAST(count(*) AS DOUBLE), 6) AS bounce_rate
-        |FROM d GROUP BY day
-        |ORDER BY day""".stripMargin,
-
-    "q217_audience_overlap" ->
-      """WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),
-        |sizes AS (SELECT event_type, count(*) AS n FROM ut
-        |  GROUP BY event_type),
-        |ovl AS (SELECT a.event_type AS g1, b.event_type AS g2,
-        |    count(*) AS n_both
-        |  FROM ut a JOIN ut b ON a.user_id = b.user_id
-        |    AND a.event_type < b.event_type
-        |  GROUP BY 1, 2)
-        |SELECT g1, g2, n_both,
-        |  s1.n + s2.n - n_both AS n_union,
-        |  round(CAST(n_both AS DOUBLE) / (s1.n + s2.n - n_both), 6)
-        |    AS jaccard
-        |FROM ovl
-        |JOIN sizes s1 ON s1.event_type = g1
-        |JOIN sizes s2 ON s2.event_type = g2
-        |ORDER BY g1, g2""".stripMargin,
-
-    "q218_yoy_growth" ->
-      """WITH yearly AS (SELECT n_name AS nation,
-        |    CAST(year(o_orderdate) AS INT) AS order_year,
-        |    round(sum(o_totalprice), 2) AS revenue
-        |  FROM orders
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  GROUP BY 1, 2)
-        |SELECT nation, order_year, revenue,
-        |  lag(revenue) OVER w AS prev_revenue,
-        |  round((revenue - lag(revenue) OVER w) * 100.0
-        |    / lag(revenue) OVER w, 4) AS yoy_pct
-        |FROM yearly
-        |WINDOW w AS (PARTITION BY nation ORDER BY order_year)
-        |ORDER BY nation, order_year""".stripMargin,
-
-    "q219_revenue_share" ->
-      """WITH g AS (SELECT o_orderstatus, o_orderpriority,
-        |    sum(o_totalprice) AS rev
-        |  FROM orders GROUP BY 1, 2)
-        |SELECT o_orderstatus, o_orderpriority,
-        |  round(rev, 2) AS revenue,
-        |  round(rev * 100.0 / sum(rev) OVER
-        |    (PARTITION BY o_orderstatus), 4) AS share_pct
-        |FROM g
-        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin,
-
-    "q220_melt_roundtrip" ->
-      """SELECT lang, source, count(*) AS n_docs
-        |FROM documents
-        |GROUP BY lang, source
-        |ORDER BY lang, source""".stripMargin,
-
-    "q221_view_to_purchase" ->
-      """WITH ev AS (SELECT user_id, epoch_us(ts) AS us, event_type
-        |  FROM events),
-        |p AS (SELECT user_id, us FROM ev WHERE event_type = 'purchase'),
-        |v AS (SELECT DISTINCT user_id, us AS view_us FROM ev
-        |  WHERE event_type = 'view')
-        |SELECT CAST(make_timestamp(p.us) AS DATE) AS day,
-        |  count(*) AS n_purchases,
-        |  CAST(sum(CASE WHEN view_us IS NOT NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_attributed,
-        |  CAST(sum(CASE WHEN p.us - view_us <= 3600000000 THEN 1
-        |    ELSE 0 END) AS BIGINT) AS n_within_hour
-        |FROM p ASOF LEFT JOIN v
-        |  ON p.user_id = v.user_id AND p.us >= v.view_us
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-
-    "q222_gap_histogram" ->
-      """WITH e AS (SELECT event_type, user_id, epoch_us(ts) AS us
-        |  FROM events),
-        |g AS (SELECT event_type, us - lag(us) OVER (PARTITION BY
-        |    event_type, user_id ORDER BY us) AS gap FROM e)
-        |SELECT event_type,
-        |  CAST(len(CAST(gap AS VARCHAR)) - 7 AS INT) AS log10_s,
-        |  count(*) AS n_gaps
-        |FROM g WHERE gap IS NOT NULL AND gap > 0
-        |GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-
-    "q223_top_journeys" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_id,
-        |    event_type FROM events),
-        |r AS (SELECT user_id, event_type, row_number() OVER
-        |    (PARTITION BY user_id ORDER BY us, event_id) AS rn FROM e),
-        |j AS (SELECT user_id,
-        |    array_to_string(list(event_type ORDER BY rn), '>')
-        |      AS journey
-        |  FROM r WHERE rn <= 5 GROUP BY user_id)
-        |SELECT journey, count(*) AS n_users
-        |FROM j GROUP BY journey
-        |ORDER BY n_users DESC, journey
-        |LIMIT 10""".stripMargin,
-
-    "q224_time_travel" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_id,
-        |    event_type FROM events),
-        |c AS (SELECT user_id, event_type, us,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY us, event_id) AS prev,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY us, event_id) AS rn FROM e),
-        |ch AS (SELECT user_id, event_type AS state, us AS valid_from
-        |  FROM c WHERE rn = 1 OR event_type IS DISTINCT FROM prev),
-        |iv AS (SELECT user_id, state, valid_from,
-        |    lead(valid_from) OVER (PARTITION BY user_id
-        |      ORDER BY valid_from, state) AS valid_to FROM ch)
-        |SELECT state, count(*) AS n_users
-        |FROM iv
-        |WHERE valid_from <= 1705320000000000
-        |  AND (valid_to IS NULL OR valid_to > 1705320000000000)
-        |GROUP BY state
-        |ORDER BY state""".stripMargin,
-
-    "q225_rolling_revenue" ->
-      """WITH daily AS (SELECT
-        |    date_diff('day', DATE '1970-01-01',
-        |      CAST(o_orderdate AS DATE)) AS epoch_day,
-        |    CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-        |      AS BIGINT) AS day_cents
-        |  FROM orders GROUP BY 1)
-        |SELECT DATE '1970-01-01' + CAST(epoch_day AS INT) AS day,
-        |  day_cents,
-        |  CAST(sum(day_cents) OVER (ORDER BY epoch_day
-        |    RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS week_cents
-        |FROM daily
-        |ORDER BY day""".stripMargin,
-
-    "q226_coverage_cutoff" ->
-      """WITH c AS (SELECT lang, source, count(*) AS n
-        |  FROM documents GROUP BY lang, source),
-        |r AS (SELECT *, sum(n) OVER (PARTITION BY lang
-        |    ORDER BY n DESC, source ROWS UNBOUNDED PRECEDING) AS cum,
-        |    sum(n) OVER (PARTITION BY lang) AS tot
-        |  FROM c)
-        |SELECT lang, source, n,
-        |  round(cum / CAST(tot AS DOUBLE), 6) AS cum_share
-        |FROM r
-        |WHERE (cum - n) * 5 < tot * 4
-        |ORDER BY lang, cum_share, source""".stripMargin,
-
-    "q227_bloom_semi_join" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n_items,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        |FROM lineitem
-        |WHERE l_orderkey IN (SELECT o_orderkey FROM orders
-        |  WHERE o_orderpriority = '1-URGENT'
-        |    AND o_orderdate >= TIMESTAMP '2000-01-01')
-        |GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-
-    // layout-independent replay of the bucketed join from the raw tables
-    "q228_bucketed_join" ->
-      """SELECT o_orderpriority, count(*) AS n_items,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-
-    // a dedicated pass recomputing what the observe() metrics measured
-    // in flight — equality proves the single-pass telemetry is exact
-    "q229_observe_metrics" ->
-      """SELECT count(*) AS n_in,
-        |  CAST(coalesce(sum(n_chars), 0) AS BIGINT) AS chars_in,
-        |  count(*) FILTER (WHERE n_chars >= 200) AS n_kept,
-        |  CAST(coalesce(sum(n_chars) FILTER (WHERE n_chars >= 200), 0)
-        |    AS BIGINT) AS chars_kept,
-        |  round(CAST(count(*) FILTER (WHERE n_chars >= 200) AS DOUBLE)
-        |    / count(*), 6) AS kept_ratio
-        |FROM documents""".stripMargin,
-
-    // Full CMS replay: same counters, same min-over-rows estimate.
-    // Row i's bucket is ((h*(2i+1) + (101i+17)) % 4294967311) % width,
-    // the GF.universalHash family — h < 2^32 and 2i+1 <= 7, so the
-    // product stays far inside BIGINT.
-    "q230_cms_freq" ->
-      s"""WITH docs_norm AS (SELECT $normTextSql AS norm FROM documents),
-         |toks AS (SELECT unnest(${wsTokensSql("norm")}) AS tok
-         |  FROM docs_norm),
-         |h AS (SELECT tok, ${hash32Sql("tok")} AS h FROM toks),
-         |rows_ AS (SELECT unnest([0, 1, 2, 3]) AS i),
-         |cnt AS (SELECT i,
-         |    ((h * (2*i + 1) + (101*i + 17)) % 4294967311) % 1024 AS b,
-         |    count(*) AS c
-         |  FROM h CROSS JOIN rows_ GROUP BY 1, 2),
-         |top AS (SELECT tok, h, count(*) AS true_cnt FROM h
-         |  GROUP BY 1, 2 ORDER BY true_cnt DESC, tok LIMIT 10),
-         |est AS (SELECT t.tok, t.true_cnt, min(c.c) AS cms_est
-         |  FROM top t JOIN cnt c
-         |    ON c.b = ((t.h * (2*c.i + 1) + (101*c.i + 17))
-         |              % 4294967311) % 1024
-         |  GROUP BY 1, 2)
-         |SELECT tok, CAST(true_cnt AS BIGINT) AS true_cnt,
-         |  CAST(cms_est AS BIGINT) AS cms_est,
-         |  CAST(cms_est - true_cnt AS BIGINT) AS overcount
-         |FROM est ORDER BY true_cnt DESC, tok""".stripMargin,
-
-    // Windowed CMS replay: per (event_type, day) counters at (i, bucket)
-    // grain; probe buckets computed from the watchlist hashes with the
-    // same universal family; empty probe buckets coalesce to 0 (the
-    // Spark matrix holds explicit zeros, DuckDB's sparse counts don't).
-    "q231_cms_window" ->
-      s"""WITH ev AS (SELECT event_type, CAST(ts AS DATE) AS day,
-         |    ${hash32Sql("CAST(user_id AS VARCHAR)")} AS h, user_id
-         |  FROM events),
-         |rows_ AS (SELECT unnest([0, 1]) AS i),
-         |cnt AS (SELECT event_type, day, i,
-         |    ((h * (2*i + 1) + (101*i + 17)) % 4294967311) % 64 AS b,
-         |    count(*) AS c
-         |  FROM ev CROSS JOIN rows_ GROUP BY 1, 2, 3, 4),
-         |wh AS (SELECT uid,
-         |    ${hash32Sql("CAST(uid AS VARCHAR)")} AS uh
-         |  FROM (SELECT unnest([1, 2, 3, 4, 5]) AS uid)),
-         |grid AS (SELECT DISTINCT event_type, day FROM ev),
-         |probe AS (SELECT g.event_type, g.day, wh.uid, r.i,
-         |    ((wh.uh * (2*r.i + 1) + (101*r.i + 17)) % 4294967311) % 64
-         |      AS b
-         |  FROM grid g CROSS JOIN wh CROSS JOIN rows_ r),
-         |est AS (SELECT p.event_type, p.day, p.uid,
-         |    min(coalesce(c.c, 0)) AS cms_est
-         |  FROM probe p LEFT JOIN cnt c
-         |    ON c.event_type = p.event_type AND c.day = p.day
-         |       AND c.i = p.i AND c.b = p.b
-         |  GROUP BY 1, 2, 3),
-         |tru AS (SELECT event_type, CAST(ts AS DATE) AS day,
-         |    user_id AS uid, count(*) AS true_cnt
-         |  FROM events WHERE user_id IN (1, 2, 3, 4, 5)
-         |  GROUP BY 1, 2, 3)
-         |SELECT e.event_type, e.day, CAST(e.uid AS BIGINT) AS uid,
-         |  CAST(coalesce(t.true_cnt, 0) AS BIGINT) AS true_cnt,
-         |  CAST(e.cms_est AS BIGINT) AS cms_est,
-         |  CAST(e.cms_est - coalesce(t.true_cnt, 0) AS BIGINT)
-         |    AS overcount
-         |FROM est e LEFT JOIN tru t
-         |  ON e.event_type = t.event_type AND e.day = t.day
-         |     AND e.uid = t.uid
-         |ORDER BY 1, 2, 3""".stripMargin,
-
-    // Full HDR replay: bucket = (n−7)·128 + (v >> (n−7)) with
-    // n = ⌊log₂ v⌋ from the bin() string length (exact integer ops, no
-    // float log); lower bound inverts with the same shift arithmetic.
-    // Text lengths are non-negative so the sign mirror never fires.
-    // Both the exact and sketch sides pick min(value|bucket) at
-    // cumulative ≥ max(⌈φ·N⌉, 1) — the rank rule the Spark side uses.
-    "q232_hdr_quantiles" ->
-      s"""WITH vals AS (SELECT lang AS grp,
-         |    CAST(length(text) AS BIGINT) AS v
-         |  FROM documents WHERE text IS NOT NULL),
-         |hist AS (SELECT grp, v, count(*) AS c FROM vals GROUP BY 1, 2),
-         |ranked AS (SELECT grp, v,
-         |    sum(c) OVER (PARTITION BY grp ORDER BY v) AS cum,
-         |    sum(c) OVER (PARTITION BY grp) AS n
-         |  FROM hist),
-         |phis AS (SELECT unnest([0.01, 0.25, 0.5, 0.75, 0.99]) AS phi),
-         |exact AS (SELECT r.grp, p.phi, min(r.v) AS exact_q,
-         |    min(r.n) AS n
-         |  FROM ranked r CROSS JOIN phis p
-         |  WHERE r.cum >= greatest(CAST(ceil(p.phi * r.n) AS BIGINT), 1)
-         |  GROUP BY 1, 2),
-         |bh AS (SELECT grp,
-         |    CASE WHEN v < 128 THEN v
-         |         ELSE (length(bin(v)) - 8) * 128 +
-         |              (v >> (length(bin(v)) - 8)) END AS bucket,
-         |    sum(c) AS bc
-         |  FROM hist GROUP BY 1, 2),
-         |branked AS (SELECT grp, bucket, bc,
-         |    sum(bc) OVER (PARTITION BY grp ORDER BY bucket) AS cum,
-         |    sum(bc) OVER (PARTITION BY grp) AS n
-         |  FROM bh),
-         |est AS (SELECT b.grp, p.phi, min(b.bucket) AS qb
-         |  FROM branked b CROSS JOIN phis p
-         |  WHERE b.cum >= greatest(CAST(ceil(p.phi * b.n) AS BIGINT), 1)
-         |  GROUP BY 1, 2),
-         |estv AS (SELECT grp, phi,
-         |    CASE WHEN qb < 256 THEN qb
-         |         ELSE ((qb & 127) + 128) << CAST((qb >> 7) - 1 AS INT)
-         |    END AS hdr_q
-         |  FROM est)
-         |SELECT e.grp AS lang, e.phi, CAST(x.n AS BIGINT) AS n,
-         |  CAST(x.exact_q AS BIGINT) AS exact_q,
-         |  CAST(e.hdr_q AS BIGINT) AS hdr_q,
-         |  round((x.exact_q - e.hdr_q) /
-         |    greatest(abs(e.hdr_q), 1.0), 6) AS rel_err,
-         |  ((sign(e.hdr_q) = sign(x.exact_q) OR e.hdr_q = x.exact_q)
-         |    AND abs(e.hdr_q) <= abs(x.exact_q)
-         |    AND (abs(x.exact_q) - abs(e.hdr_q)) <
-         |        abs(e.hdr_q) / 128.0 + 1.0) AS within_bound
-         |FROM estv e JOIN exact x ON e.grp = x.grp AND e.phi = x.phi
-         |ORDER BY 1, 2""".stripMargin,
-
-    "q233_exact_substr" ->
-      s"""WITH $exactSubstrCtesSql
-         |SELECT s.doc_id,
-         |  CAST(s.span_start AS BIGINT) AS span_start,
-         |  CAST(s.span_end AS BIGINT) AS span_end,
-         |  CAST(s.span_end - s.span_start AS BIGINT) AS span_tokens,
-         |  md5(array_to_string(t.arr[s.span_start+1:s.span_end], ' '))
-         |    AS span_md5
-         |FROM sp s JOIN t USING (doc_id)
-         |ORDER BY doc_id, span_start""".stripMargin,
-
-    // q234 replays the ROLLUP itself, not just the direct build: KMV
-    // per-source bottom-64 states merged by re-sorting their union,
-    // CMS/HDR per-source counters summed to lang grain — then compared
-    // (eq booleans + md5 digests) against direct lang-grain builds.
-    "q234_sketch_rollup" ->
-      s"""WITH d AS (SELECT lang, source,
-         |    ${hash32Sql("text")} AS h,
-         |    CAST(length(text) AS BIGINT) AS len
-         |  FROM documents WHERE text IS NOT NULL),
-         |kd AS (SELECT DISTINCT lang, source, h FROM d),
-         |ksub AS (SELECT lang, source, l[1:64] AS st FROM
-         |  (SELECT lang, source, list(h ORDER BY h) AS l
-         |   FROM kd GROUP BY 1, 2)),
-         |ku AS (SELECT DISTINCT lang, u.h FROM ksub,
-         |  unnest(st) AS u(h)),
-         |kmerged AS (SELECT lang, l[1:64] AS st FROM
-         |  (SELECT lang, list(h ORDER BY h) AS l FROM ku GROUP BY 1)),
-         |kdir AS (SELECT lang, l[1:64] AS st FROM
-         |  (SELECT lang, list(h ORDER BY h) AS l FROM
-         |    (SELECT DISTINCT lang, h FROM d) GROUP BY 1)),
-         |rows_i AS (SELECT unnest([0, 1]) AS i),
-         |cells AS (SELECT i.i, unnest(range(0, 64)) AS j FROM rows_i i),
-         |csub AS (SELECT lang, source, i,
-         |    ((h * (2 * i + 1) + (101 * i + 17)) % 4294967311) % 64 AS j,
-         |    count(*) AS c
-         |  FROM d CROSS JOIN rows_i GROUP BY 1, 2, 3, 4),
-         |cmerged AS (SELECT lang, i, j, sum(c) AS c FROM csub
-         |  GROUP BY 1, 2, 3),
-         |cdir AS (SELECT lang, i,
-         |    ((h * (2 * i + 1) + (101 * i + 17)) % 4294967311) % 64 AS j,
-         |    count(*) AS c
-         |  FROM d CROSS JOIN rows_i GROUP BY 1, 2, 3),
-         |grid AS (SELECT l.lang, c.i, c.j FROM
-         |  (SELECT DISTINCT lang FROM d) l CROSS JOIN cells c),
-         |cmdig AS (SELECT g.lang,
-         |    md5(string_agg(CAST(coalesce(m.c, 0) AS VARCHAR), ','
-         |      ORDER BY g.i, g.j)) AS dig
-         |  FROM grid g LEFT JOIN cmerged m
-         |    ON g.lang = m.lang AND g.i = m.i AND g.j = m.j
-         |  GROUP BY 1),
-         |cddig AS (SELECT g.lang,
-         |    md5(string_agg(CAST(coalesce(x.c, 0) AS VARCHAR), ','
-         |      ORDER BY g.i, g.j)) AS dig
-         |  FROM grid g LEFT JOIN cdir x
-         |    ON g.lang = x.lang AND g.i = x.i AND g.j = x.j
-         |  GROUP BY 1),
-         |hb AS (SELECT lang, source,
-         |    CASE WHEN len < 128 THEN len
-         |         ELSE (length(bin(len)) - 8) * 128 +
-         |              (len >> (length(bin(len)) - 8)) END AS bucket,
-         |    count(*) AS c
-         |  FROM d GROUP BY 1, 2, 3),
-         |hmerged AS (SELECT lang, bucket, sum(c) AS c FROM hb
-         |  GROUP BY 1, 2),
-         |hdir AS (SELECT lang,
-         |    CASE WHEN len < 128 THEN len
-         |         ELSE (length(bin(len)) - 8) * 128 +
-         |              (len >> (length(bin(len)) - 8)) END AS bucket,
-         |    count(*) AS c
-         |  FROM d GROUP BY 1, 2),
-         |hmdig AS (SELECT lang, md5(string_agg(
-         |    CAST(bucket AS VARCHAR) || ':' || CAST(c AS VARCHAR), ','
-         |    ORDER BY bucket)) AS dig FROM hmerged GROUP BY 1),
-         |hddig AS (SELECT lang, md5(string_agg(
-         |    CAST(bucket AS VARCHAR) || ':' || CAST(c AS VARCHAR), ','
-         |    ORDER BY bucket)) AS dig FROM hdir GROUP BY 1),
-         |hranked AS (SELECT lang, bucket, c,
-         |    sum(c) OVER (PARTITION BY lang ORDER BY bucket) AS cum,
-         |    sum(c) OVER (PARTITION BY lang) AS n
-         |  FROM hmerged),
-         |hp50 AS (SELECT lang, min(bucket) AS qb FROM hranked
-         |  WHERE cum >= greatest(CAST(ceil(0.5 * n) AS BIGINT), 1)
-         |  GROUP BY 1),
-         |hq AS (SELECT lang,
-         |    CASE WHEN qb < 256 THEN qb
-         |         ELSE ((qb & 127) + 128) << CAST((qb >> 7) - 1 AS INT)
-         |    END AS hdr_p50
-         |  FROM hp50),
-         |nsub AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_sub FROM
-         |  (SELECT DISTINCT lang, source FROM d) GROUP BY 1)
-         |SELECT n.lang, n.n_sub,
-         |  km.st = kd2.st AS kmv_eq,
-         |  md5(array_to_string(km.st, ',')) AS kmv_digest,
-         |  CASE WHEN len(km.st) < 64 OR km.st[len(km.st)] <= 0
-         |       THEN CAST(len(km.st) AS DOUBLE)
-         |       ELSE round(63 * 4294967296.0 / km.st[len(km.st)], 2)
-         |  END AS kmv_est,
-         |  cm.dig = cd.dig AS cms_eq,
-         |  cm.dig AS cms_digest,
-         |  hm.dig = hd.dig AS hdr_eq,
-         |  hm.dig AS hdr_digest,
-         |  CAST(hq.hdr_p50 AS BIGINT) AS hdr_p50
-         |FROM nsub n
-         |JOIN kmerged km ON n.lang = km.lang
-         |JOIN kdir kd2 ON n.lang = kd2.lang
-         |JOIN cmdig cm ON n.lang = cm.lang
-         |JOIN cddig cd ON n.lang = cd.lang
-         |JOIN hmdig hm ON n.lang = hm.lang
-         |JOIN hddig hd ON n.lang = hd.lang
-         |JOIN hq ON n.lang = hq.lang
-         |ORDER BY n.lang""".stripMargin,
-
-    "q235_unigram_tok" -> unigramLmOracleSql(2),
-
-    "q236_exact_substr_dedup" ->
-      s"""WITH $exactSubstrCtesSql,
-         |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans,
-         |    CAST(sum(span_end - span_start) AS BIGINT) AS n_dropped
-         |  FROM sp GROUP BY doc_id),
-         |cover AS (SELECT doc_id, u.p AS pos
-         |  FROM sp, unnest(range(span_start, span_end)) AS u(p)),
-         |tok AS (SELECT doc_id, i - 1 AS pos, arr[i] AS tok
-         |  FROM t, unnest(range(1, len(arr) + 1)) AS u(i)),
-         |clean AS (SELECT k.doc_id,
-         |    md5(string_agg(k.tok, ' ' ORDER BY k.pos)) AS m
-         |  FROM tok k LEFT JOIN cover c
-         |    ON k.doc_id = c.doc_id AND k.pos = c.pos
-         |  WHERE c.pos IS NULL GROUP BY k.doc_id)
-         |SELECT t.doc_id, CAST(len(t.arr) AS BIGINT) AS n_tokens,
-         |  coalesce(a.n_spans, 0) AS n_spans,
-         |  coalesce(a.n_dropped, 0) AS n_dropped,
-         |  coalesce(c2.m, md5('')) AS clean_md5
-         |FROM t LEFT JOIN agg a USING (doc_id)
-         |LEFT JOIN clean c2 USING (doc_id)
-         |ORDER BY t.doc_id""".stripMargin,
-  )
 }

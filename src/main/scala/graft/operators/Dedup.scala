@@ -995,13 +995,7 @@ object Dedup {
     * observability as [[prefixFilterParts]] — candidate count vs
     * corpus size is the number that tells a 16-bit band from a
     * quadratic 8-bit one. */
-  /** `banded` is the pre-join (id, band-index, band-value) frame: its
-    * per-(bi,bv) bucket sizes bound the candidate join analytically
-    * (Σ c·(c−1)/2) at O(corpus) cost — the only way to audit a
-    * quadratic configuration at ×100 without materializing the
-    * quadratic join itself. */
-  private[graft] case class SimhashPairParts(sh: DataFrame,
-      banded: DataFrame, cand: DataFrame)
+  private[graft] case class SimhashPairParts(sh: DataFrame, cand: DataFrame)
 
   private[graft] def simhashPairParts(docs: DataFrame, textCol: String,
       idCol: String, maxHamming: Int, nBits: Int,
@@ -1038,12 +1032,12 @@ object Dedup {
         Seq("bi", "bv"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b")).distinct()
-    SimhashPairParts(sh, banded, cand)
+    SimhashPairParts(sh, cand)
   }
 
   def simhashHammingPairs(docs: DataFrame, textCol: String, idCol: String,
       maxHamming: Int, nBits: Int = 64, bands: Int = 2): DataFrame = {
-    val SimhashPairParts(sh, _, cand) =
+    val SimhashPairParts(sh, cand) =
       simhashPairParts(docs, textCol, idCol, maxHamming, nBits, bands)
     cand
       .join(sh.select(col(idCol).as("id_a"), col("simhash").as("_ha")),

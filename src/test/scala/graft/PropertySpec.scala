@@ -693,9 +693,9 @@ class PropertySpec extends SparkSpec {
   }
 
   test("weightedMedian: wide value domain spans many 4096-buckets (generated)") {
-    // exercises the two-level cumulative-sum path across bucket
-    // boundaries, negative values and multiple groups; reference is
-    // the same expanded-multiset lower median
+    // stress-tests the single cumulative window per group over a wide
+    // value domain (±300k), with negative values and multiple groups;
+    // reference is the same expanded-multiset lower median
     import graft.operators.Profiling
     val gen = Gen.listOfN(60, Gen.zip(Gen.oneOf("a", "b"),
       Gen.choose(-300000L, 300000L), Gen.choose(1L, 4L)))

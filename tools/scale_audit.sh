@@ -11,8 +11,6 @@
 #      interleaved passes discard those windows, same as the sf0.1
 #      gate bench
 #   3. ScaleDiag candidate counts at x1 / x10 / x100
-#      (--skip-retired at x100: the retired config's exact count is a
-#      ~10^10-row join; the analytic bound is the honest number there)
 #   4. scaling_report.py -> report_sf1.json / report_sf100.json with
 #      the candidate_counts block merged in
 #
@@ -83,8 +81,7 @@ done
 echo "== 3/4 ScaleDiag candidate counts =="
 run_main graft.ScaleDiag "$SF01"          2>"$WORK/diag_x1.log"   | tail -1 > "$WORK/diag_x1.json"
 run_main graft.ScaleDiag "$WORK/sf_x10"   2>"$WORK/diag_x10.log"  | tail -1 > "$WORK/diag_x10.json"
-run_main graft.ScaleDiag "$WORK/sf_x100" --skip-retired \
-                                          2>"$WORK/diag_x100.log" | tail -1 > "$WORK/diag_x100.json"
+run_main graft.ScaleDiag "$WORK/sf_x100"  2>"$WORK/diag_x100.log" | tail -1 > "$WORK/diag_x100.json"
 cat "$WORK"/diag_x*.json
 
 echo "== 4/4 scaling reports =="
@@ -99,19 +96,11 @@ order = ("x1", "x10", "x100")
 cc = {
     "comment": "graft.ScaleDiag through the production code paths "
                "(Dedup.prefixFilterParts / simhashPairParts / "
-               "Similarity.blockedMarginSims), counts at x1/x10/x100. "
-               "-1 = exact count skipped for a retired config (analytic "
-               "bound stands in).",
+               "Similarity.blockedMarginSims), counts at x1/x10/x100.",
     "n_docs": [diags[t]["n_docs"] for t in order],
     "q182_prefix_filter": [diags[t]["q182_candidates"] for t in order],
     "q204_simhash_radius1_2x32bit (production)":
         [diags[t]["q204_candidates"] for t in order],
-    "q204_simhash_16bit_bands (retired r11 default)":
-        [diags[t]["q204_candidates_16bit_bands"] for t in order],
-    "q204_simhash_32bit (retired r10 default)":
-        [diags[t]["q204_candidates_32bit"] for t in order],
-    "q204_simhash_32bit_bound (analytic)":
-        [diags[t]["q204_candidates_32bit_bound"] for t in order],
     "q196_blocked_sims": [diags[t]["q196_blocked_sims"] for t in order],
     "q65_block_pair_bound":
         [diags[t]["q65_block_pair_bound"] for t in order],
